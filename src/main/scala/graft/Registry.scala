@@ -2390,9 +2390,9 @@ object Registry {
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
     // BATCH format() READ (round 11): the same "graft-manifest"
     // format string serves batch — spark.read.format(...).load()
-    // returns the ManifestFileIndex-backed relation, so the idiomatic
+    // resolves to the catalog's GraftTable by root, so the idiomatic
     // batch read gets manifest resolution + planning-time zone-map
-    // skipping with no side API (the streaming twin is
+    // skipping (GraftFileScan) with no side API (the streaming twin is
     // q_stream_source_tail; the explicit-API twin is
     // q_manifest_table_skip, whose spec pins the numFiles metric).
     "q_manifest_format" -> q(
@@ -2814,22 +2814,11 @@ object Registry {
                |FROM graft.`$r1` a JOIN graft.`$r2` b ON a.user_id = b.user_id
                |GROUP BY a.user_id ORDER BY a.user_id""".stripMargin)
           val rows = out.collect()
-          def hashShuffle(p: org.apache.spark.sql.execution.SparkPlan): Boolean = {
-            val kids = p match {
-              case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-                Seq(a.executedPlan)
-              case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-                Seq(qs.plan)
-              case o => o.children
-            }
-            (p match {
-              case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-                e.outputPartitioning.isInstanceOf[
-                  org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
-              case _ => false
-            }) || kids.exists(hashShuffle)
-          }
-          val spjOk = !hashShuffle(out.queryExecution.executedPlan)
+          val spjOk = graft.plans.PlanProbe.deepCollect(out.queryExecution.executedPlan) {
+            case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+                if e.outputPartitioning.isInstanceOf[
+                  org.apache.spark.sql.catalyst.plans.physical.HashPartitioning] => e
+          }.isEmpty
           s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
             .withColumn("spj_ok", lit(spjOk))
         } finally prev.foreach {

@@ -127,7 +127,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
           "absolute-path tables are addressable")
     }
 
-  private def existsAsTable(dir: String): Boolean = {
+  private[catalog] def existsAsTable(dir: String): Boolean = {
     val p = new Path(dir)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.exists(p) && (ManifestSink.currentEpochOpt(spark, dir).isDefined ||
@@ -348,9 +348,18 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: util.Map[String, String]): Table = {
-    val (bucket, ptime, identL) = layoutOf(partitions)
     val dir = dirOf(ident)
     if (existsAsTable(dir)) throw new TableAlreadyExistsException(ident)
+    createAt(dir, ident.toString, schema, partitions, properties)
+  }
+
+  /** CREATE TABLE at a resolved, table-free root — also how
+    * `writeStream.format("graft-manifest")` creates a fresh root from
+    * its query's schema (see [[GraftManifestProvider]]). */
+  private[catalog] def createAt(dir: String, ident: String, schema: StructType,
+                                partitions: Array[Transform],
+                                properties: util.Map[String, String]): Table = {
+    val (bucket, ptime, identL) = layoutOf(partitions)
     val p = new Path(dir)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.mkdirs(p)
@@ -362,7 +371,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
     // persist user TBLPROPERTIES (Spark's reserved/engine keys out)
     val userProps = userPropsOf(properties)
     if (userProps.nonEmpty) GraftTable.writeProps(spark, dir, userProps)
-    new GraftTable(dir, ident.toString, None)
+    new GraftTable(dir, ident, None)
   }
 
   private def userPropsOf(properties: util.Map[String, String]): Map[String, String] = {
@@ -1409,8 +1418,11 @@ final class MetaAggReaderFactory extends PartitionReaderFactory {
 
 /** One manifest table as a DSv2 [[Table]]: batch read with
   * planning-time skipping, V1-bridged atomic writes, CoW deletes.
-  * `pinned` = Some(epoch) for VERSION AS OF reads (writes refused). */
-final class GraftTable(dir: String, ident: String, pinned: Option[Int])
+  * `pinned` = Some(epoch) for VERSION AS OF reads (writes refused).
+  * `layoutCols` are the `partitionValues` stream columns appended to
+  * the schema (see [[GraftMicroBatchStream.layoutColumns]]). */
+final class GraftTable(dir: String, ident: String, pinned: Option[Int],
+                       layoutCols: StructType = StructType(Nil))
   extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations with TruncatableTable {
 
@@ -1474,12 +1486,12 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int])
 
   override def schema(): StructType = {
     val base = graft.sink.ColumnMapping.stripMapping(mappedSchema)
-    declaredMergeKey match {
+    val fields = declaredMergeKey match {
       case Some(k) if base.fieldNames.contains(k) =>
-        StructType(base.fields.map(f =>
-          if (f.name == k) f.copy(nullable = false) else f))
-      case _ => base
+        base.fields.map(f => if (f.name == k) f.copy(nullable = false) else f)
+      case _ => base.fields
     }
+    StructType(fields ++ layoutCols.fields)
   }
 
   /** logical -> physical for the current epoch (identity when the
@@ -1604,7 +1616,7 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int])
     resolvedEpoch match {
       case Some(e) =>
         new GraftScanBuilder(spark, dir, e, mappedSchema, readOptions = options,
-          dvs = ManifestSink.commitDvs(spark, dir, e))
+          dvs = ManifestSink.commitDvs(spark, dir, e), layoutCols = layoutCols)
       case None =>
         // created-but-never-written: logically EMPTY (the Delta
         // semantics) — a plain SELECT, a join, or Spark's own
@@ -1633,6 +1645,7 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int])
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(pinned.isEmpty,
       s"cannot write to $dir pinned at VERSION AS OF ${pinned.get}")
+    require(layoutCols.isEmpty, "partitionValues is a streaming-read option")
     new WriteBuilder with SupportsTruncate {
       private var overwrite = false
       override def truncate(): WriteBuilder = { overwrite = true; this }
@@ -2172,7 +2185,8 @@ final class GraftScanBuilder(spark: SparkSession, dir: String, epoch: Int,
                              rowLevel: Option[GraftRowLevelOperation] = None,
                              readOptions: CaseInsensitiveStringMap =
                                CaseInsensitiveStringMap.empty(),
-                             dvs: Seq[(String, String)] = Nil)
+                             dvs: Seq[(String, String)] = Nil,
+                             layoutCols: StructType = StructType(Nil))
   extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
     with SupportsPushDownLimit {
@@ -2322,7 +2336,7 @@ final class GraftScanBuilder(spark: SparkSession, dir: String, epoch: Int,
     case None =>
       GraftTable.lastMetaAggOnly = false
       new GraftFileScan(spark, dir, epoch, tableSchema, required, pushed,
-        rowLevel, limit, readOptions, dvs)
+        rowLevel, limit, readOptions, dvs, layoutCols)
   }
 }
 
@@ -2345,7 +2359,8 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
                           limit: Option[Int] = None,
                           readOptions: CaseInsensitiveStringMap =
                             CaseInsensitiveStringMap.empty(),
-                          dvs: Seq[(String, String)] = Nil)
+                          dvs: Seq[(String, String)] = Nil,
+                          layoutCols: StructType = StructType(Nil))
   extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -2399,7 +2414,8 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
 
   /** `spark.readStream.table(...)` — the epoch-tailing micro-batch
     * stream (see [[GraftMicroBatchStream]]); `startEpoch` and
-    * `allowRewrites` arrive as read options. */
+    * `allowRewrites` arrive as read options, `layoutCols` from
+    * `partitionValues`. */
   override def toMicroBatchStream(checkpointLocation: String):
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     // the stream plans parquet directly: hand it the PHYSICAL shapes
@@ -2407,7 +2423,8 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
     new GraftMicroBatchStream(spark, dir, physTableSchema,
       graft.sink.ColumnMapping.physicalSchema(required),
       startEpoch = Option(readOptions.get("startEpoch")).map(_.toInt).getOrElse(0),
-      allowRewrites = Option(readOptions.get("allowRewrites")).exists(_.toBoolean))
+      allowRewrites = Option(readOptions.get("allowRewrites")).exists(_.toBoolean),
+      layoutCols)
 
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 
@@ -2433,11 +2450,16 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
 
   override def filter(filters: Array[Filter]): Unit = { runtime = filters }
 
-  override def readSchema(): StructType = required
+  override def readSchema(): StructType = StructType(required.fields ++ layoutCols.fields)
 
   // toBatch is re-invoked by BatchScanExec AFTER runtime filters
   // arrive — each call re-prunes with everything known so far
-  override def toBatch: Batch = this
+  override def toBatch: Batch = {
+    require(layoutCols.isEmpty, "partitionValues is a streaming-read " +
+      "option; batch reads get per-file layout values from the @files " +
+      "metadata table")
+    this
+  }
 
   // snapshot-cached: collected once per (root, epoch, token), shared
   // with every other planning path of this epoch
@@ -3738,11 +3760,11 @@ final class GraftMorWriterFactory(dataFactory: DataWriterFactory,
   * manifest append carrying the (appId, batchId) txn —
   * [[ManifestSink.commitIdempotentAppendFiles]] — so an at-least-once
   * replay after a crash between sink commit and checkpoint commit
-  * no-ops: exactly-once end to end, the same discipline as the
-  * `format("graft-manifest")` V1 sink but through the catalog's table
-  * name. Options: `appId` (txn identity — defaults to a dir-derived
-  * id, matching the V1 sink's convention; set it when several queries
-  * feed one table), `statsCols` (comma-separated zone-map columns).
+  * no-ops: exactly-once end to end, whether the table is named
+  * through the catalog or by `format("graft-manifest")`'s root.
+  * Options: `appId` (txn identity — defaults to a dir-derived id; set
+  * it when several queries feed one table), `statsCols`
+  * (comma-separated zone-map columns).
   * One batch is in flight at a time per query, so the per-batch
   * delegate/dir pair lives in volatile fields set by
   * `createStreamingWriterFactory` (called once per micro-batch). */

@@ -307,18 +307,9 @@ final class GraftCdfMicroBatchStream(spark: SparkSession, dir: String,
                                      fullSchema: StructType,
                                      required: StructType,
                                      checkpointLocation: String)
-  extends MicroBatchStream {
+  extends EpochStream(spark, dir, startEpoch) {
 
   private val stageRoot = s"$checkpointLocation/graft-cdf"
-
-  override def initialOffset(): Offset = EpochOffset(startEpoch)
-
-  override def latestOffset(): Offset =
-    EpochOffset(ManifestSink.currentEpochOpt(spark, dir)
-      .filter(_ > startEpoch).getOrElse(startEpoch))
-
-  override def deserializeOffset(json: String): Offset =
-    EpochOffset(json.trim.toInt)
 
   /** Materialize (from, to]'s diff once (deterministic path keyed by
     * the range; a replayed batch reuses the staged files), then plan
@@ -375,6 +366,4 @@ final class GraftCdfMicroBatchStream(spark: SparkSession, dir: String,
       }
     }
   }
-
-  override def stop(): Unit = ()
 }

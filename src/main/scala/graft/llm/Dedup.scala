@@ -879,8 +879,11 @@ object Dedup {
     def stat(df: DataFrame): (Long, java.math.BigDecimal) =
       if (!idsIntegral) (df.count(), java.math.BigDecimal.ZERO)
       else {
-        val r = df.agg(count(lit(1)), sum((col("u") + col("v"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
+        // widen BEFORE adding (as labelSum does): a Long u + v near
+        // Long.MaxValue overflows, and ANSI mode throws on it
+        val dec = org.apache.spark.sql.types.DecimalType(38, 0)
+        val r = df.agg(count(lit(1)),
+          sum(col("u").cast(dec) + col("v").cast(dec))).head()
         (r.getLong(0),
           Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
       }

@@ -244,19 +244,25 @@ final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int)
   * metadata. This is what the catalog scan hands Spark's own
   * ParquetScan instead of an InMemoryFileIndex, which would re-list
   * every path (one RPC per file per query) just to rediscover what
-  * the manifest already committed. */
+  * the manifest already committed. A non-empty `partitionSchema`
+  * serves `partitionOf(file)` as each file's partition values (one
+  * directory per file — the values come from manifest metadata, not
+  * from the path). */
 final class StaticFileIndex(spark: SparkSession, root: Path,
-                            statuses: Seq[FileStatus])
+                            statuses: Seq[FileStatus],
+                            override val partitionSchema: StructType = StructType(Nil),
+                            partitionOf: FileStatus => InternalRow = _ => InternalRow.empty)
   extends org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex(
     spark, Map.empty, None) {
   override def rootPaths: Seq[Path] = Seq(root)
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))
+    if (partitionSchema.isEmpty)
+      Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))
+    else statuses.map(s => PartitionDirectory(partitionOf(s), Array(s)))
   override def inputFiles: Array[String] = statuses.map(_.getPath.toString).toArray
   override def refresh(): Unit = ()
   override def sizeInBytes: Long = statuses.map(_.getLen).sum
-  override def partitionSchema: StructType = StructType(Nil)
   override def partitionSpec(): org.apache.spark.sql.execution.datasources.PartitionSpec =
     org.apache.spark.sql.execution.datasources.PartitionSpec.emptySpec
   override protected def leafFiles:
@@ -280,21 +286,6 @@ object ManifestFileIndex {
     * skipping (see class doc). Pass `epoch` to time-travel. */
   def table(spark: SparkSession, root: String, epoch: Int = -1): DataFrame =
     tableWithIndex(spark, root, epoch)._1
-
-  /** The skipping-capable HadoopFsRelation over a committed epoch —
-    * shared by [[tableWithIndex]] and the batch `format()` path.
-    * Column-mapped epochs are refused here (a bare BaseRelation cannot
-    * carry the logical-alias projection); [[table]] applies it. */
-  def relation(spark: SparkSession, root: String, epoch: Int): HadoopFsRelation = {
-    val idx = new ManifestFileIndex(spark, root, epoch)
-    val schema = ManifestSink.commitSchema(spark, root, epoch)
-      .getOrElse(ManifestSink.read(spark, root, epoch).schema)
-    require(!ColumnMapping.hasMapping(schema),
-      "batch format() read of a column-mapped epoch would surface " +
-        "physical names; use ManifestSink.read / ManifestFileIndex.table")
-    HadoopFsRelation(idx, StructType(Nil), schema, None,
-      new ParquetFileFormat(), Map.empty[String, String])(spark)
-  }
 
   /** Same, also returning the index (specs read its selection count).
     * Mapped epochs plan the skipping relation under the PHYSICAL

@@ -842,17 +842,6 @@ object ManifestSink {
     commitStaged(df.sparkSession,
       stage(df, root, epoch, statsCols, bucket = Some((keyCol, numBuckets))), txn)
 
-  /** APPEND-publish preserving the bucketed layout: the fresh batch
-    * lays out into single-bucket files; prior epochs' bucket rows
-    * carry, so the table stays SPJ-eligible at O(batch) write cost. */
-  def publishBucketedAppend(df: DataFrame, root: String, epoch: Int,
-                            keyCol: String, numBuckets: Int,
-                            statsCols: Seq[String] = Nil,
-                            txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession,
-      stageAppend(df, root, epoch, statsCols,
-        bucket = Some((keyCol, numBuckets))), txn)
-
   /** The committed bucket layout of an epoch, if it FULLY covers the
     * manifest: exactly one single-bucket row per manifest file, all
     * under one `__bucket:<col>:<n>` spec. Any gap (a CoW-rewritten
@@ -1035,17 +1024,6 @@ object ManifestSink {
                              txn: Option[Txn] = None): Int =
     commitStaged(df.sparkSession,
       stage(df, root, epoch, statsCols, ptime = Some((col, unit))), txn)
-
-  /** APPEND-publish preserving the time-partitioned layout: the fresh
-    * batch lays out into single-ordinal files; prior epochs' ptime
-    * rows carry, so the table stays partition-reporting at O(batch)
-    * write cost. */
-  def publishTimePartitionedAppend(df: DataFrame, root: String, epoch: Int,
-                                   col: String, unit: String,
-                                   statsCols: Seq[String] = Nil,
-                                   txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession,
-      stageAppend(df, root, epoch, statsCols, ptime = Some((col, unit))), txn)
 
   /** Publish `df` under the COMPOSED layout (one file per (time
     * ordinal, bucket) pair — see [[composedLayout]]): the engine-API
@@ -1266,16 +1244,6 @@ object ManifestSink {
       Some(IdentSpec(col0, width, isString, longs, strs))
     else None
   }
-
-  /** Publish `df` laid out one-file-set-per-value on `col` (identity,
-    * or the first-`width` truncate) — the engine-API form of
-    * `PARTITIONED BY (col)` / `PARTITIONED BY (truncate(w, col))`. */
-  def publishIdentity(df: DataFrame, root: String, epoch: Int,
-                      col: String, width: Option[Int] = None,
-                      statsCols: Seq[String] = Nil,
-                      txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession,
-      stage(df, root, epoch, statsCols, ident = Some((col, width))), txn)
 
   /** ADD-COLUMN schema evolution as a PURE-METADATA commit (Delta's
     * `ALTER TABLE ADD COLUMNS`): a new epoch carrying the SAME file
@@ -2117,15 +2085,6 @@ object ManifestSink {
       if (r.isNullAt(2)) false else r.getLong(2) == value,
       r => !r.isNullAt(2) && !r.isNullAt(3) &&
         r.getLong(2) <= value && value <= r.getLong(3),
-      org.apache.spark.sql.functions.lit(value))
-
-  /** String variant of [[readPointPruned]]. */
-  def readPointPrunedString(spark: SparkSession, root: String, statsCol: String,
-                            value: String, epoch: Int = -1): (DataFrame, Int, Int) =
-    pointPruned(spark, root, statsCol, epoch, r =>
-      if (r.isNullAt(4)) false else r.getString(4) == value,
-      r => !r.isNullAt(4) && !r.isNullAt(5) &&
-        r.getString(4) <= value && value <= r.getString(5),
       org.apache.spark.sql.functions.lit(value))
 
   /** Skipping ladder per file: exact dictionary when present, bloom

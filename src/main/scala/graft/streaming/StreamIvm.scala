@@ -7,7 +7,8 @@ import graft.sink.{IncrementalView, ManifestSink}
 
 /** CONTINUOUS materialized-view maintenance — the full lakehouse loop
   * in one pipeline: a manifest table's CHANGE FEED streams through
-  * `format("graft-manifest").option("changeFeedKey", ...)`, and every
+  * `format("graft-manifest").option("changeFeedKey", ...)` (the
+  * [[graft.catalog.GraftChangesTable]] stream by root), and every
   * micro-batch of change rows folds into the aggregate view via
   * [[IncrementalView.applyDelta]] as one atomic view epoch carrying
   * the batchId as its txn version — so the view is exactly-once under

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.sink.ManifestSink
 
 /** The MEDALLION loop closed: a bronze manifest table is TAILED by a
-  * streaming query through [[graft.sources.ManifestStreamSource]]
-  * (offsets = committed epochs), transformed, and committed into a
+  * streaming query through `format("graft-manifest")` — the catalog's
+  * [[graft.catalog.GraftMicroBatchStream]] by root (offsets =
+  * committed epochs) — transformed, and committed into a
   * silver manifest table through the idempotent-txn sink — the
   * bronze→silver hop every lakehouse pipeline runs, here end-to-end
   * on the engine's own table format with exactly-once on BOTH sides

@@ -23,46 +23,6 @@ object GraftBridge {
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
 
-  /** Mark ONE leaf relation of a batch DataFrame `isStreaming = true` —
-    * the contract MicroBatchExecution asserts on every v1
-    * `Source.getBatch` result (the engine splices the batch plan into
-    * the streaming query; `isStreaming` propagates up from any leaf).
-    * FileStreamSource does the same with its per-batch file list.
-    *
-    * Deliberately ONE leaf, not all: a getBatch plan that contains a
-    * join (the change-feed diff) must not present BOTH join sides as
-    * streaming, or IncrementalExecution's StreamingJoinStrategy would
-    * claim the join and demand watermark/state machinery the
-    * already-materialized per-batch diff neither has nor needs — with
-    * a single marked leaf the top-level flag holds and every join
-    * stays batch-planned. `LogicalRelation`/`LocalRelation` are
-    * sql-internal, hence bridged here. */
-  def asStreamingScan(spark: SparkSession, df: DataFrame): DataFrame = {
-    var marked = false
-    val plan = analyzed(df).transform {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if !marked =>
-        marked = true
-        lr.copy(isStreaming = true)
-      case loc: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if !marked =>
-        marked = true
-        loc.copy(isStreaming = true)
-    }
-    ofRows(spark, plan)
-  }
-
-  /** Rebase a v1 `Sink.addBatch` micro-batch DataFrame onto its
-    * already-planned physical RDD as a plain BATCH frame — the same
-    * move FileStreamSink makes: re-planning `data` in a fresh query
-    * would re-execute the incremental plan (or refuse outright on a
-    * streaming leaf), while the RDD is the batch's materialized rows. */
-  def asBatch(spark: SparkSession, df: DataFrame): DataFrame = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
-    cs.internalCreateDataFrame(qe.toRdd, df.schema, isStreaming = false)
-  }
-
   /** The session's live autoBroadcastJoinThreshold in bytes (-1 =
     * disabled) — for operators that pick a join strategy from a size
     * bound the PLANNER cannot know (e.g. an iteratively-built edge

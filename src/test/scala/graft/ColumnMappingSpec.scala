@@ -65,6 +65,10 @@ class ColumnMappingSpec extends SparkTestBase {
     // the API read surface agrees
     assert(ManifestSink.read(spark, root).schema.fieldNames.toSeq ==
       Seq("key_id", "u", "v"))
+    // and so does the format() read by root
+    val viaFormat = spark.read.format("graft-manifest").option("root", root).load()
+    assert(viaFormat.schema.fieldNames.toSeq == Seq("key_id", "u", "v"))
+    assert(viaFormat.filter(col("key_id") === 500L).count() == 1L)
   }
 
   test("DROP COLUMN hides data without touching files; re-ADD never resurrects it") {

@@ -82,6 +82,29 @@ class DedupClusterSpec extends SparkTestBase {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L, 7L -> 7L))
   }
 
+  test("star CC convergence witness takes ids near Long.MaxValue under ANSI") {
+    import spark.implicits._
+    // u + v of any edge here exceeds Long.MaxValue: the witness sum
+    // must widen each id before adding, or ANSI mode throws
+    val top = Long.MaxValue
+    val edges = Seq((top - 3, top - 2), (top - 2, top - 1), (top - 9, top - 8))
+      .toDF("doc_a", "doc_b")
+    val vertices = Seq(top - 9, top - 8, top - 3, top - 2, top - 1, top)
+      .toDF("doc_id")
+    val prev = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val got = Dedup.connectedComponentsStar(vertices, edges).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(top - 9 -> (top - 9), top - 8 -> (top - 9),
+        top - 3 -> (top - 3), top - 2 -> (top - 3), top - 1 -> (top - 3),
+        top -> top))
+    } finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   test("star round plan: canonByV shares one exchange with smallStar's agg+join") {
     import spark.implicits._
     val edges = (0 until 199).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")

@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.sink.ManifestSink
 
-/** The manifest table as a streaming source (graft-manifest format):
-  * epoch offsets, snapshot-then-tail, per-batch plans bounded by the
-  * appended files, checkpoint restart, and the append-only contract. */
+/** The manifest table through `format("graft-manifest")` (the DSv2
+  * table by root): epoch offsets, snapshot-then-tail, per-batch plans
+  * bounded by the appended files, checkpoint restart, the append-only
+  * contract, and the batch read. */
 class StreamSourceSpec extends SparkTestBase {
 
   private def ev = Tables.events(spark, sf)
@@ -71,10 +72,10 @@ class StreamSourceSpec extends SparkTestBase {
       q.processAllAvailable()
       // the append lays out ONLY the batch; its micro-batch exposes
       // exactly the appended hours
-      ManifestSink.publishTimePartitionedAppend(
+      ManifestSink.commitStaged(spark, ManifestSink.stageAppend(
         evts.filter(col("ts") >= lit("2024-01-01 06:00:00") &&
           col("ts") < lit("2024-01-01 09:00:00")),
-        bronze, 2, "ts", "hours", statsCols = Seq("ts"))
+        bronze, 2, Seq("ts"), ptime = Some(("ts", "hours"))))
       q.processAllAvailable()
     } finally q.stop()
     val byBatch = seen.toSeq.groupBy(_._1)
@@ -205,7 +206,7 @@ class StreamSourceSpec extends SparkTestBase {
     assert(got.filter(_._2 == "delete").forall(_._3 == 3), "deletes carry their epoch")
   }
 
-  test("batch format() read matches ManifestSink.read; MoR epochs are refused on that path") {
+  test("batch format() read matches ManifestSink.read, MoR epochs included") {
     val root = tmpDir("graft_mfmt_spec_")
     ManifestSink.publishWithStats(
       ev.filter(col("event_id") < 80)
@@ -217,10 +218,11 @@ class StreamSourceSpec extends SparkTestBase {
     assert(viaFormat == viaApi)
     ManifestSink.deleteMor(spark, root,
       ev.filter(col("event_id") === 3).select(col("event_id")), "event_id")
-    val err = intercept[IllegalArgumentException] {
-      spark.read.format("graft-manifest").option("root", root).load()
-    }
-    assert(err.getMessage.contains("delete"), err.getMessage)
+    // the delete vector applies on the format() path too
+    val afterDv = spark.read.format("graft-manifest").option("root", root).load()
+      .orderBy("event_id").collect().toSeq
+    assert(afterDv == ManifestSink.read(spark, root).orderBy("event_id").collect().toSeq)
+    assert(afterDv.size == 79 && !afterDv.exists(_.getLong(0) == 3L))
     // epoch-pinned time travel still serves the pre-DV epoch
     assert(spark.read.format("graft-manifest").option("root", root)
       .option("epoch", "1").load().count() == 80)
