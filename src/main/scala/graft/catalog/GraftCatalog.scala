@@ -3762,6 +3762,12 @@ final class GraftMorWriterFactory(dataFactory: DataWriterFactory,
   * replay after a crash between sink commit and checkpoint commit
   * no-ops: exactly-once end to end, whether the table is named
   * through the catalog or by `format("graft-manifest")`'s root.
+  * Each write task runs through [[StatsDataWriterFactory]]: it opens
+  * its file on its first row (a zero-row task publishes no file) and
+  * returns the file's row count and zone-map bounds in its commit
+  * message, so the epoch's stats come from the writers — the commit
+  * never re-reads the batch it just wrote. `maxRecordsPerFile` is
+  * pinned to 0, so each task writes at most one file.
   * Options: `appId` (txn identity — defaults to a dir-derived id; set
   * it when several queries feed one table), `statsCols`
   * (comma-separated zone-map columns).
@@ -3780,13 +3786,18 @@ final class GraftStreamingWrite(dir: String, info: LogicalWriteInfo,
   private val statsCols = Option(info.options.get("statsCols"))
     .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     .map(c => physMap.getOrElse(c, c)) // committed stats are physical-keyed
+  // files store PHYSICAL names (rows are positional — pure rename)
+  private val physSchema = graft.sink.ColumnMapping.physicalSchema(tableSchema)
+  statsCols.foreach(c => ManifestSink.requireZoneMapType(c, physSchema(c).dataType))
 
   private val dataInfo: LogicalWriteInfo = new LogicalWriteInfo {
-    override def options: CaseInsensitiveStringMap = info.options
+    override val options: CaseInsensitiveStringMap = {
+      val m = new util.HashMap[String, String](info.options.asCaseSensitiveMap)
+      m.put("maxRecordsPerFile", "0") // one file per task: stats map task -> file
+      new CaseInsensitiveStringMap(m)
+    }
     override def queryId: String = info.queryId
-    // files store PHYSICAL names (rows are positional — pure rename)
-    override def schema: StructType =
-      graft.sink.ColumnMapping.physicalSchema(tableSchema)
+    override def schema: StructType = physSchema
   }
 
   @volatile private var stagedDir: String = _
@@ -3803,34 +3814,41 @@ final class GraftStreamingWrite(dir: String, info: LogicalWriteInfo,
     delegate =
       org.apache.spark.sql.execution.datasources.v2.parquet.ParquetWrite(
         Seq(s"$dir/$stagedDir"), "parquet", _ => true, dataInfo).toBatch
-    val inner = delegate.createBatchWriterFactory(pInfo)
-    new StreamingDataWriterFactory {
-      override def createWriter(partitionId: Int, taskId: Long, epochId: Long):
-          org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
-        inner.createWriter(partitionId, taskId)
-    }
+    new StatsDataWriterFactory(delegate.createBatchWriterFactory(pInfo),
+      physSchema, statsCols)
   }
 
+  /** The delegate sees only the messages of tasks that opened a file. */
+  private def opened(messages: Array[WriterCommitMessage]): Array[WriterCommitMessage] =
+    messages.collect { case m: StatsTaskCommit if m.inner != null => m.inner }
+
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    delegate.commit(messages) // finalize the file commit protocol
+    delegate.commit(opened(messages)) // finalize the file commit protocol
     val spark = SparkSession.active
     // CHECK constraints gate every micro-batch the same as batch
     // inserts: audit the staged files, fail the batch pre-CAS
     val stagePath = new Path(s"$dir/$stagedDir")
     val fs = stagePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh =
-      if (!fs.exists(stagePath)) Nil
-      else fs.listStatus(stagePath).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(p => s"$stagedDir/${p.getName}")
-    GraftTable.auditConstraints(spark, dir, fresh)
+    val staged = fs.exists(stagePath)
+    val names =
+      if (!staged) Nil
+      else fs.listStatus(stagePath).toSeq.map(_.getPath.getName)
+        .filter(_.endsWith(".parquet"))
+    GraftTable.auditConstraints(spark, dir, names.map(n => s"$stagedDir/$n"))
+    // a vanished stage is the epoch commit's to judge: a replay no-ops,
+    // anything else fails loudly
+    val rows =
+      if (!staged) Nil
+      else WriterStats.fileRows(names,
+        messages.toSeq.collect { case m: StatsTaskCommit => m }, statsCols, physSchema)
     ManifestSink.commitIdempotentAppendFiles(spark, dir,
-      stagedDir, appId, epochId, statsCols,
-      schemaFallback = Some(tableSchema)): Unit
+      stagedDir, appId, epochId,
+      fileStats = if (statsCols.isEmpty) None else Some(rows),
+      schema = Some(physSchema)): Unit
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    delegate.abort(messages)
+    delegate.abort(opened(messages))
 }
 
 /** READER-SIDE deletion-vector filtering (the Delta DV discipline in

@@ -1616,14 +1616,20 @@ object ManifestSink {
     * `root/dirName/`, then this assembles the append epoch from the
     * staged files — no second write). Same txn discipline: a replayed
     * (appId, version) no-ops and the staged dir becomes vacuum-swept
-    * debris. Schema is pinned from the prior epoch (the writer was
-    * configured with the table schema); the first epoch pins the
-    * staged files' own schema. */
+    * debris. `fileStats` are the staged files' stats rows as the
+    * WRITER computed them ([[StatsSchema]], `file` = the staged file's
+    * name): they union with the prior epoch's cached rows and commit
+    * as the new stats parquet from a local relation — the batch is
+    * never re-read — and, once the CAS wins, seed [[SnapshotCache]]
+    * so the next read plans without a stats load. A prior epoch with
+    * no stats table gives an epoch with none. `schema` is the
+    * schema the files were written with, pinned by the first epoch;
+    * later epochs keep the prior epoch's. */
   def commitIdempotentAppendFiles(spark: SparkSession, root: String,
                                   dirName: String, appId: String,
                                   version: Long,
-                                  statsCols: Seq[String] = Nil,
-                                  schemaFallback: Option[org.apache.spark.sql.types.StructType] = None): Boolean = {
+                                  fileStats: Option[Seq[org.apache.spark.sql.Row]] = None,
+                                  schema: Option[org.apache.spark.sql.types.StructType] = None): Boolean = {
     val stagePath = new org.apache.hadoop.fs.Path(s"$root/$dirName")
     val f = fs(spark, stagePath)
     if (lastCommittedVersion(spark, root, appId).exists(_ >= version)) {
@@ -1667,34 +1673,39 @@ object ManifestSink {
     val freshSizes = listed
       .map(s => s"$epochDirName/${s.getPath.getName}" -> s.getLen).toMap
     val relFiles = freshSizes.keys.toSeq.sorted
-    val freshStats =
-      if (statsCols.isEmpty) None
-      else if (relFiles.isEmpty) Some(emptyStats(spark))
-      else Some(zoneStats(spark, root, relFiles, statsCols))
-    val fresh = Staged(root, next, token, relFiles, freshStats,
-      sizes = freshSizes)
-    val staged =
-      if (next <= 1) {
-        val sch =
-          if (relFiles.isEmpty) schemaFallback.map(s => asNullable(s).json)
-          else Some(asNullable(spark.read
-            .parquet(relFiles.map(r => s"$root/$r"): _*).schema).json)
-        fresh.copy(schemaJson = sch)
-      } else {
-        val priorEntries = manifestEntries3(spark, root, next - 1)
-        val prior = priorEntries.map(_._1)
-        val stats =
-          if (statsCols.isEmpty) None
-          else Some(statsTable(spark, root, next - 1).unionByName(freshStats.get))
-        fresh.copy(relFiles = (prior ++ relFiles).sorted, stats = stats,
-          schemaJson = commitSchema(spark, root, next - 1).map(_.json)
-            .orElse(fresh.schemaJson),
-          dvs = commitDvs(spark, root, next - 1),
-          sizes = freshSizes ++ knownSizes(priorEntries),
-          fileEpochs = knownEpochs(priorEntries))
-      }
-    try { commitStaged(spark, staged, Some(Txn(appId, version))); true }
-    catch {
+    val freshRows = fileStats.map { rows =>
+      val named = rows.map(r => statsRow(s"$epochDirName/${r.getString(0)}",
+        r.getString(1), r.get(2), r.get(3), r.get(4), r.get(5)))
+      val covered = named.map(_.getString(0)).toSet
+      require(covered == relFiles.toSet,
+        s"writer stats cover ${covered.toSeq.sorted.mkString(",")} but the " +
+          s"stage holds ${relFiles.mkString(",")}")
+      named
+    }
+    val priorEntries =
+      if (next <= 1) Nil else manifestEntries3(spark, root, next - 1)
+    // a stats-less base commits a stats-less next epoch (as the
+    // replace-groups commit does): rows for the fresh files alone would
+    // leave the prior files uncovered, and pruned reads and the CoW
+    // DELETE take a file with no row for "no match"
+    val statRows = freshRows.flatMap { rows =>
+      if (next <= 1) Some(rows)
+      else SnapshotCache.statRows(spark, root, next - 1).map(_.toSeq ++ rows)
+    }
+    val staged = Staged(root, next, token,
+      (priorEntries.map(_._1) ++ relFiles).sorted,
+      statRows.map(statsFrame(spark, _)),
+      schemaJson =
+        if (next <= 1) schema.map(s => asNullable(s).json)
+        else commitSchema(spark, root, next - 1).map(_.json),
+      dvs = if (next <= 1) Nil else commitDvs(spark, root, next - 1),
+      sizes = freshSizes ++ knownSizes(priorEntries),
+      fileEpochs = knownEpochs(priorEntries))
+    try {
+      commitStaged(spark, staged, Some(Txn(appId, version)))
+      statRows.foreach(SnapshotCache.seedStats(root, next, token, _))
+      true
+    } catch {
       case c: ManifestConflictException =>
         if (lastCommittedVersion(spark, root, appId).exists(_ >= version)) {
           // a concurrent replay of the same batch won: clean no-op —
@@ -1778,54 +1789,58 @@ object ManifestSink {
     c.substr(locate(marker, c) + lit(marker.length), lit(Int.MaxValue))
   }
 
+  /** The zone-map stat types, and the one refusal for the rest
+    * (checked before anything is written). */
+  private[graft] def requireZoneMapType(c: String,
+                                        dt: org.apache.spark.sql.types.DataType): Unit = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case LongType | IntegerType | ShortType | ByteType | StringType |
+           TimestampType | TimestampNTZType | DateType => ()
+      case other => throw new IllegalArgumentException(
+        s"zone maps support integral, string, timestamp, and date " +
+          s"columns; $c is $other")
+    }
+  }
+
   /** LAZY zone-map builder for SINGLE-flavor (statsCols-only) stages:
-    * the rows fold into the commit's one stats-parquet write, so the
-    * common append/DML commit pays ZERO extra jobs. Multi-flavor
+    * one aggregate grouped by input_file_name (one scan of the staged
+    * files, one exchange) whose per-file row fans out into the stats
+    * rows through a single `inline`. The frame is lazy, so it runs as
+    * the one job of the commit's stats-parquet write. Multi-flavor
     * stages go through [[fusedStats]] (one pass for all flavors)
     * instead of one scan per flavor. */
-  private def zoneStats(spark: SparkSession, root: String,
+  private[graft] def zoneStats(spark: SparkSession, root: String,
                         relFiles: Seq[String], statsCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     val df = spark.read.parquet(relFiles.map(r => s"$root/$r"): _*)
     val schema = df.schema
-    statsCols.foreach { c =>
-      schema(c).dataType match {
-        case LongType | IntegerType | ShortType | ByteType | StringType |
-             TimestampType | TimestampNTZType | DateType => ()
-        case other => throw new IllegalArgumentException(
-          s"zone maps support integral, string, timestamp, and date " +
-            s"columns; $c is $other")
-      }
-    }
+    statsCols.foreach(c => requireZoneMapType(c, schema(c).dataType))
     val aggs = statsCols.flatMap { c =>
       val e = statLongExpr(col(c), schema(c).dataType)
       Seq(min(e).as(s"__lo_$c"), max(e).as(s"__hi_$c"))
     } :+
       count(lit(1)).as("__cnt")
-    // relative path = last two segments (layout is always root/dir/file)
-    val rel = relUnderRoot(root)
     val base = df.groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
+    val noLong = lit(null).cast(LongType)
+    val noStr = lit(null).cast(StringType)
+    def entry(key: String, loL: org.apache.spark.sql.Column,
+              hiL: org.apache.spark.sql.Column, loS: org.apache.spark.sql.Column,
+              hiS: org.apache.spark.sql.Column) =
+      struct(lit(key).as("col"), loL.as("lo_long"), hiL.as("hi_long"),
+        loS.as("lo_str"), hiS.as("hi_str"))
     // one `__count` row per file rides every zone-map publish: it is
     // what makes metadata-only aggregation ([[aggFromMetadata]])
     // possible, and it merges/carries/compacts through the same
     // machinery as the min/max rows (appends union it, CoW carries it)
-    val cnt = base.select(
-      rel.as("file"), lit("__count").as("col"),
-      col("__cnt").cast(LongType).as("lo_long"),
-      lit(null).cast(LongType).as("hi_long"),
-      lit(null).cast(StringType).as("lo_str"),
-      lit(null).cast(StringType).as("hi_str"))
-    (statsCols.map { c =>
-      val isStr = schema(c).dataType == StringType
-      base.select(
-        rel.as("file"), lit(c).as("col"),
-        (if (isStr) lit(null).cast(LongType) else col(s"__lo_$c").cast(LongType)).as("lo_long"),
-        (if (isStr) lit(null).cast(LongType) else col(s"__hi_$c").cast(LongType)).as("hi_long"),
-        (if (isStr) col(s"__lo_$c") else lit(null).cast(StringType)).as("lo_str"),
-        (if (isStr) col(s"__hi_$c") else lit(null).cast(StringType)).as("hi_str"))
-    } :+ cnt).reduce(_ unionByName _)
+    val entries = statsCols.map { c =>
+      val (lo, hi) = (col(s"__lo_$c"), col(s"__hi_$c"))
+      if (schema(c).dataType == StringType) entry(c, noLong, noLong, lo, hi)
+      else entry(c, lo.cast(LongType), hi.cast(LongType), noStr, noStr)
+    } :+ entry("__count", col("__cnt").cast(LongType), noLong, noStr, noStr)
+    base.select(relUnderRoot(root).as("file"), inline(array(entries: _*)))
   }
 
   /** EVERY requested per-file stats flavor in ONE pass (guide §1.2 —
@@ -1856,15 +1871,7 @@ object ManifestSink {
     import org.apache.spark.sql.types._
     val df = spark.read.parquet(relFiles.map(r => s"$root/$r"): _*)
     val schema = df.schema
-    statsCols.foreach { c =>
-      schema(c).dataType match {
-        case LongType | IntegerType | ShortType | ByteType | StringType |
-             TimestampType | TimestampNTZType | DateType => ()
-        case other => throw new IllegalArgumentException(
-          s"zone maps support integral, string, timestamp, and date " +
-            s"columns; $c is $other")
-      }
-    }
+    statsCols.foreach(c => requireZoneMapType(c, schema(c).dataType))
     val aggs = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column]()
     aggs ++= statsCols.flatMap { c =>
       val e = statLongExpr(col(c), schema(c).dataType)
@@ -2034,10 +2041,7 @@ object ManifestSink {
           asLong(r.getAs[Any](s"__n_$c")), null, null, null)
       }
     }
-    Some(spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.Arrays.asList(rows.toSeq: _*)),
-      emptyStats(spark).schema))
+    Some(statsFrame(spark, rows.toSeq))
   }
 
 
@@ -2135,7 +2139,7 @@ object ManifestSink {
     * (file, col, lo_long, hi_long, lo_str, hi_str). */
   def statsTable(spark: SparkSession, root: String, epoch: Int): DataFrame = {
     val (token, _) = commitInfo(spark, root, epoch)
-    spark.read.parquet(s"$root/stats-$epoch.$token")
+    spark.read.schema(StatsSchema).parquet(s"$root/stats-$epoch.$token")
   }
 
   /** METADATA-ONLY AGGREGATION — answer `count(*)` and per-column
@@ -2842,14 +2846,31 @@ object ManifestSink {
     result
   }
 
-  private def emptyStats(spark: SparkSession): DataFrame = {
+  /** Every committed stats parquet's schema: one row per (file, stat
+    * key). Reads pin it, so a cold stats load never infers footers. */
+  val StatsSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField("file", StringType), StructField("col", StringType),
-        StructField("lo_long", LongType), StructField("hi_long", LongType),
-        StructField("lo_str", StringType), StructField("hi_str", StringType))))
+    StructType(Seq(
+      StructField("file", StringType), StructField("col", StringType),
+      StructField("lo_long", LongType), StructField("hi_long", LongType),
+      StructField("lo_str", StringType), StructField("hi_str", StringType)))
   }
+
+  /** One stats row as a committed stats parquet reads back. */
+  private[graft] def statsRow(file: String, key: String, loLong: Any, hiLong: Any,
+                              loStr: Any, hiStr: Any): org.apache.spark.sql.Row =
+    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      Array(file, key, loLong, hiLong, loStr, hiStr), StatsSchema)
+
+  /** Stats rows collected on the driver as a local relation: the
+    * commit's stats write is then one job with no shuffle. */
+  private[graft] def statsFrame(spark: SparkSession,
+                                rows: Seq[org.apache.spark.sql.Row]): DataFrame =
+    spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](
+        java.util.Arrays.asList(rows: _*)), StatsSchema)
+
+  private def emptyStats(spark: SparkSession): DataFrame = statsFrame(spark, Nil)
 
   /** CHANGE DATA FEED — the row-level changes between two committed
     * epochs (Delta's `table_changes` surface), computed from the

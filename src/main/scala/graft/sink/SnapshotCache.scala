@@ -112,13 +112,20 @@ object SnapshotCache {
       case None =>
         val loaded =
           if (!ManifestSink.statsExistsFor(spark, root, epoch, snap.token)) None
-          else Some(spark.read
+          else Some(spark.read.schema(ManifestSink.StatsSchema)
             .parquet(s"$root/stats-$epoch.${snap.token}").collect())
         statsLoads += 1
         lock.synchronized { stats.put(key, loaded) }
         loaded
     }
   }
+
+  /** Install the stats rows a commit just wrote for (root, epoch,
+    * token) — the rows it held when it wrote them — so the first read
+    * of the new epoch plans without a stats load. Callers seed only
+    * after their commit marker's CAS won under `token`. */
+  private[sink] def seedStats(root: String, epoch: Int, token: String, rows: Seq[Row]): Unit =
+    lock.synchronized { stats.put((root, epoch, token), Some(rows.toArray)) }
 
   /** Drop all cached state (tests; not needed for correctness — token
     * validation already handles recreated tables). */
