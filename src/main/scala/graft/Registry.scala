@@ -2006,10 +2006,9 @@ object Registry {
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
           root, 1, Seq("event_id"))
-        val (df, hit, total) =
-          graft.sink.ManifestSink.readRangePruned(s, root, "event_id", 100L, 599L)
-        df.filter(col("event_id").between(100L, 599L))
-          .withColumn("files_pruned", lit(hit < total))
+        val (df, hit, total) = graft.sink.ManifestSink
+          .readPruned(s, root, col("event_id").between(100L, 599L))
+        df.withColumn("files_pruned", lit(hit < total))
           .orderBy("event_id")
       },
       """SELECT event_id, user_id, value, TRUE AS files_pruned FROM events
@@ -2033,9 +2032,8 @@ object Registry {
             .sortWithinPartitions("event_type", "event_id"),
           root, 1, Seq("event_type", "event_id"))
         val (df, hit, total) = graft.sink.ManifestSink
-          .readRangePrunedString(s, root, "event_type", "click", "error")
-        df.filter(col("event_type").between("click", "error"))
-          .withColumn("files_pruned", lit(hit < total))
+          .readPruned(s, root, col("event_type").between("click", "error"))
+        df.withColumn("files_pruned", lit(hit < total))
           .orderBy("event_id")
       },
       """SELECT event_id, event_type, value, TRUE AS files_pruned FROM events
@@ -2280,9 +2278,8 @@ object Registry {
           ev.repartition(16, col("user_id")), root, 1,
           statsCols = Seq("user_id"), dictCols = Seq("user_id"))
         val (df, hitN, total) =
-          graft.sink.ManifestSink.readPointPruned(s, root, "user_id", 13L)
-        df.filter(col("user_id") === 13)
-          .withColumn("dict_ok", lit(hitN >= 1 && hitN < total))
+          graft.sink.ManifestSink.readPruned(s, root, col("user_id") === 13L)
+        df.withColumn("dict_ok", lit(hitN >= 1 && hitN < total))
           .orderBy("event_id")
       },
       """SELECT event_id, user_id, value, TRUE AS dict_ok FROM events
@@ -2305,9 +2302,8 @@ object Registry {
           ev.repartition(16, col("user_id")), root, 1,
           statsCols = Seq("event_id"), bloomCols = Seq("event_id"))
         val (df, hitN, total) =
-          graft.sink.ManifestSink.readPointPruned(s, root, "event_id", 424L)
-        df.filter(col("event_id") === 424L)
-          .withColumn("bloom_ok", lit(hitN >= 1 && hitN < total))
+          graft.sink.ManifestSink.readPruned(s, root, col("event_id") === 424L)
+        df.withColumn("bloom_ok", lit(hitN >= 1 && hitN < total))
           .orderBy("event_id")
       },
       """SELECT event_id, user_id, value, TRUE AS bloom_ok FROM events
@@ -2872,7 +2868,7 @@ object Registry {
         val txn = graft.sink.ManifestSink
           .lastCommittedVersion(s, root, "q_stream_sink_format")
         val (_, hit, all) = graft.sink.ManifestSink
-          .readRangePruned(s, root, "event_id", 0L, 49L)
+          .readPruned(s, root, col("event_id").between(0L, 49L))
         val sinkOk = epochs == 2 && txn.contains(1L) && (hit < all || all == 1)
         graft.sink.ManifestSink.read(s, root)
           .select(col("event_id"), col("user_id"), col("value"))
@@ -3587,9 +3583,9 @@ object Registry {
           "value FROM wid_src WHERE event_id < 50")
         // range pruning across BOTH populations (bounds as longs)
         val (_, hitOld, all) = graft.sink.ManifestSink
-          .readRangePruned(s, root, "event_id", 0L, 29L)
+          .readPruned(s, root, col("event_id").between(0L, 29L))
         val (_, hitNew, _) = graft.sink.ManifestSink
-          .readRangePruned(s, root, "event_id", 9100L, 9129L)
+          .readPruned(s, root, col("event_id").between(9100L, 9129L))
         val travelOk = s.sql(s"SELECT * FROM graft.`$root` VERSION AS OF 1")
           .schema("event_id").dataType ==
           org.apache.spark.sql.types.IntegerType &&
@@ -4843,15 +4839,16 @@ object Registry {
         |FROM events WHERE event_id % 5 = 1
         |ORDER BY event_id""".stripMargin),
     // CATALYST-INTEGRATED data skipping (round 11): the Delta
-    // TahoeFileIndex pattern — ManifestFileIndex.table returns a PLAIN
-    // DataFrame backed by a custom FileIndex; an ordinary .filter()
-    // pushes its predicates into listFiles at PLANNING time and the
-    // index answers with only the zone-map-overlapping files. No side
-    // API: the idiomatic DataFrame program gets manifest resolution +
-    // file skipping transparently. planner_pruned gates that the
+    // TahoeFileIndex pattern — an ordinary .filter() over the
+    // format("graft-manifest") read pushes its predicates into the
+    // catalog scan, whose ManifestFileIndex answers at PLANNING time
+    // with only the zone-map-overlapping files. No side API: the
+    // idiomatic DataFrame program gets manifest resolution + file
+    // skipping transparently; readPruned only reads the scan's own
+    // selection back as evidence. planner_pruned gates that the
     // planning pass selected strictly fewer files than the epoch
     // holds; the residual filter keeps correctness independent of the
-    // skip (PlanShapeSpec pins the executed numFiles metric).
+    // skip (PlanShapeSpec pins the executed scan's file count).
     "q_manifest_table_skip" -> q(
       (s, d) => {
         import org.apache.spark.sql.functions.{col, lit}
@@ -4861,11 +4858,9 @@ object Registry {
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
           root, 1, Seq("event_id"))
-        val (t, idx) = graft.sink.ManifestFileIndex.tableWithIndex(s, root)
-        val f = t.filter(col("event_id").between(100L, 599L))
-        f.count() // force one planning pass to capture the selection
-        f.withColumn("planner_pruned",
-            lit(idx.lastSelectedCount < idx.inputFiles.length && idx.lastSelectedCount >= 1))
+        val (f, hit, total) = graft.sink.ManifestSink
+          .readPruned(s, root, col("event_id").between(100L, 599L))
+        f.withColumn("planner_pruned", lit(hit < total && hit >= 1))
           .orderBy("event_id")
       },
       """SELECT event_id, user_id, value, TRUE AS planner_pruned FROM events
@@ -4900,11 +4895,10 @@ object Registry {
             .drop("__z"),
           root, 1, Seq("event_id", "user_id"))
         val (df, h1, t1) = graft.sink.ManifestSink
-          .readRangePruned(s, root, "event_id", 100L, 299L)
+          .readPruned(s, root, col("event_id").between(100L, 299L))
         val (_, h2, t2) = graft.sink.ManifestSink
-          .readRangePruned(s, root, "user_id", uMin, uMin + (uMax - uMin) / 5)
-        df.filter(col("event_id").between(100L, 299L))
-          .withColumn("zorder_prunes_both", lit(h1 < t1 && h2 < t2))
+          .readPruned(s, root, col("user_id").between(uMin, uMin + (uMax - uMin) / 5))
+        df.withColumn("zorder_prunes_both", lit(h1 < t1 && h2 < t2))
           .orderBy("event_id", "user_id")
       },
       """SELECT event_id, user_id, value, TRUE AS zorder_prunes_both
@@ -4956,8 +4950,8 @@ object Registry {
           "event_id", Seq("event_id"))
         graft.sink.ManifestSink.rollback(s, root, to = 1)
         val cur = graft.sink.ManifestSink.currentEpoch(s, root)
-        val (_, hit, total) =
-          graft.sink.ManifestSink.readRangePruned(s, root, "event_id", 100L, 599L)
+        val (_, hit, total) = graft.sink.ManifestSink
+          .readPruned(s, root, col("event_id").between(100L, 599L))
         graft.sink.ManifestSink.read(s, root)
           .withColumn("rollback_ok", lit(cur == 3 && hit < total))
           .orderBy("event_id")
@@ -5021,8 +5015,8 @@ object Registry {
         graft.sink.ManifestSink.compact(s, root, Seq("event_id"), numFiles = 4)
         val after = graft.sink.ManifestSink
           .manifestFiles(s, root, graft.sink.ManifestSink.currentEpoch(s, root)).size
-        val (_, hit, total) =
-          graft.sink.ManifestSink.readRangePruned(s, root, "event_id", 100L, 599L)
+        val (_, hit, total) = graft.sink.ManifestSink
+          .readPruned(s, root, col("event_id").between(100L, 599L))
         graft.sink.ManifestSink.read(s, root)
           .withColumn("compacted", lit(after < before))
           .withColumn("still_prunes", lit(hit < total))

@@ -41,8 +41,8 @@ import graft.sink.{ManifestFileIndex, ManifestSink}
   * `SHOW TABLES` / `DROP TABLE` manage that directory tree.
   *
   * The read path plans through [[GraftScanBuilder]]: pushed-down SQL
-  * predicates walk the SAME skipping ladder as the DataFrame path
-  * (dictionary → bloom → zone map, [[ManifestFileIndex]]) at PLANNING
+  * predicates walk the one skipping ladder ([[ManifestFileIndex]]:
+  * bucket → dictionary → bloom → zone map) at PLANNING
   * time, and the scan Spark executes is its own V2 `ParquetScan` over
   * only the surviving manifest files — SQL users get manifest
   * resolution, orphan invisibility, and file skipping with zero side
@@ -563,7 +563,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
           require(idx >= 0, s"no column $name")
           // empty table: no files to widen over, but keep the same
           // promotion contract so behavior is epoch-independent
-          require(ManifestSink.isSafeWideningPublic(
+          require(ManifestSink.isSafeWidening(
             prior.fields(idx).dataType, u.newDataType()),
             s"unsupported type change for $name: " +
               s"${prior.fields(idx).dataType.simpleString} -> " +
@@ -1992,8 +1992,9 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
 
   /** `DELETE FROM ... WHERE k = v / k IN (...)` — COST-ROUTED between
     * copy-on-write and merge-on-read (the r12 VERDICT item 4): the
-    * zone maps price the CoW rewrite (files whose [lo, hi] contain a
-    * deleted key); when that rewrite would touch more than
+    * scan's own skipping index ([[ManifestFileIndex]]) prices the CoW
+    * rewrite as the files an `IN` lookup of the deleted keys cannot
+    * skip; when that rewrite would touch more than
     * `spark.graft.delete.mor.fileFraction` (default 0.5) of the
     * manifest — a wide, low-selectivity delete, exactly where
     * rewriting is maximally wasteful — the delete commits as a
@@ -2036,30 +2037,13 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
       case None if mode == "mor" => true
       case None if mode == "cow" => false
       case None =>
-        // price the rewrite from the CACHED zone maps (driver-side,
-        // bounded by the file count): literal keys vs per-file ranges
-        // (stats are keyed by PHYSICAL name)
-        val rows = graft.sink.SnapshotCache.statRows(spark, dir, e)
-          .getOrElse(Array.empty[org.apache.spark.sql.Row])
-          .filter(_.getString(1) == physName(colName))
-        val isStr = tableType == StringType
-        val u8 = org.apache.spark.unsafe.types.UTF8String.fromString _
-        val litsStr = if (isStr) vs.map(_.asInstanceOf[String]) else Nil
-        val litsLong = if (isStr) Nil else vs.map {
-          case l: Long => l
-          case i: Int => i.toLong
-          case s: Short => s.toLong
-          case b: Byte => b.toLong
-        }
-        val touched = rows.count { r =>
-          if (isStr)
-            !r.isNullAt(4) && !r.isNullAt(5) && litsStr.exists(v =>
-              u8(r.getString(4)).compareTo(u8(v)) <= 0 &&
-                u8(v).compareTo(u8(r.getString(5))) <= 0)
-          else
-            !r.isNullAt(2) && !r.isNullAt(3) && litsLong.exists(v =>
-              r.getLong(2) <= v && v <= r.getLong(3))
-        }
+        // price the rewrite with the scan's own skipping ladder over
+        // the CACHED stats (driver-side, bounded by the file count):
+        // the files a key lookup cannot skip are the files a CoW
+        // rewrite touches (stats are keyed by PHYSICAL name)
+        val key = AttributeReference(physName(colName), tableType)()
+        lazy val touched = new ManifestFileIndex(spark, dir, e)
+          .select(Seq(CIn(key, vs.map(v => Literal(v))))).size
         val total = ManifestSink.manifestEntries(spark, dir, e).size
         val frac = spark.sessionState.conf
           .getConfString("spark.graft.delete.mor.fileFraction", "0.5").toDouble
@@ -2349,9 +2333,13 @@ final class GraftScanBuilder(spark: SparkSession, dir: String, epoch: Int,
   * files whose dictionary/bloom/zone-map entries may hold those keys.
   * This is dynamic FILE pruning (Delta's DFP) — at 100 TB, a
   * dim-filtered fact join reads the fact files the surviving dim keys
-  * touch, not the fact table. The actual reading delegates to Spark's
-  * own V2 ParquetScan over the survivor list, so row-group pruning,
-  * columnar batches, and vectorized decoding all apply unchanged. */
+  * touch, not the fact table. Every selection — static, runtime, the
+  * keyed (storage-partitioned) planners, the DV columnar judgement —
+  * asks the scan's ONE [[ManifestFileIndex]], built once per scan; the
+  * static survivor set is computed once too. The actual reading
+  * delegates to Spark's own V2 ParquetScan over the survivor list, so
+  * row-group pruning, columnar batches, and vectorized decoding all
+  * apply unchanged. */
 final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
                           tableSchema: StructType, required: StructType,
                           pushed: Array[Filter],
@@ -2473,17 +2461,30 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
     allStatRows.filter(r => r.getString(1) == "__count" && !r.isNullAt(2))
       .map(r => r.getString(0) -> r.getLong(2)).toMap
 
+  /** The one skipping index of this scan and the static pushed
+    * filters in the PHYSICAL terms its stats are keyed by. */
+  private lazy val index = new ManifestFileIndex(spark, dir, epoch)
+  private lazy val staticExprs: Seq[Expression] =
+    pushed.map(physFilter).flatMap(GraftFileScan.toCatalyst(physTableSchema, _)).toSeq
+
+  /** The files the static pushed filters keep: what the keyed
+    * planners, the mixed-spec scope and the DV columnar judgement
+    * plan over. */
+  private lazy val staticSurvivors: Seq[org.apache.hadoop.fs.FileStatus] =
+    index.select(staticExprs)
+
   /** The planned file set under everything known so far: static
     * pushed filters, runtime (join-driven) filters, and — on an
     * unfiltered scan — the LIMIT cap (shortest manifest prefix whose
     * __count rows cover the limit). */
   private def selectSurvivors(): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val idx = new ManifestFileIndex(spark, dir, epoch)
-    val exprs = (pushed ++ runtime).map(physFilter)
+    val runtimeExprs = runtime.map(physFilter)
       .flatMap(GraftFileScan.toCatalyst(physTableSchema, _)).toSeq
-    val all = idx.listFiles(Nil, exprs).flatMap(_.files).map(_.fileStatus)
+    val all =
+      if (runtimeExprs.isEmpty) staticSurvivors
+      else index.select(staticExprs ++ runtimeExprs)
     limit match {
-      case Some(n) if exprs.isEmpty &&
+      case Some(n) if staticExprs.isEmpty && runtimeExprs.isEmpty &&
         all.forall(s => fileCounts.contains(relOf(s.getPath))) =>
         // keep whole files until the committed counts cover n (Spark's
         // own limit still applies above — this only bounds the I/O)
@@ -2496,6 +2497,10 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
       case _ => all
     }
   }
+
+  /** How many files this scan reads under what is known so far — the
+    * evidence `ManifestSink.readPruned` reports. */
+  private[graft] def selectedFiles: Int = selectSurvivors().size
 
   private def relOf(p: Path): String = ManifestSink.relOfData(p)
 
@@ -2552,16 +2557,10 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
         r.getString(1).startsWith("__ident:") ||
         r.getString(1).startsWith("__trunc:")))
       // no layout rows anywhere (plain unpartitioned table): don't
-      // pay an extra planning-time listFiles on every filtered scan
+      // pay an extra planning-time selection on every filtered scan
       None
-    else {
-      val exprs = pushed.map(physFilter)
-        .flatMap(GraftFileScan.toCatalyst(physTableSchema, _)).toSeq
-      if (exprs.isEmpty) None
-      else Some(new ManifestFileIndex(spark, dir, epoch)
-        .listFiles(Nil, exprs).flatMap(_.files)
-        .map(f => ManifestSink.relOfData(f.fileStatus.getPath)).toSet)
-    }
+    else if (staticExprs.isEmpty) None
+    else Some(staticSurvivors.map(st => relOf(st.getPath)).toSet)
 
   /** The committed bucket layout, when this scan may exploit it: not
     * a row-level rewrite scan (groups are files, not buckets) and not
@@ -2641,10 +2640,7 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
   private def identPairPartitions(partnerOf: String => Int,
                                   completeAxis: Option[Int])
       : Option[Array[InputPartition]] = idented0.map { is =>
-    val idx = new ManifestFileIndex(spark, dir, epoch)
-    val exprs = pushed.map(physFilter)
-      .flatMap(GraftFileScan.toCatalyst(physTableSchema, _)).toSeq
-    val survivors = idx.listFiles(Nil, exprs).flatMap(_.files).map(_.fileStatus)
+    val survivors = staticSurvivors
     GraftTable.lastPlannedFiles = survivors.size
     val colType = physTableSchema(is.col).dataType
     implicit val ord: Ordering[Any] = identOrdering(is)
@@ -2732,10 +2728,7 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
     * pushed filters — single-value files make `WHERE col = ?` exact. */
   private lazy val identKeyedPartitions: Option[Array[InputPartition]] =
     idented.map { is =>
-      val idx = new ManifestFileIndex(spark, dir, epoch)
-      val exprs = pushed.map(physFilter)
-        .flatMap(GraftFileScan.toCatalyst(physTableSchema, _)).toSeq
-      val survivors = idx.listFiles(Nil, exprs).flatMap(_.files).map(_.fileStatus)
+      val survivors = staticSurvivors
       GraftTable.lastPlannedFiles = survivors.size
       val colType = physTableSchema(is.col).dataType
       // the key value Spark compares partitions with: identity keys in
@@ -2792,10 +2785,7 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
     * INTERSECTED file list. */
   private lazy val pairKeyedPartitions: Option[Array[InputPartition]] =
     composed.map { case (bs, ts) =>
-      val idx = new ManifestFileIndex(spark, dir, epoch)
-      val exprs = pushed.map(physFilter)
-        .flatMap(GraftFileScan.toCatalyst(physTableSchema, _)).toSeq
-      val survivors = idx.listFiles(Nil, exprs).flatMap(_.files).map(_.fileStatus)
+      val survivors = staticSurvivors
       GraftTable.lastPlannedFiles = survivors.size
       val byPair = survivors.groupBy { s =>
         val rel = relOf(s.getPath)
@@ -2841,10 +2831,7 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
     * prunes whole ordinals because layout files are unit-aligned. */
   private lazy val timeKeyedPartitions: Option[Array[InputPartition]] =
     timed.map { ts =>
-      val idx = new ManifestFileIndex(spark, dir, epoch)
-      val exprs = pushed.map(physFilter)
-        .flatMap(GraftFileScan.toCatalyst(physTableSchema, _)).toSeq
-      val survivors = idx.listFiles(Nil, exprs).flatMap(_.files).map(_.fileStatus)
+      val survivors = staticSurvivors
       GraftTable.lastPlannedFiles = survivors.size
       val byOrd = survivors.groupBy(s => ts.fileOrds(relOf(s.getPath)))
       val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
@@ -2878,10 +2865,7 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
     * SPJ is removing the shuffle from, and skipping is advisory. */
   private lazy val keyedPartitions: Option[Array[InputPartition]] =
     bucketed.map { bs =>
-      val idx = new ManifestFileIndex(spark, dir, epoch)
-      val exprs = pushed.map(physFilter)
-        .flatMap(GraftFileScan.toCatalyst(physTableSchema, _)).toSeq
-      val survivors = idx.listFiles(Nil, exprs).flatMap(_.files).map(_.fileStatus)
+      val survivors = staticSurvivors
       GraftTable.lastPlannedFiles = survivors.size
       val byBucket = survivors.groupBy(s => bs.fileBuckets(relOf(s.getPath)))
       val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
@@ -3007,10 +2991,8 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
         // the factory is file-list-independent (each FilePartition
         // carries its own files); built over the manifest so the keyed
         // path never re-runs the delegate's survivor selection
-        new GraftBucketReaderFactory(parquetBatchOver(
-          new ManifestFileIndex(spark, dir, epoch)
-            .listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus))
-          .createReaderFactory())
+        new GraftBucketReaderFactory(
+          parquetBatchOver(index.select(Nil)).createReaderFactory())
       else delegate.createReaderFactory()
     if (dvSorted.isEmpty) {
       GraftTable.lastDvApplied = false
@@ -3060,12 +3042,9 @@ final class GraftFileScan(spark: SparkSession, dir: String, epoch: Int,
       // partitions still carry DV-subject files, whose deleted rows
       // would then re-enter unfiltered (ADVICE r13).
       val dvJudged: Seq[org.apache.hadoop.fs.FileStatus] =
-        if (pairKeyedPartitions.isDefined || keyedPartitions.isDefined || timeKeyedPartitions.isDefined) {
-          val idx = new ManifestFileIndex(spark, dir, epoch)
-          val exprs = pushed.map(physFilter)
-            .flatMap(GraftFileScan.toCatalyst(physTableSchema, _)).toSeq
-          idx.listFiles(Nil, exprs).flatMap(_.files).map(_.fileStatus)
-        } else selectSurvivors()
+        if (pairKeyedPartitions.isDefined || keyedPartitions.isDefined ||
+          timeKeyedPartitions.isDefined) staticSurvivors
+        else selectSurvivors()
       val columnarOk = rowLevel.isEmpty &&
         dvJudged.forall(st => dvGroupOf(relOf(st.getPath)) == n)
       GraftTable.lastDvApplied = true
@@ -3457,9 +3436,8 @@ private[catalog] object RowLevelCommit {
           Some(s"the ${op.command()} pushed no prunable conjunct to " +
             "bound its read set")
         else {
-          val idx = new ManifestFileIndex(spark, dir, e)
-          val survivors = idx.listFiles(Nil, exprs).flatMap(_.files)
-            .map(f => ManifestSink.relOfData(f.fileStatus.getPath)).toSet
+          val survivors = new ManifestFileIndex(spark, dir, e).select(exprs)
+            .map(f => ManifestSink.relOfData(f.getPath)).toSet
           val overlap = added.intersect(survivors)
           if (overlap.isEmpty) None
           else Some(s"${overlap.size} of them may hold rows matching " +

@@ -831,10 +831,16 @@ object AnnIndex {
     * vectors are computed and checkpointed once and feed the cell
     * assignment, the int8 codes, and the composed rows — the trio
     * spelling paid three unit projections plus [[appendIvfSq]]'s two
-    * corpus scans per batch (guide §1.2). */
+    * corpus scans per batch (guide §1.2). Every tier keys its rows by
+    * `vec_id`, so a delta that repeats an id is refused before any
+    * tier is written (the composed tier's per-id aggregate would pair
+    * one embedding's cell with another's codes). */
   def appendAll(spark: SparkSession, ivfDir: String, sqDir: String,
                 csqDir: String, delta: DataFrame): Unit = {
     val units = unitsOf(delta).localCheckpoint()
+    units.groupBy(col("vec_id")).count().filter(col("count") > 1).head(1)
+      .foreach(r => throw new IllegalArgumentException(
+        s"ANN append delta repeats vec_id ${r.get(0)}; ids must be unique"))
     appendIvfFromUnits(spark, ivfDir, delta, units)
     appendSqFromUnits(spark, sqDir, units)
     appendIvfSqFromUnits(spark, ivfDir, sqDir, csqDir, units)

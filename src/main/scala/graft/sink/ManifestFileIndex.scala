@@ -1,36 +1,30 @@
 package graft.sink
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.PartitionDirectory
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Zone-map data skipping INSIDE Catalyst planning — the Delta
-  * TahoeFileIndex pattern: `ManifestSink.table(spark, root)` returns a
-  * plain DataFrame whose scan is backed by this custom [[FileIndex]];
-  * when the user writes an ordinary `.filter(col("event_id")
-  * .between(...))`, Spark pushes the data filters into
-  * `listFiles(partitionFilters, dataFilters)` at PLANNING time, and
-  * the index answers with only the files whose committed per-column
-  * (min, max) overlap the predicate. No side API, no special read
-  * call — the idiomatic DataFrame program gets manifest resolution,
-  * orphan invisibility, AND file skipping for free, which is the
-  * Spark-first spelling of "the manifest is a coarse secondary
-  * index". `readRangePruned` remains the explicit-evidence API (it
-  * returns the hit counts); this is the transparent one.
+/** The one answer to "which files of this epoch can hold a row
+  * matching these predicates" — the Delta TahoeFileIndex idea behind
+  * the catalog scan: [[graft.catalog.GraftFileScan]] hands it the
+  * pushed (and runtime) filters, already rewritten to the PHYSICAL
+  * names the committed stats are keyed by, and reads only the files
+  * [[select]] keeps. Every skipping decision asks it: SQL and
+  * `format("graft-manifest")` reads, `ManifestSink.readPruned`'s
+  * evidence, the row-level append guard, and the DELETE cost router.
   *
-  * Pruning is CONSERVATIVE: only And/Or trees of simple
-  * (column op literal) comparisons on stats-carrying columns prune;
-  * anything unrecognized keeps the file. Long and string bounds are
-  * both honored. The row-level filter still applies after the scan —
-  * skipping is an I/O optimization, never a correctness dependency
-  * (the same contract as parquet row-group stats one level down). */
-final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int)
-  extends FileIndex {
+  * Point predicates walk the ladder bucket → dictionary → bloom →
+  * zone map; ranges use the zone map. Pruning is CONSERVATIVE: only
+  * And/Or trees of simple (column op literal) comparisons prune, and
+  * a file with no stats for a column is kept. The row-level filter
+  * still applies after the scan — skipping is an I/O optimization,
+  * never a correctness dependency (the same contract as parquet
+  * row-group stats one level down). */
+final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int) {
 
   /** FileStatuses built from MANIFEST METADATA (rel + committed size —
     * Delta's add.size): ZERO per-file RPCs at index construction. The
@@ -51,8 +45,6 @@ final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int)
       }
     }
   }
-
-  private val filePaths: Seq[Path] = statuses.map(_.getPath)
 
   private val statRows: Array[org.apache.spark.sql.Row] =
     SnapshotCache.statRows(spark, root, epoch).getOrElse(Array.empty)
@@ -121,15 +113,34 @@ final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int)
   private def bloomMayContain(rel: String, colName: String,
                               v: scala.Either[Long, String]): Option[Boolean] =
     blooms.get((rel, colName)).map { case (m, k, hex) =>
-      val key = (v, m, k)
-      val pos = bloomPosCache.getOrElseUpdate(key, {
+      val pos = bloomPosCache.getOrElseUpdate((v, m, k), {
         val probe = v match {
           case scala.Left(l)  => org.apache.spark.sql.functions.lit(l)
           case scala.Right(s) => org.apache.spark.sql.functions.lit(s)
         }
-        ManifestSink.bloomProbePositions(spark, probe, m, k)
+        bloomProbePositions(probe, m, k)
       })
-      ManifestSink.bloomHexTest(hex, pos)
+      bloomHexTest(hex, pos)
+    }
+
+  /** The probe side of `ManifestSink.bloomStats`: the candidate
+    * value's k bit positions under (m, k), computed with the SAME
+    * Spark expression the write side used (a 1-row local plan —
+    * constant-folded, no job). */
+  private def bloomProbePositions(value: org.apache.spark.sql.Column,
+                                  m: Long, k: Long): Seq[Int] = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.IntegerType
+    val row = spark.range(1).select((0 until k.toInt).map(i =>
+      pmod(xxhash64(lit(i), value), lit(m)).cast(IntegerType).as(s"p$i")): _*)
+      .head()
+    (0 until k.toInt).map(row.getInt)
+  }
+
+  private def bloomHexTest(hex: String, positions: Seq[Int]): Boolean =
+    positions.forall { p =>
+      val b = Integer.parseInt(hex.substring((p / 8) * 2, (p / 8) * 2 + 2), 16)
+      (b & (1 << (p % 8))) != 0
     }
 
   private def relOf(p: Path): String = ManifestSink.relOfData(p)
@@ -219,24 +230,12 @@ final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int)
     }
   }
 
-  override def rootPaths: Seq[Path] = Seq(new Path(root))
-
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val selected =
-      if (dataFilters.isEmpty || zoneMaps.isEmpty) statuses
-      else statuses.filter(s => dataFilters.forall(f => mayMatch(relOf(s.getPath), f)))
-    lastSelectedCount = selected.size
-    Seq(PartitionDirectory(InternalRow.empty, selected.toArray))
-  }
-
-  /** Planning evidence for specs: files the LAST listFiles selected. */
-  @volatile var lastSelectedCount: Int = -1
-
-  override def inputFiles: Array[String] = filePaths.map(_.toString).toArray
-  override def refresh(): Unit = ()
-  override def sizeInBytes: Long = statuses.map(_.getLen).sum
-  override def partitionSchema: StructType = StructType(Nil)
+  /** The files of the epoch that may hold a row satisfying EVERY
+    * expression (all of them when nothing is given or the epoch
+    * carries no zone maps), in manifest order. */
+  def select(exprs: Seq[Expression]): Seq[FileStatus] =
+    if (exprs.isEmpty || zoneMaps.isEmpty) statuses
+    else statuses.filter(s => exprs.forall(f => mayMatch(relOf(s.getPath), f)))
 }
 
 /** A [[FileIndex]] over an ALREADY-RESOLVED file list: no listing, no
@@ -281,62 +280,4 @@ object ManifestFileIndex {
     * manifest) fallback — zero for any table committed since sizes
     * landed (spec evidence for the RPC-free planning contract). */
   val legacyStatusRpcs = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** The manifest table as a PLAIN DataFrame with planning-time zone-map
-    * skipping (see class doc). Pass `epoch` to time-travel. */
-  def table(spark: SparkSession, root: String, epoch: Int = -1): DataFrame =
-    tableWithIndex(spark, root, epoch)._1
-
-  /** Same, also returning the index (specs read its selection count).
-    * Mapped epochs plan the skipping relation under the PHYSICAL
-    * schema and surface the logical names via one aliasing projection
-    * — pushed filters rewrite through the aliases into the physical
-    * attributes the committed stats are keyed by, so skipping still
-    * bites after a rename. */
-  def tableWithIndex(spark: SparkSession, root: String,
-                     epoch: Int = -1): (DataFrame, ManifestFileIndex) = {
-    val e = if (epoch >= 0) epoch else ManifestSink.currentEpoch(spark, root)
-    val idx = new ManifestFileIndex(spark, root, e)
-    val committed = ManifestSink.commitSchema(spark, root, e)
-    val mapped = committed.filter(ColumnMapping.hasMapping)
-    val schema = mapped.map(ColumnMapping.physicalSchema)
-      .orElse(committed)
-      .getOrElse(ManifestSink.read(spark, root, e).schema)
-    val rel = HadoopFsRelation(idx, StructType(Nil), schema, None,
-      new ParquetFileFormat(), Map.empty[String, String])(spark)
-    val base = spark.baseRelationToDataFrame(rel)
-    // merge-on-read deletes apply above the skipping scan (data
-    // filters still push through the join child into listFiles);
-    // the DV key is physical — exactly the relation's pre-alias names.
-    // DVs are EPOCH-SCOPED: when every live file predates every DV
-    // (the common post-takedown window), one anti join over the key
-    // union is exact; a mixed-scope table (a post-DV append exists)
-    // cannot be expressed above this single relation, so the df falls
-    // back to the scoped reader — the returned index still serves
-    // skipping evidence, only this df's pushdown path is bypassed.
-    val dvs = ManifestSink.commitDvs(spark, root, e)
-    val maxFileEpoch = ManifestSink.manifestEntries3(spark, root, e)
-      .map { case (_, _, fe) => math.max(fe, 0) }.maxOption.getOrElse(0)
-    val allApply = dvs.forall { case (dvRel, _) =>
-      "dv-(\\d+)\\..*".r.findFirstMatchIn(dvRel).forall(_.group(1).toInt > maxFileEpoch)
-    }
-    if (dvs.nonEmpty && !allApply) (ManifestSink.read(spark, root, e), idx)
-    else {
-      val withDv =
-        if (dvs.isEmpty) base
-        else {
-          import org.apache.spark.sql.functions.{broadcast, col}
-          val k = dvs.head._2
-          val keys = dvs.map { case (dvRel, kc) =>
-            spark.read.parquet(s"$root/$dvRel").select(col(kc).as(k))
-          }.reduce(_ unionByName _)
-          base.join(broadcast(keys), Seq(k), "left_anti")
-        }
-      val df = mapped match {
-        case Some(p) => withDv.select(ColumnMapping.toLogicalCols(p): _*)
-        case None => withDv
-      }
-      (df, idx)
-    }
-  }
 }

@@ -1380,14 +1380,10 @@ object ManifestSink {
     cur + 1
   }
 
-  /** The widening-promotion predicate, exposed for the pre-first-commit
-    * sidecar path (same contract, no epoch to commit). */
-  def isSafeWideningPublic(from: org.apache.spark.sql.types.DataType,
-                           to: org.apache.spark.sql.types.DataType): Boolean =
-    isSafeWidening(from, to)
-
-  private def isSafeWidening(from: org.apache.spark.sql.types.DataType,
-                             to: org.apache.spark.sql.types.DataType): Boolean = {
+  /** The widening-promotion predicate — also the pre-first-commit
+    * schema sidecar's contract (same rule, no epoch to commit). */
+  private[graft] def isSafeWidening(from: org.apache.spark.sql.types.DataType,
+                                    to: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
     (from, to) match {
       case (ByteType, ShortType | IntegerType | LongType) => true
@@ -2059,82 +2055,6 @@ object ManifestSink {
       stage(df, root, epoch, statsCols, unique = false, Nil, 256,
         bloomCols, bloomBits, bloomHashes), txn)
 
-  /** The probe side of [[bloomStats]]: the candidate value's k bit
-    * positions under (m, k), computed with the SAME Spark expression
-    * the write side used (a 1-row local plan — constant-folded, no
-    * job). */
-  private[sink] def bloomProbePositions(spark: SparkSession,
-                             value: org.apache.spark.sql.Column,
-                             m: Long, k: Long): Seq[Int] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.IntegerType
-    val row = spark.range(1).select((0 until k.toInt).map(i =>
-      pmod(xxhash64(lit(i), value), lit(m)).cast(IntegerType).as(s"p$i")): _*)
-      .head()
-    (0 until k.toInt).map(row.getInt)
-  }
-
-  private[sink] def bloomHexTest(hex: String, positions: Seq[Int]): Boolean =
-    positions.forall { p =>
-      val b = Integer.parseInt(hex.substring((p / 8) * 2, (p / 8) * 2 + 2), 16)
-      (b & (1 << (p % 8))) != 0
-    }
-
-  /** POINT read through the file dictionaries (falling back to the
-    * zone map, then to conservative keep): scan only files that can
-    * contain `value`. Returns (frame, selected, total manifest files). */
-  def readPointPruned(spark: SparkSession, root: String, statsCol: String,
-                      value: Long, epoch: Int = -1): (DataFrame, Int, Int) =
-    pointPruned(spark, root, statsCol, epoch, r =>
-      if (r.isNullAt(2)) false else r.getLong(2) == value,
-      r => !r.isNullAt(2) && !r.isNullAt(3) &&
-        r.getLong(2) <= value && value <= r.getLong(3),
-      org.apache.spark.sql.functions.lit(value))
-
-  /** Skipping ladder per file: exact dictionary when present, bloom
-    * probe next (no false negatives, so it safely overrides the
-    * overflow sentinel), overflow sentinel -> keep, zone map last,
-    * conservative keep when nothing covers the file. */
-  private def pointPruned(spark: SparkSession, root: String, c: String,
-                          epoch: Int,
-                          dictHit: org.apache.spark.sql.Row => Boolean,
-                          zoneHit: org.apache.spark.sql.Row => Boolean,
-                          probe: org.apache.spark.sql.Column): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val e = if (epoch >= 0) epoch else currentEpoch(spark, root)
-    val wanted = Set(c, s"__dict:$c", s"__dictover:$c", s"__bloom:$c")
-    val rows = SnapshotCache.statRows(spark, root, e)
-      .getOrElse(Array.empty[org.apache.spark.sql.Row])
-      .filter(r => wanted(r.getString(1)))
-    val byFile = rows.groupBy(_.getString(0))
-    // the probe value's bit positions, once per committed (m, k)
-    val posCache = scala.collection.mutable.Map.empty[(Long, Long), Seq[Int]]
-    def positions(m: Long, k: Long): Seq[Int] =
-      posCache.getOrElseUpdate((m, k), bloomProbePositions(spark, probe, m, k))
-    val all = manifestEntries(spark, root, e).map(_._1)
-    val hit = all.filter { f =>
-      byFile.get(f) match {
-        case None => true // no stats for this file: conservative keep
-        case Some(rs) =>
-          val dict = rs.filter(_.getString(1) == s"__dict:$c")
-          val bloom = rs.filter(_.getString(1) == s"__bloom:$c")
-          if (dict.nonEmpty) dict.exists(dictHit)
-          else if (bloom.nonEmpty) bloom.exists(r =>
-            bloomHexTest(r.getString(4), positions(r.getLong(2), r.getLong(3))))
-          else if (rs.exists(_.getString(1) == s"__dictover:$c")) true
-          else rs.filter(_.getString(1) == c) match {
-            case zs if zs.nonEmpty => zs.exists(zoneHit)
-            case _ => true
-          }
-      }
-    }.sorted
-    val df =
-      if (hit.isEmpty) read(spark, root, e).filter(lit(false))
-      else dvScopedScan(spark, root, e, hit,
-        fs => spark.read.parquet(fs.map(n => s"$root/$n"): _*))
-    (df, hit.length, all.length)
-  }
-
   /** The committed zone-map stats table of `epoch`:
     * (file, col, lo_long, hi_long, lo_str, hi_str). */
   def statsTable(spark: SparkSession, root: String, epoch: Int): DataFrame = {
@@ -2200,54 +2120,28 @@ object ManifestSink {
     spark.range(1).select(lit(cnt).as("cnt") +: aggCols: _*)
   }
 
-  private def prunedRead(spark: SparkSession, root: String, e: Int,
-                         statsCol: String,
-                         overlaps: org.apache.spark.sql.Row => Boolean): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val rows = SnapshotCache.statRows(spark, root, e)
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"epoch $e at $root committed no stats table"))
-      .filter(_.getString(1) == statsCol)
-    val hit = rows.filter(overlaps).map(_.getString(0)).sorted
-    val df =
-      if (hit.isEmpty)
-        // schema-preserving EMPTY frame (optimizes to an empty local
-        // relation — zero I/O), never an un-pruned fallback scan that
-        // could surface orphan rows or the wrong file set (ADVICE r10)
-        read(spark, root, e).filter(lit(false))
-      else
-        // merge-on-read deletes apply to pruned reads too (epoch-scoped)
-        dvScopedScan(spark, root, e, hit.toSeq,
-          fs => spark.read.parquet(fs.map(n => s"$root/$n"): _*))
-    (df, hit.length, rows.length)
-  }
-
-  /** Range read through the zone maps of an integral column: scan ONLY
-    * files whose [lo, hi] overlaps [from, to]. Returns the pruned
-    * frame and the (selected, total) file counts as evidence. Files
-    * with null bounds (all-null column) are kept conservatively. */
-  def readRangePruned(spark: SparkSession, root: String, statsCol: String,
-                      from: Long, to: Long, epoch: Int = -1): (DataFrame, Int, Int) = {
+  /** The explicit-evidence pruned read: the table at `epoch` (current
+    * when negative) through `format("graft-manifest")`, filtered by
+    * `predicate` — DV-aware, column-mapping-aware, planned under the
+    * committed schema, and skipped by the catalog scan's
+    * [[ManifestFileIndex]] like any SQL read. Returns the frame, the
+    * files its own scan selects, and the epoch's manifest file count.
+    * Write literals in the column's own type so the filter pushes
+    * down. An epoch that committed no stats table is refused: there
+    * is no skipping to give evidence of. */
+  def readPruned(spark: SparkSession, root: String,
+                 predicate: org.apache.spark.sql.Column,
+                 epoch: Int = -1): (DataFrame, Int, Int) = {
     val e = if (epoch >= 0) epoch else currentEpoch(spark, root)
-    prunedRead(spark, root, e, statsCol, r =>
-      r.isNullAt(2) || r.isNullAt(3) || (r.getLong(3) >= from && r.getLong(2) <= to))
-  }
-
-  /** Range read through the zone maps of a STRING column ([from, to]
-    * inclusive). Pruning compares in UTF8String BINARY order — the
-    * order Spark's min/max produced the committed bounds in. (Java
-    * String order is UTF-16 code-unit order, which diverges for
-    * supplementary-plane code points and would wrongly prune files —
-    * ADVICE r11.) */
-  def readRangePrunedString(spark: SparkSession, root: String, statsCol: String,
-                            from: String, to: String, epoch: Int = -1): (DataFrame, Int, Int) = {
-    val e = if (epoch >= 0) epoch else currentEpoch(spark, root)
-    import org.apache.spark.unsafe.types.UTF8String
-    def u8(s: String) = UTF8String.fromString(s)
-    prunedRead(spark, root, e, statsCol, r =>
-      r.isNullAt(4) || r.isNullAt(5) ||
-        (u8(r.getString(5)).compareTo(u8(from)) >= 0 &&
-          u8(r.getString(4)).compareTo(u8(to)) <= 0))
+    if (SnapshotCache.statRows(spark, root, e).isEmpty)
+      throw new java.io.FileNotFoundException(
+        s"epoch $e at $root committed no stats table")
+    val df = spark.read.format("graft-manifest").option("root", root)
+      .option("epoch", e.toString).load().filter(predicate)
+    val hit = df.queryExecution.sparkPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.collect { case s: graft.catalog.GraftFileScan => s.selectedFiles }.getOrElse(0)
+    (df, hit, manifestEntries(spark, root, e).size)
   }
 
   /** Compact the CURRENT epoch into a new one — the "rewrite data
@@ -2284,8 +2178,8 @@ object ManifestSink {
     * batch). Overlap is decided distributively — the (file, lo, hi)
     * ranges broadcast onto the update keys, so the update side never
     * collects — and the touched list is bounded by the file count.
-    * Requires the current epoch to carry zone maps for `keyCol`;
-    * `statsCols` (must include `keyCol`) are rewritten for the fresh
+    * Requires the current epoch to carry a stats table; a file with no
+    * zone map for `keyCol` is always rewritten. `statsCols` (must include `keyCol`) are rewritten for the fresh
     * files and carried for the untouched ones.
     * @return (newEpoch, rewrittenFiles, carriedFiles) */
   def mergeCow(spark: SparkSession, root: String, updates: DataFrame,
@@ -2358,15 +2252,20 @@ object ManifestSink {
       col("file"),
       (if (keyIsStr) col("lo_str") else col("lo_long")).as("__lo"),
       (if (keyIsStr) col("hi_str") else col("hi_long")).as("__hi"))
-    // touched = files whose range contains at least one update key;
+    // touched = files whose range contains at least one update key,
+    // plus every file with no zone map for the key (written before
+    // the key became a stats column: nothing proves it key-free);
     // ranges broadcast (file-count-bounded), update keys stay
     // distributed
+    val entries = manifestEntries3(spark, root, cur)
+    val all = entries.map(_._1)
+    val keyCovered = SnapshotCache.statRows(spark, root, cur).getOrElse(Array.empty)
+      .collect { case r if r.getString(1) == keyCol => r.getString(0) }.toSet
     val touched = updates.select(col(keyCol).as("__k"))
       .join(broadcast(keyRanges),
         col("__k") >= col("__lo") && col("__k") <= col("__hi"))
-      .select("file").distinct().collect().map(_.getString(0)).toSet
-    val entries = manifestEntries3(spark, root, cur)
-    val all = entries.map(_._1)
+      .select("file").distinct().collect().map(_.getString(0)).toSet ++
+      all.filterNot(keyCovered)
     val carried = all.filterNot(touched)
     val carriedSizes = knownSizes(entries).view.filterKeys(carried.contains).toMap
     val carriedEpochs = knownEpochs(entries).view.filterKeys(carried.contains).toMap
@@ -2589,12 +2488,6 @@ object ManifestSink {
     }
     out.result()
   }
-
-  /** True iff `epoch` carries any fully-covering committed layout. */
-  def hasLayout(spark: SparkSession, root: String, epoch: Int): Boolean =
-    bucketSpec(spark, root, epoch).isDefined ||
-      ptimeSpec(spark, root, epoch).isDefined ||
-      identSpec(spark, root, epoch).isDefined
 
   /** Apply `baseEpoch`'s committed layout to an IN-MEMORY replacement
     * batch, so a caller that HAS the batch as a DataFrame (the

@@ -268,6 +268,29 @@ class AnnIndexSpec extends SparkTestBase {
       s"appended neighbor not found: ${got.mkString(",")}")
   }
 
+  test("appendAll refuses a delta that repeats a vec_id before any tier is written") {
+    import spark.implicits._
+    def v(base: Int, jitter: Float): Array[Float] =
+      Array.tabulate(64)(d => (if (d / 8 == base) 1f else 0f) + (if (d == 63) jitter else 0f))
+    val corpus = (0 until 24).map(i => (i.toLong, v(i % 3, i * 0.001f))).toDF("vec_id", "embedding")
+    val dir = tmpDir("graft_append_dup_spec_")
+    AnnIndex.buildIvfSqAll(spark, corpus, s"$dir/ivf", s"$dir/sq", s"$dir/csq", nCells = 3)
+    def bytesOf(d: String): Map[String, Seq[Byte]] =
+      parquetFiles(d).map(f => f.getPath -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    val before = bytesOf(dir)
+    // the same id twice, with two different embeddings
+    val delta = Seq((100L, v(0, 0.5f)), (101L, v(1, 0.0f)), (100L, v(2, 0.5f)))
+      .toDF("vec_id", "embedding")
+    val err = intercept[IllegalArgumentException] {
+      AnnIndex.appendAll(spark, s"$dir/ivf", s"$dir/sq", s"$dir/csq", delta)
+    }
+    assert(err.getMessage.contains("vec_id 100"), err.getMessage)
+    assert(bytesOf(dir) == before, "a refused append must leave every tier untouched")
+    assert(spark.read.parquet(s"$dir/ivf/cells").count() == 24)
+    assert(spark.read.parquet(s"$dir/sq/sq_codes").count() == 24)
+    assert(spark.read.parquet(s"$dir/csq/cells_sq").count() == 24)
+  }
+
   test("PQ tier: m codes per vector in 1..nCents, smaller than SQ8 on disk, recalls top-10, deterministic") {
     val dir = AnnIndex.pqDir(spark, sf, emb)
     val codes = spark.read.parquet(s"$dir/pq_codes")

@@ -426,7 +426,7 @@ class GraftCatalogSpec extends SparkTestBase {
     // txn identity recorded (the replay no-op contract rides on it)
     assert(ManifestSink.lastCommittedVersion(spark, root, "ssink-spec").isDefined)
     // the streamed table prunes (statsCols flowed through the sink)
-    val (_, hit, all) = ManifestSink.readRangePruned(spark, root, "k", 3L, 3L)
+    val (_, hit, all) = ManifestSink.readPruned(spark, root, col("k").between(3L, 3L))
     assert(hit < all || all == 1)
   }
 
@@ -444,9 +444,9 @@ class GraftCatalogSpec extends SparkTestBase {
     assert(r.getInt(1) == 2)
     assert(spark.sql(s"SELECT count(*) AS c FROM graft.`$root`")
       .collect()(0).getLong(0) == 800, "rewrite preserves content")
-    val (_, h1, t1) = ManifestSink.readRangePruned(spark, root, "event_id", 0L, 99L)
+    val (_, h1, t1) = ManifestSink.readPruned(spark, root, col("event_id").between(0L, 99L))
     val uMax = Tables.events(spark, sf).agg(max(col("user_id"))).collect()(0).getLong(0)
-    val (_, h2, t2) = ManifestSink.readRangePruned(spark, root, "user_id", 0L, uMax / 5)
+    val (_, h2, t2) = ManifestSink.readPruned(spark, root, col("user_id").between(0L, uMax / 5))
     assert(h1 < t1, s"event_id slab should prune: $h1 of $t1")
     assert(h2 < t2, s"user_id slab should prune: $h2 of $t2")
   }
@@ -883,7 +883,7 @@ class GraftCatalogSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).sorted
     assert(got.toSeq == rows.map(_._1).sorted.toSeq, "no duplicates, no losses")
     // the streamed statsCols prune a range read
-    val (_, hit, total) = ManifestSink.readRangePruned(spark, root, "event_id", 0L, 5L)
+    val (_, hit, total) = ManifestSink.readPruned(spark, root, col("event_id").between(0L, 5L))
     assert(hit < total, s"streamed zone maps must prune: $hit of $total")
   }
 

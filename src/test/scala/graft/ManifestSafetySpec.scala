@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sink.{IncrementalView, ManifestFileIndex, ManifestSink}
+import graft.catalog.GraftTable
+import graft.sink.{IncrementalView, ManifestSink}
 
 /** Regression pins for the round-11 ADVICE findings: the vacuum /
   * in-flight-writer race, string-key copy-on-write, UTF-8-binary
@@ -110,17 +111,17 @@ class ManifestSafetySpec extends SparkTestBase {
     assert(emoji < lo, "precondition: Java order puts the emoji below U+FFFD")
     // explicit-evidence API: the emoji file must be HIT, not pruned
     val (pruned, hit, total) =
-      ManifestSink.readRangePrunedString(spark, root, "s", lo, hiCap)
+      ManifestSink.readPruned(spark, root, col("s").between(lo, hiCap))
     assert(total == 2 && hit == 1,
       s"UTF-8 range [U+FFFD, U+10FFFF] must hit exactly the emoji file ($hit/$total)")
     assert(pruned.select("s").as[String].collect().toSeq == Seq(emoji))
-    // planning-time FileIndex path: ordinary .filter() over table()
-    val (t, idx) = ManifestFileIndex.tableWithIndex(spark, root)
+    // planning-time scan path: ordinary .filter() over the table read
+    val t = spark.read.format("graft-manifest").option("root", root).load()
     val rows = t.filter(col("s") >= lit(lo)).select("s").as[String].collect().toSeq
     assert(rows == Seq(emoji),
       s"FileIndex pruning lost the supplementary-plane row: $rows")
-    assert(idx.lastSelectedCount == 1,
-      s"the [a,b] file must still be pruned (selected ${idx.lastSelectedCount})")
+    assert(GraftTable.lastPlannedFiles == 1,
+      s"the [a,b] file must still be pruned (selected ${GraftTable.lastPlannedFiles})")
   }
 
   test("incremental view: replayed and racing refreshes of a committed version no-op") {

@@ -457,15 +457,29 @@ class PlanShapeSpec extends SparkTestBase {
       s"rewrite must be one range exchange:\n$rp")
   }
 
+  /** The distinct files the executed catalog scan(s) of `df` read —
+    * what its input partitions carry after planning-time skipping. */
+  private def scannedFiles(df: DataFrame): Seq[String] = {
+    df.collect()
+    deepAll(df.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions.flatMap {
+          case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
+            fp.files.map(_.filePath.toString).toSeq
+          case _ => Nil
+        }
+    }.flatten.distinct
+  }
+
   test("zone-map pruned reads plan scans over ONLY the pruned file list") {
     val df = SparkEntry.queries("q_manifest_skip_string")(spark, sf)
-    df.collect()
     // pruning happened in metadata BEFORE planning: the scan's input
     // files are a strict subset of the epoch's committed files
-    val root = df.inputFiles.head.replaceAll("/data-epoch=.*", "")
+    val files = scannedFiles(df)
+    val root = files.head.replaceAll("/data-epoch=.*", "")
     val total = graft.sink.ManifestSink.manifestFiles(spark, root, 1).size
-    assert(df.inputFiles.length < total && df.inputFiles.nonEmpty,
-      s"expected a pruned scan: ${df.inputFiles.length} of $total files")
+    assert(files.length < total && files.nonEmpty,
+      s"expected a pruned scan: ${files.length} of $total files")
     val p = df.queryExecution.executedPlan
     assert(deepAll(p) { case j: BroadcastHashJoinExec => j }.isEmpty &&
       deepAll(p) { case c: CartesianProductExec => c }.isEmpty,
@@ -480,15 +494,10 @@ class PlanShapeSpec extends SparkTestBase {
     graft.sink.ManifestSink.publishWithStats(
       ev.repartitionByRange(8, col("event_id")).sortWithinPartitions("event_id"),
       root, 1, Seq("event_id", "event_type"))
-    val (t, idx) = graft.sink.ManifestFileIndex.tableWithIndex(spark, root)
-    val total = idx.inputFiles.length
+    val t = spark.read.format("graft-manifest").option("root", root).load()
+    val total = graft.sink.ManifestSink.manifestFiles(spark, root, 1).size
 
-    def scanFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      deepAll(df.queryExecution.executedPlan) {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-      }.head.metrics("numFiles").value
-    }
+    def scanFiles(df: DataFrame): Long = scannedFiles(df).size.toLong
     // a narrow long range scans a strict subset of the epoch's files
     val narrow = t.filter(col("event_id") < 50L)
     val nf = scanFiles(narrow)

@@ -200,7 +200,7 @@ class SinkOpsSpec extends SparkTestBase {
       ev.repartitionByRange(8, col("event_id")).sortWithinPartitions("event_id"),
       root, 1, Seq("event_id"))
     // a narrow range hits a strict subset of the 8 clustered files
-    val (df, hit, total) = ManifestSink.readRangePruned(spark, root, "event_id", 100L, 199L)
+    val (df, hit, total) = ManifestSink.readPruned(spark, root, col("event_id").between(100L, 199L))
     assert(total == 8, s"expected 8 data files, got $total")
     assert(hit < total && hit >= 1, s"pruning must bite: $hit/$total")
     val got = df.filter(col("event_id").between(100L, 199L))
@@ -211,13 +211,13 @@ class SinkOpsSpec extends SparkTestBase {
     // a range off the end of the data: no file overlaps — the read
     // returns a schema-preserving EMPTY frame (never an un-pruned
     // fallback scan that could surface orphan rows — ADVICE r10)
-    val (df2, hit2, _) = ManifestSink.readRangePruned(spark, root, "event_id",
-      Long.MaxValue - 10, Long.MaxValue)
+    val (df2, hit2, _) = ManifestSink.readPruned(spark, root,
+      col("event_id").between(Long.MaxValue - 10, Long.MaxValue))
     assert(hit2 == 0 && df2.count() == 0)
     assert(df2.schema.fieldNames.toSeq == Seq("event_id", "value"))
     // full-range read touches everything and equals the table
-    val (df3, hit3, total3) = ManifestSink.readRangePruned(spark, root, "event_id",
-      Long.MinValue, Long.MaxValue)
+    val (df3, hit3, total3) = ManifestSink.readPruned(spark, root,
+      col("event_id").between(Long.MinValue, Long.MaxValue))
     assert(hit3 == total3)
     assert(df3.count() == ev.count())
   }
@@ -245,7 +245,7 @@ class SinkOpsSpec extends SparkTestBase {
     assert(ManifestSink.read(spark, root, epoch = 3)
       .select("event_id").as[Long].collect().sorted.toSeq == preContent)
     // zone maps on the compacted epoch still prune
-    val (_, hit, total) = ManifestSink.readRangePruned(spark, root, "event_id", 100L, 199L)
+    val (_, hit, total) = ManifestSink.readPruned(spark, root, col("event_id").between(100L, 199L))
     assert(hit < total && total == after.size)
     // vacuum to the compacted epoch reclaims every pre-compaction file
     ManifestSink.vacuum(spark, root, keep = 1)
@@ -337,20 +337,20 @@ class SinkOpsSpec extends SparkTestBase {
           .sortWithinPartitions("event_type", "event_id"),
         root, e, Seq("event_type", "event_id"))
     // STRING pruning bites and stays exact under the residual filter
-    val (sdf, shit, stotal) = ManifestSink.readRangePrunedString(
-      spark, root, "event_type", "click", "error")
+    val (sdf, shit, stotal) = ManifestSink.readPruned(
+      spark, root, col("event_type").between("click", "error"))
     assert(shit < stotal && shit >= 1, s"string pruning must bite: $shit/$stotal")
     assert(sdf.filter(col("event_type").between("click", "error")).count() ==
       ev.filter(col("event_type").between("click", "error")).count())
     // the SAME commit answers long-range reads too
-    val (ldf, lhit, ltotal) = ManifestSink.readRangePruned(
-      spark, root, "event_id", 0L, 99L)
+    val (ldf, lhit, ltotal) = ManifestSink.readPruned(
+      spark, root, col("event_id").between(0L, 99L))
     assert(lhit <= ltotal)
     assert(ldf.filter(col("event_id").between(0L, 99L)).count() ==
       ev.filter(col("event_id").between(0L, 99L)).count())
     // no-overlap string range: schema-preserving empty frame
-    val (edf, ehit, _) = ManifestSink.readRangePrunedString(
-      spark, root, "event_type", "zzz1", "zzz2")
+    val (edf, ehit, _) = ManifestSink.readPruned(
+      spark, root, col("event_type").between("zzz1", "zzz2"))
     assert(ehit == 0 && edf.count() == 0 &&
       edf.schema.fieldNames.toSeq == Seq("event_id", "event_type", "value"))
     // compact: fewer files, BOTH columns' zone maps still prune
@@ -359,8 +359,8 @@ class SinkOpsSpec extends SparkTestBase {
     val postFiles = ManifestSink
       .manifestFiles(spark, root, ManifestSink.currentEpoch(spark, root)).size
     assert(postFiles < preFiles)
-    val (_, shit2, stotal2) = ManifestSink.readRangePrunedString(
-      spark, root, "event_type", "click", "error")
+    val (_, shit2, stotal2) = ManifestSink.readPruned(
+      spark, root, col("event_type").between("click", "error"))
     assert(shit2 < stotal2 && shit2 <= shit,
       s"compacted string pruning must not regress: $shit2/$stotal2 vs $shit/$stotal")
     // stats metadata of dropped epochs is reclaimed with them
@@ -416,7 +416,7 @@ class SinkOpsSpec extends SparkTestBase {
       ev.select("event_id").as[Long].collect().sorted.toSeq)
     // the merged epoch's zone maps stay live: pruning still bites and
     // the rewritten region reads back doubled
-    val (pr, hit, total) = ManifestSink.readRangePruned(spark, root, "event_id", 100L, 199L)
+    val (pr, hit, total) = ManifestSink.readPruned(spark, root, col("event_id").between(100L, 199L))
     assert(hit < total, s"post-merge pruning must bite: $hit/$total")
     assert(pr.filter(col("event_id").between(100, 199))
       .select("event_id", "value").as[(Long, Double)].collect().sorted.toSeq ==
@@ -468,7 +468,7 @@ class SinkOpsSpec extends SparkTestBase {
     assert(ManifestSink.read(spark, root)
       .select("event_id").as[Long].collect().sorted.toSeq ==
       ev.select("event_id").as[Long].collect().sorted.toSeq)
-    val (_, hit, total) = ManifestSink.readRangePruned(spark, root, "event_id", 100L, 199L)
+    val (_, hit, total) = ManifestSink.readPruned(spark, root, col("event_id").between(100L, 199L))
     assert(hit < total && hit >= 1)
     assert(ManifestSink.read(spark, root, epoch = 2)
       .select("event_id").as[Long].collect().sorted.toSeq == got,
@@ -653,7 +653,7 @@ class SinkOpsSpec extends SparkTestBase {
     assert(ManifestSink.manifestFiles(spark, root, 2) == files1)
     assert(ManifestSink.read(spark, root).count() == 90)
     // pruned reads apply the DV too
-    val (pruned, _, _) = ManifestSink.readRangePruned(spark, root, "event_id", 0, 30)
+    val (pruned, _, _) = ManifestSink.readPruned(spark, root, col("event_id").between(0L, 30L))
     assert(pruned.filter(col("event_id").between(10, 19)).count() == 0)
     // CDF: the DV delta emits as deletes with pre-delete payload
     val feed = ManifestSink.tableChanges(spark, root, "event_id", 1, 2).collect()
@@ -718,33 +718,35 @@ class SinkOpsSpec extends SparkTestBase {
 
   test("file dictionaries: point skip where zone maps are blind; overflow stays conservative") {
     import org.apache.spark.sql.functions._
-    import graft.sink.{ManifestFileIndex, ManifestSink}
+    import graft.sink.ManifestSink
     val root = tmpDir("graft_dict_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("user_id"), col("value"))
     ManifestSink.publishWithDict(ev.repartition(8, col("user_id")), root, 1,
       Seq("user_id"), Seq("user_id"))
-    val (df, hit, total) = ManifestSink.readPointPruned(spark, root, "user_id", 13L)
+    val (df, hit, total) = ManifestSink.readPruned(spark, root, col("user_id") === 13L)
     assert(hit >= 1 && hit < total, s"dict must prune the hash layout: $hit/$total")
     assert(df.filter(col("user_id") === 13).count() ==
       ev.filter(col("user_id") === 13).count())
     // the dictionary is at least as selective as the range stats
-    val (_, zHit, _) = ManifestSink.readRangePruned(spark, root, "user_id", 13, 13)
+    val (_, zHit, _) = ManifestSink.readPruned(spark, root, col("user_id").between(13L, 13L))
     assert(zHit >= hit)
     // Catalyst path: an ordinary EqualTo filter plans over the dict selection
-    val (t, idx) = ManifestFileIndex.tableWithIndex(spark, root)
-    t.filter(col("user_id") === 13).collect()
-    assert(idx.lastSelectedCount == hit)
+    spark.read.format("graft-manifest").option("root", root).load()
+      .filter(col("user_id") === 13).collect()
+    assert(graft.catalog.GraftTable.lastPlannedFiles == hit)
     // a key nothing contains prunes to zero files
-    val (_, h0, _) = ManifestSink.readPointPruned(spark, root, "user_id", 999999L)
+    val (_, h0, _) = ManifestSink.readPruned(spark, root, col("user_id") === 999999L)
     assert(h0 == 0)
-    // a cap overflow leaves the sentinel: conservative keep-everything
-    // (cap 0 forces the overflow on every non-empty file; any positive
-    // cap may legitimately complete on low-cardinality files and prune)
+    // a cap overflow leaves the sentinel: the dictionary prunes nothing
+    // and the point lookup falls through to the zone maps (cap 0 forces
+    // the overflow on every non-empty file; any positive cap may
+    // legitimately complete on low-cardinality files and prune)
     val root2 = tmpDir("graft_dict_spec2_")
     ManifestSink.publishWithDict(ev.repartition(4, col("user_id")), root2, 1,
       Seq("user_id"), Seq("user_id"), dictCap = 0)
-    val (_, h2, t2) = ManifestSink.readPointPruned(spark, root2, "user_id", 13L)
-    assert(h2 == t2, "overflowed dictionaries must never prune")
+    val (_, h2, _) = ManifestSink.readPruned(spark, root2, col("user_id") === 13L)
+    val (_, z2, _) = ManifestSink.readPruned(spark, root2, col("user_id").between(13L, 13L))
+    assert(h2 == z2, "overflowed dictionaries must never prune beyond the zone maps")
   }
 
   test("bloom skipping: no false negatives, prunes hash layouts, params ride the stats row") {
@@ -756,21 +758,21 @@ class SinkOpsSpec extends SparkTestBase {
       statsCols = Seq("event_id"), bloomCols = Seq("event_id"))
     // zone maps are blind on this layout: every file's event_id range
     // spans the key space, so the range read keeps everything
-    val (_, zHit, zTotal) = ManifestSink.readRangePruned(spark, root, "event_id", 424L, 424L)
+    val (_, zHit, zTotal) = ManifestSink.readPruned(spark, root, col("event_id").between(424L, 424L))
     assert(zHit == zTotal, "hash layout must blind the zone map (else the bloom proves nothing)")
     // the bloom prunes the same lookup, and NEVER drops the true file:
     // every present key must come back complete through the pruned read
-    val (df, hit, total) = ManifestSink.readPointPruned(spark, root, "event_id", 424L)
+    val (df, hit, total) = ManifestSink.readPruned(spark, root, col("event_id") === 424L)
     assert(hit >= 1 && hit < total, s"bloom must prune: $hit/$total")
     assert(df.filter(col("event_id") === 424L).count() == 1)
     // exhaustive no-false-negative sweep over a key sample
     (0L until 1000L by 97L).foreach { k =>
-      val (d, h, _) = ManifestSink.readPointPruned(spark, root, "event_id", k)
+      val (d, h, _) = ManifestSink.readPruned(spark, root, col("event_id") === k)
       assert(h >= 1, s"key $k: containing file dropped")
       assert(d.filter(col("event_id") === k).count() == 1, s"key $k lost")
     }
     // an absent key prunes hard (fpp bounded, usually to zero files)
-    val (_, hAbsent, tAbsent) = ManifestSink.readPointPruned(spark, root, "event_id", 99999999L)
+    val (_, hAbsent, tAbsent) = ManifestSink.readPruned(spark, root, col("event_id") === 99999999L)
     assert(hAbsent < tAbsent, "absent key must prune below the full file list")
     // committed (m, k) parameters ride the stats row
     val br = ManifestSink.statsTable(spark, root, 1)
@@ -779,10 +781,10 @@ class SinkOpsSpec extends SparkTestBase {
     assert(br.forall(_.getString(4).length == 16384 / 8 * 2), "hex bitmap length = m/8 bytes")
     // Catalyst path: an ordinary EqualTo filter consults the bloom at
     // planning time and scans exactly the probe's survivor set
-    val (t, idx) = graft.sink.ManifestFileIndex.tableWithIndex(spark, root)
-    assert(t.filter(col("event_id") === 424L).count() == 1)
-    assert(idx.lastSelectedCount == hit,
-      s"FileIndex bloom selection ${idx.lastSelectedCount} != explicit-API $hit")
+    assert(spark.read.format("graft-manifest").option("root", root).load()
+      .filter(col("event_id") === 424L).count() == 1)
+    assert(graft.catalog.GraftTable.lastPlannedFiles == hit,
+      s"scan bloom selection ${graft.catalog.GraftTable.lastPlannedFiles} != explicit-API $hit")
   }
 
   test("metadata-only aggregation: exact across publish+append, zero data-file scan, guards") {

@@ -32,9 +32,12 @@ class SnapshotPlanningSpec extends SparkTestBase {
       val p = new org.apache.hadoop.fs.Path(f)
       p.getFileSystem(conf).getFileStatus(p).getLen
     }.sum
-    assert(idx.sizeInBytes == fsSum, s"${idx.sizeInBytes} vs $fsSum")
+    val idxBytes = idx.select(Nil).map(_.getLen).sum
+    assert(idxBytes == fsSum, s"$idxBytes vs $fsSum")
     // and the scan still answers correctly through the RPC-free index
-    assert(ManifestFileIndex.table(spark, root).count() == 400)
+    // (rows collected: a bare count would answer from the stats)
+    assert(spark.read.format("graft-manifest").option("root", root).load()
+      .collect().length == 400)
   }
 
   test("legacy manifests without sizes fall back to counted status RPCs and still read") {
@@ -54,8 +57,9 @@ class SnapshotPlanningSpec extends SparkTestBase {
     val idx = new ManifestFileIndex(spark, root, 1)
     assert(ManifestFileIndex.legacyStatusRpcs.get() == before + lines.size,
       "each legacy line resolves with exactly one counted getFileStatus")
-    assert(idx.sizeInBytes > 0)
-    assert(ManifestFileIndex.table(spark, root).count() == 50)
+    assert(idx.select(Nil).map(_.getLen).sum > 0)
+    assert(spark.read.format("graft-manifest").option("root", root).load()
+      .count() == 50)
   }
 
   test("second query against an unchanged table: no manifest re-read, no stats re-collect") {

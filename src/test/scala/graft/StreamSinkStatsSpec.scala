@@ -207,7 +207,7 @@ class StreamSinkStatsSpec extends SparkTestBase {
     assert(SnapshotCache.statRows(spark, root, 2).isEmpty,
       "stats for the fresh files alone would leave the older file uncovered")
     intercept[java.io.FileNotFoundException] {
-      ManifestSink.readRangePruned(spark, root, "k", 1L, 3L)
+      ManifestSink.readPruned(spark, root, col("k").between(1L, 3L))
     }
     def keys(): Seq[Long] = spark.sql(s"SELECT k FROM graft.`$root`").collect()
       .map(_.getLong(0)).sorted.toSeq

@@ -299,7 +299,7 @@ class StreamingSpec extends SparkTestBase {
       new org.apache.hadoop.fs.Path(p).toUri.getPath).exists()))
     // zone maps survive the append chain: a narrow range read on the
     // STREAMED table prunes the file list (each batch range-clustered)
-    val (pruned, hit, total) = ManifestSink.readRangePruned(spark, root, "event_id", 100L, 199L)
+    val (pruned, hit, total) = ManifestSink.readPruned(spark, root, col("event_id").between(100L, 199L))
     assert(hit < total, s"streamed zone maps must prune: $hit/$total")
     assert(pruned.filter(col("event_id").between(100L, 199L))
       .select("event_id").as[Long].collect().sorted.toSeq ==

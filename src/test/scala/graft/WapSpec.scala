@@ -111,7 +111,7 @@ class WapSpec extends SparkTestBase {
     assert(spark.table(s"graft.`$root`").count() == 80L)
     // zone maps survived the handoff: a range scan on the published
     // table still prunes files (stats committed with the publish)
-    val (_, hit, all) = ManifestSink.readRangePruned(spark, root, "k", 0L, 5L)
+    val (_, hit, all) = ManifestSink.readPruned(spark, root, col("k").between(0L, 5L))
     assert(hit < all, s"expected pruning on the published table: $hit/$all")
     // the descriptor is consumed with the publish
     intercept[Exception] {

@@ -48,9 +48,9 @@ class WidenSpec extends SparkTestBase {
       .head().getLong(1) == (0L until 200L).sum)
     // zone maps are long-normalized: a range read still prunes across
     // BOTH the pre- and post-widening files (bounds compared as longs)
-    val (_, hit, all) = ManifestSink.readRangePruned(spark, root, "k", 150L, 160L)
+    val (_, hit, all) = ManifestSink.readPruned(spark, root, col("k").between(150L, 160L))
     assert(hit < all, s"pruning must survive the widening: $hit of $all")
-    val (df2, hit2, _) = ManifestSink.readRangePruned(spark, root, "k", 10L, 20L)
+    val (df2, hit2, _) = ManifestSink.readPruned(spark, root, col("k").between(10L, 20L))
     assert(hit2 < all && df2.filter(col("k").between(10, 20)).count() == 11L)
     // travel keeps the narrow shape
     assert(spark.sql(s"SELECT * FROM graft.`$root` VERSION AS OF 1")
