@@ -80,6 +80,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (plans/MvRoute.scala).
     ext.injectOptimizerRule(_ => graft.plans.MvRoute)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    // Run-time partition pruning from an explicit broadcast: the ANN
+    // probes' cell-partitioned tier scans read only the probed cells
+    // (plans/BroadcastPartitionPruning.scala).
+    ext.injectPreCBORule(_ => graft.plans.BroadcastPartitionPruning)
     // Maintenance SQL (VACUUM / OPTIMIZE / DESCRIBE HISTORY on
     // manifest tables) — the Delta-style delegating parser
     // (sql/GraftSqlParser.scala); all other SQL passes through,

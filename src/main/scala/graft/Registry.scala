@@ -4839,28 +4839,35 @@ object Registry {
         |FROM events WHERE event_id % 5 = 1
         |ORDER BY event_id""".stripMargin),
     // CATALYST-INTEGRATED data skipping (round 11): the Delta
-    // TahoeFileIndex pattern — an ordinary .filter() over the
-    // format("graft-manifest") read pushes its predicates into the
-    // catalog scan, whose ManifestFileIndex answers at PLANNING time
-    // with only the zone-map-overlapping files. No side API: the
-    // idiomatic DataFrame program gets manifest resolution + file
-    // skipping transparently; readPruned only reads the scan's own
-    // selection back as evidence. planner_pruned gates that the
-    // planning pass selected strictly fewer files than the epoch
-    // holds; the residual filter keeps correctness independent of the
-    // skip (PlanShapeSpec pins the executed scan's file count).
+    // TahoeFileIndex pattern — a plain SQL `WHERE` over a table the
+    // ManifestSink API published pushes its range into the catalog
+    // scan, whose ManifestFileIndex answers at PLANNING time with only
+    // the zone-map-overlapping files. No side API: the query is
+    // ordinary SQL text, and `GraftTable.lastPlannedFiles` (the scan's
+    // own planned file count) is the evidence. planner_pruned gates
+    // that planning selected at least one and strictly fewer files
+    // than the epoch holds (q_manifest_skipping runs the same range
+    // through `readPruned`; PlanShapeSpec pins the executed scan's
+    // file count).
     "q_manifest_table_skip" -> q(
       (s, d) => {
         import org.apache.spark.sql.functions.{col, lit}
+        s.conf.set("spark.sql.catalog.graft",
+          classOf[graft.catalog.GraftCatalog].getName)
         val root = tmpDir("graft_mtbl_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
         graft.sink.ManifestSink.publishWithStats(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
           root, 1, Seq("event_id"))
-        val (f, hit, total) = graft.sink.ManifestSink
-          .readPruned(s, root, col("event_id").between(100L, 599L))
-        f.withColumn("planner_pruned", lit(hit < total && hit >= 1))
+        val out = s.sql(
+          s"""SELECT event_id, user_id, value FROM graft.`$root`
+             |WHERE event_id BETWEEN 100 AND 599 ORDER BY event_id""".stripMargin)
+        val rows = out.collect()  // bounded: a 500-key slice
+        val total = graft.sink.ManifestSink.manifestFiles(s, root, 1).size
+        val planned = graft.catalog.GraftTable.lastPlannedFiles
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+          .withColumn("planner_pruned", lit(planned >= 1 && planned < total))
           .orderBy("event_id")
       },
       """SELECT event_id, user_id, value, TRUE AS planner_pruned FROM events

@@ -1,9 +1,12 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, IntegerType, StructField, StructType}
 
 /** ANN as a BUILD-ONCE INDEX, not a per-query demo.
   *
@@ -35,6 +38,40 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 object AnnIndex {
 
   private val Dim = 64
+
+  // ---- persisted tiers ----
+
+  /** Read one persisted tier under the schema its files were written
+    * with: the Spark row schema every parquet footer carries, plus the
+    * int `cell` partition column of the cell-partitioned tiers. A bare
+    * `spark.read.parquet` launches a schema-inference job per read;
+    * this reads one footer on the driver instead. Each tier's shape is
+    * fixed by the code that writes it except `vec_id` (and the `cells`
+    * tier's payload), which follow the caller's frame, so the footer is
+    * the one record of what was written. */
+  private[graft] def readTier(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // depth-first to the first data file; the directories on the way
+    // are the partition columns (`cell=N`)
+    def firstFile(dir: Path, parts: List[String]): Option[(Path, List[String])] = {
+      val (dirs, files) = fs.listStatus(dir)
+        .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.getName).partition(_.isDirectory)
+      files.find(_.getPath.getName.endsWith(".parquet")).map(f => (f.getPath, parts))
+        .orElse(dirs.iterator.map(d => firstFile(d.getPath,
+          parts :+ d.getPath.getName.takeWhile(_ != '='))).collectFirst { case Some(f) => f })
+    }
+    val (file, partCols) = firstFile(root, Nil)
+      .getOrElse(throw new IllegalStateException(s"index tier $path holds no data file"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val written = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata") finally reader.close()
+    val dataSchema = DataType.fromJson(written).asInstanceOf[StructType]
+    spark.read.schema(StructType(dataSchema.fields ++ partCols.map(StructField(_, IntegerType))))
+      .parquet(path)
+  }
 
   // ---- distributed IVF training (broadcast-join assignment) ----
 
@@ -136,7 +173,7 @@ object AnnIndex {
     val cents = trainCentroids(units,
       seedCentroidsFromUnits(units, nCells), lloydIters)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    val assigned = assignCells(units, spark.read.parquet(s"$dir/centroids"))
+    val assigned = assignCells(units, readTier(spark, s"$dir/centroids"))
     embeddings.join(assigned, Seq("vec_id"))
       .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/cells")
   }
@@ -145,7 +182,7 @@ object AnnIndex {
     * driver-side by nature (it picks WHICH partitions to touch). */
   private[graft] def probeCellsFor(spark: SparkSession, dir: String,
                                    qVec: Array[Float], nProbe: Int): Seq[Int] =
-    spark.read.parquet(s"$dir/centroids").collect()
+    readTier(spark, s"$dir/centroids").collect()
       .map { r =>
         val c = r.getSeq[Double](1)
         (r.getInt(0), c.zip(qVec).map { case (a, b) => a * b.toDouble }.sum)
@@ -166,7 +203,7 @@ object AnnIndex {
                                         nProbe: Int): Seq[Int] = {
     val q = embeddings.filter(col("vec_id") === queryId)
       .select(transform(col("embedding"), x => x.cast(DoubleType)).as("qv"))
-    spark.read.parquet(s"$dir/centroids")
+    readTier(spark, s"$dir/centroids")
       .crossJoin(broadcast(q))
       .select(col("cell"), Similarity.dot(col("centroid"), col("qv")).as("d"))
       .orderBy(col("d").desc, col("cell"))
@@ -184,7 +221,7 @@ object AnnIndex {
     require(cells.nonEmpty, s"probeIvf: query vec_id=$queryId not found in corpus")
     val q = embeddings.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb"))
-    spark.read.parquet(s"$dir/cells")
+    readTier(spark, s"$dir/cells")
       .filter(col("cell").isin(cells: _*) && col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), Similarity.cosine(col("embedding"), col("q_emb")).as("raw_cos"))
@@ -230,7 +267,7 @@ object AnnIndex {
         (max(element_at(col("u"), i + 1)) - min(element_at(col("u"), i + 1))) / 255.0): _*)
         .as("scales"))
     params.coalesce(1).write.mode("overwrite").parquet(s"$dir/sq_params")
-    val p = spark.read.parquet(s"$dir/sq_params")
+    val p = readTier(spark, s"$dir/sq_params")
     units.crossJoin(broadcast(p))
       .select(col("vec_id"), quantize(col("u"), col("mins"), col("scales")).as("codes"))
       .write.mode("overwrite").parquet(s"$dir/sq_codes")
@@ -261,13 +298,13 @@ object AnnIndex {
     * other ANN probes. */
   def sqTopK(spark: SparkSession, dir: String, embeddings: DataFrame,
              queryId: Long = 0L, k: Int = 10, rerank: Int = 4): DataFrame = {
-    val p = spark.read.parquet(s"$dir/sq_params")
+    val p = readTier(spark, s"$dir/sq_params")
     val qCodes = embeddings.filter(col("vec_id") === queryId)
       .select(Similarity.unitVector(col("embedding")).as("u"))
       .crossJoin(broadcast(p))
       .select(dequantize(quantize(col("u"), col("mins"), col("scales")),
         col("mins"), col("scales")).as("q_dq"))
-    val pool = spark.read.parquet(s"$dir/sq_codes")
+    val pool = readTier(spark, s"$dir/sq_codes")
       .filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(p))
       .crossJoin(broadcast(qCodes))
@@ -309,8 +346,8 @@ object AnnIndex {
 
   def buildIvfSq(spark: SparkSession, ivfDir: String, sqDir: String,
                  outDir: String): Unit =
-    spark.read.parquet(s"$ivfDir/cells").select(col("vec_id"), col("cell"))
-      .join(spark.read.parquet(s"$sqDir/sq_codes"), Seq("vec_id"))
+    readTier(spark, s"$ivfDir/cells").select(col("vec_id"), col("cell"))
+      .join(readTier(spark, s"$sqDir/sq_codes"), Seq("vec_id"))
       .write.partitionBy("cell").mode("overwrite").parquet(s"$outDir/cells_sq")
 
   /** IVF-SQ probe: nProbe nearest cells chosen from the centroid table
@@ -325,13 +362,13 @@ object AnnIndex {
     val cells = probeCellsForQuery(spark, ivfDir, embeddings, queryId, nProbe)
     require(cells.nonEmpty, s"probeIvfSq: query vec_id=$queryId not found")
 
-    val p = spark.read.parquet(s"$sqDir/sq_params")
+    val p = readTier(spark, s"$sqDir/sq_params")
     val qDq = embeddings.filter(col("vec_id") === queryId)
       .select(Similarity.unitVector(col("embedding")).as("u"))
       .crossJoin(broadcast(p))
       .select(dequantize(quantize(col("u"), col("mins"), col("scales")),
         col("mins"), col("scales")).as("q_dq"))
-    val pool = spark.read.parquet(s"$ivfSqDir/cells_sq")
+    val pool = readTier(spark, s"$ivfSqDir/cells_sq")
       .filter(col("cell").isin(cells: _*) && col("vec_id") =!= queryId)
       .crossJoin(broadcast(p))
       .crossJoin(broadcast(qDq))
@@ -439,7 +476,7 @@ object AnnIndex {
       .localCheckpoint()
     trainPqCentroids(units, m, nCents, iters)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_centroids")
-    val cback = spark.read.parquet(s"$dir/pq_centroids")
+    val cback = readTier(spark, s"$dir/pq_centroids")
     assignPqCells(subvectors(units, m), cback)
       .groupBy(col("vec_id"))
       .agg(sort_array(collect_list(struct(col("sub"), col("cell")))).as("sc"))
@@ -496,9 +533,9 @@ object AnnIndex {
   def pqTopK(spark: SparkSession, dir: String, embeddings: DataFrame,
              queryId: Long = 0L, k: Int = 10, rerank: Int = 8,
              m: Int = 16, nCents: Int = 32): DataFrame = {
-    val lutRow = pqLutRow(spark.read.parquet(s"$dir/pq_centroids"),
+    val lutRow = pqLutRow(readTier(spark, s"$dir/pq_centroids"),
       embeddings, queryId, m, nCents)
-    val pool = spark.read.parquet(s"$dir/pq_codes")
+    val pool = readTier(spark, s"$dir/pq_codes")
       .filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(lutRow))
       .select(col("vec_id"), pqScore(m, nCents).as("approx"))
@@ -514,8 +551,8 @@ object AnnIndex {
     * pass reads nProbe directories of a ~10 B/vector table. */
   def buildIvfPq(spark: SparkSession, ivfDir: String, pqDir: String,
                  outDir: String): Unit =
-    spark.read.parquet(s"$ivfDir/cells").select(col("vec_id"), col("cell"))
-      .join(spark.read.parquet(s"$pqDir/pq_codes"), Seq("vec_id"))
+    readTier(spark, s"$ivfDir/cells").select(col("vec_id"), col("cell"))
+      .join(readTier(spark, s"$pqDir/pq_codes"), Seq("vec_id"))
       .write.partitionBy("cell").mode("overwrite").parquet(s"$outDir/cells_pq")
 
   /** IVFPQ probe: nProbe nearest cells from the IVF centroid table,
@@ -527,9 +564,9 @@ object AnnIndex {
                  m: Int = 16, nCents: Int = 32): DataFrame = {
     val cells = probeCellsForQuery(spark, ivfDir, embeddings, queryId, nProbe)
     require(cells.nonEmpty, s"probeIvfPq: query vec_id=$queryId not found")
-    val lutRow = pqLutRow(spark.read.parquet(s"$pqDirS/pq_centroids"),
+    val lutRow = pqLutRow(readTier(spark, s"$pqDirS/pq_centroids"),
       embeddings, queryId, m, nCents)
-    val pool = spark.read.parquet(s"$ivfPqDir/cells_pq")
+    val pool = readTier(spark, s"$ivfPqDir/cells_pq")
       .filter(col("cell").isin(cells: _*) && col("vec_id") =!= queryId)
       .crossJoin(broadcast(lutRow))
       .select(col("vec_id"), pqScore(m, nCents).as("approx"))
@@ -557,38 +594,66 @@ object AnnIndex {
 
   // ---- batch probe (the production many-queries shape) ----
 
-  /** Every query's nProbe nearest cells, computed IN THE PLAN — the
-    * assignCells argmax generalized from the min struct to the nProbe
-    * best per query: queries x broadcast(centroids) -> per-pair dot ->
-    * rank<=nProbe through the TopKPerKey heap operator. Zero per-query
-    * driver work; 10^6 queries cost one map-side join + one bounded
-    * top-k exchange, not 10^6 driver round-trips (the single-query
-    * probeCellsFor loop shape the r7 verdict flagged). */
+  /** The centroid table as ONE row: `cents`, every (cell, centroid)
+    * in cell order. Broadcast beside the queries, it lets each query
+    * row choose its own cells map-side (nearestCells). */
+  private def centroidRow(centroids: DataFrame): DataFrame =
+    centroids.agg(sort_array(collect_list(struct(col("cell"), col("centroid")))).as("cents"))
+
+  /** The nProbe cells whose centroids have the largest dot product
+    * with the unit vector `u` (ties: the smaller cell), read from the
+    * `cents` column of centroidRow: a per-row sort of nCells
+    * (-dot, cell) structs. The dot is the same Similarity.dot as every
+    * other cell ranking here, so the choice is bit-identical to a
+    * row_number() ranking over the centroid table. */
+  private def nearestCells(u: Column, nProbe: Int): Column =
+    transform(
+      slice(sort_array(transform(col("cents"), c =>
+        struct((-Similarity.dot(u, c.getField("centroid"))).as("nd"),
+          c.getField("cell").as("cell")))), 1, nProbe),
+      _.getField("cell"))
+
+  /** Every query's nProbe nearest cells, computed IN THE PLAN: the
+    * queries cross-join the broadcast one-row centroid table and each
+    * row ranks the centroids itself (nearestCells) — no per-query
+    * driver work and no exchange of query rows; 10^6 queries cost one
+    * map-side pass, not 10^6 driver round-trips (the single-query
+    * probeCellsFor loop shape). The (query_id, cell) rows it returns
+    * are the probe set a cell-partitioned tier is joined with
+    * ([[probedTier]]), which prunes that tier to the probed-cell union
+    * at run time. */
   private[graft] def assignProbeCells(queryUnits: DataFrame, centroids: DataFrame,
                                       nProbe: Int): DataFrame =
-    queryUnits.crossJoin(broadcast(centroids))
-      .select(col("vec_id").as("query_id"), col("cell"),
-        Similarity.dot(col("u"), col("centroid")).as("d"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d").desc, col("cell"))))
-      .filter(col("rnk") <= nProbe)
-      .select(col("query_id"), col("cell"))
+    queryUnits.crossJoin(broadcast(centroidRow(centroids)))
+      .select(col("vec_id").as("query_id"), explode(nearestCells(col("u"), nProbe)).as("cell"))
+
+  /** The rows of the cell-partitioned tier at `path` that the probe
+    * set's cells hold, each paired with the probe rows of its cell:
+    * `tier JOIN broadcast(probe) USING (cell)`. The one mechanism that
+    * chooses probed cells for every batch probe: the join's broadcast
+    * also prunes the tier's scan to the probed-cell union at run time
+    * ([[graft.plans.BroadcastPartitionPruning]] inserts the dynamic
+    * partition filter; the scan reuses the broadcast), so the union is
+    * never collected to the driver and the probe set is never
+    * checkpointed. */
+  private def probedTier(spark: SparkSession, path: String, probe: DataFrame): DataFrame =
+    readTier(spark, path).join(broadcast(probe), Seq("cell"))
 
   /** BATCH probe of the persisted IVF-SQ index — the retrieval shape
     * the index exists for (label 10^6 training docs with their nearest
     * eval neighbors, serve per-prompt context): ALL queries assigned
-    * their nProbe cells via the broadcast centroid join, ONE join of
-    * the (query_id, cell) probe set against the cell-partitioned int8
-    * code table, per-query rerank*k pools and final top-k through the
-    * TopKPerKey heap operator, exact float re-rank only on the pools.
+    * their nProbe cells in the plan, ONE join of the (query_id, cell)
+    * probe set against the cell-partitioned int8 code table,
+    * per-query rerank*k pools and final top-k through the TopKPerKey
+    * heap operator, exact float re-rank only on the pools.
     *
-    * The ONLY driver materialization is the distinct probed-cell union
-    * (<= nCells ints, ONE bounded collect per BATCH — partition
-    * selection is inherently driver-side, same nature as
-    * probeCellsFor); everything per-query stays in the plan. At 100 TB
-    * the first pass reads the probed partitions of the 4x-smaller code
-    * table and the candidate join carries (query_id, cell)-keyed rows
-    * only — work is O(|Q| * cellSize * nProbe), never O(|Q| * corpus).
+    * The whole probe is ONE Spark query: nothing is collected to the
+    * driver and nothing is checkpointed. The code-table scan is pruned
+    * to the probed-cell union at run time, from the broadcast probe set
+    * ([[probedTier]]). At 100 TB the first pass reads the probed
+    * partitions of the 4x-smaller code table and the candidate join
+    * carries (query_id, cell)-keyed rows only — work is
+    * O(|Q| * cellSize * nProbe), never O(|Q| * corpus).
     * Queries are drawn from the corpus by `queryPredicate` (the
     * retrieve-from-own-corpus shape; self-matches excluded). */
   def batchProbeIvfSq(spark: SparkSession, ivfDir: String, sqDir: String,
@@ -602,33 +667,33 @@ object AnnIndex {
     * `corpus` — the streaming ingest path probes the standing index
     * with vectors that are NOT yet in it (they append right after).
     * `corpus` serves only the exact re-rank lookups of pool candidate
-    * ids; candidates themselves come from the index partitions. */
+    * ids; candidates themselves come from the index partitions.
+    *
+    * The centroids and the SQ8 grid ride ONE broadcast index row; each
+    * query row carries its first-pass vector `q_dq` and its probe
+    * `cells`, and the exploded (query_id, cell, q_dq) rows are the
+    * probe set of the pruned code-table join. */
   def batchProbeIvfSqFrames(spark: SparkSession, ivfDir: String, sqDir: String,
                             ivfSqDir: String, corpus: DataFrame,
                             queries: DataFrame, k: Int = 5,
                             nProbe: Int = 12, rerank: Int = 4): DataFrame = {
-    val embeddings = corpus
-    val qUnits = queries
-      .select(col("vec_id"), Similarity.unitVector(col("embedding")).as("u"))
-    val probe = assignProbeCells(qUnits, spark.read.parquet(s"$ivfDir/centroids"), nProbe)
-      .localCheckpoint()
-
-    val cellUnion = probe.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-
-    val p = spark.read.parquet(s"$sqDir/sq_params")
+    // every join inside the probe set carries its broadcast hint: the
+    // run-time pruning reuses the probe set's broadcast only while the
+    // plan that builds it is the one planned up front
+    val params = broadcast(readTier(spark, s"$sqDir/sq_params"))
+    val index = broadcast(centroidRow(readTier(spark, s"$ivfDir/centroids")).crossJoin(params))
     // query side rides the SAME quantization grid as the corpus codes
-    val qDq = qUnits.crossJoin(broadcast(p))
-      .select(col("vec_id").as("query_id"),
+    val probe = queries
+      .select(col("vec_id").as("query_id"), Similarity.unitVector(col("embedding")).as("u"))
+      .crossJoin(index)
+      .select(col("query_id"),
         dequantize(quantize(col("u"), col("mins"), col("scales")),
-          col("mins"), col("scales")).as("q_dq"))
+          col("mins"), col("scales")).as("q_dq"),
+        explode(nearestCells(col("u"), nProbe)).as("cell"))
 
-    val pool = spark.read.parquet(s"$ivfSqDir/cells_sq")
-      .filter(col("cell").isin(cellUnion: _*))
-      .join(broadcast(probe), Seq("cell"))
+    val pool = probedTier(spark, s"$ivfSqDir/cells_sq", probe)
       .filter(col("query_id") =!= col("vec_id"))
-      .crossJoin(broadcast(p))
-      .join(broadcast(qDq), Seq("query_id"))
+      .crossJoin(params)
       .select(col("query_id"), col("vec_id"),
         Similarity.dot(dequantize(col("codes"), col("mins"), col("scales")), col("q_dq"))
           .as("approx"))
@@ -640,7 +705,7 @@ object AnnIndex {
     val qExact = queries.select(col("vec_id").as("query_id"),
       Similarity.unitVector(col("embedding")).as("q_unit"))
     pool
-      .join(embeddings.select(col("vec_id"),
+      .join(corpus.select(col("vec_id"),
         Similarity.unitVector(col("embedding")).as("c_unit")), Seq("vec_id"))
       .join(broadcast(qExact), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -650,8 +715,14 @@ object AnnIndex {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id"),
         round(col("raw_cos"), 4).as("cos_sim"))
-      .orderBy("query_id", "rank")
+      .transform(inAnswerOrder)
   }
+
+  /** The |Q| x k answer rows in (query_id, rank) order, gathered into
+    * one partition: a range exchange would cost a sampling job first,
+    * and the answer is collected whole anyway. */
+  private def inAnswerOrder(answer: DataFrame): DataFrame =
+    answer.repartition(1).orderBy("query_id", "rank")
 
   /** Batch recall gate for the IVF-SQ index (the annBatchRecallGate
     * pattern): output = the exact brute-force batch top-k (fully
@@ -677,9 +748,10 @@ object AnnIndex {
     * lookup table built as ONE row of a broadcast (query_id, lut)
     * table — the per-query LUT generalizes exactly like the probe-cell
     * argmax did — then one join against the pruned cells_pq partitions
-    * scores every (query, candidate) pair with m array lookups. Zero
-    * per-query driver work; the only collect is the batch-level
-    * probed-cell union. */
+    * scores every (query, candidate) pair with m array lookups. One
+    * Spark query: the cells_pq scan is pruned to the probed-cell union
+    * at run time from the broadcast probe set ([[probedTier]]), with
+    * no driver collect. */
   def batchProbeIvfPq(spark: SparkSession, ivfDir: String, pqDirS: String,
                       ivfPqDir: String, embeddings: DataFrame,
                       queryPredicate: org.apache.spark.sql.Column, k: Int = 5,
@@ -688,13 +760,10 @@ object AnnIndex {
     val queries = embeddings.filter(queryPredicate)
     val qUnits = queries
       .select(col("vec_id"), Similarity.unitVector(col("embedding")).as("u"))
-    val probe = assignProbeCells(qUnits, spark.read.parquet(s"$ivfDir/centroids"), nProbe)
-      .localCheckpoint()
-    val cellUnion = probe.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val probe = assignProbeCells(qUnits, readTier(spark, s"$ivfDir/centroids"), nProbe)
 
     val subDim = Dim / m
-    val cents = spark.read.parquet(s"$pqDirS/pq_centroids")
+    val cents = readTier(spark, s"$pqDirS/pq_centroids")
     val qsv = qUnits.select(col("vec_id").as("query_id"),
       posexplode(transform(sequence(lit(0), lit(m - 1)),
         s0 => slice(col("u"), s0 * subDim + 1, lit(subDim)))).as(Seq("sub", "sv")))
@@ -705,9 +774,7 @@ object AnnIndex {
       .agg(sort_array(collect_list(col("e"))).as("es"))
       .select(col("query_id"), transform(col("es"), e => e.getField("d")).as("lut"))
 
-    val pool = spark.read.parquet(s"$ivfPqDir/cells_pq")
-      .filter(col("cell").isin(cellUnion: _*))
-      .join(broadcast(probe), Seq("cell"))
+    val pool = probedTier(spark, s"$ivfPqDir/cells_pq", probe)
       .filter(col("query_id") =!= col("vec_id"))
       .join(broadcast(luts), Seq("query_id"))
       .select(col("query_id"), col("vec_id"), pqScore(m, nCents).as("approx"))
@@ -729,7 +796,7 @@ object AnnIndex {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id"),
         round(col("raw_cos"), 4).as("cos_sim"))
-      .orderBy("query_id", "rank")
+      .transform(inAnswerOrder)
   }
 
   /** Batch recall gate for the IVFPQ batch probe (annBatchRecallGate
@@ -764,7 +831,7 @@ object AnnIndex {
 
   private def appendIvfFromUnits(spark: SparkSession, dir: String,
                                  delta: DataFrame, units: DataFrame): Unit = {
-    val assigned = assignCells(units, spark.read.parquet(s"$dir/centroids"))
+    val assigned = assignCells(units, readTier(spark, s"$dir/centroids"))
     delta.join(assigned, Seq("vec_id"))
       .write.partitionBy("cell").mode("append").parquet(s"$dir/cells")
   }
@@ -780,7 +847,7 @@ object AnnIndex {
 
   private def deltaCodes(spark: SparkSession, sqDir: String,
                          units: DataFrame): DataFrame =
-    units.crossJoin(broadcast(spark.read.parquet(s"$sqDir/sq_params")))
+    units.crossJoin(broadcast(readTier(spark, s"$sqDir/sq_params")))
       .select(col("vec_id"), quantize(col("u"), col("mins"), col("scales")).as("codes"))
 
   private def appendSqFromUnits(spark: SparkSession, dir: String,
@@ -812,7 +879,7 @@ object AnnIndex {
     // the same delta rows. Assignment arithmetic = assignCells's
     // exactly (same struct-min over the same broadcast centroids).
     val withCell = units
-      .crossJoin(broadcast(spark.read.parquet(s"$ivfDir/centroids")))
+      .crossJoin(broadcast(readTier(spark, s"$ivfDir/centroids")))
       .select(col("vec_id"), col("u"),
         struct((-Similarity.dot(col("u"), col("centroid"))).as("nd"),
           col("cell").as("c")).as("sc"))
@@ -820,7 +887,7 @@ object AnnIndex {
       .agg(min(col("sc")).as("m"), first(col("u")).as("u"))
       .select(col("vec_id"), col("m.c").as("cell"), col("u"))
     val rows = withCell
-      .crossJoin(broadcast(spark.read.parquet(s"$sqDir/sq_params")))
+      .crossJoin(broadcast(readTier(spark, s"$sqDir/sq_params")))
       .select(col("vec_id"), col("cell"),
         quantize(col("u"), col("mins"), col("scales")).as("codes"))
     graft.ops.PlanDump.dump("ann_append_ivfsq", rows)
@@ -866,7 +933,8 @@ object AnnIndex {
     * persisted IVF index instead of the all-pairs crossJoin. Every
     * eval vector's nProbe cells come from the ONE broadcast-centroid
     * argmax join (assignProbeCells — zero per-query driver work); the
-    * corpus scan is pruned to the probed-cell union; a training vector
+    * corpus scan is pruned to the probed-cell union at run time
+    * ([[probedTier]] — no driver collect); a training vector
     * only meets the eval vectors probing its OWN cell, so pair work is
     * O(sum_cell |train_cell| x |eval probing cell|), not
     * O(|train| x |eval|). Exact cosines on the float vectors, then
@@ -896,17 +964,12 @@ object AnnIndex {
                           nProbe: Int = 12): DataFrame = {
     val qUnits = embeddings.filter(col("vec_id") % 40 === 0)
       .select(col("vec_id"), Similarity.unitVector(col("embedding")).as("u"))
-    val probe = assignProbeCells(qUnits,
-      spark.read.parquet(s"$ivfDir/centroids"), nProbe).localCheckpoint()
-    // bounded collect: <= nCells ints, selects which partitions to scan
-    val cellUnion = probe.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val probe = assignProbeCells(qUnits, readTier(spark, s"$ivfDir/centroids"), nProbe)
     val qExact = qUnits.select(col("vec_id").as("query_id"), col("u").as("q_unit"))
-    spark.read.parquet(s"$ivfDir/cells")
-      .filter(col("cell").isin(cellUnion: _*) && col("vec_id") % 40 =!= 0)
-      .select(col("vec_id"), col("cell"),
+    probedTier(spark, s"$ivfDir/cells", probe)
+      .filter(col("vec_id") % 40 =!= 0)
+      .select(col("vec_id"), col("query_id"),
         Similarity.unitVector(col("embedding")).as("t_unit"))
-      .join(broadcast(probe), Seq("cell"))
       .join(broadcast(qExact), Seq("query_id"))
       .select(col("vec_id"), Similarity.dot(col("t_unit"), col("q_unit")).as("raw_cos"))
       .filter(col("raw_cos") >= threshold)
@@ -1076,7 +1139,7 @@ object AnnIndex {
                     numPlanes: Int = 4, numTables: Int = 6): DataFrame = {
     val dir = artifact(spark, s"lsh:$sfDir:$numPlanes:$numTables")(
       d => buildLsh(embeddings, s"$d/lsh", numPlanes, numTables))
-    spark.read.parquet(s"$dir/lsh")
+    readTier(spark, s"$dir/lsh")
   }
 
   /** Memoized SQ8 index dir for this session + fixture. */

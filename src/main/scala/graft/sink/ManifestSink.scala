@@ -260,14 +260,23 @@ object ManifestSink {
   private[sink] def readManifestLines(spark: SparkSession, root: String,
                                       epoch: Int, token: String): Seq[(String, Long, Int)] =
     readLines(spark,
-      new org.apache.hadoop.fs.Path(s"$root/manifest-$epoch.$token")).map { l =>
-      l.split('\t') match {
-        case Array(r) => (r, -1L, -1)
-        case Array(r, s) => (r, s.toLong, -1)
-        case Array(r, s, e) => (r, s.toLong, e.toInt)
-        case other => throw new IllegalStateException(
-          s"malformed manifest line (${other.length} fields): $l")
-      }
+      new org.apache.hadoop.fs.Path(s"$root/manifest-$epoch.$token")).map(parseManifestLine)
+
+  private def parseManifestLine(l: String): (String, Long, Int) =
+    l.split('\t') match {
+      case Array(r) => (r, -1L, -1)
+      case Array(r, s) => (r, s.toLong, -1)
+      case Array(r, s, e) => (r, s.toLong, e.toInt)
+      case other => throw new IllegalStateException(
+        s"malformed manifest line (${other.length} fields): $l")
+    }
+
+  /** The manifest lines of a staged commit, one per file: `rel\tsize\tepoch`,
+    * or the bare `rel` of a file of unknown size. */
+  private def manifestLines(staged: Staged): Seq[String] =
+    staged.relFiles.map { r =>
+      val e = staged.fileEpochs.getOrElse(r, staged.epoch)
+      staged.sizes.get(r).map(s => s"$r\t$s\t$e").getOrElse(r)
     }
 
   private[sink] def statsExistsFor(spark: SparkSession, root: String,
@@ -472,10 +481,7 @@ object ManifestSink {
     // FileStatuses from metadata — zero per-file RPCs — and the commit
     // epoch scopes delete vectors (a DV hides keys only in OLDER
     // files). Carried files keep their epochs; fresh ones get this one.
-    writeFile(spark, manifest, staged.relFiles.map { r =>
-      val e = staged.fileEpochs.getOrElse(r, staged.epoch)
-      staged.sizes.get(r).map(s => s"$r\t$s\t$e").getOrElse(r)
-    }.mkString("\n") + "\n")
+    writeFile(spark, manifest, manifestLines(staged).mkString("\n") + "\n")
     staged.stats.foreach(_.coalesce(1).write.mode("overwrite")
       .parquet(s"${staged.root}/stats-${staged.epoch}.${staged.token}"))
     // CAS: rename WITHOUT overwrite — fails iff another attempt won
@@ -1698,7 +1704,15 @@ object ManifestSink {
       sizes = freshSizes ++ knownSizes(priorEntries),
       fileEpochs = knownEpochs(priorEntries))
     try {
-      commitStaged(spark, staged, Some(Txn(appId, version)))
+      val txn = Txn(appId, version)
+      commitStaged(spark, staged, Some(txn))
+      // the CAS won: the next read of this epoch plans from what the
+      // commit just wrote, with no manifest or stats re-read
+      SnapshotCache.seed(SnapshotCache.Snapshot(root, next, token, Some(txn),
+        manifestLines(staged).map(parseManifestLine),
+        staged.schemaJson.map(org.apache.spark.sql.types.DataType.fromJson(_)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]),
+        staged.dvs))
       statRows.foreach(SnapshotCache.seedStats(root, next, token, _))
       true
     } catch {

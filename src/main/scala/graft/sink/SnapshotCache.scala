@@ -120,6 +120,13 @@ object SnapshotCache {
     }
   }
 
+  /** Install the snapshot a commit just wrote — what `get` would load
+    * from its marker and manifest — so the first read of the new epoch
+    * re-reads neither. Callers seed only after their commit marker's
+    * CAS won under `s.token`. */
+  private[sink] def seed(s: Snapshot): Unit =
+    lock.synchronized { snaps.put((s.root, s.epoch), s) }
+
   /** Install the stats rows a commit just wrote for (root, epoch,
     * token) — the rows it held when it wrote them — so the first read
     * of the new epoch plans without a stats load. Callers seed only

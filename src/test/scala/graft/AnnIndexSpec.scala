@@ -14,6 +14,16 @@ class AnnIndexSpec extends SparkTestBase {
 
   private lazy val emb = Tables.embeddings(spark, sf)
 
+  // Jobs of a warm batch IVF-SQ probe: the centroid-row aggregate, the
+  // grid, index-row, probe-set, corpus and query broadcasts, the pool
+  // exchange, the answer's exchange and its result stage: no probe-set
+  // checkpoint, no collect of the probed cells, no schema inference.
+  private val MaxProbeJobs = 9
+  // Jobs of an appendAll: the unit checkpoint, the duplicate-id check
+  // and the three tier writes. Its four tier reads inferred a schema
+  // with one job each before they read the footer.
+  private val MaxAppendJobs = 13
+
   private def parquetFiles(dir: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
@@ -215,6 +225,82 @@ class AnnIndexSpec extends SparkTestBase {
         .map(_.getLong(2)).toSeq
       assert(ofBatch == single, s"query $qid: batch $ofBatch vs single $single")
     }
+  }
+
+  /** Files the executed scans of the cell-partitioned tier at `tier`
+    * read, files of the `cells` partitions, files of the whole tier. */
+  private def tierFilesRead(df: org.apache.spark.sql.DataFrame, tier: String,
+                            cells: Seq[Int]): (Long, Int, Int) = {
+    df.collect()
+    val scans = deepScans(df.queryExecution.executedPlan)
+      .filter(_.metadata.get("Location").exists(_.contains(tier)))
+    assert(scans.nonEmpty, s"no scan over $tier:\n${df.queryExecution.executedPlan}")
+    (scans.map(_.metrics("numFiles").value).sum,
+      cells.map(c => parquetFiles(s"$tier/cell=$c").size).sum, parquetFiles(tier).size)
+  }
+
+  /** The probed-cell union of `queries` (vec_id, embedding) at nProbe. */
+  private def probedUnion(ivf: String, queries: org.apache.spark.sql.DataFrame,
+                          nProbe: Int): Seq[Int] =
+    AnnIndex.assignProbeCells(
+      queries.select(col("vec_id"), Similarity.unitVector(col("embedding")).as("u")),
+      AnnIndex.readTier(spark, s"$ivf/centroids"), nProbe)
+      .select("cell").distinct().collect().map(_.getInt(0)).toSeq
+
+  test("batch probes prune a strict-subset probed-cell union at run time: files read == union files < tier files") {
+    val ivf = AnnIndex.ivfDir(spark, sf, emb)
+    val sq = AnnIndex.sqDir(spark, sf, emb)
+    val csq = AnnIndex.ivfSqDir(spark, sf, emb)
+    val pq = AnnIndex.pqDir(spark, sf, emb)
+    val cpq = AnnIndex.ivfPqDir(spark, sf, emb)
+    // 2 queries x 2 cells: at most 4 of the 16 cells
+    val pred = col("vec_id").isin(3L, 250L)
+    val union = probedUnion(ivf, emb.filter(pred), 2)
+    // the frame-shaped probe's queries are not in the corpus
+    val outside = emb.filter(pred).select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+    // the routed decontamination probes every 40th vector, 1 cell each
+    val evalUnion = probedUnion(ivf, emb.filter(col("vec_id") % 40 === 0), 1)
+    val cases = Seq(
+      ("batchProbeIvfSq", AnnIndex.batchProbeIvfSq(spark, ivf, sq, csq, emb, pred, k = 5, nProbe = 2),
+        s"$csq/cells_sq", union),
+      ("batchProbeIvfSqFrames", AnnIndex.batchProbeIvfSqFrames(spark, ivf, sq, csq, emb, outside,
+        k = 5, nProbe = 2), s"$csq/cells_sq", union),
+      ("batchProbeIvfPq", AnnIndex.batchProbeIvfPq(spark, ivf, pq, cpq, emb, pred, k = 5, nProbe = 2),
+        s"$cpq/cells_pq", union),
+      ("decontaminateRouted", AnnIndex.decontaminateRouted(spark, ivf, emb, 0.4, nProbe = 1),
+        s"$ivf/cells", evalUnion))
+    for ((what, df, tier, cells) <- cases) {
+      val (read, inUnion, all) = tierFilesRead(df, tier, cells)
+      assert(read == inUnion && inUnion < all,
+        s"$what read $read files; the probed cells ${cells.sorted} hold $inUnion of the tier's $all")
+    }
+  }
+
+  test("a warm batch IVF-SQ probe runs a bounded number of jobs; tier reads and appendAll infer no schema") {
+    val ivf = AnnIndex.ivfDir(spark, sf, emb)
+    val sq = AnnIndex.sqDir(spark, sf, emb)
+    val csq = AnnIndex.ivfSqDir(spark, sf, emb)
+    val queries = emb.filter(col("vec_id") % 31 === 5)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+    def probe(): Unit = AnnIndex.batchProbeIvfSqFrames(spark, ivf, sq, csq, emb, queries,
+      k = 5, nProbe = 4).collect(): Unit
+    probe()
+    val probeJobs = SparkJobs.count(spark)(probe())
+    assert(probeJobs <= MaxProbeJobs, s"a warm batch probe ran $probeJobs jobs")
+    for (tier <- Seq(s"$ivf/centroids", s"$ivf/cells", s"$sq/sq_params", s"$sq/sq_codes", s"$csq/cells_sq"))
+      assert(SparkJobs.count(spark)(AnnIndex.readTier(spark, tier): Unit) == 0, s"reading $tier ran a job")
+
+    import spark.implicits._
+    def v(base: Int, jitter: Float): Array[Float] =
+      Array.tabulate(64)(d => (if (d / 8 == base) 1f else 0f) + (if (d == 63) jitter else 0f))
+    val corpus = (0 until 24).map(i => (i.toLong, v(i % 3, i * 0.001f))).toDF("vec_id", "embedding")
+    val dir = tmpDir("graft_append_jobs_spec_")
+    AnnIndex.buildIvfSqAll(spark, corpus, s"$dir/ivf", s"$dir/sq", s"$dir/csq", nCells = 3)
+    val delta = Seq((100L, v(0, 0.5f)), (101L, v(1, 0.0f))).toDF("vec_id", "embedding")
+    val appendJobs = SparkJobs.count(spark)(
+      AnnIndex.appendAll(spark, s"$dir/ivf", s"$dir/sq", s"$dir/csq", delta))
+    assert(appendJobs <= MaxAppendJobs, s"appendAll ran $appendJobs jobs")
+    assert(AnnIndex.readTier(spark, s"$dir/csq/cells_sq").count() == 26)
   }
 
   test("append maintains the index without rebuild: centroids/grid byte-identical, delta rows live") {

@@ -217,6 +217,30 @@ class StreamSinkStatsSpec extends SparkTestBase {
     assert(keys() == Seq(2L, 3L), "DELETE reaches the older file's row")
   }
 
+  test("a sink commit seeds the next read's snapshot: COUNT(*) of the new epoch loads no manifest") {
+    ensureCatalog()
+    val base = tmpDir("sss_snap_")
+    val root = s"$base/t"
+    spark.sql(s"CREATE TABLE graft.`$root` (k BIGINT, v STRING)")
+    val mem = MemoryStream[(Long, String)]
+    val q = sinkTo(mem.toDF().toDF("k", "v"), root, s"$base/ckpt", "k,v")
+    try {
+      mem.addData((1L, "a"), (2L, "b"))
+      q.processAllAvailable()
+      mem.addData((3L, "c"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val loads = SnapshotCache.snapshotLoads
+    assert(spark.sql(s"SELECT COUNT(*) FROM graft.`$root`").collect()(0).getLong(0) == 3L)
+    assert(SnapshotCache.snapshotLoads == loads, "the commit seeded the new epoch's snapshot")
+    // the seed is exactly what a load of the committed epoch reads
+    val epoch = ManifestSink.currentEpoch(spark, root)
+    val seeded = SnapshotCache.get(spark, root, epoch)
+    SnapshotCache.invalidateAll()
+    assert(SnapshotCache.get(spark, root, epoch) == seeded)
+    assert(SnapshotCache.snapshotLoads == loads + 1)
+  }
+
   test("a replayed batch and a CAS-losing sink commit seed nothing") {
     val root = tmpDir("sss_cas_")
     ManifestSink.publishWithStats(Seq((1L, "a")).toDF("k", "v"), root, 1, Seq("k"))
