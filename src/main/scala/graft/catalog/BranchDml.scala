@@ -193,9 +193,9 @@ object BranchDml {
     val delRel = deleteKeys.map { dk =>
       val r = s"dv-$next.$token"; writeDv(r, dk); r
     }
-    val stats = (prior.stats.map(_.filter(!col("file").isin(affected.toSeq: _*))),
+    val stats = (prior.stats.map(_.filterNot(r => affected(r.getString(0)))),
         fresh.stats) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
+      case (Some(a), Some(b)) => Some(a ++ b)
       case (a, b) => a.orElse(b)
     }
     val cumulative = prior.copy(epoch = next,
@@ -205,8 +205,7 @@ object BranchDml {
       sizes = prior.sizes.view.filterKeys(!affected(_)).toMap ++ fresh.sizes,
       fileEpochs = prior.fileEpochs.view.filterKeys(!affected(_)).toMap ++
         fresh.relFiles.map(_ -> next))
-    cumulative.stats.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/stats-$next.$token"))
+    cumulative.stats.foreach(ManifestSink.writeStats(spark, dir, next, token, _))
     require(GraftTable.branchStaged(spark, dir, name).exists(_._4 == stages),
       s"branch '$name' on $dir advanced or vanished during this write " +
         "(branches are single-writer pipelines); re-run against the " +

@@ -1157,8 +1157,8 @@ object GraftTable {
         val Array(r, k) = l.drop(3).split("\t", 2)
         (unescJson(r), unescJson(k))
       }
-      // the stats table was written at stage time; rebuild it as an
-      // IN-MEMORY frame (bounded: O(files x stats cols)) so the
+      // the stats table was written at stage time; hold its rows on
+      // the driver (bounded: O(files x stats cols)) so the
       // publish-time stats write never reads the path it overwrites
       val statsPath = s"$dir/stats-$epoch.$token"
       val sp = new Path(statsPath)
@@ -1168,13 +1168,8 @@ object GraftTable {
           "(a vacuum or a crashed publish swept it); re-run the write")
       val stats =
         if (!f.exists(sp)) None
-        else {
-          val read = spark.read.parquet(statsPath)
-          val rows = read.collect().toSeq
-          Some(spark.createDataFrame(
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
-            read.schema))
-        }
+        else Some(spark.read.schema(ManifestSink.StatsSchema).parquet(statsPath)
+          .collect().toSeq)
       val extras = Seq("base", "stages")
         .flatMap(k => one(k).map(k -> _)).toMap
       (graft.sink.ManifestSink.Staged(dir, epoch, token,
@@ -1186,13 +1181,11 @@ object GraftTable {
   }
 
   /** Resolve a staged WAP write: the durable descriptor FIRST (its
-    * stats come back as a materialized in-memory frame), the
-    * session registry second. The registry's stats is a LAZY plan
-    * whose inputs include the pre-stage epoch's stats parquet — a
-    * vacuum during the unbounded stage-to-publish window can sweep
-    * that, failing a same-session publish with FileNotFoundException
-    * even though the durable stage is intact (ADVICE r15); the
-    * descriptor never has that hazard. */
+    * stats come back as rows read from the stage's own stats
+    * parquet), the session registry second. Either way the stats are
+    * rows held on the driver, so a vacuum during the unbounded
+    * stage-to-publish window cannot pull an input out from under the
+    * publish (ADVICE r15). */
   private[graft] def wapStaged(spark: SparkSession, dir: String, id: String)
       : Option[(graft.sink.ManifestSink.Staged, Option[String])] =
     readWapDescriptor(spark, dir, id).orElse(pendingWap.get((dir, id)))
@@ -1240,16 +1233,10 @@ object GraftTable {
       if (base == 0) (Nil, None, Nil)
       else {
         val es = ManifestSink.manifestEntries3(spark, dir, base)
-        val st =
-          if (!ManifestSink.statsExists(spark, dir, base)) None
-          else {
-            // durable copy under the branch token (vacuum-exempt for
-            // the branch's life): the chain's stable stats root
-            val s = ManifestSink.statsTable(spark, dir, base)
-            s.coalesce(1).write.mode("overwrite")
-              .parquet(s"$dir/stats-$base.$token")
-            Some(s)
-          }
+        // durable copy under the branch token (vacuum-exempt for the
+        // branch's life): the chain's stable stats root
+        val st = graft.sink.SnapshotCache.statRows(spark, dir, base).map(_.toSeq)
+        st.foreach(ManifestSink.writeStats(spark, dir, base, token, _))
         (es, st, ManifestSink.commitDvs(spark, dir, base))
       }
     val st = graft.sink.ManifestSink.Staged(dir, base, token,
@@ -1304,8 +1291,7 @@ object GraftTable {
     // under the new stage epoch's name for the next stage / publish
     val cumulative = prior.copy(epoch = next,
       dvs = prior.dvs :+ ((dvRel, keyCol)))
-    cumulative.stats.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/stats-$next.${cumulative.token}"))
+    cumulative.stats.foreach(ManifestSink.writeStats(spark, dir, next, cumulative.token, _))
     require(branchStaged(spark, dir, name).exists(_._4 == stages),
       s"branch '$name' on $dir advanced or vanished during this delete " +
         "(branches are single-writer pipelines); re-run against the " +
@@ -1733,7 +1719,7 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
         GraftTable.auditConstraints(spark, dir,
           fresh.relFiles.filter(_.startsWith(s"data-epoch=${prior.epoch + 1}-")))
         val stats = (prior.stats, fresh.stats) match {
-          case (Some(a), Some(b)) => Some(a.unionByName(b))
+          case (Some(a), Some(b)) => Some(a ++ b)
           case (a, b) => a.orElse(b)
         }
         val cumulative = prior.copy(epoch = prior.epoch + 1,
@@ -1744,8 +1730,8 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
             fresh.relFiles.map(_ -> (prior.epoch + 1)))
         // durable stats leg for the NEXT stage / the publish (the
         // WAP discipline): materialize under the branch token
-        cumulative.stats.foreach(_.coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/stats-${cumulative.epoch}.${cumulative.token}"))
+        cumulative.stats.foreach(ManifestSink.writeStats(spark, dir,
+          cumulative.epoch, cumulative.token, _))
         // a branch tip is SINGLE-WRITER (the Iceberg branch-tip
         // optimistic discipline): two concurrent stages onto one
         // branch would last-writer-win the descriptor, silently
@@ -1795,8 +1781,7 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
         // durable leg: the stats table lands on disk NOW (the name
         // commitStaged will claim) and the descriptor records the
         // scalars, so any session can audit/publish/drop this stage
-        st.stats.foreach(_.coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/stats-${st.epoch}.${st.token}"))
+        st.stats.foreach(ManifestSink.writeStats(spark, dir, st.epoch, st.token, _))
         GraftTable.writeWapDescriptor(spark, dir, id, st, curSchema.map(_.json))
         return
       case None => ()
@@ -3203,7 +3188,10 @@ class GraftRowLevelOperation(dir: String, baseEpoch: Int,
   * file commit protocol) into `data-epoch=N-aTOKEN/`; the wrapping
   * commit then runs [[ManifestSink.commitReplaceGroups]] — one CAS
   * epoch that drops the scanned files, adds the staged ones with
-  * fresh stats, and carries the rest. An abort aborts the delegate
+  * fresh stats, and carries the rest. The fresh zone maps are folded
+  * by the writers themselves ([[ZoneStatsTracker]] on the write's job
+  * description, over the base epoch's stats columns), so the commit
+  * never re-reads the files it swaps in. An abort aborts the delegate
   * and leaves only an invisible orphan dir for vacuum.
   *
   * SINGLE-WRITE layout preservation (round 18; supersedes the r17
@@ -3234,16 +3222,15 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
   // the rows that reach the writer are the DATA projection of the
   // ReplaceData query (table columns only — plan-side metadata
   // columns are projected away by ReplaceDataExec), so the parquet
-  // write must be configured with the TABLE schema, not info.schema
-  private val dataInfo: LogicalWriteInfo = new LogicalWriteInfo {
-    override def options: CaseInsensitiveStringMap = info.options
-    override def queryId: String = info.queryId
-    // replacement files store PHYSICAL names (positional rename)
-    override def schema: StructType =
-      graft.sink.ColumnMapping.physicalSchema(tableSchema)
-  }
-
+  // write is configured with the TABLE schema, not info.schema;
+  // replacement files store PHYSICAL names (positional rename)
   private val physSchema = graft.sink.ColumnMapping.physicalSchema(tableSchema)
+
+  /** The writers' zone-map fold over the base epoch's stats columns;
+    * one per write (the driver's instance collects the committed
+    * tasks' folds). */
+  private val zones: Option[ZoneStatsTracker] =
+    RowLevelCommit.zoneTracker(SparkSession.active, dir, baseEpoch, physSchema)
 
   /** The base epoch's committed layout axes with the row index of
     * each source column (physical and logical schemas are positional
@@ -3310,14 +3297,17 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
       // re-audit EVERY attempt: a racing ADD CONSTRAINT commits a
       // metadata epoch, re-entering the CAS loop — the staged files
       // must clear the NEW constraint set before they publish
-      reaudit = Some(() => GraftTable.auditConstraints(spark, dir, fresh))): Unit
+      reaudit = Some(() => GraftTable.auditConstraints(spark, dir, fresh)),
+      freshZones = RowLevelCommit.zoneRows(zones, fresh, stagedDirName)): Unit
   }
 
   /** The unpartitioned-table path: a flat single-directory stage. */
   private def flatBatchWrite(): BatchWrite = new BatchWrite {
     private val delegate =
-      org.apache.spark.sql.execution.datasources.v2.parquet.ParquetWrite(
-        Seq(s"$dir/$stagedDirName"), "parquet", _ => true, dataInfo).toBatch
+      org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
+        .partitionedParquetWrite(SparkSession.active, s"$dir/$stagedDirName",
+          physSchema, StructType(Nil), info.options.asCaseSensitiveMap.asScala.toMap,
+          zones.toSeq)
 
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory =
       // ReplaceDataExec only applies its row projection when the
@@ -3359,7 +3349,7 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
     private val delegate =
       org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
         .partitionedParquetWrite(spark0, s"$dir/$stagedDirName",
-          physSchema, partSchema, writeOpts)
+          physSchema, partSchema, writeOpts, zones.toSeq)
 
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory =
       new LayoutAppendingWriterFactory(
@@ -3410,6 +3400,22 @@ final class OpStrippingWriterFactory(delegate: DataWriterFactory,
 /** Shared commit plumbing of the two row-level write paths (group CoW
   * and MoR delta). */
 private[catalog] object RowLevelCommit {
+
+  /** The zone-map fold a row-level write's writers run: over the base
+    * epoch's stats columns that the written (physical) schema holds —
+    * None when the base carries none. Served from the snapshot cache
+    * the operation's scan already warmed. */
+  def zoneTracker(spark: SparkSession, dir: String, baseEpoch: Int,
+                  physSchema: StructType): Option[ZoneStatsTracker] = {
+    val eligible = GraftTable.statsColsOf(physSchema).toSet
+    val cols = ManifestSink.statCols(spark, dir, baseEpoch).filter(eligible)
+    if (cols.isEmpty) None else Some(new ZoneStatsTracker(physSchema, cols))
+  }
+
+  /** The folded stats rows of the committed `files` under `dirName`. */
+  def zoneRows(t: Option[ZoneStatsTracker], files: Seq[String],
+               dirName: String): Seq[org.apache.spark.sql.Row] =
+    t.fold(Seq.empty[org.apache.spark.sql.Row])(_.fileRows(files, dirName))
 
   /** READ-SET APPEND GUARD (ADVICE r14): a racing append rebases
     * through only when its files provably hold no row this operation
@@ -3518,12 +3524,6 @@ final class GraftMorWrite(dir: String, baseEpoch: Int,
   override def description(): String =
     s"GraftMorWrite($dir@$baseEpoch -> $deltaDirName + $keyDirName)"
 
-  private def infoWith(s: StructType): LogicalWriteInfo = new LogicalWriteInfo {
-    override def options: CaseInsensitiveStringMap = info.options
-    override def queryId: String = info.queryId
-    override def schema: StructType = s
-  }
-
   override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite = {
     // same discipline as GraftReplaceWrite.toBatch: a MoR delta write
     // commits LIVE epochs — refuse under a session branch
@@ -3534,10 +3534,13 @@ final class GraftMorWrite(dir: String, baseEpoch: Int,
       private val keySchema = StructType(Seq(
         org.apache.spark.sql.types.StructField(physKeyName,
           tableSchema(morKey).dataType, nullable = true)))
+      private val zones =
+        RowLevelCommit.zoneTracker(SparkSession.active, dir, baseEpoch, physSchema)
       private val dataDelegate =
-        org.apache.spark.sql.execution.datasources.v2.parquet.ParquetWrite(
-          Seq(s"$dir/$deltaDirName"), "parquet", _ => true,
-          infoWith(physSchema)).toBatch
+        org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
+          .partitionedParquetWrite(SparkSession.active, s"$dir/$deltaDirName",
+            physSchema, StructType(Nil), info.options.asCaseSensitiveMap.asScala.toMap,
+            zones.toSeq)
 
       override def createBatchWriterFactory(pInfo: PhysicalWriteInfo):
           org.apache.spark.sql.connector.write.DeltaWriterFactory =
@@ -3559,12 +3562,9 @@ final class GraftMorWrite(dir: String, baseEpoch: Int,
         }
         val stagePath = new Path(s"$dir/$deltaDirName")
         val fsys = stagePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def listParquet(p: Path, dirName: String): Seq[String] =
-          if (!fsys.exists(p)) Nil
-          else fsys.listStatus(p).toSeq.map(_.getPath)
-            .filter(_.getName.endsWith(".parquet"))
-            .map(q => s"$dirName/${q.getName}")
-        val fresh = listParquet(stagePath, deltaDirName)
+        def listParquet(dirName: String): Seq[String] =
+          ManifestSink.listStagedParquet(spark, dir, dirName).keys.toSeq.sorted
+        val fresh = listParquet(deltaDirName)
         GraftTable.auditConstraints(spark, dir, fresh)
         val guard = RowLevelCommit.appendGuard(spark, dir, tableSchema, op)
         val reaudit = () => GraftTable.auditConstraints(spark, dir, fresh)
@@ -3576,7 +3576,8 @@ final class GraftMorWrite(dir: String, baseEpoch: Int,
         if (nKeys <= ManifestSink.dvKeyCap(spark)) {
           ManifestSink.commitMorDelta(spark, dir, baseEpoch, deltaDirName,
             keyDirName, physKeyName, tableSchema(morKey).dataType,
-            appendGuard = Some(guard), reaudit = Some(reaudit)): Unit
+            appendGuard = Some(guard), reaudit = Some(reaudit),
+            freshZones = RowLevelCommit.zoneRows(zones, fresh, deltaDirName)): Unit
           fsys.delete(keyStage, true): Unit
         } else {
           // OVER-CAP fallback: a vector this wide would bloat every
@@ -3604,14 +3605,17 @@ final class GraftMorWrite(dir: String, baseEpoch: Int,
           // the committed layout exactly like the row-level write path
           // — applied to the still-in-memory batch so the replacement
           // writes ONCE (no write-read-rewrite round trip)
-          ManifestSink.layoutForBase(spark, dir, baseEpoch,
-              survivors.unionByName(delta))
-            .write.mode("overwrite").parquet(s"$dir/$cowDirName")
+          val laid = ManifestSink.layoutForBase(spark, dir, baseEpoch,
+            survivors.unionByName(delta))
+          val cowZones = RowLevelCommit.zoneTracker(spark, dir, baseEpoch, laid.schema)
+          org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
+            .writeParquet(laid, s"$dir/$cowDirName", cowZones.toSeq)
+          val cowFiles = listParquet(cowDirName)
           ManifestSink.commitReplaceGroups(spark, dir, baseEpoch,
             cowDirName, op.scannedFiles,
             appendGuard = Some(guard),
-            reaudit = Some(() => GraftTable.auditConstraints(spark, dir,
-              listParquet(new Path(s"$dir/$cowDirName"), cowDirName)))): Unit
+            reaudit = Some(() => GraftTable.auditConstraints(spark, dir, cowFiles)),
+            freshZones = RowLevelCommit.zoneRows(cowZones, cowFiles, cowDirName)): Unit
           fsys.delete(stagePath, true): Unit
           fsys.delete(keyStage, true): Unit
         }
@@ -3740,12 +3744,12 @@ final class GraftMorWriterFactory(dataFactory: DataWriterFactory,
   * replay after a crash between sink commit and checkpoint commit
   * no-ops: exactly-once end to end, whether the table is named
   * through the catalog or by `format("graft-manifest")`'s root.
-  * Each write task runs through [[StatsDataWriterFactory]]: it opens
-  * its file on its first row (a zero-row task publishes no file) and
-  * returns the file's row count and zone-map bounds in its commit
-  * message, so the epoch's stats come from the writers — the commit
-  * never re-reads the batch it just wrote. `maxRecordsPerFile` is
-  * pinned to 0, so each task writes at most one file.
+  * Each write task runs through [[LazyOpenWriterFactory]] (it opens
+  * its file on its first row, so a zero-row task publishes no file),
+  * and the writers fold each file's row count and zone-map bounds
+  * ([[ZoneStatsTracker]] on the write's job description), so the
+  * epoch's stats come from the writers — the commit never re-reads
+  * the batch it just wrote.
   * Options: `appId` (txn identity — defaults to a dir-derived id; set
   * it when several queries feed one table), `statsCols`
   * (comma-separated zone-map columns).
@@ -3768,18 +3772,9 @@ final class GraftStreamingWrite(dir: String, info: LogicalWriteInfo,
   private val physSchema = graft.sink.ColumnMapping.physicalSchema(tableSchema)
   statsCols.foreach(c => ManifestSink.requireZoneMapType(c, physSchema(c).dataType))
 
-  private val dataInfo: LogicalWriteInfo = new LogicalWriteInfo {
-    override val options: CaseInsensitiveStringMap = {
-      val m = new util.HashMap[String, String](info.options.asCaseSensitiveMap)
-      m.put("maxRecordsPerFile", "0") // one file per task: stats map task -> file
-      new CaseInsensitiveStringMap(m)
-    }
-    override def queryId: String = info.queryId
-    override def schema: StructType = physSchema
-  }
-
   @volatile private var stagedDir: String = _
   @volatile private var delegate: BatchWrite = _
+  @volatile private var zones: Option[ZoneStatsTracker] = None
 
   // the file commit protocol coordinates task commits itself
   // (FileBatchWrite does the same) — a second coordinator pass would
@@ -3789,16 +3784,18 @@ final class GraftStreamingWrite(dir: String, info: LogicalWriteInfo,
   override def createStreamingWriterFactory(
       pInfo: PhysicalWriteInfo): StreamingDataWriterFactory = {
     stagedDir = s"data-stream-a${ManifestSink.newAttemptToken()}"
+    zones = if (statsCols.isEmpty) None else Some(new ZoneStatsTracker(physSchema, statsCols))
     delegate =
-      org.apache.spark.sql.execution.datasources.v2.parquet.ParquetWrite(
-        Seq(s"$dir/$stagedDir"), "parquet", _ => true, dataInfo).toBatch
-    new StatsDataWriterFactory(delegate.createBatchWriterFactory(pInfo),
-      physSchema, statsCols)
+      org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
+        .partitionedParquetWrite(SparkSession.active, s"$dir/$stagedDir",
+          physSchema, StructType(Nil), info.options.asCaseSensitiveMap.asScala.toMap,
+          zones.toSeq)
+    new LazyOpenWriterFactory(delegate.createBatchWriterFactory(pInfo))
   }
 
   /** The delegate sees only the messages of tasks that opened a file. */
   private def opened(messages: Array[WriterCommitMessage]): Array[WriterCommitMessage] =
-    messages.collect { case m: StatsTaskCommit if m.inner != null => m.inner }
+    messages.collect { case m: LazyTaskCommit if m.inner != null => m.inner }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     delegate.commit(opened(messages)) // finalize the file commit protocol
@@ -3815,13 +3812,9 @@ final class GraftStreamingWrite(dir: String, info: LogicalWriteInfo,
     GraftTable.auditConstraints(spark, dir, names.map(n => s"$stagedDir/$n"))
     // a vanished stage is the epoch commit's to judge: a replay no-ops,
     // anything else fails loudly
-    val rows =
-      if (!staged) Nil
-      else WriterStats.fileRows(names,
-        messages.toSeq.collect { case m: StatsTaskCommit => m }, statsCols, physSchema)
+    val rows = zones.map(t => if (!staged) Nil else t.fileRows(names, ""))
     ManifestSink.commitIdempotentAppendFiles(spark, dir,
-      stagedDir, appId, epochId,
-      fileStats = if (statsCols.isEmpty) None else Some(rows),
+      stagedDir, appId, epochId, fileStats = rows,
       schema = Some(physSchema)): Unit
   }
 

@@ -102,27 +102,67 @@ object Multimodal {
     * DATA-derived fan-out (guide §2.2 — right-size partitions to the
     * input instead of inheriting the session's shuffle.partitions):
     * the decode stages' per-row work is codec CPU, not bytes, so the
-    * task count comes from the row count over
-    * `spark.graft.decode.rowsPerTask` (default 512 — at the fixtures'
-    * decode cost that is ~100 ms of honest work per task; a 32-way
-    * fan-out of a 5k-row corpus was measured FASTER on 8 cores than
-    * 32, i.e. pure scheduling/contention overhead). At corpus scale
-    * the count grows linearly with the data, so the fan-out scales
-    * with it; the knob repositions the per-task work for heavier
-    * codecs. Still globally doc_id-ordered: range partitions emit in
-    * order and mapPartitions preserves intra-partition order, and the
-    * sort sits BELOW the decode so the codec chain never re-runs in
-    * the range-boundary sampling job. */
-  private def decodeIds(spark: SparkSession, documents: DataFrame): Dataset[Long] = {
+    * task count comes from the row count — [[decodeParts]]. The count
+    * costs no job of its own: ONE pass over the ids counts each input
+    * partition and keeps a bounded reservoir sample of it, and the
+    * same pass gives the range bounds, so the lineage feeding
+    * `documents` runs twice (this sketch and the decode), as Spark's
+    * own range partitioning would run it — not three times. Globally
+    * doc_id-ordered: range partitions emit in order and each is sorted
+    * below the decode, so the codec chain never re-runs for the
+    * ordering. */
+  private[graft] def decodeIds(spark: SparkSession, documents: DataFrame): Dataset[Long] = {
     import spark.implicits._
-    val ids = documents.select(col("doc_id"))
+    val ids = documents.select(col("doc_id")).as[Long].rdd
     val rowsPerTask = spark.sessionState.conf
       .getConfString("spark.graft.decode.rowsPerTask", "512").toLong
-    val n = ids.count() // metadata-only count of the id projection
-    val parts = math.max(1L, (n + rowsPerTask - 1) / rowsPerTask).toInt
-    ids.repartitionByRange(parts, col("doc_id"))
-      .sortWithinPartitions("doc_id").as[Long]
+    val sample = SketchSample
+    val sketch = ids.mapPartitionsWithIndex { (i, it) =>
+      val rnd = new java.util.Random(i)
+      val res = new Array[Long](sample)
+      var n = 0L
+      it.foreach { v =>
+        if (n < sample) res(n.toInt) = v
+        else {
+          val j = (rnd.nextDouble() * (n + 1)).toLong
+          if (j < sample) res(j.toInt) = v
+        }
+        n += 1
+      }
+      Iterator((n, res.take(math.min(n, sample.toLong).toInt)))
+    }.collect()
+    val n = sketch.map(_._1).sum
+    val parts = decodeParts(n, rowsPerTask, spark.sparkContext.defaultParallelism)
+    // weighted quantiles of the sample: each sampled id stands for
+    // count/sampleSize ids of its partition
+    val weighted = sketch.flatMap { case (c, s) =>
+      s.map(v => (v, c.toDouble / s.length)) }.sortBy(_._1)
+    val step = weighted.map(_._2).sum / parts
+    val bounds = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var cum = 0.0
+    weighted.foreach { case (v, w) =>
+      cum += w
+      if (bounds.size < parts - 1 && cum >= step * (bounds.size + 1) &&
+          bounds.lastOption.forall(_ < v)) bounds += v
+    }
+    val ranges = new IdRanges(bounds.toArray)
+    spark.createDataset(ids.map(v => (v, ())).partitionBy(ranges)
+      .mapPartitions(it => it.map(_._1).toArray.sorted.iterator,
+        preservesPartitioning = true))
   }
+
+  /** Ids sampled per input partition by [[decodeIds]]'s sketch pass. */
+  private val SketchSample = 1024
+
+  /** The decode fan-out for `n` ids: `spark.graft.decode.rowsPerTask`
+    * (default 512 — at the fixtures' decode cost ~100 ms of honest work
+    * per task) sets the count at corpus scale, floored at
+    * min(defaultParallelism, ceil(n/64)) so a small corpus still
+    * spreads over the cores (a WAV stage at 512 rows per task ran 10
+    * tasks on a 32-core box) without splitting below ~64 rows a task. */
+  private[graft] def decodeParts(n: Long, rowsPerTask: Long, cores: Int): Int =
+    math.max(1L, math.max((n + rowsPerTask - 1) / rowsPerTask,
+      math.min(cores.toLong, (n + 63) / 64))).toInt
 
   /** Partition-wise feature extraction: encode -> REAL ImageIO decode ->
     * spatial pooling over the decoded raster. Features = mean gray value
@@ -632,5 +672,15 @@ object Multimodal {
           bit_count(col("a3").bitwiseXOR(col("c3")))).as("dist"))
       .filter(col("dist") <= maxDist)
       .orderBy("doc_a", "doc_b")
+  }
+}
+
+/** Range partitioner over sorted, distinct upper bounds: id `v` goes to
+  * the first partition whose bound is >= v (the last takes the rest). */
+private[llm] final class IdRanges(bounds: Array[Long]) extends org.apache.spark.Partitioner {
+  override def numPartitions: Int = bounds.length + 1
+  override def getPartition(key: Any): Int = {
+    val i = java.util.Arrays.binarySearch(bounds, key.asInstanceOf[Long])
+    if (i >= 0) i else -(i + 1)
   }
 }

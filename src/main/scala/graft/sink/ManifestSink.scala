@@ -65,7 +65,10 @@ object ManifestSink {
   final case class Txn(appId: String, version: Long)
 
   /** A staged-but-uncommitted epoch attempt: data files written,
-    * manifest lines audited, zone-map stats planned, table schema
+    * manifest lines audited, the epoch's stats rows
+    * ([[StatsSchema]], None for an epoch with no stats table) held on
+    * the driver — the writers folded the fresh files' zone maps, and
+    * carried files' rows come from [[SnapshotCache.statRows]] — table schema
     * captured (nullable-normalized, committed into the marker so
     * reads plan from metadata — see [[read]]). Invisible to readers
     * until [[commitStaged]] wins the epoch's commit marker.
@@ -85,7 +88,8 @@ object ManifestSink {
     * files) is what scopes them; fresh files default to this staged
     * epoch. */
   final case class Staged(root: String, epoch: Int, token: String,
-                          relFiles: Seq[String], stats: Option[DataFrame],
+                          relFiles: Seq[String],
+                          stats: Option[Seq[org.apache.spark.sql.Row]],
                           schemaJson: Option[String] = None,
                           dvs: Seq[(String, String)] = Nil,
                           sizes: Map[String, Long] = Map.empty,
@@ -287,7 +291,13 @@ object ManifestSink {
   // ---------------------------------------------------------------- write path
 
   /** Stage `df` as epoch `epoch`: write the data files, audit the file
-    * list, plan the zone-map stats. Nothing is visible to readers.
+    * list, build the stats rows. Nothing is visible to readers.
+    * A zone-only stage (`statsCols` and no other flavor) folds each
+    * file's zone maps and row count inside its write tasks
+    * ([[graft.catalog.ZoneStatsTracker]] on Spark's file writer), so
+    * its stats cost no job of their own; dictionaries, blooms, HLL
+    * sketches and layout rows still come from one re-read pass
+    * ([[fusedStats]]).
     * `unique = true` stages into an attempt-unique directory
     * (`data-epoch=N-aTOKEN/`) so two concurrent publishers racing for
     * the same epoch cannot clobber each other's DATA either — the
@@ -326,7 +336,14 @@ object ManifestSink {
             df.schema(tc).dataType, u), tc, sortIdentFirst = false)
       case _ => df
     }
-    laid.write.mode("overwrite").parquet(epochDir)
+    val zoneOnly = dictCols.isEmpty && bloomCols.isEmpty && bucket.isEmpty &&
+      hllCols.isEmpty && ptime.isEmpty && ident.isEmpty
+    val tracker =
+      if (zoneOnly && statsCols.nonEmpty)
+        Some(new graft.catalog.ZoneStatsTracker(laid.schema, statsCols))
+      else None
+    org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
+      .writeParquet(laid, epochDir, tracker.toSeq)
     val dirPath = new org.apache.hadoop.fs.Path(epochDir)
     // the staging listStatus already holds each file's size — capture
     // it here (the only place it is free) and commit it in the
@@ -335,17 +352,13 @@ object ManifestSink {
       .filter(_.getPath.getName.endsWith(".parquet"))
     val sizes = listed.map(s => s"$dirName/${s.getPath.getName}" -> s.getLen).toMap
     val relFiles = sizes.keys.toSeq.sorted
-    val zoneOnly = dictCols.isEmpty && bloomCols.isEmpty && bucket.isEmpty &&
-      hllCols.isEmpty && ptime.isEmpty && ident.isEmpty
-    val stats =
-      if (statsCols.isEmpty && zoneOnly) None
-      else if (relFiles.isEmpty) Some(emptyStats(spark))
-      // zone-only commits keep the LAZY builder (zero extra jobs — the
-      // rows compute inside the commit's stats write); anything with a
-      // second flavor fuses every flavor into one pass
-      else if (zoneOnly) Some(zoneStats(spark, root, relFiles, statsCols))
-      else fusedStats(spark, root, relFiles, statsCols, dictCols, dictCap,
-        bloomCols, bloomBits, bloomHashes, bucket, ptime, ident, hllCols)
+    val stats = tracker match {
+      case Some(t) => Some(t.fileRows(relFiles, dirName))
+      case None if zoneOnly => None
+      case None if relFiles.isEmpty => Some(Nil)
+      case None => Some(fusedStats(spark, root, relFiles, statsCols, dictCols,
+        dictCap, bloomCols, bloomBits, bloomHashes, bucket, ptime, ident, hllCols))
+    }
     Staged(root, epoch, token, relFiles, stats,
       Some(asNullable(df.schema).json), sizes = sizes)
   }
@@ -355,9 +368,11 @@ object ManifestSink {
     * Data files are written ONCE and shared across all later
     * manifests; a batch append costs O(batch) data I/O + O(table
     * files) metadata, never a table rewrite. Zone-map stats compose
-    * the same way: prior epoch's rows union the fresh files' rows, so
-    * a streamed table keeps its data-skipping property at O(batch)
-    * stats work per commit. */
+    * the same way: prior epoch's rows (from [[SnapshotCache]], no
+    * read on a warm cache) union the fresh files' rows, so a streamed
+    * table keeps its data-skipping property at O(batch) stats work per
+    * commit. A stats-less prior epoch gives a stats-less epoch: rows
+    * for the fresh files alone would leave the prior files uncovered. */
   def stageAppend(df: DataFrame, root: String, epoch: Int,
                   statsCols: Seq[String] = Nil, unique: Boolean = false,
                   evolve: Boolean = false,
@@ -392,8 +407,8 @@ object ManifestSink {
       val stats =
         if (statsCols.isEmpty && bucket.isEmpty && hllCols.isEmpty &&
           ptime.isEmpty && ident.isEmpty) None
-        else Some(statsTable(spark, root, epoch - 1)
-          .unionByName(fresh.stats.get))
+        else SnapshotCache.statRows(spark, root, epoch - 1)
+          .map(_.toSeq ++ fresh.stats.get)
       // schema discipline (Delta's): a plain append REJECTS drift — a
       // producer silently widening a 100 TB table is a contract
       // breach, not a convenience; `evolve` merges (add-column only,
@@ -461,12 +476,18 @@ object ManifestSink {
   }
 
   /** PUBLISH a staged epoch: write the attempt's manifest and stats
-    * (token-unique — un-clobberable), then compare-and-swap the commit
-    * marker. Epochs are monotonic: committing at or below the current
-    * epoch conflicts, which keeps max(commit-*) == newest table state
-    * and makes vacuum's epoch-bounded orphan sweep sound (an
+    * (token-unique — un-clobberable; the stats parquet is written from
+    * the staged rows as a local relation), then compare-and-swap the
+    * commit marker. Epochs are monotonic: committing at or below the
+    * current epoch conflicts, which keeps max(commit-*) == newest table
+    * state and makes vacuum's epoch-bounded orphan sweep sound (an
     * uncommitted staging at or below the current epoch can never
-    * commit later). Returns the manifest's file count. */
+    * commit later). Once the CAS wins, the commit seeds
+    * [[SnapshotCache]] with exactly what it wrote — the snapshot
+    * (manifest entries, schema, delete vectors, txn) and the stats
+    * rows — so the first read of the new epoch loads neither; a lost
+    * CAS seeds nothing. This is the one seeding site for every commit
+    * kind. Returns the manifest's file count. */
   def commitStaged(spark: SparkSession, staged: Staged,
                    txn: Option[Txn] = None): Int = {
     val rootPath = new org.apache.hadoop.fs.Path(staged.root)
@@ -482,8 +503,7 @@ object ManifestSink {
     // epoch scopes delete vectors (a DV hides keys only in OLDER
     // files). Carried files keep their epochs; fresh ones get this one.
     writeFile(spark, manifest, manifestLines(staged).mkString("\n") + "\n")
-    staged.stats.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(s"${staged.root}/stats-${staged.epoch}.${staged.token}"))
+    staged.stats.foreach(writeStats(spark, staged.root, staged.epoch, staged.token, _))
     // CAS: rename WITHOUT overwrite — fails iff another attempt won
     val content = s"token=${staged.token}\n" +
       txn.map(t => s"txn=${t.appId}:${t.version}\n").getOrElse("") +
@@ -522,8 +542,23 @@ object ManifestSink {
         throw new ManifestConflictException(staged.root, staged.epoch,
           s"commit marker exists; losing token ${staged.token}")
     }
+    // the CAS won: the next read of this epoch plans from what the
+    // commit just wrote, with no manifest or stats re-read
+    SnapshotCache.seed(SnapshotCache.Snapshot(staged.root, staged.epoch,
+      staged.token, txn, manifestLines(staged).map(parseManifestLine),
+      staged.schemaJson.map(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]),
+      staged.dvs))
+    SnapshotCache.seedStats(staged.root, staged.epoch, staged.token, staged.stats)
     staged.relFiles.size
   }
+
+  /** Write `rows` as the stats parquet of (`epoch`, `token`): one
+    * single-file write from a local relation. */
+  private[graft] def writeStats(spark: SparkSession, root: String, epoch: Int,
+                                token: String, rows: Seq[org.apache.spark.sql.Row]): Unit =
+    statsFrame(spark, rows).coalesce(1).write.mode("overwrite")
+      .parquet(s"$root/stats-$epoch.$token")
 
   /** Publish `df` as epoch `epoch` of the table at `root`. Returns the
     * number of data files committed to the manifest. */
@@ -820,17 +855,14 @@ object ManifestSink {
     }
     require(cols.nonEmpty, s"ANALYZE $root: no sketchable columns in " +
       schema.simpleString)
-    val prior =
-      if (statsExists(spark, root, cur))
-        statsTable(spark, root, cur).filter(
-          !org.apache.spark.sql.functions.col("col").startsWith("__hll:") &&
-          !org.apache.spark.sql.functions.col("col").startsWith("__nulls:"))
-      else emptyStats(spark)
+    val prior = SnapshotCache.statRows(spark, root, cur).getOrElse(Array.empty)
+      .filterNot(r => r.getString(1).startsWith("__hll:") ||
+        r.getString(1).startsWith("__nulls:"))
     val fresh =
-      if (relFiles.isEmpty) emptyStats(spark)
-      else hllStats(spark, root, relFiles, cols)
+      if (relFiles.isEmpty) Nil
+      else hllStats(spark, root, relFiles, cols).collect().toSeq
     commitStaged(spark, Staged(root, cur + 1, newToken(), relFiles,
-      Some(prior.unionByName(fresh)),
+      Some(prior.toSeq ++ fresh),
       commitSchema(spark, root, cur).map(_.json),
       commitDvs(spark, root, cur),
       sizes = knownSizes(entries), fileEpochs = knownEpochs(entries)))
@@ -1274,9 +1306,7 @@ object ManifestSink {
       else added.fields.map(_.copy(nullable = true))
     val merged = org.apache.spark.sql.types.StructType(prior.fields ++ addedFields)
     val entries = manifestEntries3(spark, root, cur)
-    val stats =
-      if (statsExists(spark, root, cur)) Some(statsTable(spark, root, cur))
-      else None
+    val stats = SnapshotCache.statRows(spark, root, cur).map(_.toSeq)
     val staged = Staged(root, cur + 1, newToken(), entries.map(_._1), stats,
       Some(asNullable(merged).json), dvs = commitDvs(spark, root, cur),
       sizes = knownSizes(entries), fileEpochs = knownEpochs(entries))
@@ -1308,7 +1338,6 @@ object ManifestSink {
     * Returns the new epoch. */
   def widenColumn(spark: SparkSession, root: String, name: String,
                   to: org.apache.spark.sql.types.DataType): Int = {
-    import org.apache.spark.sql.functions.col
     val cur = currentEpoch(spark, root)
     val prior = commitSchema(spark, root, cur)
       .getOrElse(read(spark, root, cur).schema)
@@ -1345,10 +1374,8 @@ object ManifestSink {
     val merged = org.apache.spark.sql.types.StructType(
       prior.fields.updated(idx, prior.fields(idx).copy(dataType = to)))
     val entries = manifestEntries3(spark, root, cur)
-    val stats =
-      if (!statsExists(spark, root, cur)) None
-      else Some(statsTable(spark, root, cur)
-        .filter(!col("col").isin(s"__hll:$phys", s"__nulls:$phys")))
+    val stats = SnapshotCache.statRows(spark, root, cur).map(_.toSeq
+      .filterNot(r => r.getString(1) == s"__hll:$phys" || r.getString(1) == s"__nulls:$phys"))
     val staged = Staged(root, cur + 1, newToken(), entries.map(_._1), stats,
       Some(asNullable(merged).json), dvs = commitDvs(spark, root, cur),
       sizes = knownSizes(entries), fileEpochs = knownEpochs(entries))
@@ -1376,9 +1403,7 @@ object ManifestSink {
         s"table advanced to epoch $cur while a metadata change was " +
           s"prepared against epoch $expectedBase; re-run the preparation")
     val entries = manifestEntries3(spark, root, cur)
-    val stats =
-      if (statsExists(spark, root, cur)) Some(statsTable(spark, root, cur))
-      else None
+    val stats = SnapshotCache.statRows(spark, root, cur).map(_.toSeq)
     commitStaged(spark, Staged(root, cur + 1, newToken(),
       entries.map(_._1), stats, commitSchema(spark, root, cur).map(_.json),
       dvs = commitDvs(spark, root, cur),
@@ -1473,9 +1498,7 @@ object ManifestSink {
           "layout first")
     }
     val entries = manifestEntries3(spark, root, cur)
-    val stats =
-      if (statsExists(spark, root, cur)) Some(statsTable(spark, root, cur))
-      else None
+    val stats = SnapshotCache.statRows(spark, root, cur).map(_.toSeq)
     commitStaged(spark, Staged(root, cur + 1, newToken(), entries.map(_._1),
       stats, Some(asNullable(next).json), dvs = commitDvs(spark, root, cur),
       sizes = knownSizes(entries), fileEpochs = knownEpochs(entries)))
@@ -1490,7 +1513,7 @@ object ManifestSink {
   def truncate(spark: SparkSession, root: String): Int = {
     val cur = currentEpoch(spark, root)
     commitStaged(spark, Staged(root, cur + 1, newToken(), Nil,
-      Some(emptyStats(spark)), commitSchema(spark, root, cur).map(_.json)))
+      Some(Nil), commitSchema(spark, root, cur).map(_.json)))
     cur + 1
   }
 
@@ -1621,10 +1644,9 @@ object ManifestSink {
     * debris. `fileStats` are the staged files' stats rows as the
     * WRITER computed them ([[StatsSchema]], `file` = the staged file's
     * name): they union with the prior epoch's cached rows and commit
-    * as the new stats parquet from a local relation — the batch is
-    * never re-read — and, once the CAS wins, seed [[SnapshotCache]]
-    * so the next read plans without a stats load. A prior epoch with
-    * no stats table gives an epoch with none. `schema` is the
+    * through [[commitStaged]] — the batch is never re-read, and the
+    * winning commit seeds [[SnapshotCache]]. A prior epoch with no
+    * stats table gives an epoch with none. `schema` is the
     * schema the files were written with, pinned by the first epoch;
     * later epochs keep the prior epoch's. */
   def commitIdempotentAppendFiles(spark: SparkSession, root: String,
@@ -1696,7 +1718,7 @@ object ManifestSink {
     }
     val staged = Staged(root, next, token,
       (priorEntries.map(_._1) ++ relFiles).sorted,
-      statRows.map(statsFrame(spark, _)),
+      statRows,
       schemaJson =
         if (next <= 1) schema.map(s => asNullable(s).json)
         else commitSchema(spark, root, next - 1).map(_.json),
@@ -1704,16 +1726,7 @@ object ManifestSink {
       sizes = freshSizes ++ knownSizes(priorEntries),
       fileEpochs = knownEpochs(priorEntries))
     try {
-      val txn = Txn(appId, version)
-      commitStaged(spark, staged, Some(txn))
-      // the CAS won: the next read of this epoch plans from what the
-      // commit just wrote, with no manifest or stats re-read
-      SnapshotCache.seed(SnapshotCache.Snapshot(root, next, token, Some(txn),
-        manifestLines(staged).map(parseManifestLine),
-        staged.schemaJson.map(org.apache.spark.sql.types.DataType.fromJson(_)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]),
-        staged.dvs))
-      statRows.foreach(SnapshotCache.seedStats(root, next, token, _))
+      commitStaged(spark, staged, Some(Txn(appId, version)))
       true
     } catch {
       case c: ManifestConflictException =>
@@ -1741,7 +1754,7 @@ object ManifestSink {
     * pattern (`cassandra/init.cql:25` clusters by timestamp), so the
     * ts column pruning the FILE LIST is the manifest-level spelling
     * of that layout. */
-  private[sink] def statLongExpr(c: org.apache.spark.sql.Column,
+  private[graft] def statLongExpr(c: org.apache.spark.sql.Column,
                                  dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
@@ -1813,46 +1826,6 @@ object ManifestSink {
     }
   }
 
-  /** LAZY zone-map builder for SINGLE-flavor (statsCols-only) stages:
-    * one aggregate grouped by input_file_name (one scan of the staged
-    * files, one exchange) whose per-file row fans out into the stats
-    * rows through a single `inline`. The frame is lazy, so it runs as
-    * the one job of the commit's stats-parquet write. Multi-flavor
-    * stages go through [[fusedStats]] (one pass for all flavors)
-    * instead of one scan per flavor. */
-  private[graft] def zoneStats(spark: SparkSession, root: String,
-                        relFiles: Seq[String], statsCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val df = spark.read.parquet(relFiles.map(r => s"$root/$r"): _*)
-    val schema = df.schema
-    statsCols.foreach(c => requireZoneMapType(c, schema(c).dataType))
-    val aggs = statsCols.flatMap { c =>
-      val e = statLongExpr(col(c), schema(c).dataType)
-      Seq(min(e).as(s"__lo_$c"), max(e).as(s"__hi_$c"))
-    } :+
-      count(lit(1)).as("__cnt")
-    val base = df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-    val noLong = lit(null).cast(LongType)
-    val noStr = lit(null).cast(StringType)
-    def entry(key: String, loL: org.apache.spark.sql.Column,
-              hiL: org.apache.spark.sql.Column, loS: org.apache.spark.sql.Column,
-              hiS: org.apache.spark.sql.Column) =
-      struct(lit(key).as("col"), loL.as("lo_long"), hiL.as("hi_long"),
-        loS.as("lo_str"), hiS.as("hi_str"))
-    // one `__count` row per file rides every zone-map publish: it is
-    // what makes metadata-only aggregation ([[aggFromMetadata]])
-    // possible, and it merges/carries/compacts through the same
-    // machinery as the min/max rows (appends union it, CoW carries it)
-    val entries = statsCols.map { c =>
-      val (lo, hi) = (col(s"__lo_$c"), col(s"__hi_$c"))
-      if (schema(c).dataType == StringType) entry(c, noLong, noLong, lo, hi)
-      else entry(c, lo.cast(LongType), hi.cast(LongType), noStr, noStr)
-    } :+ entry("__count", col("__cnt").cast(LongType), noLong, noStr, noStr)
-    base.select(relUnderRoot(root).as("file"), inline(array(entries: _*)))
-  }
-
   /** EVERY requested per-file stats flavor in ONE pass (guide §1.2 —
     * one read, one groupBy(input_file_name), one driver collect of
     * file-count-bounded rows): zone min/max + __count, dictionaries,
@@ -1867,7 +1840,7 @@ object ManifestSink {
     * under `lenientLayout` a layout flavor that sees a mixed-value
     * file contributes NO rows (independently per flavor — the
     * spec-detection callers' partial-coverage contract) instead of
-    * throwing. Always Some (Option kept for call-site symmetry). */
+    * throwing. */
   private def fusedStats(spark: SparkSession, root: String, relFiles: Seq[String],
                          statsCols: Seq[String], dictCols: Seq[String] = Nil,
                          dictCap: Int = 256, bloomCols: Seq[String] = Nil,
@@ -1876,7 +1849,7 @@ object ManifestSink {
                          ptime: Option[(String, String)] = None,
                          ident: Option[(String, Option[Int])] = None,
                          hllCols: Seq[String] = Nil,
-                         lenientLayout: Boolean = false): Option[DataFrame] = {
+                         lenientLayout: Boolean = false): Seq[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     val df = spark.read.parquet(relFiles.map(r => s"$root/$r"): _*)
@@ -1987,7 +1960,7 @@ object ManifestSink {
       statsCols.foreach { c =>
         val isStr = schema(c).dataType == StringType
         val lo = r.getAs[Any](s"__lo_$c"); val hi = r.getAs[Any](s"__hi_$c")
-        rows += org.apache.spark.sql.Row(file, c,
+        rows += statsRow(file, c,
           if (isStr) null else asLong(lo), if (isStr) null else asLong(hi),
           if (isStr) lo else null, if (isStr) hi else null)
       }
@@ -1995,15 +1968,15 @@ object ManifestSink {
       // layout-only stage (no statsCols) must not grow one (the
       // metadata-agg coverage checks key on its presence)
       if (statsCols.nonEmpty)
-        rows += org.apache.spark.sql.Row(file, "__count",
+        rows += statsRow(file, "__count",
           asLong(r.getAs[Any]("__cnt")), null, null, null)
       dictCols.foreach { c =>
         val isStr = schema(c).dataType == StringType
         val set = r.getAs[scala.collection.Seq[Any]](s"__d_$c")
         if (set.size > dictCap)
-          rows += org.apache.spark.sql.Row(file, s"__dictover:$c", null, null, null, null)
+          rows += statsRow(file, s"__dictover:$c", null, null, null, null)
         else set.foreach { v =>
-          rows += org.apache.spark.sql.Row(file, s"__dict:$c",
+          rows += statsRow(file, s"__dict:$c",
             if (isStr) null else asLong(v), null,
             if (isStr) v.toString else null, null)
         }
@@ -2022,36 +1995,36 @@ object ManifestSink {
         // zero positions for it) — the file is then KEPT on point
         // lookups, byte-identical stats either way
         if (any)
-          rows += org.apache.spark.sql.Row(file, s"__bloom:$c",
+          rows += statsRow(file, s"__bloom:$c",
             bloomBits.toLong, bloomHashes.toLong,
             bytes.map("%02x".format(_)).mkString, null)
       }
       if (bucketClean) bucketO.foreach { case (k, n) =>
         val lo = r.getAs[Any]("__blo")
-        rows += org.apache.spark.sql.Row(file, s"__bucket:$k:$n",
+        rows += statsRow(file, s"__bucket:$k:$n",
           asLong(lo), asLong(lo), null, null)
       }
       if (ptimeClean) ptime.foreach { case (c, u) =>
         val lo = r.getAs[Any]("__plo")
-        rows += org.apache.spark.sql.Row(file, s"__ptime:$c:$u",
+        rows += statsRow(file, s"__ptime:$c:$u",
           asLong(lo), asLong(lo), null, null)
       }
       if (identClean) ident.foreach { case (c, w) =>
         val isStr = schema(c).dataType == StringType
         val lo = r.getAs[Any]("__ilo")
         val spec = w.fold(s"__ident:$c")(wd => s"__trunc:$c:$wd")
-        rows += org.apache.spark.sql.Row(file, spec,
+        rows += statsRow(file, spec,
           if (isStr) null else asLong(lo), if (isStr) null else asLong(lo),
           if (isStr) lo.toString else null, if (isStr) lo.toString else null)
       }
       hllCols.foreach { c =>
-        rows += org.apache.spark.sql.Row(file, s"__hll:$c",
+        rows += statsRow(file, s"__hll:$c",
           null, null, r.getAs[String](s"__h_$c"), null)
-        rows += org.apache.spark.sql.Row(file, s"__nulls:$c",
+        rows += statsRow(file, s"__nulls:$c",
           asLong(r.getAs[Any](s"__n_$c")), null, null, null)
       }
     }
-    Some(statsFrame(spark, rows.toSeq))
+    rows.toSeq
   }
 
 
@@ -2075,6 +2048,14 @@ object ManifestSink {
     val (token, _) = commitInfo(spark, root, epoch)
     spark.read.schema(StatsSchema).parquet(s"$root/stats-$epoch.$token")
   }
+
+  /** The zone-map columns `epoch`'s stats carry (the keys that are not
+    * `__`-prefixed flavor rows), sorted; Nil for an epoch with no stats
+    * table. Served from [[SnapshotCache.statRows]]: no job on a warm
+    * cache. */
+  def statCols(spark: SparkSession, root: String, epoch: Int): Seq[String] =
+    SnapshotCache.statRows(spark, root, epoch).toSeq.flatten
+      .map(_.getString(1)).filterNot(_.startsWith("__")).distinct.sorted
 
   /** METADATA-ONLY AGGREGATION — answer `count(*)` and per-column
     * min/max WITHOUT opening a single data file (Iceberg's
@@ -2189,12 +2170,13 @@ object ManifestSink {
     * as pure metadata. At 100 TB this is the entire point of the
     * stats table: a narrow-key upsert rewrites a handful of files,
     * not the table (the naive merge is a full-table rewrite per
-    * batch). Overlap is decided distributively — the (file, lo, hi)
-    * ranges broadcast onto the update keys, so the update side never
-    * collects — and the touched list is bounded by the file count.
-    * Requires the current epoch to carry a stats table; a file with no
-    * zone map for `keyCol` is always rewritten. `statsCols` (must include `keyCol`) are rewritten for the fresh
-    * files and carried for the untouched ones.
+    * batch). The rewrite set is what the scan's skipping ladder
+    * ([[ManifestFileIndex.select]] — bucket, dictionary, bloom, zone
+    * map) keeps for an `IN` of the update's distinct non-null keys, so
+    * a file with no stats for `keyCol` (or an epoch with no stats
+    * table) is always rewritten. `statsCols` (must include `keyCol`)
+    * are folded by the rewrite's writers for the fresh files; the
+    * untouched files' rows carry from [[SnapshotCache]].
     * @return (newEpoch, rewrittenFiles, carriedFiles) */
   def mergeCow(spark: SparkSession, root: String, updates: DataFrame,
                keyCol: String, statsCols: Seq[String],
@@ -2217,7 +2199,7 @@ object ManifestSink {
   private def cowRewrite(spark: SparkSession, root: String, updates0: DataFrame,
                          keyCol0: String, statsCols0: Seq[String],
                          insert: Boolean, txn: Option[Txn]): (Int, Int, Int) = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     require(statsCols0.contains(keyCol0), "statsCols must include the merge key")
     val cur = currentEpoch(spark, root)
     require(commitDvs(spark, root, cur).isEmpty,
@@ -2244,48 +2226,39 @@ object ManifestSink {
           statsCols0.map(c => phys.getOrElse(c, c)))
       case None => (updates0, keyCol0, statsCols0)
     }
-    val stats = statsTable(spark, root, cur)
-    // type-aware overlap: string merge keys compare against
-    // (lo_str, hi_str), integral ones against (lo_long, hi_long) —
-    // comparing a string key to the always-null long bounds would make
-    // `touched` empty and silently corrupt the merge (inserts without
-    // replacement; deletes that delete nothing) (ADVICE r11). The
-    // comparison itself runs IN Spark, so string order is UTF8String
-    // binary order — the same order that produced the committed
-    // min/max.
-    val keyIsStr = {
+    // type-aware keys: the ladder compares string keys in UTF8String
+    // binary order against (lo_str, hi_str) and integral ones against
+    // (lo_long, hi_long) — the order and encoding that produced the
+    // committed bounds
+    val keyType = {
       import org.apache.spark.sql.types.{StringType, LongType, IntegerType, ShortType, ByteType}
       updates.schema(keyCol).dataType match {
-        case StringType => true
-        case LongType | IntegerType | ShortType | ByteType => false
+        case t @ (StringType | LongType | IntegerType | ShortType | ByteType) => t
         case other => throw new IllegalArgumentException(
           s"CoW merge key must be integral or string; $keyCol is $other")
       }
     }
-    val keyRanges = stats.filter(col("col") === keyCol).select(
-      col("file"),
-      (if (keyIsStr) col("lo_str") else col("lo_long")).as("__lo"),
-      (if (keyIsStr) col("hi_str") else col("hi_long")).as("__hi"))
-    // touched = files whose range contains at least one update key,
-    // plus every file with no zone map for the key (written before
-    // the key became a stats column: nothing proves it key-free);
-    // ranges broadcast (file-count-bounded), update keys stay
-    // distributed
     val entries = manifestEntries3(spark, root, cur)
     val all = entries.map(_._1)
-    val keyCovered = SnapshotCache.statRows(spark, root, cur).getOrElse(Array.empty)
-      .collect { case r if r.getString(1) == keyCol => r.getString(0) }.toSet
-    val touched = updates.select(col(keyCol).as("__k"))
-      .join(broadcast(keyRanges),
-        col("__k") >= col("__lo") && col("__k") <= col("__hi"))
-      .select("file").distinct().collect().map(_.getString(0)).toSet ++
-      all.filterNot(keyCovered)
+    // null keys match no row (the anti join below never equates them)
+    val keys = updates.select(col(keyCol)).where(col(keyCol).isNotNull).distinct()
+      .collect().map(r => org.apache.spark.sql.catalyst.expressions.Literal
+        .create(r.get(0), keyType): org.apache.spark.sql.catalyst.expressions.Expression)
+    val keyAttr = org.apache.spark.sql.catalyst.expressions
+      .AttributeReference(keyCol, keyType)()
+    val touched =
+      if (keys.isEmpty) Set.empty[String]
+      else new ManifestFileIndex(spark, root, cur)
+        .select(Seq(org.apache.spark.sql.catalyst.expressions.In(keyAttr, keys.toSeq)))
+        .map(f => relOfData(f.getPath)).toSet
     val carried = all.filterNot(touched)
     val carriedSizes = knownSizes(entries).view.filterKeys(carried.contains).toMap
     val carriedEpochs = knownEpochs(entries).view.filterKeys(carried.contains).toMap
     // rewrite: touched rows that lose to an update key, plus (merge
     // only) every update row — replacements AND inserts
-    val carriedStats = stats.filter(col("file").isin(carried: _*))
+    val carriedSet = carried.toSet
+    val carriedStats = SnapshotCache.statRows(spark, root, cur).toSeq.flatten
+      .filter(r => carriedSet(r.getString(0)))
     val tableSchema = commitSchema(spark, root, cur)
     if (touched.isEmpty && !insert) {
       // delete with nothing to delete: a metadata-only new epoch —
@@ -2323,8 +2296,7 @@ object ManifestSink {
       bucket = layoutB, ptime = layoutT, ident = layoutI)
     commitStaged(spark, fresh.copy(
       relFiles = (carried ++ fresh.relFiles).sorted,
-      stats = Some(carriedStats.unionByName(fresh.stats.getOrElse(
-        emptyStats(spark)))),
+      stats = Some(carriedStats ++ fresh.stats.getOrElse(Nil)),
       // the committed schema is the TABLE's (mapping included) — the
       // staged files' physical shape must never overwrite it
       schemaJson = tableSchema.map(_.json).orElse(fresh.schemaJson),
@@ -2440,7 +2412,6 @@ object ManifestSink {
   def rebaseStagedInsert(spark: SparkSession, staged: Staged,
                          overwrite: Boolean,
                          observedSchemaJson: Option[String]): Option[Staged] = {
-    import org.apache.spark.sql.functions.col
     if (isolationSerializable(spark)) return None
     val root = staged.root
     val cur = currentEpochOpt(spark, root).getOrElse(return Some(staged))
@@ -2463,10 +2434,10 @@ object ManifestSink {
         fileEpochs = fresh.map(_ -> next).toMap))
     val entries = manifestEntries3(spark, root, cur)
     val prior = entries.map(_._1)
-    val freshStats = staged.stats.map(_.filter(col("file").isin(fresh: _*)))
-    val stats = freshStats.map { fd =>
-      if (statsExists(spark, root, cur)) statsTable(spark, root, cur).unionByName(fd)
-      else fd
+    val freshSet = fresh.toSet
+    val stats = staged.stats.map { rows =>
+      val fd = rows.filter(r => freshSet(r.getString(0)))
+      SnapshotCache.statRows(spark, root, cur).map(_.toSeq ++ fd).getOrElse(fd)
     }
     Some(staged.copy(epoch = next,
       relFiles = (prior ++ fresh).sorted,
@@ -2540,8 +2511,8 @@ object ManifestSink {
     * caller that staged key-mixed files gets no rows and the table
     * degrades honestly, exactly the pre-r17 contract). */
   private def replacementLayoutStats(spark: SparkSession, root: String,
-                                     cur: Int, relFiles: Seq[String]): DataFrame = {
-    if (relFiles.isEmpty) return emptyStats(spark)
+                                     cur: Int, relFiles: Seq[String]): Seq[org.apache.spark.sql.Row] = {
+    if (relFiles.isEmpty) return Nil
     // spec detection is metadata-only; the verification scan of the
     // replacement files then runs ONCE for every present flavor (the
     // per-flavor lenient drop preserves partial coverage exactly as
@@ -2549,10 +2520,9 @@ object ManifestSink {
     val b = bucketSpec(spark, root, cur).map(s => (s.keyCol, s.numBuckets))
     val t = ptimeSpec(spark, root, cur).map(s => (s.col, s.unit))
     val i = identSpec(spark, root, cur).map(s => (s.col, s.width))
-    if (b.isEmpty && t.isEmpty && i.isEmpty) emptyStats(spark)
+    if (b.isEmpty && t.isEmpty && i.isEmpty) Nil
     else fusedStats(spark, root, relFiles, statsCols = Nil,
       bucketO = b, ptime = t, ident = i, lenientLayout = true)
-      .getOrElse(emptyStats(spark))
   }
 
   /** Collapse a publishing branch's STAGED delete vectors into ONE
@@ -2604,24 +2574,6 @@ object ManifestSink {
       merge(del, target.epoch + 1) ++ merge(upd, target.epoch))
   }
 
-  /** Commit a REPLACE-GROUPS epoch — the commit half of SQL
-    * MERGE/UPDATE/DELETE (group-based copy-on-write): the files in
-    * `replaced` (rel paths) leave the manifest, every parquet file
-    * under `stagedDirName` (already written by the caller's
-    * distributed write, e.g. Spark's FileBatchWrite) enters it with
-    * fresh zone maps for the base epoch's stats columns, and every
-    * other file CARRIES with its stats rows as pure metadata. The
-    * caller's scan/write must have run against `baseEpoch`; if the
-    * table advanced meanwhile the commit fails with a retryable
-    * [[ManifestConflictException]] (optimistic concurrency — the
-    * replaced-group set is only valid against the epoch it was
-    * derived from). A DV-carrying base CARRIES its delete vector into
-    * the new epoch: the caller's scan applied the DV (the DSv2
-    * row-level scan always does — [[graft.catalog.GraftRowLevelOperation]]),
-    * so the staged replacement files are DV-clean (the rewrite
-    * MATERIALIZES the deletes for the touched files) while untouched
-    * files still need the vector. Keys physically absent everywhere
-    * after the rewrite stay in the DV harmlessly (anti join misses). */
   /** A declared layout triple (bucket, time, identity/truncate) — the
     * shape [[stage]] takes as three parameters, bundled for callers
     * that thread it through commits. */
@@ -2636,15 +2588,37 @@ object ManifestSink {
     def isEmpty: Boolean = bucket.isEmpty && ptime.isEmpty && ident.isEmpty
   }
 
+  /** Commit a REPLACE-GROUPS epoch — the commit half of SQL
+    * MERGE/UPDATE/DELETE (group-based copy-on-write): the files in
+    * `replaced` (rel paths) leave the manifest, every parquet file
+    * under `stagedDirName` (already written by the caller's
+    * distributed write, e.g. Spark's FileBatchWrite) enters it with
+    * fresh zone maps for the base epoch's stats columns, and every
+    * other file CARRIES with its stats rows as pure metadata (from
+    * [[SnapshotCache]], no stats read on a warm cache). The fresh zone
+    * maps are `freshZones`, the rows the caller's writers folded
+    * ([[graft.catalog.ZoneStatsTracker]], keyed by the staged rel
+    * paths; columns the base does not carry are dropped); only layout
+    * rows and a `declaredLayout` verification re-read the staged
+    * files ([[fusedStats]]). The
+    * caller's scan/write must have run against `baseEpoch`; if the
+    * table advanced meanwhile the commit fails with a retryable
+    * [[ManifestConflictException]] (optimistic concurrency — the
+    * replaced-group set is only valid against the epoch it was
+    * derived from). A DV-carrying base CARRIES its delete vector into
+    * the new epoch: the caller's scan applied the DV (the DSv2
+    * row-level scan always does — [[graft.catalog.GraftRowLevelOperation]]),
+    * so the staged replacement files are DV-clean (the rewrite
+    * MATERIALIZES the deletes for the touched files) while untouched
+    * files still need the vector. Keys physically absent everywhere
+    * after the rewrite stay in the DV harmlessly (anti join misses). */
   def commitReplaceGroups(spark: SparkSession, root: String, baseEpoch: Int,
                           stagedDirName: String, replaced: Set[String],
                           txn: Option[Txn] = None,
                           appendGuard: Option[(Int, Set[String]) => Option[String]] = None,
                           reaudit: Option[() => Unit] = None,
-                          declaredLayout: Option[LayoutDecl] = None): Int = {
-    import org.apache.spark.sql.functions.col
-    val stagedPath = new org.apache.hadoop.fs.Path(s"$root/$stagedDirName")
-    val f = fs(spark, stagedPath)
+                          declaredLayout: Option[LayoutDecl] = None,
+                          freshZones: Seq[org.apache.spark.sql.Row] = Nil): Int = {
     // recursive: layout-preserving replacement writes stage into
     // partition subdirectories (one per layout value)
     def listStage(): Map[String, Long] =
@@ -2690,45 +2664,35 @@ object ManifestSink {
       val carriedEpochs = knownEpochs(entries).view.filterKeys(carried.contains).toMap
       val newRel = newSizes.keys.toSeq.sorted
       // a stats-less base commits a stats-less next epoch; a
-      // stats-carrying base keeps carried rows verbatim and computes
-      // fresh rows for the staged files over the same columns
-      val baseToken = commitInfo(spark, root, cur)._1
-      val hasStats = f.exists(new org.apache.hadoop.fs.Path(s"$root/stats-$cur.$baseToken"))
-      val mergedStats =
-        if (!hasStats) None
-        else {
-          val stats = statsTable(spark, root, cur)
-          val statsCols = stats.select("col").distinct().collect()
-            .map(_.getString(0)).filterNot(_.startsWith("__")).sorted.toSeq
-          val carriedStats = stats.filter(col("file").isin(carried: _*))
-          // layout-preserving CoW (VERDICT r16/r18): replacement
-          // files staged single-key (the layout write rotates per
-          // value) get their own layout rows, so the spec keeps
-          // covering the whole manifest and the scan keeps
-          // KeyGroupedPartitioning + exact pruning. A caller that
-          // placed the batch under an explicitly DECLARED spec (the
-          // scoped spec-evolution convergence — on a mixed-spec table
-          // no committed whole-table spec exists to infer from)
-          // passes it; verification is then STRICT (the files were
-          // just placed — a mixed-key file is a placement bug, not an
-          // honest degrade). Zone maps and the declared-layout rows
-          // fuse into ONE verification pass over the replacement
-          // batch (fusedStats); the inferred-spec fallback keeps its
-          // own lenient pass.
-          val freshAndLayout = declaredLayout match {
-            case Some(ld) if newRel.nonEmpty && !ld.isEmpty =>
-              fusedStats(spark, root, newRel, statsCols,
-                bucketO = ld.bucket, ptime = ld.ptime, ident = ld.ident)
-                .getOrElse(emptyStats(spark))
-            case _ =>
-              val freshStats =
-                if (newRel.isEmpty || statsCols.isEmpty) emptyStats(spark)
-                else zoneStats(spark, root, newRel, statsCols)
-              freshStats.unionByName(
-                replacementLayoutStats(spark, root, cur, newRel))
-          }
-          Some(carriedStats.unionByName(freshAndLayout))
+      // stats-carrying base keeps carried rows verbatim and adds fresh
+      // rows for the staged files over the same columns
+      val carriedSet = carried.toSet
+      val mergedStats = SnapshotCache.statRows(spark, root, cur).map { rows =>
+        val statsCols = statCols(spark, root, cur)
+        // layout-preserving CoW (VERDICT r16/r18): replacement
+        // files staged single-key (the layout write rotates per
+        // value) get their own layout rows, so the spec keeps
+        // covering the whole manifest and the scan keeps
+        // KeyGroupedPartitioning + exact pruning. A caller that
+        // placed the batch under an explicitly DECLARED spec (the
+        // scoped spec-evolution convergence — on a mixed-spec table
+        // no committed whole-table spec exists to infer from)
+        // passes it; verification is then STRICT (the files were
+        // just placed — a mixed-key file is a placement bug, not an
+        // honest degrade). Zone maps and the declared-layout rows
+        // fuse into ONE verification pass over the replacement
+        // batch (fusedStats); otherwise the zone maps are the
+        // writers' and only an inferred layout re-reads (lenient).
+        val freshAndLayout = declaredLayout match {
+          case Some(ld) if newRel.nonEmpty && !ld.isEmpty =>
+            fusedStats(spark, root, newRel, statsCols,
+              bucketO = ld.bucket, ptime = ld.ptime, ident = ld.ident)
+          case _ =>
+            keptZones(statsCols, freshZones) ++
+              replacementLayoutStats(spark, root, cur, newRel)
         }
+        rows.toSeq.filter(r => carriedSet(r.getString(0))) ++ freshAndLayout
+      }
       val tableSchema = commitSchema(spark, root, cur)
       try {
         commitStaged(spark,
@@ -2753,6 +2717,15 @@ object ManifestSink {
     result
   }
 
+  /** Writer-folded rows of fresh files ([[graft.catalog.ZoneStatsTracker]])
+    * restricted to the columns the epoch keeps zone maps for, plus
+    * their `__count` rows — none when it keeps none. */
+  private def keptZones(statsCols: Seq[String],
+                        freshZones: Seq[org.apache.spark.sql.Row]): Seq[org.apache.spark.sql.Row] = {
+    val keep = statsCols.toSet + "__count"
+    if (statsCols.isEmpty) Nil else freshZones.filter(r => keep(r.getString(1)))
+  }
+
   /** Every committed stats parquet's schema: one row per (file, stat
     * key). Reads pin it, so a cold stats load never infers footers. */
   val StatsSchema: org.apache.spark.sql.types.StructType = {
@@ -2771,13 +2744,12 @@ object ManifestSink {
 
   /** Stats rows collected on the driver as a local relation: the
     * commit's stats write is then one job with no shuffle. */
-  private[graft] def statsFrame(spark: SparkSession,
+  private def statsFrame(spark: SparkSession,
                                 rows: Seq[org.apache.spark.sql.Row]): DataFrame =
     spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](
         java.util.Arrays.asList(rows: _*)), StatsSchema)
 
-  private def emptyStats(spark: SparkSession): DataFrame = statsFrame(spark, Nil)
 
   /** CHANGE DATA FEED — the row-level changes between two committed
     * epochs (Delta's `table_changes` surface), computed from the
@@ -2982,9 +2954,7 @@ object ManifestSink {
           s"deliberately.")
     }
     val entries = manifestEntries3(spark, root, cur)
-    val stats =
-      if (statsExists(spark, root, cur)) Some(statsTable(spark, root, cur))
-      else None
+    val stats = SnapshotCache.statRows(spark, root, cur).map(_.toSeq)
     commitStaged(spark, Staged(root, next, token, entries.map(_._1).sorted, stats,
       commitSchema(spark, root, cur).map(_.json), prior :+ ((dvRel, keyCol)),
       sizes = knownSizes(entries), fileEpochs = knownEpochs(entries)), txn)
@@ -3012,15 +2982,18 @@ object ManifestSink {
     * re-runs the staged-file constraint audit per attempt. The epoch-
     * scoped DV discipline makes the delta files immune to their own
     * vector: they commit at epoch N while `dv-N` hides only in files
-    * committed at epochs < N. Returns the new epoch. */
+    * committed at epochs < N. The delta files' zone maps are
+    * `freshZones`, folded by the caller's writers (keyed by staged rel
+    * path); every carried file keeps its cached rows. Returns the new
+    * epoch. */
   def commitMorDelta(spark: SparkSession, root: String, baseEpoch: Int,
                      stagedDeltaDirName: String, stagedKeyDirName: String,
                      keyColPhysical: String,
                      keyType: org.apache.spark.sql.types.DataType,
                      txn: Option[Txn] = None,
                      appendGuard: Option[(Int, Set[String]) => Option[String]] = None,
-                     reaudit: Option[() => Unit] = None): Int = {
-    import org.apache.spark.sql.functions.col
+                     reaudit: Option[() => Unit] = None,
+                     freshZones: Seq[org.apache.spark.sql.Row] = Nil): Int = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val f = fs(spark, rootPath)
     def listDir(name: String, suffix: String): Map[String, Long] = {
@@ -3080,20 +3053,8 @@ object ManifestSink {
       val entries = manifestEntries3(spark, root, cur)
       val carried = entries.map(_._1)
       val deltaRel = deltaSizes0.keys.toSeq.sorted
-      val baseToken = commitInfo(spark, root, cur)._1
-      val hasStats = f.exists(new org.apache.hadoop.fs.Path(
-        s"$root/stats-$cur.$baseToken"))
-      val mergedStats =
-        if (!hasStats) None
-        else {
-          val stats = statsTable(spark, root, cur)
-          val statsCols = stats.select("col").distinct().collect()
-            .map(_.getString(0)).filterNot(_.startsWith("__")).sorted.toSeq
-          val freshStats =
-            if (deltaRel.isEmpty || statsCols.isEmpty) emptyStats(spark)
-            else zoneStats(spark, root, deltaRel, statsCols)
-          Some(stats.unionByName(freshStats))
-        }
+      val mergedStats = SnapshotCache.statRows(spark, root, cur).map(
+        _.toSeq ++ keptZones(statCols(spark, root, cur), freshZones))
       try {
         commitStaged(spark, Staged(root, next, token,
           (carried ++ deltaRel).sorted, mergedStats,
@@ -3186,12 +3147,6 @@ object ManifestSink {
     }
   }
 
-  def statsExists(spark: SparkSession, root: String, epoch: Int): Boolean = {
-    val (token, _) = commitInfo(spark, root, epoch)
-    fs(spark, new org.apache.hadoop.fs.Path(root))
-      .exists(new org.apache.hadoop.fs.Path(s"$root/stats-$epoch.$token"))
-  }
-
   /** ROLLBACK — restore epoch `to`'s content as a NEW epoch: history
     * is never rewritten, the rollback itself is an auditable commit
     * (the Iceberg rollback-as-snapshot discipline). The new manifest
@@ -3202,12 +3157,7 @@ object ManifestSink {
     val cur = currentEpoch(spark, root)
     val next = cur + 1
     val entries = manifestEntries3(spark, root, to)
-    val (token, _) = commitInfo(spark, root, to)
-    val f = fs(spark, new org.apache.hadoop.fs.Path(root))
-    val stats =
-      if (f.exists(new org.apache.hadoop.fs.Path(s"$root/stats-$to.$token")))
-        Some(statsTable(spark, root, to))
-      else None
+    val stats = SnapshotCache.statRows(spark, root, to).map(_.toSeq)
     commitStaged(spark, Staged(root, next, newToken(), entries.map(_._1).sorted,
       stats, commitSchema(spark, root, to).map(_.json),
       commitDvs(spark, root, to), sizes = knownSizes(entries),

@@ -128,11 +128,13 @@ object SnapshotCache {
     lock.synchronized { snaps.put((s.root, s.epoch), s) }
 
   /** Install the stats rows a commit just wrote for (root, epoch,
-    * token) — the rows it held when it wrote them — so the first read
-    * of the new epoch plans without a stats load. Callers seed only
-    * after their commit marker's CAS won under `token`. */
-  private[sink] def seedStats(root: String, epoch: Int, token: String, rows: Seq[Row]): Unit =
-    lock.synchronized { stats.put((root, epoch, token), Some(rows.toArray)) }
+    * token) — the rows it held when it wrote them, None when it wrote
+    * no stats table — so the first read of the new epoch plans without
+    * a stats load. Callers seed only after their commit marker's CAS
+    * won under `token`. */
+  private[sink] def seedStats(root: String, epoch: Int, token: String,
+                              rows: Option[Seq[Row]]): Unit =
+    lock.synchronized { stats.put((root, epoch, token), rows.map(_.toArray)) }
 
   /** Drop all cached state (tests; not needed for correctness — token
     * validation already handles recreated tables). */

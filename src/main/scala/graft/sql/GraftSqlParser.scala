@@ -285,10 +285,8 @@ object GraftSqlParser {
         .map(s => s.fields.map(f =>
           graft.sink.ColumnMapping.physicalName(f) -> f.name).toMap)
         .getOrElse(Map.empty[String, String])
-      val existing = ManifestSink.statsTable(spark, path, cur)
-        .select("col").distinct().collect().map(_.getString(0))
-        .filterNot(_.startsWith("__"))
-        .map(c => physToLogical.getOrElse(c, c)).sorted.toSeq
+      val existing = ManifestSink.statCols(spark, path, cur)
+        .map(c => physToLogical.getOrElse(c, c)).sorted
       val next =
         if (zorder) {
           import org.apache.spark.sql.functions.{col, lit, max, min}
@@ -509,9 +507,7 @@ object GraftSqlParser {
     override def run(spark: SparkSession): Seq[Row] = {
       val cur = ManifestSink.currentEpoch(spark, path)
       val before = ManifestSink.manifestFiles(spark, path, cur).size
-      val existing = ManifestSink.statsTable(spark, path, cur)
-        .select("col").distinct().collect().map(_.getString(0))
-        .filterNot(_.startsWith("__")).sorted.toSeq
+      val existing = ManifestSink.statCols(spark, path, cur)
       val next = cur + 1
       ManifestSink.publishBucketed(ManifestSink.read(spark, path), path, next,
         keyCol, buckets, (keyCol +: existing).distinct)
@@ -552,9 +548,7 @@ object GraftSqlParser {
     override def run(spark: SparkSession): Seq[Row] = {
       val cur = ManifestSink.currentEpoch(spark, path)
       val before = ManifestSink.manifestFiles(spark, path, cur).size
-      val existing = ManifestSink.statsTable(spark, path, cur)
-        .select("col").distinct().collect().map(_.getString(0))
-        .filterNot(_.startsWith("__")).sorted.toSeq
+      val existing = ManifestSink.statCols(spark, path, cur)
       val next = cur + 1
       // `BUCKET BY (k) BUCKETS n` alongside the time transform re-lays
       // into the COMPOSED spec (one file per (ordinal, bucket) pair);
@@ -625,11 +619,9 @@ object GraftSqlParser {
       val all = ManifestSink.manifestEntries(spark, path, cur).map(_._1)
       // each file's OWN spec from its committed layout rows — the
       // metadata the honest mixed-state contract already maintains
-      val fileSpecs: Map[String, Set[String]] = ManifestSink
-        .statsTable(spark, path, cur)
-        .filter(org.apache.spark.sql.functions.col("col")
-          .rlike("^__(bucket|ptime|ident|trunc):"))
-        .select("file", "col").collect()
+      val fileSpecs: Map[String, Set[String]] = graft.sink.SnapshotCache
+        .statRows(spark, path, cur).toSeq.flatten
+        .filter(_.getString(1).matches("^__(bucket|ptime|ident|trunc):.*"))
         .groupBy(_.getString(0))
         .view.mapValues(_.map(_.getString(1)).toSet).toMap
       val want = decl.specStrings

@@ -5,11 +5,12 @@ import org.apache.hadoop.mapreduce.Job
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 
 import org.apache.spark.internal.io.FileCommitProtocol
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.connector.write.BatchWrite
-import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, WriteJobDescription}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter, WriteJobDescription, WriteJobStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
@@ -31,8 +32,48 @@ import org.apache.spark.util.SerializableConfiguration
   * become `__p0=<v>/` subdirectories under `path` (the Hive/Iceberg
   * data-layout convention); the synthetic partition columns are NOT
   * written into the files (the writer projects them away), exactly
-  * like a Hive-partitioned table. */
+  * like a Hive-partitioned table.
+  *
+  * Both entry points take extra write stats trackers: they see every
+  * file the writers open and every row they write into it (the
+  * writer-side zone maps, [[graft.catalog.ZoneStatsTracker]]). */
 object GraftWriteBridge {
+
+  /** `df.write.mode("overwrite").parquet(path)` through Spark's own
+    * file writer (`FileFormatWriter`, the same committer and parquet
+    * output writers the `DataFrameWriter` path plans), with `trackers`
+    * beside the basic one — the Delta transactional-write shape. Runs
+    * as one SQL execution over a fresh plan of `df`. */
+  def writeParquet(df: DataFrame, path: String,
+                   trackers: Seq[WriteJobStatsTracker]): Unit = {
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val qe = org.apache.spark.sql.classic.Dataset
+      .ofRows(spark, df.queryExecution.logical).queryExecution
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
+    val out = new Path(path)
+    val fs = out.getFileSystem(hadoopConf)
+    if (fs.exists(out)) fs.delete(out, true)
+    val committer = FileCommitProtocol.instantiate(
+      spark.sessionState.conf.fileCommitProtocolClass,
+      jobId = java.util.UUID.randomUUID().toString,
+      outputPath = path)
+    SQLExecution.withNewExecutionId(qe, Some(s"graft stage $path")) {
+      val plan = qe.executedPlan
+      FileFormatWriter.write(
+        sparkSession = spark,
+        plan = plan,
+        fileFormat = new ParquetFileFormat(),
+        committer = committer,
+        outputSpec = FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
+        hadoopConf = hadoopConf,
+        partitionColumns = Nil,
+        bucketSpec = None,
+        statsTrackers = new BasicWriteJobStatsTracker(
+          new SerializableConfiguration(hadoopConf),
+          BasicWriteJobStatsTracker.metrics) +: trackers,
+        options = Map.empty)
+    }: Unit
+  }
 
   /** A parquet [[BatchWrite]] into `path` that writes `dataSchema`
     * columns to files grouped into one-directory-per-distinct
@@ -40,12 +81,15 @@ object GraftWriteBridge {
     * shaped `dataSchema ++ partitionSchema` (the partition values
     * computed row-side), CLUSTERED and SORTED by the partition
     * columns — unsorted input still commits correct single-key files
-    * but rotates a new file on every value change. */
+    * but rotates a new file on every value change. An empty
+    * `partitionSchema` gives the flat single-directory write Spark's
+    * `ParquetWrite` builds. */
   def partitionedParquetWrite(spark: SparkSession,
                               path: String,
                               dataSchema: StructType,
                               partitionSchema: StructType,
-                              options: Map[String, String]): BatchWrite = {
+                              options: Map[String, String],
+                              trackers: Seq[WriteJobStatsTracker] = Nil): BatchWrite = {
     val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
     val job = Job.getInstance(hadoopConf)
     job.setOutputKeyClass(classOf[Void])
@@ -73,8 +117,8 @@ object GraftWriteBridge {
       maxRecordsPerFile = options.get("maxRecordsPerFile").map(_.toLong)
         .getOrElse(spark.sessionState.conf.maxRecordsPerFile),
       timeZoneId = spark.sessionState.conf.sessionLocalTimeZone,
-      statsTrackers = Seq(new BasicWriteJobStatsTracker(serConf,
-        BasicWriteJobStatsTracker.metrics)))
+      statsTrackers = new BasicWriteJobStatsTracker(serConf,
+        BasicWriteJobStatsTracker.metrics) +: trackers)
     committer.setupJob(job)
     new FileBatchWrite(job, description, committer)
   }

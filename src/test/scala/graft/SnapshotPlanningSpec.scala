@@ -77,11 +77,18 @@ class SnapshotPlanningSpec extends SparkTestBase {
       "an unchanged table's later queries must not reload the snapshot")
     assert(SnapshotCache.statsLoads == tl0,
       "an unchanged table's later queries must not re-collect the stats parquet")
-    // epoch advance invalidates by construction (new epoch = new key)
+    // epoch advance invalidates by construction (new epoch = new key);
+    // the INSERT's commit seeds the new epoch with what it wrote
     spark.sql(s"INSERT INTO graft.`$root` VALUES (1000, 'x', 9.0)")
-    spark.sql(s"SELECT * FROM graft.`$root` WHERE k > 990").collect()
-    assert(SnapshotCache.snapshotLoads > sl0,
-      "a new epoch must load a fresh snapshot")
+    assert(spark.sql(s"SELECT k FROM graft.`$root` WHERE k > 990").collect()
+      .map(_.getLong(0)).toSeq == Seq(1000L), "the new epoch's row is read")
+    val e = graft.sink.ManifestSink.currentEpoch(spark, root)
+    val seeded = (SnapshotCache.get(spark, root, e),
+      SnapshotCache.statRows(spark, root, e).map(_.toSeq))
+    SnapshotCache.invalidateAll()
+    assert((SnapshotCache.get(spark, root, e),
+      SnapshotCache.statRows(spark, root, e).map(_.toSeq)) == seeded,
+      "the seed equals a fresh load of the new epoch")
   }
 
   test("DROP + CREATE at the same path: token validation evicts the stale snapshot") {

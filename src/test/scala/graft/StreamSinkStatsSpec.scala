@@ -33,7 +33,7 @@ class StreamSinkStatsSpec extends SparkTestBase {
                                   physCols: Seq[String]): Set[Seq[Any]] = {
     val files = ManifestSink.manifestEntries(spark, root, epoch).map(_._1)
     val committed = rowSet(ManifestSink.statsTable(spark, root, epoch))
-    val rereadDf = ManifestSink.zoneStats(spark, root, files, physCols)
+    val rereadDf = ZoneOracle.rows(spark, root, files, physCols)
     val reread = rowSet(rereadDf)
     assert(committed == reread)
     assert(graft.plans.PlanProbe.shuffles(rereadDf).size == 1,
@@ -270,12 +270,19 @@ class StreamSinkStatsSpec extends SparkTestBase {
     intercept[ManifestSink.ManifestConflictException] {
       ManifestSink.commitIdempotentAppendFiles(spark, root, d3, "app", 1L, Some(r3))
     }
-    // neither the replay nor the loser left rows for epoch 3: its
-    // first read loads the winner's stats parquet
+    // neither the replay nor the loser left rows for epoch 3: the
+    // race-hook winner's own commit seeded them
     val won = counts(3)
-    assert(SnapshotCache.statsLoads == loads + 1, "a replay and a losing CAS seed nothing")
+    assert(SnapshotCache.statsLoads == loads, "the winner seeded epoch 3")
     assert(won.values.toSeq.sorted == Seq(1L, 1L, 2L))
     assert(won.keySet == ManifestSink.manifestEntries(spark, root, 3).map(_._1).toSet)
+    val cached = SnapshotCache.statRows(spark, root, 3).get.toSeq
+    SnapshotCache.invalidateAll()
+    assert(SnapshotCache.statRows(spark, root, 3).get.toSeq == cached,
+      "the cached rows equal a fresh load")
+    val loserFile = r3.head.getString(0)
+    assert(!cached.exists(_.getString(0).endsWith(s"/$loserFile")),
+      "no row names the loser's file")
     assert(ManifestSink.read(spark, root).as[(Long, String)].collect().map(_._1).sorted.toSeq ==
       Seq(1L, 5L, 6L, 9L))
   }

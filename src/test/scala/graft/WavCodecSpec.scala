@@ -91,4 +91,24 @@ class WavCodecSpec extends SparkTestBase {
       assert(r.getLong(6) == zc.toLong, s"doc $id zero_crossings")
     }
   }
+
+  test("decode fan-out: one sketch job sizes the stage at max(n/512, min(cores, n/64)) ordered tasks") {
+    import spark.implicits._
+    val cores = spark.sparkContext.defaultParallelism
+    assert(Multimodal.decodeParts(500, 512, cores) == math.min(cores, 8))
+    assert(Multimodal.decodeParts(500, 512, 32) == 8, "500 rows on 32 cores: 8 tasks of ~64")
+    assert(Multimodal.decodeParts(40, 512, 32) == 1)
+    assert(Multimodal.decodeParts(100000, 512, 32) == 196, "corpus scale follows rowsPerTask")
+    val docs = Tables.documents(spark, sf)
+    val n = docs.count()
+    var ids: org.apache.spark.sql.Dataset[Long] = null
+    val jobs = SparkJobs.count(spark) { ids = Multimodal.decodeIds(spark, docs) }
+    assert(jobs == 1, s"sizing the decode ran $jobs jobs: one sketch pass, no count")
+    val parts = Multimodal.decodeParts(n, 512, cores)
+    assert(ids.rdd.getNumPartitions == parts, s"decode stage tasks for $n rows")
+    val got = ids.rdd.glom().collect()
+    assert(got.forall(_.nonEmpty), "no empty decode task")
+    assert(got.flatten.toSeq == docs.select("doc_id").as[Long].collect().sorted.toSeq,
+      "globally doc_id-ordered")
+  }
 }
