@@ -2002,10 +2002,10 @@ object Registry {
         import org.apache.spark.sql.functions.{col, lit}
         val root = tmpDir("graft_skip_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         val (df, hit, total) = graft.sink.ManifestSink
           .readPruned(s, root, col("event_id").between(100L, 599L))
         df.withColumn("files_pruned", lit(hit < total))
@@ -2027,10 +2027,10 @@ object Registry {
         import org.apache.spark.sql.functions.{col, lit}
         val root = tmpDir("graft_skipstr_")
         val ev = events(s, d).select(col("event_id"), col("event_type"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_type"), col("event_id"))
             .sortWithinPartitions("event_type", "event_id"),
-          root, 1, Seq("event_type", "event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_type", "event_id")))
         val (df, hit, total) = graft.sink.ManifestSink
           .readPruned(s, root, col("event_type").between("click", "error"))
         df.withColumn("files_pruned", lit(hit < total))
@@ -2052,10 +2052,10 @@ object Registry {
         import org.apache.spark.sql.functions.{col, lit}
         val root = tmpDir("graft_mmerge_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         val upd = ev.filter(col("event_id").between(100, 199))
           .select(col("event_id"), col("user_id"), (col("value") * 2).as("value"))
           .union(ev.filter(col("event_id") < 20)
@@ -2088,8 +2088,8 @@ object Registry {
         val ev = events(s, d).select(col("event_id"), col("value"))
         graft.sink.ManifestSink.publish(
           ev.filter(col("event_id") % 5 === 0).repartition(4), root, 1)
-        graft.sink.ManifestSink.publishAppend(
-          ev.filter(col("event_id") % 5 === 1).repartition(4), root, 2,
+        graft.sink.ManifestSink.publish(
+          ev.filter(col("event_id") % 5 === 1).repartition(4), root, 2, append = true,
           txn = Some(graft.sink.ManifestSink.Txn("cdc", 0L)))
         graft.sink.ManifestSink.history(s, root)
           .select("epoch", "txn_app_id", "txn_version", "n_files")
@@ -2115,10 +2115,10 @@ object Registry {
         import org.apache.spark.sql.functions.col
         val root = tmpDir("graft_mcdf_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         val upd = ev.filter(col("event_id").between(100, 199))
           .select(col("event_id"), col("user_id"), (col("value") + 1).as("value"))
           .union(ev.filter(col("event_id") < 20)
@@ -2164,10 +2164,10 @@ object Registry {
         val out = tmpDir("graft_mscf_out_")
         val ckpt = tmpDir("graft_mscf_ckpt_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         val upd = ev.filter(col("event_id").between(100, 199))
           .select(col("event_id"), col("user_id"), (col("value") + 1).as("value"))
           .union(ev.filter(col("event_id") < 20)
@@ -2222,10 +2222,10 @@ object Registry {
         val root = tmpDir("graft_mivm_")
         val view = tmpDir("graft_mivm_view_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         graft.sink.IncrementalView.refresh(s, root, view, "event_id", "user_id", "value")
         val upd = ev.filter(col("event_id").between(100, 199))
           .select(col("event_id"), col("user_id"), (col("value") + 1).as("value"))
@@ -2274,9 +2274,10 @@ object Registry {
         import org.apache.spark.sql.functions.{col, lit}
         val root = tmpDir("graft_mdict_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithDict(
+        graft.sink.ManifestSink.publish(
           ev.repartition(16, col("user_id")), root, 1,
-          statsCols = Seq("user_id"), dictCols = Seq("user_id"))
+          graft.sink.ManifestSink.WriteSpec(statsCols = Seq("user_id"),
+            dictCols = Seq("user_id")))
         val (df, hitN, total) =
           graft.sink.ManifestSink.readPruned(s, root, col("user_id") === 13L)
         df.withColumn("dict_ok", lit(hitN >= 1 && hitN < total))
@@ -2298,9 +2299,10 @@ object Registry {
         import org.apache.spark.sql.functions.{col, lit}
         val root = tmpDir("graft_mbloom_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithBloom(
+        graft.sink.ManifestSink.publish(
           ev.repartition(16, col("user_id")), root, 1,
-          statsCols = Seq("event_id"), bloomCols = Seq("event_id"))
+          graft.sink.ManifestSink.WriteSpec(statsCols = Seq("event_id"),
+            bloomCols = Seq("event_id")))
         val (df, hitN, total) =
           graft.sink.ManifestSink.readPruned(s, root, col("event_id") === 424L)
         df.withColumn("bloom_ok", lit(hitN >= 1 && hitN < total))
@@ -2323,12 +2325,14 @@ object Registry {
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
         val half = ev.filter(col("event_id") % 2 === 0)
         val rest = ev.filter(col("event_id") % 2 === 1)
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           half.repartitionByRange(4, col("event_id"))
-            .sortWithinPartitions("event_id"), root, 1, Seq("event_id"))
-        graft.sink.ManifestSink.publishAppendWithStats(
+            .sortWithinPartitions("event_id"), root, 1,
+              graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
+        graft.sink.ManifestSink.publish(
           rest.repartitionByRange(4, col("event_id"))
-            .sortWithinPartitions("event_id"), root, 2, Seq("event_id"))
+            .sortWithinPartitions("event_id"), root, 2,
+              graft.sink.ManifestSink.WriteSpec(Seq("event_id")), append = true)
         graft.sink.ManifestSink.aggFromMetadata(s, root, Seq("event_id"))
       },
       """SELECT CAST(count(*) AS BIGINT) AS cnt,
@@ -2351,9 +2355,10 @@ object Registry {
         val root = tmpDir("graft_mvr_")
         val view = tmpDir("graft_mvr_view_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
-            .sortWithinPartitions("event_id"), root, 1, Seq("event_id"))
+            .sortWithinPartitions("event_id"), root, 1,
+              graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         graft.sink.IncrementalView.refresh(s, root, view, "event_id", "user_id", "value")
         graft.plans.MatViews.register("mv_route_demo",
           graft.sink.ManifestSink.read(s, root), Seq("user_id"),
@@ -2396,10 +2401,10 @@ object Registry {
         import org.apache.spark.sql.functions.col
         val root = tmpDir("graft_mfmt_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         s.read.format("graft-manifest").option("root", root).load()
           .filter(col("event_id").between(100, 299))
           .orderBy("event_id")
@@ -4711,21 +4716,21 @@ object Registry {
         import org.apache.spark.sql.functions.{col, lit}
         val root = tmpDir("graft_mmor_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         graft.sink.ManifestSink.deleteMor(s, root,
           ev.filter(col("event_id").between(50, 99)).select(col("event_id")),
           "event_id")
         graft.sink.ManifestSink.deleteMor(s, root,
           ev.filter(col("event_id") % 10 === 7).select(col("event_id")),
           "event_id")
-        graft.sink.ManifestSink.publishAppendWithStats(
+        graft.sink.ManifestSink.publish(
           ev.filter(col("event_id") < 10)
             .select((col("event_id") + 1000000L).as("event_id"),
               col("user_id"), col("value")),
-          root, 4, Seq("event_id"))
+          root, 4, graft.sink.ManifestSink.WriteSpec(Seq("event_id")), append = true)
         val travel = graft.sink.ManifestSink.read(s, root, 2)
         val travelOk =
           travel.filter(col("event_id").between(50, 99)).count() == 0 &&
@@ -4812,16 +4817,16 @@ object Registry {
         import org.apache.spark.sql.functions.col
         val root = tmpDir("graft_mevo_")
         val ev = events(s, d)
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.select(col("event_id"), col("value"))
             .filter(col("event_id") % 5 === 0)
             .repartitionByRange(4, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
-        graft.sink.ManifestSink.publishAppendEvolve(
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
+        graft.sink.ManifestSink.publish(
           ev.select(col("event_id"), col("value"), col("user_id"))
             .filter(col("event_id") % 5 === 1),
-          root, 2, Seq("event_id"))
+          root, 2, graft.sink.ManifestSink.WriteSpec(Seq("event_id")), evolve = true)
         graft.sink.ManifestSink.mergeCow(s,
           root,
           ev.select(col("event_id"), (col("value") + 10).as("value"), col("user_id"))
@@ -4856,10 +4861,10 @@ object Registry {
           classOf[graft.catalog.GraftCatalog].getName)
         val root = tmpDir("graft_mtbl_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         val out = s.sql(
           s"""SELECT event_id, user_id, value FROM graft.`$root`
              |WHERE event_id BETWEEN 100 AND 599 ORDER BY event_id""".stripMargin)
@@ -4893,14 +4898,14 @@ object Registry {
         def scale(c: org.apache.spark.sql.Column, lo: Long, hi: Long) =
           if (hi == lo) lit(0L)
           else (c.cast(LongType) - lit(lo)) * 255L / lit(hi - lo)
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.withColumn("__z", graft.functions.VectorFns.zorder2(
               scale(col("event_id"), eMin, eMax).cast(LongType),
               scale(col("user_id"), uMin, uMax).cast(LongType)))
             .repartitionByRange(16, col("__z"))
             .sortWithinPartitions("__z")
             .drop("__z"),
-          root, 1, Seq("event_id", "user_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id", "user_id")))
         val (df, h1, t1) = graft.sink.ManifestSink
           .readPruned(s, root, col("event_id").between(100L, 299L))
         val (_, h2, t2) = graft.sink.ManifestSink
@@ -4922,10 +4927,10 @@ object Registry {
         import org.apache.spark.sql.functions.{col, lit}
         val root = tmpDir("graft_mdel_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         val (_, _, carried) = graft.sink.ManifestSink.deleteCow(s, root,
           ev.filter(col("event_id").between(100, 199)).select(col("event_id")),
           "event_id", Seq("event_id"))
@@ -4948,10 +4953,10 @@ object Registry {
         import org.apache.spark.sql.functions.{col, lit}
         val root = tmpDir("graft_mroll_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.repartitionByRange(8, col("event_id"))
             .sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
         graft.sink.ManifestSink.deleteCow(s, root,
           ev.filter(col("event_id") % 2 === 0).select(col("event_id")),
           "event_id", Seq("event_id"))
@@ -4979,14 +4984,14 @@ object Registry {
         import org.apache.spark.sql.functions.{col, lit}
         val root = tmpDir("graft_travel_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        graft.sink.ManifestSink.publishWithStats(
+        graft.sink.ManifestSink.publish(
           ev.filter(col("event_id") % 5 === 0)
             .repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-          root, 1, Seq("event_id"))
-        graft.sink.ManifestSink.publishAppendWithStats(
+          root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
+        graft.sink.ManifestSink.publish(
           ev.filter(col("event_id") % 5 === 1)
             .repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-          root, 2, Seq("event_id"))
+          root, 2, graft.sink.ManifestSink.WriteSpec(Seq("event_id")), append = true)
         graft.sink.ManifestSink.mergeCow(s, root,
           ev.filter(col("event_id").between(100, 199) && col("event_id") % 5 <= 1)
             .select(col("event_id"), col("user_id"), (col("value") * 2).as("value")),
@@ -5012,11 +5017,11 @@ object Registry {
         val root = tmpDir("graft_mcompact_")
         val ev = events(s, d).select(col("event_id"), col("user_id"), col("value"))
         for ((m, e) <- Seq(0, 1, 2).zip(Seq(1, 2, 3)))
-          graft.sink.ManifestSink.publishAppendWithStats(
+          graft.sink.ManifestSink.publish(
             ev.filter(col("event_id") % 3 === m)
               .repartitionByRange(4, col("event_id"))
               .sortWithinPartitions("event_id"),
-            root, e, Seq("event_id"))
+            root, e, graft.sink.ManifestSink.WriteSpec(Seq("event_id")), append = true)
         val before = graft.sink.ManifestSink
           .manifestFiles(s, root, 3).size
         graft.sink.ManifestSink.compact(s, root, Seq("event_id"), numFiles = 4)

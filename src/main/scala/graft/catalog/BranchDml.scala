@@ -182,9 +182,8 @@ object BranchDml {
     // declared layout + stats exactly like a branch INSERT
     val tbl = new GraftTable(dir, dir, None)
     val fresh = ManifestSink.stage(batch, dir, next,
-      GraftTable.statsColsOf(schema), unique = true,
-      bucket = tbl.declaredBucket, ptime = tbl.declaredPtime,
-      ident = tbl.declaredIdent, tokenOpt = Some(token))
+      ManifestSink.WriteSpec(GraftTable.statsColsOf(schema), layout = tbl.declaredLayout),
+      unique = true, tokenOpt = Some(token))
     GraftTable.auditConstraints(spark, dir,
       fresh.relFiles.filter(_.startsWith(s"data-epoch=$next-")))
     val updRel = updateKeys.map { uk =>

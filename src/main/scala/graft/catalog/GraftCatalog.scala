@@ -1561,6 +1561,10 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
     }
   }
 
+  /** The declared `PARTITIONED BY` layout (all three sidecars). */
+  private[graft] def declaredLayout: ManifestSink.LayoutDecl =
+    ManifestSink.LayoutDecl(declaredBucket, declaredPtime, declaredIdent)
+
   override def partitioning(): Array[Transform] =
     declaredBucket.map { case (c, n) =>
       org.apache.spark.sql.connector.expressions.Expressions.bucket(n, c)
@@ -1621,13 +1625,6 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
         }
     }
 
-  /** All-column zone maps for SQL-written epochs: every integral,
-    * string, timestamp, and date top-level column gets per-file
-    * (min, max), so catalog writes prune like API writes with
-    * explicit statsCols — time-range scans included. */
-  private def statsColsOf(s: StructType): Seq[String] =
-    GraftTable.statsColsOf(s)
-
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(pinned.isEmpty,
       s"cannot write to $dir pinned at VERSION AS OF ${pinned.get}")
@@ -1664,9 +1661,11 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
     * epoch (history preserved — time travel still reaches the
     * pre-overwrite epochs until vacuum). */
   private def insertImpl(data: DataFrame, overwrite: Boolean): Unit = {
-    val bucket = declaredBucket
-    val ptime = declaredPtime
-    val identL = declaredIdent
+    // what every write of this table records: all-column zone maps
+    // and the declared layout's rows
+    val layout = declaredLayout
+    def spec(d: DataFrame) =
+      ManifestSink.WriteSpec(GraftTable.statsColsOf(d.schema), layout = layout)
     // BRANCH WRITES (the multi-epoch WAP generalization): under a
     // session branch name, the INSERT stages CUMULATIVELY onto the
     // branch — full layout, stats chain, constraint audit — and
@@ -1714,8 +1713,7 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
           .map(p => graft.sink.ColumnMapping.toPhysicalDf(data, p))
           .getOrElse(data)
         val fresh = ManifestSink.stage(dataW, dir, prior.epoch + 1,
-          statsColsOf(dataW.schema), unique = true, bucket = bucket,
-          ptime = ptime, ident = identL, tokenOpt = Some(prior.token))
+          spec(dataW), unique = true, tokenOpt = Some(prior.token))
         GraftTable.auditConstraints(spark, dir,
           fresh.relFiles.filter(_.startsWith(s"data-epoch=${prior.epoch + 1}-")))
         val stats = (prior.stats, fresh.stats) match {
@@ -1772,9 +1770,7 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
         // translates the logical batch to the files' physical shape
         // itself, and the publish rebase refuses honestly if the
         // schema (and with it the mapping) moves before the CAS
-        val st = ManifestSink.stageAppend(data, dir, next,
-          statsColsOf(data.schema), unique = true, bucket = bucket,
-          ptime = ptime, ident = identL)
+        val st = ManifestSink.stageAppend(data, dir, next, spec(data), unique = true)
         GraftTable.auditConstraints(spark, dir,
           st.relFiles.filter(_.startsWith(s"data-epoch=$next-")))
         GraftTable.pendingWap.put((dir, id), (st, curSchema.map(_.json)))
@@ -1812,14 +1808,12 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
             // mapped schema pinned (the files' names never go logical)
             val d2 = mapped.map(p =>
               graft.sink.ColumnMapping.toPhysicalDf(data, p)).getOrElse(data)
-            val s0 = ManifestSink.stage(d2, dir, next, statsColsOf(d2.schema),
-              unique = true, bucket = bucket, ptime = ptime, ident = identL)
+            val s0 = ManifestSink.stage(d2, dir, next, spec(d2), unique = true)
             mapped.map(p => s0.copy(schemaJson = Some(p.json))).getOrElse(s0)
           } else
             // appends stay LOGICAL — stageAppend translates against the
             // prior epoch's mapping itself
-            ManifestSink.stageAppend(data, dir, next, statsColsOf(data.schema),
-              unique = true, bucket = bucket, ptime = ptime, ident = identL)
+            ManifestSink.stageAppend(data, dir, next, spec(data), unique = true)
         // audit only THIS epoch's fresh files (appends carry prior
         // epochs' already-audited files by reference)
         GraftTable.auditConstraints(spark, dir,
@@ -2104,8 +2098,9 @@ final class StagedGraftTable(spark: SparkSession, dir: String, ident: String,
           new InsertableRelation {
             override def insert(data: DataFrame, ignored: Boolean): Unit =
               staged = Some(ManifestSink.stage(data, dir, next,
-                GraftTable.statsColsOf(data.schema), unique = true,
-                bucket = bucket, ptime = ptime, ident = identL))
+                ManifestSink.WriteSpec(GraftTable.statsColsOf(data.schema),
+                  layout = ManifestSink.LayoutDecl(bucket, ptime, identL)),
+                unique = true))
           }
       }
     }
@@ -3188,10 +3183,11 @@ class GraftRowLevelOperation(dir: String, baseEpoch: Int,
   * file commit protocol) into `data-epoch=N-aTOKEN/`; the wrapping
   * commit then runs [[ManifestSink.commitReplaceGroups]] — one CAS
   * epoch that drops the scanned files, adds the staged ones with
-  * fresh stats, and carries the rest. The fresh zone maps are folded
-  * by the writers themselves ([[ZoneStatsTracker]] on the write's job
-  * description, over the base epoch's stats columns), so the commit
-  * never re-reads the files it swaps in. An abort aborts the delegate
+  * fresh stats, and carries the rest. The fresh stats are folded by
+  * the writers themselves ([[WriterStatsTracker]] on the write's job
+  * description: zone maps over the base epoch's stats columns, and
+  * its layout's rows), so the commit never re-reads the files it
+  * swaps in. An abort aborts the delegate
   * and leaves only an invisible orphan dir for vacuum.
   *
   * SINGLE-WRITE layout preservation (round 18; supersedes the r17
@@ -3226,11 +3222,12 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
   // replacement files store PHYSICAL names (positional rename)
   private val physSchema = graft.sink.ColumnMapping.physicalSchema(tableSchema)
 
-  /** The writers' zone-map fold over the base epoch's stats columns;
-    * one per write (the driver's instance collects the committed
-    * tasks' folds). */
-  private val zones: Option[ZoneStatsTracker] =
-    RowLevelCommit.zoneTracker(SparkSession.active, dir, baseEpoch, physSchema)
+  /** The writers' stats fold over the base epoch's stats columns and
+    * layout; one per write (the driver's instance collects the
+    * committed tasks' folds). */
+  private val stats: Option[WriterStatsTracker] =
+    RowLevelCommit.statsTracker(SparkSession.active, dir, baseEpoch, physSchema,
+      withLayout = true)
 
   /** The base epoch's committed layout axes with the row index of
     * each source column (physical and logical schemas are positional
@@ -3298,7 +3295,7 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
       // metadata epoch, re-entering the CAS loop — the staged files
       // must clear the NEW constraint set before they publish
       reaudit = Some(() => GraftTable.auditConstraints(spark, dir, fresh)),
-      freshZones = RowLevelCommit.zoneRows(zones, fresh, stagedDirName)): Unit
+      freshRows = RowLevelCommit.statsRows(stats, fresh, stagedDirName)): Unit
   }
 
   /** The unpartitioned-table path: a flat single-directory stage. */
@@ -3307,7 +3304,7 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
       org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
         .partitionedParquetWrite(SparkSession.active, s"$dir/$stagedDirName",
           physSchema, StructType(Nil), info.options.asCaseSensitiveMap.asScala.toMap,
-          zones.toSeq)
+          stats.toSeq)
 
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory =
       // ReplaceDataExec only applies its row projection when the
@@ -3349,7 +3346,7 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
     private val delegate =
       org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
         .partitionedParquetWrite(spark0, s"$dir/$stagedDirName",
-          physSchema, partSchema, writeOpts, zones.toSeq)
+          physSchema, partSchema, writeOpts, stats.toSeq)
 
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory =
       new LayoutAppendingWriterFactory(
@@ -3401,20 +3398,28 @@ final class OpStrippingWriterFactory(delegate: DataWriterFactory,
   * and MoR delta). */
 private[catalog] object RowLevelCommit {
 
-  /** The zone-map fold a row-level write's writers run: over the base
-    * epoch's stats columns that the written (physical) schema holds —
-    * None when the base carries none. Served from the snapshot cache
-    * the operation's scan already warmed. */
-  def zoneTracker(spark: SparkSession, dir: String, baseEpoch: Int,
-                  physSchema: StructType): Option[ZoneStatsTracker] = {
+  /** The stats fold a row-level write's writers run: zone maps over the
+    * base epoch's stats columns that the written (physical) schema
+    * holds, and — `withLayout` — the base's committed layout, folded
+    * leniently (a replacement file that mixes keys drops just that
+    * flavor). None when there is nothing to fold. Served from the
+    * snapshot cache the operation's scan already warmed. */
+  def statsTracker(spark: SparkSession, dir: String, baseEpoch: Int,
+                   physSchema: StructType,
+                   withLayout: Boolean): Option[WriterStatsTracker] = {
     val eligible = GraftTable.statsColsOf(physSchema).toSet
-    val cols = ManifestSink.statCols(spark, dir, baseEpoch).filter(eligible)
-    if (cols.isEmpty) None else Some(new ZoneStatsTracker(physSchema, cols))
+    val spec = ManifestSink.WriteSpec(
+      ManifestSink.statCols(spark, dir, baseEpoch).filter(eligible),
+      layout =
+        if (withLayout) ManifestSink.committedLayout(spark, dir, baseEpoch)
+        else ManifestSink.LayoutDecl())
+    if (spec.isEmpty) None
+    else Some(new WriterStatsTracker(physSchema, spec, lenientLayout = true))
   }
 
   /** The folded stats rows of the committed `files` under `dirName`. */
-  def zoneRows(t: Option[ZoneStatsTracker], files: Seq[String],
-               dirName: String): Seq[org.apache.spark.sql.Row] =
+  def statsRows(t: Option[WriterStatsTracker], files: Seq[String],
+                dirName: String): Seq[org.apache.spark.sql.Row] =
     t.fold(Seq.empty[org.apache.spark.sql.Row])(_.fileRows(files, dirName))
 
   /** READ-SET APPEND GUARD (ADVICE r14): a racing append rebases
@@ -3534,13 +3539,14 @@ final class GraftMorWrite(dir: String, baseEpoch: Int,
       private val keySchema = StructType(Seq(
         org.apache.spark.sql.types.StructField(physKeyName,
           tableSchema(morKey).dataType, nullable = true)))
-      private val zones =
-        RowLevelCommit.zoneTracker(SparkSession.active, dir, baseEpoch, physSchema)
+      private val stats =
+        RowLevelCommit.statsTracker(SparkSession.active, dir, baseEpoch, physSchema,
+          withLayout = false)
       private val dataDelegate =
         org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
           .partitionedParquetWrite(SparkSession.active, s"$dir/$deltaDirName",
             physSchema, StructType(Nil), info.options.asCaseSensitiveMap.asScala.toMap,
-            zones.toSeq)
+            stats.toSeq)
 
       override def createBatchWriterFactory(pInfo: PhysicalWriteInfo):
           org.apache.spark.sql.connector.write.DeltaWriterFactory =
@@ -3577,7 +3583,7 @@ final class GraftMorWrite(dir: String, baseEpoch: Int,
           ManifestSink.commitMorDelta(spark, dir, baseEpoch, deltaDirName,
             keyDirName, physKeyName, tableSchema(morKey).dataType,
             appendGuard = Some(guard), reaudit = Some(reaudit),
-            freshZones = RowLevelCommit.zoneRows(zones, fresh, deltaDirName)): Unit
+            freshRows = RowLevelCommit.statsRows(stats, fresh, deltaDirName)): Unit
           fsys.delete(keyStage, true): Unit
         } else {
           // OVER-CAP fallback: a vector this wide would bloat every
@@ -3607,15 +3613,16 @@ final class GraftMorWrite(dir: String, baseEpoch: Int,
           // writes ONCE (no write-read-rewrite round trip)
           val laid = ManifestSink.layoutForBase(spark, dir, baseEpoch,
             survivors.unionByName(delta))
-          val cowZones = RowLevelCommit.zoneTracker(spark, dir, baseEpoch, laid.schema)
+          val cowStats = RowLevelCommit.statsTracker(spark, dir, baseEpoch, laid.schema,
+            withLayout = true)
           org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
-            .writeParquet(laid, s"$dir/$cowDirName", cowZones.toSeq)
+            .writeParquet(laid, s"$dir/$cowDirName", cowStats.toSeq)
           val cowFiles = listParquet(cowDirName)
           ManifestSink.commitReplaceGroups(spark, dir, baseEpoch,
             cowDirName, op.scannedFiles,
             appendGuard = Some(guard),
             reaudit = Some(() => GraftTable.auditConstraints(spark, dir, cowFiles)),
-            freshZones = RowLevelCommit.zoneRows(cowZones, cowFiles, cowDirName)): Unit
+            freshRows = RowLevelCommit.statsRows(cowStats, cowFiles, cowDirName)): Unit
           fsys.delete(stagePath, true): Unit
           fsys.delete(keyStage, true): Unit
         }
@@ -3747,7 +3754,7 @@ final class GraftMorWriterFactory(dataFactory: DataWriterFactory,
   * Each write task runs through [[LazyOpenWriterFactory]] (it opens
   * its file on its first row, so a zero-row task publishes no file),
   * and the writers fold each file's row count and zone-map bounds
-  * ([[ZoneStatsTracker]] on the write's job description), so the
+  * ([[WriterStatsTracker]] on the write's job description), so the
   * epoch's stats come from the writers — the commit never re-reads
   * the batch it just wrote.
   * Options: `appId` (txn identity — defaults to a dir-derived id; set
@@ -3774,7 +3781,7 @@ final class GraftStreamingWrite(dir: String, info: LogicalWriteInfo,
 
   @volatile private var stagedDir: String = _
   @volatile private var delegate: BatchWrite = _
-  @volatile private var zones: Option[ZoneStatsTracker] = None
+  @volatile private var zones: Option[WriterStatsTracker] = None
 
   // the file commit protocol coordinates task commits itself
   // (FileBatchWrite does the same) — a second coordinator pass would
@@ -3784,7 +3791,9 @@ final class GraftStreamingWrite(dir: String, info: LogicalWriteInfo,
   override def createStreamingWriterFactory(
       pInfo: PhysicalWriteInfo): StreamingDataWriterFactory = {
     stagedDir = s"data-stream-a${ManifestSink.newAttemptToken()}"
-    zones = if (statsCols.isEmpty) None else Some(new ZoneStatsTracker(physSchema, statsCols))
+    zones =
+      if (statsCols.isEmpty) None
+      else Some(new WriterStatsTracker(physSchema, ManifestSink.WriteSpec(statsCols)))
     delegate =
       org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
         .partitionedParquetWrite(SparkSession.active, s"$dir/$stagedDir",

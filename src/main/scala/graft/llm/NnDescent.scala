@@ -152,9 +152,9 @@ object NnDescent {
       if (r == 1) graft.ops.PlanDump.dump("nnd_build_round", refined)
       graph = refined.localCheckpoint()
     }
-    graft.sink.ManifestSink.publishWithStats(
+    graft.sink.ManifestSink.publish(
       graph.repartitionByRange(4, col("src")).sortWithinPartitions("src"),
-      s"$dir/graphtab", 1, Seq("src"))
+      s"$dir/graphtab", 1, graft.sink.ManifestSink.WriteSpec(Seq("src")))
     ()
   }
 

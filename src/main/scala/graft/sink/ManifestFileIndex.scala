@@ -64,9 +64,10 @@ final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int) {
         }.toMap
       }
 
-  /** File dictionaries (see ManifestSink.dictStats): complete per-file
-    * value sets for point pruning; overflowed (file, col) pairs are
-    * never pruned by the dictionary. */
+  /** File dictionaries (folded by the writers,
+    * [[graft.catalog.WriterStatsTracker]]): complete per-file value sets
+    * for point pruning; overflowed (file, col) pairs are never pruned by
+    * the dictionary. */
   private val dictLong: Map[(String, String), Set[Long]] =
     statRows.filter(r => r.getString(1).startsWith("__dict:") && !r.isNullAt(2))
       .groupBy(r => (r.getString(0), r.getString(1).stripPrefix("__dict:")))
@@ -76,7 +77,7 @@ final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int) {
       .groupBy(r => (r.getString(0), r.getString(1).stripPrefix("__dict:")))
       .map { case (k, rs) => k -> rs.map(_.getString(4)).toSet }
 
-  /** Bucketed layouts (see ManifestSink.bucketStats): column ->
+  /** Bucketed layouts (the `__bucket:` rows the writers fold): column ->
     * (numBuckets, rel -> bucket id). A point lookup on the bucket key
     * keeps only the files of floorMod(v, n)'s bucket — the
     * hash-layout point tier that needs no per-value state at all
@@ -97,8 +98,9 @@ final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int) {
       fb.get(rel).forall(_ == java.lang.Math.floorMod(v, n.toLong).toInt)
     }
 
-  /** Per-file bloom filters (see ManifestSink.bloomStats): the
-    * high-cardinality point tier — (rel, col) -> (m, k, hex bitmap).
+  /** Per-file bloom filters (folded by the writers with
+    * [[ManifestFileIndex.bloomPositions]]): the high-cardinality point
+    * tier — (rel, col) -> (m, k, hex bitmap).
     * Probed for EqualTo/In where no dictionary covers the file. */
   private val blooms: Map[(String, String), (Long, Long, String)] =
     statRows.filter(r => r.getString(1).startsWith("__bloom:") && !r.isNullAt(4))
@@ -106,8 +108,7 @@ final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int) {
       .map { case (k, rs) =>
         k -> (rs.head.getLong(2), rs.head.getLong(3), rs.head.getString(4)) }
 
-  /** The probe value's bit positions, cached per (value, m, k) — one
-    * tiny local-plan evaluation per distinct probe, not per file. */
+  /** The probe value's bit positions, cached per (value, m, k). */
   private val bloomPosCache =
     scala.collection.mutable.Map.empty[(Any, Long, Long), Seq[Int]]
   private def bloomMayContain(rel: String, colName: String,
@@ -115,27 +116,13 @@ final class ManifestFileIndex(spark: SparkSession, root: String, epoch: Int) {
     blooms.get((rel, colName)).map { case (m, k, hex) =>
       val pos = bloomPosCache.getOrElseUpdate((v, m, k), {
         val probe = v match {
-          case scala.Left(l)  => org.apache.spark.sql.functions.lit(l)
-          case scala.Right(s) => org.apache.spark.sql.functions.lit(s)
+          case scala.Left(l)  => l
+          case scala.Right(s) => UTF8String.fromString(s)
         }
-        bloomProbePositions(probe, m, k)
+        ManifestFileIndex.bloomPositions(probe, m, k.toInt).toSeq
       })
       bloomHexTest(hex, pos)
     }
-
-  /** The probe side of `ManifestSink.bloomStats`: the candidate
-    * value's k bit positions under (m, k), computed with the SAME
-    * Spark expression the write side used (a 1-row local plan —
-    * constant-folded, no job). */
-  private def bloomProbePositions(value: org.apache.spark.sql.Column,
-                                  m: Long, k: Long): Seq[Int] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.IntegerType
-    val row = spark.range(1).select((0 until k.toInt).map(i =>
-      pmod(xxhash64(lit(i), value), lit(m)).cast(IntegerType).as(s"p$i")): _*)
-      .head()
-    (0 until k.toInt).map(row.getInt)
-  }
 
   private def bloomHexTest(hex: String, positions: Seq[Int]): Boolean =
     positions.forall { p =>
@@ -280,4 +267,25 @@ object ManifestFileIndex {
     * manifest) fallback — zero for any table committed since sizes
     * landed (spec evidence for the RPC-free planning contract). */
   val legacyStatusRpcs = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Bloom filter size in bits (m) and hash count (k) of every bloom
+    * the writers fold; each `__bloom` row carries both, so the read
+    * side never assumes them. */
+  val BloomBits = 16384
+  val BloomHashes = 5
+
+  /** The ONE bloom hash, on the write side and the probe side alike:
+    * the k bit positions of `v` (a long — integral values widen — or a
+    * `UTF8String`) in an m-bit filter, position i being
+    * `pmod(xxhash64(i, v), m)` exactly as Spark evaluates that
+    * expression (seed 42, folded through `i` then `v`). */
+  def bloomPositions(v: Any, m: Long, k: Int): Array[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val vt = v match { case _: UTF8String => StringType; case _ => LongType }
+    Array.tabulate(k) { i =>
+      val h = XxHash64Function.hash(v, vt, XxHash64Function.hash(i, IntegerType, 42L))
+      java.lang.Math.floorMod(h, m).toInt
+    }
+  }
 }

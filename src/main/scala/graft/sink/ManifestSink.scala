@@ -290,14 +290,39 @@ object ManifestSink {
 
   // ---------------------------------------------------------------- write path
 
-  /** Stage `df` as epoch `epoch`: write the data files, audit the file
-    * list, build the stats rows. Nothing is visible to readers.
-    * A zone-only stage (`statsCols` and no other flavor) folds each
-    * file's zone maps and row count inside its write tasks
-    * ([[graft.catalog.ZoneStatsTracker]] on Spark's file writer), so
-    * its stats cost no job of their own; dictionaries, blooms, HLL
-    * sketches and layout rows still come from one re-read pass
-    * ([[fusedStats]]).
+  /** What a staged write records for each fresh file beside its data:
+    * zone maps over `statsCols` (per-file min/max plus a `__count`
+    * row), complete value dictionaries over `dictCols` (a `__dictover:`
+    * sentinel past `dictCap` values), bloom filters over `bloomCols`,
+    * and the `layout`'s per-file rows (the write lays its rows out
+    * under it first). The writers fold every flavor
+    * ([[graft.catalog.WriterStatsTracker]]). The empty spec records
+    * nothing: its epoch commits no stats table. */
+  final case class WriteSpec(statsCols: Seq[String] = Nil,
+                             dictCols: Seq[String] = Nil,
+                             bloomCols: Seq[String] = Nil,
+                             layout: LayoutDecl = LayoutDecl(),
+                             dictCap: Int = 256) {
+    def isEmpty: Boolean =
+      statsCols.isEmpty && dictCols.isEmpty && bloomCols.isEmpty && layout.isEmpty
+
+    /** The spec over a column-mapped table's PHYSICAL names. */
+    def physical(phys: Map[String, String]): WriteSpec = {
+      def p(cs: Seq[String]) = cs.map(c => phys.getOrElse(c, c))
+      copy(statsCols = p(statsCols), dictCols = p(dictCols), bloomCols = p(bloomCols))
+    }
+  }
+
+  /** Stage `df` as epoch `epoch`: lay it out under `spec.layout`, write
+    * the data files, audit the file list, build the stats rows. Nothing
+    * is visible to readers. Every stage writes through
+    * [[graft.catalog.WriterStatsTracker]] on Spark's file writer: the
+    * write tasks fold each file's row count and every stats flavor
+    * `spec` requests, so the stats cost no job of their own and the
+    * stage never re-reads what it wrote. A file its writer wrote no row
+    * into (Spark's file writer keeps one schema-only file for a job
+    * with no rows) is deleted and left out of the file list: the
+    * committed schema stays pinned by the marker.
     * `unique = true` stages into an attempt-unique directory
     * (`data-epoch=N-aTOKEN/`) so two concurrent publishers racing for
     * the same epoch cannot clobber each other's DATA either — the
@@ -305,14 +330,8 @@ object ManifestSink {
     * shared directory (`data-epoch=N/`) is the single-writer
     * convenience every registered row uses. */
   def stage(df: DataFrame, root: String, epoch: Int,
-            statsCols: Seq[String] = Nil, unique: Boolean = false,
-            dictCols: Seq[String] = Nil, dictCap: Int = 256,
-            bloomCols: Seq[String] = Nil, bloomBits: Int = 16384,
-            bloomHashes: Int = 5, bucket: Option[(String, Int)] = None,
-            hllCols: Seq[String] = Nil,
-            ptime: Option[(String, String)] = None,
-            tokenOpt: Option[String] = None,
-            ident: Option[(String, Option[Int])] = None): Staged = {
+            spec: WriteSpec = WriteSpec(), unique: Boolean = false,
+            tokenOpt: Option[String] = None): Staged = {
     val spark = df.sparkSession
     // a caller-supplied token makes a SERIES of stages one sweepable /
     // exemptable unit (branch refs: every stage dir carries the
@@ -320,46 +339,28 @@ object ManifestSink {
     val token = tokenOpt.getOrElse(newToken())
     val dirName = if (unique) s"data-epoch=$epoch-a$token" else s"data-epoch=$epoch"
     val epochDir = s"$root/$dirName"
-    require(ident.isEmpty || bucket.isEmpty || ptime.isEmpty,
+    val l = spec.layout
+    require(l.ident.isEmpty || l.bucket.isEmpty || l.ptime.isEmpty,
       "a partition spec composes at most TWO transforms; identity + " +
         "bucket + time is not supported")
-    val laid = (bucket, ptime, ident) match {
-      case (Some((k, n)), Some((c, u)), None) => composedLayout(df, c, u, k, n)
-      case (Some((k, n)), None, None) => bucketLayout(df, k, n)
-      case (None, Some((c, u)), None) => timeLayout(df, c, u)
-      case (None, None, Some((c, w))) => identLayout(df, c, w)
-      case (Some((k, n)), None, Some((c, w))) =>
-        identPairLayout(df, c, w, bucketIdCol(k, n), k, sortIdentFirst = true)
-      case (None, Some((tc, u)), Some((c, w))) =>
-        identPairLayout(df, c, w,
-          timeOrdCol(org.apache.spark.sql.functions.col(tc),
-            df.schema(tc).dataType, u), tc, sortIdentFirst = false)
-      case _ => df
-    }
-    val zoneOnly = dictCols.isEmpty && bloomCols.isEmpty && bucket.isEmpty &&
-      hllCols.isEmpty && ptime.isEmpty && ident.isEmpty
-    val tracker =
-      if (zoneOnly && statsCols.nonEmpty)
-        Some(new graft.catalog.ZoneStatsTracker(laid.schema, statsCols))
-      else None
+    val laid = layOut(df, l)
+    val tracker = new graft.catalog.WriterStatsTracker(laid.schema, spec)
     org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
-      .writeParquet(laid, epochDir, tracker.toSeq)
+      .writeParquet(laid, epochDir, Seq(tracker))
     val dirPath = new org.apache.hadoop.fs.Path(epochDir)
+    val f = fs(spark, dirPath)
     // the staging listStatus already holds each file's size — capture
     // it here (the only place it is free) and commit it in the
     // manifest lines
-    val listed = fs(spark, dirPath).listStatus(dirPath).toSeq
+    val listed = f.listStatus(dirPath).toSeq
       .filter(_.getPath.getName.endsWith(".parquet"))
-    val sizes = listed.map(s => s"$dirName/${s.getPath.getName}" -> s.getLen).toMap
-    val relFiles = sizes.keys.toSeq.sorted
-    val stats = tracker match {
-      case Some(t) => Some(t.fileRows(relFiles, dirName))
-      case None if zoneOnly => None
-      case None if relFiles.isEmpty => Some(Nil)
-      case None => Some(fusedStats(spark, root, relFiles, statsCols, dictCols,
-        dictCap, bloomCols, bloomBits, bloomHashes, bucket, ptime, ident, hllCols))
-    }
-    Staged(root, epoch, token, relFiles, stats,
+      .map(s => s"$dirName/${s.getPath.getName}" -> s.getLen)
+    val written = listed.map(_._1)
+    val empty = tracker.emptyFiles(written, dirName).toSet
+    empty.foreach(r => f.delete(new org.apache.hadoop.fs.Path(s"$root/$r"), false))
+    val sizes = listed.filterNot(e => empty(e._1)).toMap
+    val stats = if (spec.isEmpty) None else Some(tracker.fileRows(written, dirName))
+    Staged(root, epoch, token, sizes.keys.toSeq.sorted, stats,
       Some(asNullable(df.schema).json), sizes = sizes)
   }
 
@@ -374,39 +375,30 @@ object ManifestSink {
     * commit. A stats-less prior epoch gives a stats-less epoch: rows
     * for the fresh files alone would leave the prior files uncovered. */
   def stageAppend(df: DataFrame, root: String, epoch: Int,
-                  statsCols: Seq[String] = Nil, unique: Boolean = false,
-                  evolve: Boolean = false,
-                  bucket: Option[(String, Int)] = None,
-                  hllCols: Seq[String] = Nil,
-                  ptime: Option[(String, String)] = None,
-                  ident: Option[(String, Option[Int])] = None): Staged = {
+                  spec: WriteSpec = WriteSpec(), unique: Boolean = false,
+                  evolve: Boolean = false): Staged = {
     val spark = df.sparkSession
     // mapped tables: the logical batch renames to the files' PHYSICAL
-    // shape before the write; stats/hll columns follow (they key the
+    // shape before the write; stats columns follow (they key the
     // committed metadata, which is physical throughout)
     val priorSchemaOpt =
       if (epoch <= 1) None else commitSchema(spark, root, epoch - 1)
     val mapping = priorSchemaOpt.filter(ColumnMapping.hasMapping)
-    val (dfW, statsW, hllW) = mapping match {
+    val (dfW, specW) = mapping match {
       case Some(p) =>
         require(!evolve, "schema-evolving appends on a column-mapped " +
           "table are not supported; ALTER TABLE ADD COLUMNS first, " +
           "then append the full shape")
-        val phys = ColumnMapping.physOf(p)
-        (ColumnMapping.toPhysicalDf(df, p),
-          statsCols.map(c => phys.getOrElse(c, c)),
-          hllCols.map(c => phys.getOrElse(c, c)))
-      case None => (df, statsCols, hllCols)
+        (ColumnMapping.toPhysicalDf(df, p), spec.physical(ColumnMapping.physOf(p)))
+      case None => (df, spec)
     }
-    val fresh = stage(dfW, root, epoch, statsW, unique, bucket = bucket,
-      hllCols = hllW, ptime = ptime, ident = ident)
+    val fresh = stage(dfW, root, epoch, specW, unique)
     if (epoch <= 1) fresh
     else {
       val priorEntries = manifestEntries3(spark, root, epoch - 1)
       val prior = priorEntries.map(_._1)
       val stats =
-        if (statsCols.isEmpty && bucket.isEmpty && hllCols.isEmpty &&
-          ptime.isEmpty && ident.isEmpty) None
+        if (spec.isEmpty) None
         else SnapshotCache.statRows(spark, root, epoch - 1)
           .map(_.toSeq ++ fresh.stats.get)
       // schema discipline (Delta's): a plain append REJECTS drift — a
@@ -560,59 +552,24 @@ object ManifestSink {
     statsFrame(spark, rows).coalesce(1).write.mode("overwrite")
       .parquet(s"$root/stats-$epoch.$token")
 
-  /** Publish `df` as epoch `epoch` of the table at `root`. Returns the
-    * number of data files committed to the manifest. */
+  /** Publish `df` as epoch `epoch` of the table at `root`, recording
+    * what `spec` asks for each fresh file (see [[WriteSpec]]; e.g. zone
+    * maps — the Iceberg/Delta data-skipping core: a range read prunes
+    * the file LIST before any scan is planned, so callers cluster the
+    * write on the primary stats column). By default the epoch is a
+    * fresh snapshot of `df`; `append` makes it epoch N-1's files plus
+    * `df`'s ([[stageAppend]]), and `evolve` an append that may ADD
+    * columns (Delta's mergeSchema: the committed schema becomes the
+    * union and reads of older files fill the added columns with null —
+    * a pure metadata change; each commit pins its own schema, so time
+    * travel to a pre-evolution epoch still reads the old shape).
+    * Returns the number of data files committed to the manifest. */
   def publish(df: DataFrame, root: String, epoch: Int,
-              txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession, stage(df, root, epoch), txn)
-
-  /** APPEND-publish (see [[stageAppend]] for the economics). */
-  def publishAppend(df: DataFrame, root: String, epoch: Int,
-                    txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession, stageAppend(df, root, epoch), txn)
-
-  /** SCHEMA-EVOLVING append (Delta's mergeSchema): the batch may ADD
-    * columns; the committed table schema becomes the union, and reads
-    * of any epoch plan under that epoch's committed schema, filling
-    * the added columns of pre-evolution files with null — a pure
-    * metadata change, no file is rewritten. Time travel to a
-    * pre-evolution epoch still reads the old shape: each commit pins
-    * its own schema. */
-  def publishAppendEvolve(df: DataFrame, root: String, epoch: Int,
-                          statsCols: Seq[String] = Nil,
-                          txn: Option[Txn] = None): Int =
+              spec: WriteSpec = WriteSpec(), txn: Option[Txn] = None,
+              append: Boolean = false, evolve: Boolean = false): Int =
     commitStaged(df.sparkSession,
-      stageAppend(df, root, epoch, statsCols, evolve = true), txn)
-
-  /** Publish with per-file ZONE MAPS (the Iceberg/Delta data-skipping
-    * core): alongside the manifest, a parquet stats table records each
-    * data file's (min, max) for EVERY column in `statsCols` (integral
-    * or string), computed in ONE pass over the just-written epoch
-    * (grouped by `input_file_name`). A range read then prunes the file
-    * LIST before any scan is planned — the manifest is a coarse
-    * secondary index, complementing row-group stats (which prune only
-    * after a file is opened). Callers cluster the write on the primary
-    * stats column (`repartitionByRange` + sort) so file ranges are
-    * disjoint and pruning actually bites. The stats live as parquet —
-    * itself prunable and mergeable — not a driver-parsed text sidecar,
-    * so planning stays sub-linear as the file count grows. */
-  def publishWithStats(df: DataFrame, root: String, epoch: Int,
-                       statsCols: Seq[String], txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession, stage(df, root, epoch, statsCols), txn)
-
-  /** APPEND-publish with zone maps (see [[stageAppend]]). */
-  def publishAppendWithStats(df: DataFrame, root: String, epoch: Int,
-                             statsCols: Seq[String], txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession, stageAppend(df, root, epoch, statsCols), txn)
-
-  /** Publish with zone maps AND file dictionaries (see [[dictStats]]):
-    * `dictCols` get per-file complete distinct-value sets for
-    * point-lookup skipping, alongside `statsCols`' min/max ranges. */
-  def publishWithDict(df: DataFrame, root: String, epoch: Int,
-                      statsCols: Seq[String], dictCols: Seq[String],
-                      dictCap: Int = 256, txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession,
-      stage(df, root, epoch, statsCols, unique = false, dictCols, dictCap), txn)
+      if (append || evolve) stageAppend(df, root, epoch, spec, evolve = evolve)
+      else stage(df, root, epoch, spec), txn)
 
   // ------------------------------------------------------------- bucketed layout
 
@@ -869,17 +826,6 @@ object ManifestSink {
     cur + 1
   }
 
-  /** Publish `df` bucket-clustered on `keyCol` into `numBuckets`
-    * single-bucket files (plus all-column zone maps via `statsCols`).
-    * Two tables published this way with the same (key semantics, n)
-    * storage-partition-join through the SQL catalog: zero exchanges. */
-  def publishBucketed(df: DataFrame, root: String, epoch: Int,
-                      keyCol: String, numBuckets: Int,
-                      statsCols: Seq[String] = Nil,
-                      txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession,
-      stage(df, root, epoch, statsCols, bucket = Some((keyCol, numBuckets))), txn)
-
   /** The committed bucket layout of an epoch, if it FULLY covers the
     * manifest: exactly one single-bucket row per manifest file, all
     * under one `__bucket:<col>:<n>` spec. Any gap (a CoW-rewritten
@@ -1052,28 +998,6 @@ object ManifestSink {
       Some(TimeSpec(col0, unit, fo))
     else None
   }
-
-  /** Publish `df` laid out one-file-set-per-time-unit on `col` (plus
-    * zone maps via `statsCols`) — the engine-API form of
-    * `PARTITIONED BY (hours(ts))`. */
-  def publishTimePartitioned(df: DataFrame, root: String, epoch: Int,
-                             col: String, unit: String,
-                             statsCols: Seq[String] = Nil,
-                             txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession,
-      stage(df, root, epoch, statsCols, ptime = Some((col, unit))), txn)
-
-  /** Publish `df` under the COMPOSED layout (one file per (time
-    * ordinal, bucket) pair — see [[composedLayout]]): the engine-API
-    * form of `PARTITIONED BY (unit(col), bucket(n, keyCol))`. */
-  def publishComposed(df: DataFrame, root: String, epoch: Int,
-                      col: String, unit: String,
-                      keyCol: String, n: Int,
-                      statsCols: Seq[String] = Nil,
-                      txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession,
-      stage(df, root, epoch, statsCols, ptime = Some((col, unit)),
-        bucket = Some((keyCol, n))), txn)
 
   // ------------------------------------------- identity/truncate layout
 
@@ -1288,7 +1212,7 @@ object ManifestSink {
     * list, stats, and DV as the current one, with the union schema
     * pinned into its marker — zero data I/O; pre-evolution files fill
     * the added columns with null at read, exactly as evolving appends
-    * do ([[publishAppendEvolve]]). Existing names are rejected (this
+    * do ([[publish]] with `evolve`). Existing names are rejected (this
     * is evolution, not migration). Returns the new epoch. */
   def evolveSchema(spark: SparkSession, root: String,
                    added: org.apache.spark.sql.types.StructType): Int = {
@@ -1540,11 +1464,11 @@ object ManifestSink {
     * are an ordered Seq so violation reports are deterministic. */
   def publishExpect(df: DataFrame, root: String, epoch: Int,
                     expectations: Seq[(String, org.apache.spark.sql.Column)],
-                    statsCols: Seq[String] = Nil, txn: Option[Txn] = None): Int = {
+                    spec: WriteSpec = WriteSpec(), txn: Option[Txn] = None): Int = {
     import org.apache.spark.sql.functions._
     require(expectations.nonEmpty, "publishExpect needs at least one expectation")
     val spark = df.sparkSession
-    val staged = stage(df, root, epoch, statsCols)
+    val staged = stage(df, root, epoch, spec)
     val bad =
       if (staged.relFiles.isEmpty) Nil
       else {
@@ -1577,7 +1501,7 @@ object ManifestSink {
     * @return (published file count, quarantined row count) */
   def publishQuarantine(df: DataFrame, root: String, epoch: Int,
                         expectations: Seq[(String, org.apache.spark.sql.Column)],
-                        statsCols: Seq[String] = Nil,
+                        spec: WriteSpec = WriteSpec(),
                         txn: Option[Txn] = None): (Int, Long) = {
     import org.apache.spark.sql.functions._
     require(expectations.nonEmpty, "publishQuarantine needs at least one expectation")
@@ -1590,12 +1514,12 @@ object ManifestSink {
     val invalid = tagged.filter(size(col("_violations")) > 0)
       .withColumn("_violations", concat_ws(",", col("_violations")))
       .withColumn("_epoch", lit(epoch))
-    val n = commitStaged(spark, stage(valid, root, epoch, statsCols), txn)
+    val n = commitStaged(spark, stage(valid, root, epoch, spec), txn)
     val nq = invalid.count()
     if (nq > 0) {
       val quarRoot = s"${root}_quarantine"
-      publishAppend(invalid, quarRoot,
-        currentEpochOpt(spark, quarRoot).getOrElse(0) + 1)
+      publish(invalid, quarRoot,
+        currentEpochOpt(spark, quarRoot).getOrElse(0) + 1, append = true)
     }
     (n, nq)
   }
@@ -1621,7 +1545,7 @@ object ManifestSink {
     else {
       val next = currentEpochOpt(spark, root).getOrElse(0) + 1
       try {
-        commitStaged(spark, stageAppend(df, root, next, statsCols),
+        commitStaged(spark, stageAppend(df, root, next, WriteSpec(statsCols)),
           Some(Txn(appId, version)))
         true
       } catch {
@@ -1826,222 +1750,6 @@ object ManifestSink {
     }
   }
 
-  /** EVERY requested per-file stats flavor in ONE pass (guide §1.2 —
-    * one read, one groupBy(input_file_name), one driver collect of
-    * file-count-bounded rows): zone min/max + __count, dictionaries,
-    * bloom filters, bucket/ptime/ident layout rows, HLL sketches. The
-    * dedicated single-flavor builders each re-scan the freshly staged
-    * files — a composed-spec CTAS with zone maps paid three scans and
-    * three shuffles of the batch it had just written; this fuses them
-    * into one aggregation whose result is one row per staged file (the
-    * same driver bound as the `sizes` map the stage already holds, and
-    * the same enumeration an Iceberg manifest makes). Values and
-    * validation messages are byte-identical to the dedicated paths;
-    * under `lenientLayout` a layout flavor that sees a mixed-value
-    * file contributes NO rows (independently per flavor — the
-    * spec-detection callers' partial-coverage contract) instead of
-    * throwing. */
-  private def fusedStats(spark: SparkSession, root: String, relFiles: Seq[String],
-                         statsCols: Seq[String], dictCols: Seq[String] = Nil,
-                         dictCap: Int = 256, bloomCols: Seq[String] = Nil,
-                         bloomBits: Int = 16384, bloomHashes: Int = 5,
-                         bucketO: Option[(String, Int)] = None,
-                         ptime: Option[(String, String)] = None,
-                         ident: Option[(String, Option[Int])] = None,
-                         hllCols: Seq[String] = Nil,
-                         lenientLayout: Boolean = false): Seq[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val df = spark.read.parquet(relFiles.map(r => s"$root/$r"): _*)
-    val schema = df.schema
-    statsCols.foreach(c => requireZoneMapType(c, schema(c).dataType))
-    val aggs = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column]()
-    aggs ++= statsCols.flatMap { c =>
-      val e = statLongExpr(col(c), schema(c).dataType)
-      Seq(min(e).as(s"__lo_$c"), max(e).as(s"__hi_$c"))
-    }
-    aggs += count(lit(1)).as("__cnt")
-    aggs ++= dictCols.map { c =>
-      schema(c).dataType match {
-        case StringType | LongType | IntegerType | ShortType | ByteType => ()
-        case other => throw new IllegalArgumentException(
-          s"file dictionaries support integral and string columns; $c is $other")
-      }
-      // BOUNDED dict aggregate: at most dictCap+1 distinct values leave
-      // the executors per file — enough to decide overflow (size > cap
-      // ⟺ the capped slice has cap+1 elements) without ever shipping a
-      // high-cardinality column's full distinct set to the driver (the
-      // uncapped collect_set made every __dictover file's whole set
-      // cross the wire just to be discarded — a driver OOM at 100 TB).
-      slice(sort_array(collect_set(col(c))), 1, dictCap + 1).as(s"__d_$c")
-    }
-    if (bloomCols.nonEmpty) {
-      require(bloomBits > 0 && bloomBits % 8 == 0,
-        s"bloom bits must be a positive multiple of 8, got $bloomBits")
-      require(bloomHashes >= 1, s"bloom needs at least one hash, got $bloomHashes")
-    }
-    aggs ++= bloomCols.flatMap { c =>
-      val probe: org.apache.spark.sql.Column = schema(c).dataType match {
-        case StringType => col(c)
-        case LongType | IntegerType | ShortType | ByteType => col(c).cast(LongType)
-        case other => throw new IllegalArgumentException(
-          s"bloom filters support integral and string columns; $c is $other")
-      }
-      (0 until bloomHashes).map(i => collect_set(when(col(c).isNotNull,
-        pmod(xxhash64(lit(i), probe), lit(bloomBits.toLong)).cast(IntegerType)))
-        .as(s"__b${i}_$c"))
-    }
-    bucketO.foreach { case (k, n) =>
-      val b = bucketIdCol(k, n)
-      aggs += min(b).as("__blo"); aggs += max(b).as("__bhi")
-    }
-    ptime.foreach { case (c, u) =>
-      val p = timeOrdCol(col(c), schema(c).dataType, u)
-      aggs += min(p).as("__plo"); aggs += max(p).as("__phi")
-    }
-    ident.foreach { case (c, w) =>
-      val k = identKeyCol(col(c), schema(c).dataType, w)
-      aggs += min(k).as("__ilo"); aggs += max(k).as("__ihi")
-    }
-    aggs ++= hllCols.flatMap { c =>
-      val in = schema(c).dataType match {
-        case StringType | LongType | IntegerType => col(c)
-        case ShortType | ByteType => col(c).cast(IntegerType)
-        case TimestampType | TimestampNTZType | DateType =>
-          statLongExpr(col(c), schema(c).dataType)
-        case other => throw new IllegalArgumentException(
-          s"hll sketches support integral, string, timestamp, and date " +
-            s"columns; $c is $other")
-      }
-      Seq(hex(hll_sketch_agg(in)).as(s"__h_$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__n_$c"))
-    }
-    val fusedAgg = df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail.toSeq: _*)
-    graft.ops.PlanDump.dump("sink_fused_stats", fusedAgg)
-    val collected = fusedAgg.collect()
-    val marker = rootMarker(root)
-    def relOf(full: String): String = {
-      val at = full.indexOf(marker)
-      if (at >= 0) full.substring(at + marker.length)
-      else full.split("/").takeRight(2).mkString("/")
-    }
-    // layout flavors validate up front, per flavor: strict callers get
-    // the dedicated paths' exact require message naming the first
-    // offending file; lenient callers drop just that flavor's rows
-    def flavorClean(loCol: String, hiCol: String, what: String): Boolean = {
-      collected.foreach { r =>
-        val lo = r.getAs[Any](loCol); val hi = r.getAs[Any](hiCol)
-        val single = lo != null && lo == hi
-        if (!single) {
-          if (lenientLayout) return false
-          require(single, s"$what ${relOf(r.getAs[String]("__f"))}: $lo..$hi")
-        }
-      }
-      true
-    }
-    val bucketClean = bucketO.isDefined && flavorClean("__blo", "__bhi",
-      "bucketed stage produced a mixed-bucket file")
-    val ptimeClean = ptime.isDefined && flavorClean("__plo", "__phi",
-      "time-partitioned stage produced a mixed-ordinal file")
-    val identClean = ident.isDefined && flavorClean("__ilo", "__ihi",
-      "identity/truncate stage produced a mixed-value file")
-    def asLong(v: Any): java.lang.Long = v match {
-      case null => null
-      case l: Long => java.lang.Long.valueOf(l)
-      case i: Int => java.lang.Long.valueOf(i.toLong)
-      case s: Short => java.lang.Long.valueOf(s.toLong)
-      case b: Byte => java.lang.Long.valueOf(b.toLong)
-      case other => throw new IllegalStateException(s"unexpected stat value $other")
-    }
-    val rows = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-    collected.foreach { r =>
-      val file = relOf(r.getAs[String]("__f"))
-      statsCols.foreach { c =>
-        val isStr = schema(c).dataType == StringType
-        val lo = r.getAs[Any](s"__lo_$c"); val hi = r.getAs[Any](s"__hi_$c")
-        rows += statsRow(file, c,
-          if (isStr) null else asLong(lo), if (isStr) null else asLong(hi),
-          if (isStr) lo else null, if (isStr) hi else null)
-      }
-      // __count rides the ZONE-MAP flavor exactly as in fileStats — a
-      // layout-only stage (no statsCols) must not grow one (the
-      // metadata-agg coverage checks key on its presence)
-      if (statsCols.nonEmpty)
-        rows += statsRow(file, "__count",
-          asLong(r.getAs[Any]("__cnt")), null, null, null)
-      dictCols.foreach { c =>
-        val isStr = schema(c).dataType == StringType
-        val set = r.getAs[scala.collection.Seq[Any]](s"__d_$c")
-        if (set.size > dictCap)
-          rows += statsRow(file, s"__dictover:$c", null, null, null, null)
-        else set.foreach { v =>
-          rows += statsRow(file, s"__dict:$c",
-            if (isStr) null else asLong(v), null,
-            if (isStr) v.toString else null, null)
-        }
-      }
-      bloomCols.foreach { c =>
-        val bytes = new Array[Byte](bloomBits / 8)
-        var any = false
-        (0 until bloomHashes).foreach { i =>
-          r.getAs[scala.collection.Seq[Int]](s"__b${i}_$c").foreach { p =>
-            bytes(p / 8) = (bytes(p / 8) | (1 << (p % 8))).toByte
-            any = true
-          }
-        }
-        // a file whose bloom column is entirely null emits NO __bloom
-        // row (the dedicated builder's exact output: explode+filter saw
-        // zero positions for it) — the file is then KEPT on point
-        // lookups, byte-identical stats either way
-        if (any)
-          rows += statsRow(file, s"__bloom:$c",
-            bloomBits.toLong, bloomHashes.toLong,
-            bytes.map("%02x".format(_)).mkString, null)
-      }
-      if (bucketClean) bucketO.foreach { case (k, n) =>
-        val lo = r.getAs[Any]("__blo")
-        rows += statsRow(file, s"__bucket:$k:$n",
-          asLong(lo), asLong(lo), null, null)
-      }
-      if (ptimeClean) ptime.foreach { case (c, u) =>
-        val lo = r.getAs[Any]("__plo")
-        rows += statsRow(file, s"__ptime:$c:$u",
-          asLong(lo), asLong(lo), null, null)
-      }
-      if (identClean) ident.foreach { case (c, w) =>
-        val isStr = schema(c).dataType == StringType
-        val lo = r.getAs[Any]("__ilo")
-        val spec = w.fold(s"__ident:$c")(wd => s"__trunc:$c:$wd")
-        rows += statsRow(file, spec,
-          if (isStr) null else asLong(lo), if (isStr) null else asLong(lo),
-          if (isStr) lo.toString else null, if (isStr) lo.toString else null)
-      }
-      hllCols.foreach { c =>
-        rows += statsRow(file, s"__hll:$c",
-          null, null, r.getAs[String](s"__h_$c"), null)
-        rows += statsRow(file, s"__nulls:$c",
-          asLong(r.getAs[Any](s"__n_$c")), null, null, null)
-      }
-    }
-    rows.toSeq
-  }
-
-
-
-
-  /** Publish with zone maps AND per-file bloom filters (see
-    * [[bloomStats]]): `bloomCols` get probabilistic point-lookup
-    * skipping for high-cardinality keys where a dictionary would
-    * overflow and a hash layout blinds the min/max. */
-  def publishWithBloom(df: DataFrame, root: String, epoch: Int,
-                       statsCols: Seq[String], bloomCols: Seq[String],
-                       bloomBits: Int = 16384, bloomHashes: Int = 5,
-                       txn: Option[Txn] = None): Int =
-    commitStaged(df.sparkSession,
-      stage(df, root, epoch, statsCols, unique = false, Nil, 256,
-        bloomCols, bloomBits, bloomHashes), txn)
-
   /** The committed zone-map stats table of `epoch`:
     * (file, col, lo_long, hi_long, lo_str, hi_str). */
   def statsTable(spark: SparkSession, root: String, epoch: Int): DataFrame = {
@@ -2154,11 +1862,11 @@ object ManifestSink {
     import org.apache.spark.sql.functions.col
     val cur = currentEpoch(spark, root)
     val next = cur + 1
-    publishWithStats(
+    publish(
       read(spark, root)
         .repartitionByRange(numFiles, col(statsCols.head))
         .sortWithinPartitions(statsCols.head),
-      root, next, statsCols)
+      root, next, WriteSpec(statsCols))
     next
   }
 
@@ -2288,12 +1996,9 @@ object ManifestSink {
     // __bucket/__ptime rows, so the layout — and with it SPJ and exact
     // partition pruning — survives the rewrite (specs are stats-keyed
     // physical names, matching the physical-space rewrite)
-    val layoutB = bucketSpec(spark, root, cur).map(b => (b.keyCol, b.numBuckets))
-    val layoutT = ptimeSpec(spark, root, cur).map(t => (t.col, t.unit))
-    val layoutI = identSpec(spark, root, cur).map(i => (i.col, i.width))
     graft.ops.PlanDump.dump("cow_survivors", survivors)
-    val fresh = stage(survivors, root, next, statsCols,
-      bucket = layoutB, ptime = layoutT, ident = layoutI)
+    val fresh = stage(survivors, root, next,
+      WriteSpec(statsCols, layout = committedLayout(spark, root, cur)))
     commitStaged(spark, fresh.copy(
       relFiles = (carried ++ fresh.relFiles).sorted,
       stats = Some(carriedStats ++ fresh.stats.getOrElse(Nil)),
@@ -2483,47 +2188,34 @@ object ManifestSink {
     * files per key.) Returns `df` unchanged when the base has no
     * layout. */
   def layoutForBase(spark: SparkSession, root: String, baseEpoch: Int,
-                    df: DataFrame): DataFrame = {
-    val bs = bucketSpec(spark, root, baseEpoch)
-    val ts = ptimeSpec(spark, root, baseEpoch)
-    val is = identSpec(spark, root, baseEpoch)
-    (bs, ts, is) match {
-      case (Some(b), Some(t), None) =>
-        composedLayout(df, t.col, t.unit, b.keyCol, b.numBuckets)
-      case (Some(b), None, None) => bucketLayout(df, b.keyCol, b.numBuckets)
-      case (None, Some(t), None) => timeLayout(df, t.col, t.unit)
-      case (None, None, Some(i)) => identLayout(df, i.col, i.width)
-      case (Some(b), None, Some(i)) =>
-        identPairLayout(df, i.col, i.width,
-          bucketIdCol(b.keyCol, b.numBuckets), b.keyCol, sortIdentFirst = true)
-      case (None, Some(t), Some(i)) =>
-        identPairLayout(df, i.col, i.width,
-          timeOrdCol(org.apache.spark.sql.functions.col(t.col),
-            df.schema(t.col).dataType, t.unit), t.col, sortIdentFirst = false)
+                    df: DataFrame): DataFrame =
+    layOut(df, committedLayout(spark, root, baseEpoch))
+
+  /** The layout `epoch` commits for its whole manifest: each transform
+    * whose rows cover every file ([[bucketSpec]], [[ptimeSpec]],
+    * [[identSpec]]; metadata-only). */
+  def committedLayout(spark: SparkSession, root: String, epoch: Int): LayoutDecl =
+    LayoutDecl(bucketSpec(spark, root, epoch).map(b => (b.keyCol, b.numBuckets)),
+      ptimeSpec(spark, root, epoch).map(t => (t.col, t.unit)),
+      identSpec(spark, root, epoch).map(i => (i.col, i.width)))
+
+  /** `df` placed so each output file holds one value of `layout`'s
+    * transforms (one of the six supported compositions; `df` itself
+    * for none). */
+  private def layOut(df: DataFrame, layout: LayoutDecl): DataFrame =
+    (layout.bucket, layout.ptime, layout.ident) match {
+      case (Some((k, n)), Some((c, u)), None) => composedLayout(df, c, u, k, n)
+      case (Some((k, n)), None, None) => bucketLayout(df, k, n)
+      case (None, Some((c, u)), None) => timeLayout(df, c, u)
+      case (None, None, Some((c, w))) => identLayout(df, c, w)
+      case (Some((k, n)), None, Some((c, w))) =>
+        identPairLayout(df, c, w, bucketIdCol(k, n), k, sortIdentFirst = true)
+      case (None, Some((tc, u)), Some((c, w))) =>
+        identPairLayout(df, c, w,
+          timeOrdCol(org.apache.spark.sql.functions.col(tc),
+            df.schema(tc).dataType, u), tc, sortIdentFirst = false)
       case _ => df
     }
-  }
-
-  /** Layout stats rows for replace-groups REPLACEMENT files — the
-    * commit half of layout-preserving CoW: one `__bucket` / `__ptime`
-    * row per staged file under the current epoch's spec(s), emitted
-    * only when every staged file verifies single-key (lenient — a
-    * caller that staged key-mixed files gets no rows and the table
-    * degrades honestly, exactly the pre-r17 contract). */
-  private def replacementLayoutStats(spark: SparkSession, root: String,
-                                     cur: Int, relFiles: Seq[String]): Seq[org.apache.spark.sql.Row] = {
-    if (relFiles.isEmpty) return Nil
-    // spec detection is metadata-only; the verification scan of the
-    // replacement files then runs ONCE for every present flavor (the
-    // per-flavor lenient drop preserves partial coverage exactly as
-    // the three dedicated passes did)
-    val b = bucketSpec(spark, root, cur).map(s => (s.keyCol, s.numBuckets))
-    val t = ptimeSpec(spark, root, cur).map(s => (s.col, s.unit))
-    val i = identSpec(spark, root, cur).map(s => (s.col, s.width))
-    if (b.isEmpty && t.isEmpty && i.isEmpty) Nil
-    else fusedStats(spark, root, relFiles, statsCols = Nil,
-      bucketO = b, ptime = t, ident = i, lenientLayout = true)
-  }
 
   /** Collapse a publishing branch's STAGED delete vectors into ONE
     * vector scoped exactly at `target.epoch + 1` (round 18, clearing
@@ -2574,12 +2266,12 @@ object ManifestSink {
       merge(del, target.epoch + 1) ++ merge(upd, target.epoch))
   }
 
-  /** A declared layout triple (bucket, time, identity/truncate) — the
-    * shape [[stage]] takes as three parameters, bundled for callers
-    * that thread it through commits. */
-  final case class LayoutDecl(bucket: Option[(String, Int)],
-                              ptime: Option[(String, String)],
-                              ident: Option[(String, Option[Int])]) {
+  /** A partition layout: a bucket, time and identity/truncate
+    * transform, each optional — the catalog's `PARTITIONED BY`, or an
+    * epoch's committed layout ([[committedLayout]]). */
+  final case class LayoutDecl(bucket: Option[(String, Int)] = None,
+                              ptime: Option[(String, String)] = None,
+                              ident: Option[(String, Option[Int])] = None) {
     def specStrings: Set[String] =
       (bucket.map { case (c, n) => s"__bucket:$c:$n" } ++
         ptime.map { case (c, u) => s"__ptime:$c:$u" } ++
@@ -2593,14 +2285,17 @@ object ManifestSink {
     * `replaced` (rel paths) leave the manifest, every parquet file
     * under `stagedDirName` (already written by the caller's
     * distributed write, e.g. Spark's FileBatchWrite) enters it with
-    * fresh zone maps for the base epoch's stats columns, and every
-    * other file CARRIES with its stats rows as pure metadata (from
-    * [[SnapshotCache]], no stats read on a warm cache). The fresh zone
-    * maps are `freshZones`, the rows the caller's writers folded
-    * ([[graft.catalog.ZoneStatsTracker]], keyed by the staged rel
-    * paths; columns the base does not carry are dropped); only layout
-    * rows and a `declaredLayout` verification re-read the staged
-    * files ([[fusedStats]]). The
+    * fresh stats rows, and every other file CARRIES with its stats
+    * rows as pure metadata (from [[SnapshotCache]], no stats read on a
+    * warm cache). The fresh rows are `freshRows`, the ones the caller's
+    * writers folded ([[graft.catalog.WriterStatsTracker]], keyed by the
+    * staged rel paths): zone maps over the epoch's stats columns (the
+    * rest drop) and layout rows, so the commit never re-reads the
+    * staged files. Layout rows keep the spec covering the whole
+    * manifest, and with it the scan's `KeyGroupedPartitioning` and
+    * exact pruning: a replacement write folds the base's layout
+    * leniently (a key-mixed file drops that flavor), a placement under
+    * a declared spec (CONVERGE) strictly. The
     * caller's scan/write must have run against `baseEpoch`; if the
     * table advanced meanwhile the commit fails with a retryable
     * [[ManifestConflictException]] (optimistic concurrency — the
@@ -2617,8 +2312,7 @@ object ManifestSink {
                           txn: Option[Txn] = None,
                           appendGuard: Option[(Int, Set[String]) => Option[String]] = None,
                           reaudit: Option[() => Unit] = None,
-                          declaredLayout: Option[LayoutDecl] = None,
-                          freshZones: Seq[org.apache.spark.sql.Row] = Nil): Int = {
+                          freshRows: Seq[org.apache.spark.sql.Row] = Nil): Int = {
     // recursive: layout-preserving replacement writes stage into
     // partition subdirectories (one per layout value)
     def listStage(): Map[String, Long] =
@@ -2668,30 +2362,8 @@ object ManifestSink {
       // rows for the staged files over the same columns
       val carriedSet = carried.toSet
       val mergedStats = SnapshotCache.statRows(spark, root, cur).map { rows =>
-        val statsCols = statCols(spark, root, cur)
-        // layout-preserving CoW (VERDICT r16/r18): replacement
-        // files staged single-key (the layout write rotates per
-        // value) get their own layout rows, so the spec keeps
-        // covering the whole manifest and the scan keeps
-        // KeyGroupedPartitioning + exact pruning. A caller that
-        // placed the batch under an explicitly DECLARED spec (the
-        // scoped spec-evolution convergence — on a mixed-spec table
-        // no committed whole-table spec exists to infer from)
-        // passes it; verification is then STRICT (the files were
-        // just placed — a mixed-key file is a placement bug, not an
-        // honest degrade). Zone maps and the declared-layout rows
-        // fuse into ONE verification pass over the replacement
-        // batch (fusedStats); otherwise the zone maps are the
-        // writers' and only an inferred layout re-reads (lenient).
-        val freshAndLayout = declaredLayout match {
-          case Some(ld) if newRel.nonEmpty && !ld.isEmpty =>
-            fusedStats(spark, root, newRel, statsCols,
-              bucketO = ld.bucket, ptime = ld.ptime, ident = ld.ident)
-          case _ =>
-            keptZones(statsCols, freshZones) ++
-              replacementLayoutStats(spark, root, cur, newRel)
-        }
-        rows.toSeq.filter(r => carriedSet(r.getString(0))) ++ freshAndLayout
+        rows.toSeq.filter(r => carriedSet(r.getString(0))) ++
+          keptRows(statCols(spark, root, cur), freshRows)
       }
       val tableSchema = commitSchema(spark, root, cur)
       try {
@@ -2717,14 +2389,21 @@ object ManifestSink {
     result
   }
 
-  /** Writer-folded rows of fresh files ([[graft.catalog.ZoneStatsTracker]])
-    * restricted to the columns the epoch keeps zone maps for, plus
-    * their `__count` rows — none when it keeps none. */
-  private def keptZones(statsCols: Seq[String],
-                        freshZones: Seq[org.apache.spark.sql.Row]): Seq[org.apache.spark.sql.Row] = {
-    val keep = statsCols.toSet + "__count"
-    if (statsCols.isEmpty) Nil else freshZones.filter(r => keep(r.getString(1)))
+  /** Writer-folded rows of fresh files ([[graft.catalog.WriterStatsTracker]])
+    * that an epoch keeping zone maps over `statsCols` commits: the zone
+    * maps of those columns plus the `__count` rows (none when it keeps
+    * none), and every layout row. */
+  private def keptRows(statsCols: Seq[String],
+                       fresh: Seq[org.apache.spark.sql.Row]): Seq[org.apache.spark.sql.Row] = {
+    val keep = if (statsCols.isEmpty) Set.empty[String] else statsCols.toSet + "__count"
+    fresh.filter { r =>
+      val k = r.getString(1)
+      keep(k) || LayoutRowKey.findPrefixOf(k).isDefined
+    }
   }
+
+  /** The stats keys of layout rows. */
+  private[graft] val LayoutRowKey = "^__(bucket|ptime|ident|trunc):".r
 
   /** Every committed stats parquet's schema: one row per (file, stat
     * key). Reads pin it, so a cold stats load never infers footers. */
@@ -2983,7 +2662,7 @@ object ManifestSink {
     * scoped DV discipline makes the delta files immune to their own
     * vector: they commit at epoch N while `dv-N` hides only in files
     * committed at epochs < N. The delta files' zone maps are
-    * `freshZones`, folded by the caller's writers (keyed by staged rel
+    * `freshRows`, folded by the caller's writers (keyed by staged rel
     * path); every carried file keeps its cached rows. Returns the new
     * epoch. */
   def commitMorDelta(spark: SparkSession, root: String, baseEpoch: Int,
@@ -2993,7 +2672,7 @@ object ManifestSink {
                      txn: Option[Txn] = None,
                      appendGuard: Option[(Int, Set[String]) => Option[String]] = None,
                      reaudit: Option[() => Unit] = None,
-                     freshZones: Seq[org.apache.spark.sql.Row] = Nil): Int = {
+                     freshRows: Seq[org.apache.spark.sql.Row] = Nil): Int = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val f = fs(spark, rootPath)
     def listDir(name: String, suffix: String): Map[String, Long] = {
@@ -3054,7 +2733,7 @@ object ManifestSink {
       val carried = entries.map(_._1)
       val deltaRel = deltaSizes0.keys.toSeq.sorted
       val mergedStats = SnapshotCache.statRows(spark, root, cur).map(
-        _.toSeq ++ keptZones(statCols(spark, root, cur), freshZones))
+        _.toSeq ++ keptRows(statCols(spark, root, cur), freshRows))
       try {
         commitStaged(spark, Staged(root, next, token,
           (carried ++ deltaRel).sorted, mergedStats,

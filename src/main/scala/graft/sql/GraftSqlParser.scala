@@ -309,8 +309,8 @@ object GraftSqlParser {
             .sortWithinPartitions("__z")
             .drop("__z")
           val n = cur + 1
-          ManifestSink.publishWithStats(laid, path, n,
-            (zcols ++ existing).distinct)
+          ManifestSink.publish(laid, path, n,
+            ManifestSink.WriteSpec((zcols ++ existing).distinct))
           n
         } else {
           val cols = clusterBy.getOrElse {
@@ -509,8 +509,9 @@ object GraftSqlParser {
       val before = ManifestSink.manifestFiles(spark, path, cur).size
       val existing = ManifestSink.statCols(spark, path, cur)
       val next = cur + 1
-      ManifestSink.publishBucketed(ManifestSink.read(spark, path), path, next,
-        keyCol, buckets, (keyCol +: existing).distinct)
+      ManifestSink.publish(ManifestSink.read(spark, path), path, next,
+        ManifestSink.WriteSpec((keyCol +: existing).distinct,
+          layout = ManifestSink.LayoutDecl(bucket = Some((keyCol, buckets)))))
       // future INSERTs through the catalog keep the layout. A table
       // declares ONE layout, and the swap is crash-ordered: the OLD
       // sidecar deletes FIRST, so a crash between the two steps
@@ -554,14 +555,9 @@ object GraftSqlParser {
       // into the COMPOSED spec (one file per (ordinal, bucket) pair);
       // without it, the plain time layout — either way one maintenance
       // epoch, data files rewritten once
-      bucket match {
-        case Some((k, n)) =>
-          ManifestSink.publishComposed(ManifestSink.read(spark, path),
-            path, next, col, unit, k, n, (col +: k +: existing).distinct)
-        case None =>
-          ManifestSink.publishTimePartitioned(ManifestSink.read(spark, path),
-            path, next, col, unit, (col +: existing).distinct)
-      }
+      ManifestSink.publish(ManifestSink.read(spark, path), path, next,
+        ManifestSink.WriteSpec((col +: bucket.map(_._1).toSeq ++: existing).distinct,
+          layout = ManifestSink.LayoutDecl(bucket, Some((col, unit)))))
       // crash-ordered layout swap (see OptimizeBucketCommand): the
       // old bucket sidecar deletes BEFORE the new sidecars land
       val p = new org.apache.hadoop.fs.Path(path, graft.catalog.GraftTable.PtimeFile)
@@ -604,8 +600,7 @@ object GraftSqlParser {
       attr("stale_files", IntegerType), attr("carried_files", IntegerType))
     override def run(spark: SparkSession): Seq[Row] = {
       val tbl = new graft.catalog.GraftTable(path, path, None)
-      val decl = ManifestSink.LayoutDecl(tbl.declaredBucket,
-        tbl.declaredPtime, tbl.declaredIdent)
+      val decl = tbl.declaredLayout
       require(!decl.isEmpty,
         s"no declared partition spec on $path to converge to; " +
           "ALTER TABLE ... SET PARTITION SPEC first")
@@ -621,7 +616,7 @@ object GraftSqlParser {
       // metadata the honest mixed-state contract already maintains
       val fileSpecs: Map[String, Set[String]] = graft.sink.SnapshotCache
         .statRows(spark, path, cur).toSeq.flatten
-        .filter(_.getString(1).matches("^__(bucket|ptime|ident|trunc):.*"))
+        .filter(r => ManifestSink.LayoutRowKey.findPrefixOf(r.getString(1)).isDefined)
         .groupBy(_.getString(0))
         .view.mapValues(_.map(_.getString(1)).toSet).toMap
       val want = decl.specStrings
@@ -633,14 +628,17 @@ object GraftSqlParser {
       val batch = ManifestSink.dvScopedScan(spark, path, cur, stale,
         rels => spark.read.schema(schema)
           .parquet(rels.map(r => s"$path/$r"): _*))
+      // ONE write: the writers fold the zone maps the epoch keeps and
+      // the declared layout's rows, strictly (the rows were just
+      // placed — a mixed-key file is a placement bug)
       val staged = ManifestSink.stage(batch, path, cur + 1,
-        statsCols = Nil, unique = true, bucket = decl.bucket,
-        ptime = decl.ptime, ident = decl.ident)
+        ManifestSink.WriteSpec(ManifestSink.statCols(spark, path, cur), layout = decl),
+        unique = true)
       // a fully-DV-hidden stale population stages ZERO files — the
       // commit still drops the stale inputs (the dir just lists empty)
       val stagedDir = s"data-epoch=${cur + 1}-a${staged.token}"
       val next = ManifestSink.commitReplaceGroups(spark, path, cur,
-        stagedDir, stale.toSet, declaredLayout = Some(decl))
+        stagedDir, stale.toSet, freshRows = staged.stats.getOrElse(Nil))
       Seq(Row(path, next, stale.size, all.size - stale.size))
     }
   }

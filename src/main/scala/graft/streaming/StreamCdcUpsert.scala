@@ -61,10 +61,10 @@ object StreamCdcUpsert {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt_").toString
 
     // base table: the % 4 == 0 class, clustered for zone maps
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.filter(col("event_id") % 4 === 0)
         .repartitionByRange(8, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
 
     // batch 0: update a narrow key range of the base + insert a new class
     val batchA = ev.filter(col("event_id") % 4 === 0 && col("event_id") < 300)

@@ -47,9 +47,9 @@ object StreamIvm {
     val root = java.nio.file.Files.createTempDirectory("graft_sivm_").toString
     val view = java.nio.file.Files.createTempDirectory("graft_sivm_view_").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sivm_ckpt_").toString
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.repartitionByRange(8, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
 
     val appId = "ivm_stream"
     val attempts = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -50,7 +50,7 @@ object StreamMedallion {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_medallion_ckpt_").toString
 
     def slice(r: Int) = ev.filter(col("event_id") % 3 === r)
-    ManifestSink.publishAppend(slice(0), bronze, 1)
+    ManifestSink.publish(slice(0), bronze, 1, append = true)
 
     val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val appId = "graft_medallion_demo"
@@ -68,12 +68,12 @@ object StreamMedallion {
     val q1 = start()
     try {
       q1.processAllAvailable() // batch 0: initial snapshot of epoch 1
-      ManifestSink.publishAppend(slice(1), bronze, 2)
+      ManifestSink.publish(slice(1), bronze, 2, append = true)
       q1.processAllAvailable() // batch 1: epoch 2's delta only
     } finally q1.stop()
     // epoch 3 lands while no query runs; the checkpoint-restarted
     // query must resume at offset 2 and read ONLY epoch 3's files
-    ManifestSink.publishAppend(slice(2), bronze, 3)
+    ManifestSink.publish(slice(2), bronze, 3, append = true)
     val q2 = start()
     try q2.processAllAvailable() finally q2.stop()
 

@@ -36,7 +36,7 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Both entry points take extra write stats trackers: they see every
   * file the writers open and every row they write into it (the
-  * writer-side zone maps, [[graft.catalog.ZoneStatsTracker]]). */
+  * writer-side stats, [[graft.catalog.WriterStatsTracker]]). */
 object GraftWriteBridge {
 
   /** `df.write.mode("overwrite").parquet(path)` through Spark's own

@@ -72,9 +72,9 @@ class AdviceR12Spec extends SparkTestBase {
       val df = rows.toDF("id", "t")
       assert(df.schema("t").dataType ==
         org.apache.spark.sql.types.TimestampNTZType)
-      ManifestSink.publishWithStats(
+      ManifestSink.publish(
         df.repartitionByRange(4, col("t")).sortWithinPartitions("t"),
-        root, 1, Seq("t"))
+        root, 1, ManifestSink.WriteSpec(Seq("t")))
       // committed bounds must be the NTZ internal micros VERBATIM
       val utc = java.time.ZoneOffset.UTC
       def micros(h: Int): Long = java.time.LocalDateTime.of(2024, 3, 1, 0, 0)

@@ -116,7 +116,7 @@ class AdviceR13Spec extends SparkTestBase {
     // (VERDICT r14 #5), so the simulated REPLACE lands on whatever
     // epoch follows the current one
     val e2 = ManifestSink.currentEpoch(spark, root) + 1
-    ManifestSink.publishWithStats(df2, root, e2, Seq("id", "x"))
+    ManifestSink.publish(df2, root, e2, ManifestSink.WriteSpec(Seq("id", "x")))
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val markerIn = fs.open(new org.apache.hadoop.fs.Path(root, s"commit-$e2"))

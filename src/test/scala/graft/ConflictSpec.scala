@@ -192,7 +192,7 @@ class ConflictSpec extends SparkTestBase {
     // stage an append for epoch 2, then lose the race to a SQL INSERT
     val staged = ManifestSink.stageAppend(
       (200L until 210L).map(i => (i, i * 2L)).toDF("k", "v"), root, 2,
-      Seq("k"), unique = true)
+      ManifestSink.WriteSpec(Seq("k")), unique = true)
     val freshRels = staged.relFiles.filter(_.contains(s"-a${staged.token}/"))
     assert(freshRels.nonEmpty)
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -220,7 +220,7 @@ class ConflictSpec extends SparkTestBase {
     // and a schema CHANGE between stage and commit refuses the rebase
     val staged2 = ManifestSink.stageAppend(
       (300L until 310L).map(i => (i, i * 2L)).toDF("k", "v"), root, 4,
-      Seq("k"), unique = true)
+      ManifestSink.WriteSpec(Seq("k")), unique = true)
     spark.sql(s"ALTER TABLE graft.`$root` ADD COLUMNS (extra LONG)")
     intercept[ManifestSink.ManifestConflictException] {
       ManifestSink.commitStaged(spark, staged2)
@@ -240,9 +240,10 @@ class ConflictSpec extends SparkTestBase {
       // the ADD itself now commits a carry epoch (VERDICT r14 #5), so
       // the racing data append lands on whatever epoch follows it
       spark.sql(s"ALTER TABLE graft.`$root` ADD CONSTRAINT vcap CHECK (v < 5000)")
-      ManifestSink.publishAppendWithStats(
+      ManifestSink.publish(
         Seq((500L, 1000L)).toDF("k", "v"), root,
-        ManifestSink.currentEpoch(spark, root) + 1, Seq("k")): Unit
+        ManifestSink.currentEpoch(spark, root) + 1,
+          ManifestSink.WriteSpec(Seq("k")), append = true): Unit
     })
     val e = try intercept[Exception] {
       spark.sql(s"INSERT INTO graft.`$root` VALUES (600, 999999)")

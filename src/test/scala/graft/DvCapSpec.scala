@@ -20,8 +20,9 @@ class DvCapSpec extends SparkTestBase {
 
   test("deleteMor refuses a key set above spark.graft.dv.maxKeys, table unmoved") {
     val root = tmpDir("dvcap_") + "/t"
-    ManifestSink.publishWithStats(
-      (0L until 100L).map(i => (i, i * 2)).toDF("k", "v"), root, 1, Seq("k"))
+    ManifestSink.publish(
+      (0L until 100L).map(i => (i, i * 2)).toDF("k", "v"), root, 1,
+        ManifestSink.WriteSpec(Seq("k")))
     spark.conf.set("spark.graft.dv.maxKeys", "5")
     try {
       val e = intercept[IllegalArgumentException] {

@@ -1194,9 +1194,9 @@ class GraftCatalogSpec extends SparkTestBase {
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
       .filter(col("event_id") < 60)
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     val all = ev.count()
     ManifestSink.deleteMor(spark, root,
       ev.filter(col("event_id") < 5).select(col("event_id")), "event_id")
@@ -1235,9 +1235,9 @@ class GraftCatalogSpec extends SparkTestBase {
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
       .filter(col("event_id") < 60)
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     val all = ev.count()
     // epoch 2: keys 0-4 hidden by a merge-on-read delete vector
     ManifestSink.deleteMor(spark, root,
@@ -1311,9 +1311,9 @@ class GraftCatalogSpec extends SparkTestBase {
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
       .filter(col("event_id") < 60)
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     val all = ev.count()
     // epoch 2: dv-2 hides keys 0-4 (scope: files committed before 2)
     ManifestSink.deleteMor(spark, root,
@@ -1403,9 +1403,9 @@ class GraftCatalogSpec extends SparkTestBase {
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
       .filter(col("event_id") < 60)
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id", "user_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id", "user_id")))
     ManifestSink.deleteMor(spark, root,
       ev.filter(col("event_id") < 5).select(col("event_id")), "event_id")
     // epoch 3: a fresh (DV-exempt) file with distinctive key ranges

@@ -15,10 +15,11 @@ class ManifestSafetySpec extends SparkTestBase {
   test("vacuum never sweeps an in-flight writer's above-current metadata") {
     val root = tmpDir("graft_vacrace_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
-    ManifestSink.publishWithStats(
-      ev.filter(col("event_id") < 20), root, 1, Seq("event_id"))
-    ManifestSink.publishWithStats(
-      ev.filter(col("event_id") >= 20 && col("event_id") < 40), root, 2, Seq("event_id"))
+    ManifestSink.publish(
+      ev.filter(col("event_id") < 20), root, 1, ManifestSink.WriteSpec(Seq("event_id")))
+    ManifestSink.publish(
+      ev.filter(col("event_id") >= 20 && col("event_id") < 40), root, 2,
+        ManifestSink.WriteSpec(Seq("event_id")))
     // in-flight writer: epoch 3 fully staged (manifest + stats + data
     // written) but the CAS rename has not happened yet — exactly the
     // window commitStaged leaves open. A vacuum racing it must not
@@ -27,7 +28,7 @@ class ManifestSafetySpec extends SparkTestBase {
     // with no metadata — table unreadable (ADVICE r11, high).
     val inflight = ManifestSink.stage(
       ev.filter(col("event_id") >= 40 && col("event_id") < 60), root, 3,
-      Seq("event_id"), unique = true)
+      ManifestSink.WriteSpec(Seq("event_id")), unique = true)
     val hfs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // emulate commitStaged's window: manifest + stats already on disk,
@@ -65,9 +66,9 @@ class ManifestSafetySpec extends SparkTestBase {
     val root = tmpDir("graft_cowstr_")
     val base = Seq(("aa", 1L), ("ab", 2L), ("ac", 3L), ("mm", 4L),
       ("mn", 5L), ("xx", 6L), ("xy", 7L)).toDF("k", "v")
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       base.repartitionByRange(3, col("k")).sortWithinPartitions("k"),
-      root, 1, Seq("k"))
+      root, 1, ManifestSink.WriteSpec(Seq("k")))
     // replace one key, insert one brand-new key: before the typed
     // overlap fix, `touched` was empty for string keys (the join
     // compared against the all-null long bounds), so the old "ab" row
@@ -106,8 +107,10 @@ class ManifestSafetySpec extends SparkTestBase {
     val emoji = "😀"
     val hiCap = "􏿿" // U+10FFFF
     val lo = "�"
-    ManifestSink.publishWithStats(Seq("a", "b").toDF("s").coalesce(1), root, 1, Seq("s"))
-    ManifestSink.publishAppendWithStats(Seq(emoji).toDF("s").coalesce(1), root, 2, Seq("s"))
+    ManifestSink.publish(Seq("a", "b").toDF("s").coalesce(1), root, 1,
+      ManifestSink.WriteSpec(Seq("s")))
+    ManifestSink.publish(Seq(emoji).toDF("s").coalesce(1), root, 2,
+      ManifestSink.WriteSpec(Seq("s")), append = true)
     assert(emoji < lo, "precondition: Java order puts the emoji below U+FFFD")
     // explicit-evidence API: the emoji file must be HIT, not pruned
     val (pruned, hit, total) =
@@ -130,7 +133,7 @@ class ManifestSafetySpec extends SparkTestBase {
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
       .filter(col("event_id") < 60)
-    ManifestSink.publishWithStats(ev, root, 1, Seq("event_id"))
+    ManifestSink.publish(ev, root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     IncrementalView.refresh(spark, root, view, "event_id", "user_id", "value")
     val v1 = ManifestSink.currentEpoch(spark, view)
     val snap = ManifestSink.read(spark, view).orderBy("user_id").collect().toSeq
@@ -181,7 +184,7 @@ class ManifestSafetySpec extends SparkTestBase {
     import spark.implicits._
     val root = tmpDir("lease_vac_")
     (1 to 5).foreach { e =>
-      ManifestSink.publishAppend(Seq((e.toLong, s"v$e")).toDF("k", "v"), root, e)
+      ManifestSink.publish(Seq((e.toLong, s"v$e")).toDF("k", "v"), root, e, append = true)
     }
     // hold the lease ourselves: a concurrent vacuum must refuse
     val holding = ManifestSink.withMaintLease(spark, root) {
@@ -237,7 +240,7 @@ class ManifestSafetySpec extends SparkTestBase {
     // then the compaction's commit must CONFLICT (not clobber)
     val staged = ManifestSink.stage(
       ManifestSink.read(spark, root).repartitionByRange(2, col("k"))
-        .sortWithinPartitions("k"), root, 2, Seq("k"), unique = true)
+        .sortWithinPartitions("k"), root, 2, ManifestSink.WriteSpec(Seq("k")), unique = true)
     spark.sql(s"INSERT INTO graft.`$root` VALUES (1000, 9.0)")
     intercept[ManifestSink.ManifestConflictException] {
       ManifestSink.commitStaged(spark, staged)

@@ -16,9 +16,9 @@ class MvRouteSpec extends SparkTestBase {
     val root = tmpDir("graft_mvspec_")
     val view = tmpDir("graft_mvspec_view_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("user_id"), col("value"))
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     IncrementalView.refresh(spark, root, view, "event_id", "user_id", "value")
     (root, view)
   }

@@ -441,9 +441,9 @@ class PlanShapeSpec extends SparkTestBase {
     // range exchange, no hash exchange — clustering without shuffling
     // twice
     val root = tmpDir("graft_planshape_compact_")
-    graft.sink.ManifestSink.publishWithStats(
+    graft.sink.ManifestSink.publish(
       Tables.events(spark, sf).select("event_id", "value"),
-      root, 1, Seq("event_id"))
+      root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id")))
     val rewrite = graft.sink.ManifestSink.read(spark, root)
       .repartitionByRange(4, org.apache.spark.sql.functions.col("event_id"))
       .sortWithinPartitions("event_id")
@@ -491,9 +491,9 @@ class PlanShapeSpec extends SparkTestBase {
     val root = tmpDir("graft_fidx_spec_")
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("value"))
-    graft.sink.ManifestSink.publishWithStats(
+    graft.sink.ManifestSink.publish(
       ev.repartitionByRange(8, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id", "event_type"))
+      root, 1, graft.sink.ManifestSink.WriteSpec(Seq("event_id", "event_type")))
     val t = spark.read.format("graft-manifest").option("root", root).load()
     val total = graft.sink.ManifestSink.manifestFiles(spark, root, 1).size
 

@@ -38,40 +38,43 @@ class PrunedReadSpec extends SparkTestBase {
       .toDF("k", "u", "s")
     // long range over range-clustered zone maps
     val range = tmpDir("pread_range_")
-    ManifestSink.publishWithStats(
-      base.repartitionByRange(8, col("k")).sortWithinPartitions("k"), range, 1, Seq("k"))
+    ManifestSink.publish(
+      base.repartitionByRange(8, col("k")).sortWithinPartitions("k"), range, 1,
+        ManifestSink.WriteSpec(Seq("k")))
     assertSameSelection(range, col("k").between(100L, 149L), "k BETWEEN 100 AND 149")
     // string range whose bounds straddle the UTF-16 / UTF-8 order split
     val str = tmpDir("pread_str_")
     val emoji = "😀"
     val hiCap = "􏿿"
-    ManifestSink.publishWithStats(Seq("a", "b").toDF("s").coalesce(1), str, 1, Seq("s"))
-    ManifestSink.publishAppendWithStats(Seq(emoji).toDF("s").coalesce(1), str, 2, Seq("s"))
+    ManifestSink.publish(Seq("a", "b").toDF("s").coalesce(1), str, 1,
+      ManifestSink.WriteSpec(Seq("s")))
+    ManifestSink.publish(Seq(emoji).toDF("s").coalesce(1), str, 2,
+      ManifestSink.WriteSpec(Seq("s")), append = true)
     assertSameSelection(str, col("s").between("�", hiCap),
       s"s BETWEEN '�' AND '$hiCap'")
     // dictionary point on a hash layout the zone maps cannot prune
     val dict = tmpDir("pread_dict_")
-    ManifestSink.publishWithDict(base.repartition(8, col("u")), dict, 1,
-      statsCols = Seq("u"), dictCols = Seq("u"))
+    ManifestSink.publish(base.repartition(8, col("u")), dict, 1,
+      ManifestSink.WriteSpec(statsCols = Seq("u"), dictCols = Seq("u")))
     assertSameSelection(dict, col("u") === 13L, "u = 13")
     // bloom point on the same kind of layout
     val bloom = tmpDir("pread_bloom_")
-    ManifestSink.publishWithBloom(base.repartition(8, col("u")), bloom, 1,
-      statsCols = Seq("k"), bloomCols = Seq("k"))
+    ManifestSink.publish(base.repartition(8, col("u")), bloom, 1,
+      ManifestSink.WriteSpec(statsCols = Seq("k"), bloomCols = Seq("k")))
     assertSameSelection(bloom, col("k") === 242L, "k = 242")
     // bucket point: the keyed (storage-partitioned) planner's selection
     val bucket = tmpDir("pread_bucket_")
-    ManifestSink.publishBucketed(base, bucket, 1, keyCol = "k", numBuckets = 4,
-      statsCols = Seq("k"))
+    ManifestSink.publish(base, bucket, 1, ManifestSink.WriteSpec(Seq("k"),
+      layout = ManifestSink.LayoutDecl(bucket = Some(("k", 4)))))
     assertSameSelection(bucket, col("k") === 7L, "k = 7")
   }
 
   test("readPruned reads under the committed schema: renamed columns prune, dropped ones are gone") {
     val root = tmpDir("pread_map_")
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       (0 until 400).map(i => (i.toLong, s"v$i")).toDF("k", "v")
         .repartitionByRange(8, col("k")).sortWithinPartitions("k"),
-      root, 1, Seq("k"))
+      root, 1, ManifestSink.WriteSpec(Seq("k")))
     ManifestSink.renameColumn(spark, root, "k", "k2")
     val (renamed, hit, total) = ManifestSink.readPruned(spark, root, col("k2").between(100L, 149L))
     assert(hit >= 1 && hit < total, s"stats keyed by the physical name must still prune: $hit/$total")

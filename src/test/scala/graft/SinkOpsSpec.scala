@@ -196,9 +196,9 @@ class SinkOpsSpec extends SparkTestBase {
     import graft.sink.ManifestSink
     val root = tmpDir("graft_skip_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.repartitionByRange(8, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     // a narrow range hits a strict subset of the 8 clustered files
     val (df, hit, total) = ManifestSink.readPruned(spark, root, col("event_id").between(100L, 199L))
     assert(total == 8, s"expected 8 data files, got $total")
@@ -228,10 +228,10 @@ class SinkOpsSpec extends SparkTestBase {
     val root = tmpDir("graft_mcompact_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
     for ((m, e) <- Seq(0, 1, 2).zip(Seq(1, 2, 3)))
-      ManifestSink.publishAppendWithStats(
+      ManifestSink.publish(
         ev.filter(col("event_id") % 3 === m)
           .repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-        root, e, Seq("event_id"))
+        root, e, ManifestSink.WriteSpec(Seq("event_id")), append = true)
     val before = ManifestSink.manifestFiles(spark, root, 3)
     val preContent = ManifestSink.read(spark, root)
       .select("event_id").as[Long].collect().sorted.toSeq
@@ -266,8 +266,10 @@ class SinkOpsSpec extends SparkTestBase {
     val b = ev.filter(col("event_id") >= 40 && col("event_id") < 90)
     // interleaved: both stage epoch 1 (attempt-unique data dirs — no
     // data clobber either), B commits first and wins
-    val stagedA = ManifestSink.stage(a, root, 1, Seq("event_id"), unique = true)
-    val stagedB = ManifestSink.stage(b, root, 1, Seq("event_id"), unique = true)
+    val stagedA = ManifestSink.stage(a, root, 1,
+      ManifestSink.WriteSpec(Seq("event_id")), unique = true)
+    val stagedB = ManifestSink.stage(b, root, 1,
+      ManifestSink.WriteSpec(Seq("event_id")), unique = true)
     ManifestSink.commitStaged(spark, stagedB)
     val loser = intercept[ManifestSink.ManifestConflictException](
       ManifestSink.commitStaged(spark, stagedA))
@@ -293,7 +295,7 @@ class SinkOpsSpec extends SparkTestBase {
     // the loser retries against the NEXT epoch and succeeds
     ManifestSink.commitStaged(spark,
       ManifestSink.stageAppend(a, root, ManifestSink.currentEpoch(spark, root) + 1,
-        Seq("event_id"), unique = true))
+        ManifestSink.WriteSpec(Seq("event_id")), unique = true))
     assert(ManifestSink.read(spark, root).count() == a.count() + b.count())
   }
 
@@ -331,11 +333,11 @@ class SinkOpsSpec extends SparkTestBase {
       .select(col("event_id"), col("event_type"), col("value"))
     // three append batches, clustered on (event_type, event_id)
     for ((m, e) <- Seq(0, 1, 2).zip(Seq(1, 2, 3)))
-      ManifestSink.publishAppendWithStats(
+      ManifestSink.publish(
         ev.filter(col("event_id") % 3 === m)
           .repartitionByRange(4, col("event_type"), col("event_id"))
           .sortWithinPartitions("event_type", "event_id"),
-        root, e, Seq("event_type", "event_id"))
+        root, e, ManifestSink.WriteSpec(Seq("event_type", "event_id")), append = true)
     // STRING pruning bites and stays exact under the residual filter
     val (sdf, shit, stotal) = ManifestSink.readPruned(
       spark, root, col("event_type").between("click", "error"))
@@ -378,9 +380,9 @@ class SinkOpsSpec extends SparkTestBase {
     import graft.sink.ManifestSink
     val root = tmpDir("graft_cow_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.repartitionByRange(8, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     val m1 = ManifestSink.manifestFiles(spark, root, 1)
     val mtimes = m1.map(p => p -> new java.io.File(
       new org.apache.hadoop.fs.Path(p).toUri.getPath).lastModified()).toMap
@@ -437,9 +439,9 @@ class SinkOpsSpec extends SparkTestBase {
     import graft.sink.ManifestSink
     val root = tmpDir("graft_del_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.repartitionByRange(8, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     // narrow delete: most files carry, the range is gone, the rest intact
     val (e2, _, carried) = ManifestSink.deleteCow(spark, root,
       ev.filter(col("event_id").between(100, 199)).select(col("event_id")),
@@ -501,8 +503,8 @@ class SinkOpsSpec extends SparkTestBase {
     val root = tmpDir("graft_hist_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
     ManifestSink.publish(ev.filter(col("event_id") < 20), root, 1)
-    ManifestSink.publishAppend(ev.filter(col("event_id") >= 20 && col("event_id") < 40),
-      root, 2, txn = Some(ManifestSink.Txn("hist_app", 7L)))
+    ManifestSink.publish(ev.filter(col("event_id") >= 20 && col("event_id") < 40),
+      root, 2, append = true, txn = Some(ManifestSink.Txn("hist_app", 7L)))
     val h = ManifestSink.history(spark, root)
       .orderBy("epoch")
       .collect()
@@ -520,13 +522,14 @@ class SinkOpsSpec extends SparkTestBase {
     import graft.sink.ManifestSink
     val root = tmpDir("graft_cdf_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.filter(col("event_id") < 100)
         .repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     // epoch 2: append — the feed is exactly the batch, all inserts
-    ManifestSink.publishAppendWithStats(
-      ev.filter(col("event_id").between(100, 119)), root, 2, Seq("event_id"))
+    ManifestSink.publish(
+      ev.filter(col("event_id").between(100, 119)), root, 2,
+        ManifestSink.WriteSpec(Seq("event_id")), append = true)
     val e2 = ManifestSink.tableChanges(spark, root, "event_id", 1, 2).collect()
     assert(e2.length == 20 && e2.forall(_.getAs[String]("_change_type") == "insert"))
     // epoch 3: merge rewriting a narrow key range; an update whose
@@ -599,16 +602,16 @@ class SinkOpsSpec extends SparkTestBase {
     import graft.sink.ManifestSink
     val root = tmpDir("graft_dvroll_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.filter(col("event_id") < 100)
         .repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     // epoch 2: dv-2 hides 10-19; epoch 3: re-insert key 12 (exempt file)
     ManifestSink.deleteMor(spark, root,
       ev.filter(col("event_id").between(10, 19)).select(col("event_id")), "event_id")
-    ManifestSink.publishAppendWithStats(
+    ManifestSink.publish(
       spark.range(1).select(lit(12L).as("event_id"), lit(-9.0).as("value")),
-      root, 3, Seq("event_id"))
+      root, 3, ManifestSink.WriteSpec(Seq("event_id")), append = true)
     assert(ManifestSink.read(spark, root).count() == 91)
     // epoch 4: rollback to the DV epoch — the re-inserted file leaves,
     // the restored manifest's FILE EPOCHS must carry verbatim so dv-2
@@ -642,10 +645,10 @@ class SinkOpsSpec extends SparkTestBase {
     import graft.sink.ManifestSink
     val root = tmpDir("graft_mor_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.filter(col("event_id") < 100)
         .repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     val files1 = ManifestSink.manifestFiles(spark, root, 1)
     ManifestSink.deleteMor(spark, root,
       ev.filter(col("event_id").between(10, 19)).select(col("event_id")), "event_id")
@@ -668,8 +671,9 @@ class SinkOpsSpec extends SparkTestBase {
         ev.filter(col("event_id") === 5), "event_id", Seq("event_id"))
     }
     // an append CARRIES the DV by reference; vacuum must not sweep it
-    ManifestSink.publishAppendWithStats(
-      ev.filter(col("event_id").between(100, 119)), root, 4, Seq("event_id"))
+    ManifestSink.publish(
+      ev.filter(col("event_id").between(100, 119)), root, 4,
+        ManifestSink.WriteSpec(Seq("event_id")), append = true)
     assert(ManifestSink.commitDv(spark, root, 4) == ManifestSink.commitDv(spark, root, 3))
     ManifestSink.vacuum(spark, root, keep = 1)
     assert(ManifestSink.read(spark, root).count() == 89 + 20,
@@ -687,10 +691,10 @@ class SinkOpsSpec extends SparkTestBase {
     val root = tmpDir("graft_ivm_spec_")
     val view = tmpDir("graft_ivm_spec_view_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("user_id"), col("value"))
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.filter(col("event_id") < 200)
         .repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     IncrementalView.refresh(spark, root, view, "event_id", "user_id", "value")
     ManifestSink.mergeCow(spark, root,
       ev.filter(col("event_id") < 50)
@@ -721,8 +725,8 @@ class SinkOpsSpec extends SparkTestBase {
     import graft.sink.ManifestSink
     val root = tmpDir("graft_dict_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("user_id"), col("value"))
-    ManifestSink.publishWithDict(ev.repartition(8, col("user_id")), root, 1,
-      Seq("user_id"), Seq("user_id"))
+    ManifestSink.publish(ev.repartition(8, col("user_id")), root, 1,
+      ManifestSink.WriteSpec(Seq("user_id"), Seq("user_id")))
     val (df, hit, total) = ManifestSink.readPruned(spark, root, col("user_id") === 13L)
     assert(hit >= 1 && hit < total, s"dict must prune the hash layout: $hit/$total")
     assert(df.filter(col("user_id") === 13).count() ==
@@ -742,8 +746,8 @@ class SinkOpsSpec extends SparkTestBase {
     // the overflow on every non-empty file; any positive cap may
     // legitimately complete on low-cardinality files and prune)
     val root2 = tmpDir("graft_dict_spec2_")
-    ManifestSink.publishWithDict(ev.repartition(4, col("user_id")), root2, 1,
-      Seq("user_id"), Seq("user_id"), dictCap = 0)
+    ManifestSink.publish(ev.repartition(4, col("user_id")), root2, 1,
+      ManifestSink.WriteSpec(Seq("user_id"), Seq("user_id"), dictCap = 0))
     val (_, h2, _) = ManifestSink.readPruned(spark, root2, col("user_id") === 13L)
     val (_, z2, _) = ManifestSink.readPruned(spark, root2, col("user_id").between(13L, 13L))
     assert(h2 == z2, "overflowed dictionaries must never prune beyond the zone maps")
@@ -754,8 +758,8 @@ class SinkOpsSpec extends SparkTestBase {
     import graft.sink.ManifestSink
     val root = tmpDir("graft_bloom_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("user_id"), col("value"))
-    ManifestSink.publishWithBloom(ev.repartition(8, col("user_id")), root, 1,
-      statsCols = Seq("event_id"), bloomCols = Seq("event_id"))
+    ManifestSink.publish(ev.repartition(8, col("user_id")), root, 1,
+      ManifestSink.WriteSpec(statsCols = Seq("event_id"), bloomCols = Seq("event_id")))
     // zone maps are blind on this layout: every file's event_id range
     // spans the key space, so the range read keeps everything
     val (_, zHit, zTotal) = ManifestSink.readPruned(spark, root, col("event_id").between(424L, 424L))
@@ -792,14 +796,14 @@ class SinkOpsSpec extends SparkTestBase {
     import graft.sink.ManifestSink
     val root = tmpDir("graft_magg_spec_")
     val ev = Tables.events(spark, sf).select(col("event_id"), col("user_id"), col("value"))
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.filter(col("event_id") % 2 === 0)
         .repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
-    ManifestSink.publishAppendWithStats(
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
+    ManifestSink.publish(
       ev.filter(col("event_id") % 2 === 1)
         .repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id"),
-      root, 2, Seq("event_id"))
+      root, 2, ManifestSink.WriteSpec(Seq("event_id")), append = true)
     val out = ManifestSink.aggFromMetadata(spark, root, Seq("event_id"))
     val row = out.head()
     val want = ev.agg(count(lit(1)), min("event_id"), max("event_id")).head()
@@ -834,13 +838,13 @@ class SinkOpsSpec extends SparkTestBase {
       ev.select(col("event_id"), col("value")).filter(col("event_id") < 20), root, 1)
     // plain append rejects drift — evolution must be asked for
     intercept[IllegalArgumentException] {
-      ManifestSink.publishAppend(
+      ManifestSink.publish(
         ev.select(col("event_id"), col("value"), col("user_id"))
-          .filter(col("event_id").between(20, 29)), root, 2)
+          .filter(col("event_id").between(20, 29)), root, 2, append = true)
     }
-    ManifestSink.publishAppendEvolve(
+    ManifestSink.publish(
       ev.select(col("event_id"), col("value"), col("user_id"))
-        .filter(col("event_id").between(20, 29)), root, 2)
+        .filter(col("event_id").between(20, 29)), root, 2, evolve = true)
     val cur = ManifestSink.read(spark, root)
     assert(cur.schema.fieldNames.toSeq == Seq("event_id", "value", "user_id"))
     assert(cur.filter(col("event_id") < 20 && col("user_id").isNull).count() == 20,
@@ -851,9 +855,9 @@ class SinkOpsSpec extends SparkTestBase {
       Seq("event_id", "value"))
     // same-name type conflict is migration, not evolution — rejected
     intercept[IllegalArgumentException] {
-      ManifestSink.publishAppendEvolve(
+      ManifestSink.publish(
         ev.select(col("event_id"), col("value").cast("string"), col("user_id"))
-          .filter(col("event_id").between(30, 39)), root, 3)
+          .filter(col("event_id").between(30, 39)), root, 3, evolve = true)
     }
   }
 }

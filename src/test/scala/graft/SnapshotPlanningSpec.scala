@@ -19,9 +19,9 @@ class SnapshotPlanningSpec extends SparkTestBase {
   test("FileIndex construction performs zero per-file status RPCs; sizes byte-identical") {
     val root = tmpDir("snap_sz_")
     val df = (0 until 400).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       df.repartitionByRange(8, col("k")).sortWithinPartitions("k"),
-      root, 1, Seq("k"))
+      root, 1, ManifestSink.WriteSpec(Seq("k")))
     val before = ManifestFileIndex.legacyStatusRpcs.get()
     val idx = new ManifestFileIndex(spark, root, 1)
     assert(ManifestFileIndex.legacyStatusRpcs.get() == before,

@@ -243,7 +243,7 @@ class StreamSinkStatsSpec extends SparkTestBase {
 
   test("a replayed batch and a CAS-losing sink commit seed nothing") {
     val root = tmpDir("sss_cas_")
-    ManifestSink.publishWithStats(Seq((1L, "a")).toDF("k", "v"), root, 1, Seq("k"))
+    ManifestSink.publish(Seq((1L, "a")).toDF("k", "v"), root, 1, ManifestSink.WriteSpec(Seq("k")))
     def stageBatch(ks: Seq[Long]): (String, Seq[Row]) = {
       val dir = s"data-stream-a${ManifestSink.newAttemptToken()}"
       ks.map(k => (k, s"v$k")).toDF("k", "v").coalesce(1).write.parquet(s"$root/$dir")
@@ -266,7 +266,8 @@ class StreamSinkStatsSpec extends SparkTestBase {
     assert(ManifestSink.currentEpoch(spark, root) == 2)
     val (d3, r3) = stageBatch(Seq(8L))
     ManifestSink.commitCasRaceHook = Some(() =>
-      ManifestSink.publishAppendWithStats(Seq((9L, "x")).toDF("k", "v"), root, 3, Seq("k")))
+      ManifestSink.publish(Seq((9L, "x")).toDF("k", "v"), root, 3,
+        ManifestSink.WriteSpec(Seq("k")), append = true))
     intercept[ManifestSink.ManifestConflictException] {
       ManifestSink.commitIdempotentAppendFiles(spark, root, d3, "app", 1L, Some(r3))
     }

@@ -16,7 +16,7 @@ class StreamSourceSpec extends SparkTestBase {
   test("manifest stream source: snapshot then incremental tail, restart resumes at epoch offset") {
     val bronze = tmpDir("graft_msrc_")
     val ckpt = tmpDir("graft_msrc_ckpt_")
-    ManifestSink.publishAppend(ev.filter(col("event_id") < 100), bronze, 1)
+    ManifestSink.publish(ev.filter(col("event_id") < 100), bronze, 1, append = true)
     val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     def start() = spark.readStream
       .format("graft-manifest").option("root", bronze).load()
@@ -27,12 +27,12 @@ class StreamSourceSpec extends SparkTestBase {
     val q1 = start()
     try {
       q1.processAllAvailable()
-      ManifestSink.publishAppend(ev.filter(col("event_id").between(100, 149)), bronze, 2)
+      ManifestSink.publish(ev.filter(col("event_id").between(100, 149)), bronze, 2, append = true)
       q1.processAllAvailable()
     } finally q1.stop()
     // an epoch lands while NO query runs; the restart must resume at
     // the checkpointed epoch, reading only the missed delta
-    ManifestSink.publishAppend(ev.filter(col("event_id").between(150, 169)), bronze, 3)
+    ManifestSink.publish(ev.filter(col("event_id").between(150, 169)), bronze, 3, append = true)
     val q2 = start()
     try q2.processAllAvailable() finally q2.stop()
     assert(batches.toSeq == Seq((0L, 100L), (1L, 50L), (2L, 20L)),
@@ -44,9 +44,10 @@ class StreamSourceSpec extends SparkTestBase {
     val bronze = tmpDir("graft_mpv_")
     val evts = Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("value"))
-    ManifestSink.publishTimePartitioned(
+    ManifestSink.publish(
       evts.filter(col("ts") < lit("2024-01-01 06:00:00")),
-      bronze, 1, "ts", "hours", statsCols = Seq("ts"))
+      bronze, 1, ManifestSink.WriteSpec(Seq("ts"),
+        layout = ManifestSink.LayoutDecl(ptime = Some(("ts", "hours")))))
     // (batchId, ordinal, rows, ordinal==recomputed-transform?) per group
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Boolean)]
     val q = spark.readStream
@@ -75,7 +76,8 @@ class StreamSourceSpec extends SparkTestBase {
       ManifestSink.commitStaged(spark, ManifestSink.stageAppend(
         evts.filter(col("ts") >= lit("2024-01-01 06:00:00") &&
           col("ts") < lit("2024-01-01 09:00:00")),
-        bronze, 2, Seq("ts"), ptime = Some(("ts", "hours"))))
+        bronze, 2, ManifestSink.WriteSpec(Seq("ts"),
+          layout = ManifestSink.LayoutDecl(ptime = Some(("ts", "hours"))))))
       q.processAllAvailable()
     } finally q.stop()
     val byBatch = seen.toSeq.groupBy(_._1)
@@ -102,8 +104,8 @@ class StreamSourceSpec extends SparkTestBase {
     val evts = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       .filter(col("ts") < lit("2024-01-01 04:00:00"))
-    ManifestSink.publishComposed(evts, bronze, 1, "ts", "hours",
-      "user_id", 2, statsCols = Seq("ts", "user_id"))
+    ManifestSink.publish(evts, bronze, 1, ManifestSink.WriteSpec(Seq("ts", "user_id"),
+      layout = ManifestSink.LayoutDecl(Some(("user_id", 2)), Some(("ts", "hours")))))
     // every row's ridden pair must equal its recomputed transforms
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Boolean)]
     val q = spark.readStream
@@ -137,12 +139,13 @@ class StreamSourceSpec extends SparkTestBase {
 
   test("manifest stream source: startEpoch skips the snapshot; rewrites are refused") {
     val bronze = tmpDir("graft_msrc2_")
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.filter(col("event_id") < 50)
         .repartitionByRange(2, col("event_id")).sortWithinPartitions("event_id"),
-      bronze, 1, Seq("event_id"))
-    ManifestSink.publishAppendWithStats(
-      ev.filter(col("event_id").between(50, 79)), bronze, 2, Seq("event_id"))
+      bronze, 1, ManifestSink.WriteSpec(Seq("event_id")))
+    ManifestSink.publish(
+      ev.filter(col("event_id").between(50, 79)), bronze, 2,
+        ManifestSink.WriteSpec(Seq("event_id")), append = true)
     // startEpoch=1: tail only — epoch 2's 30 rows, not the snapshot
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     val q = spark.readStream
@@ -172,10 +175,10 @@ class StreamSourceSpec extends SparkTestBase {
 
   test("change-feed mode: CoW epochs stream as update pairs; opening batch is snapshot-as-inserts") {
     val bronze = tmpDir("graft_msrc3_")
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.filter(col("event_id") < 50)
         .repartitionByRange(2, col("event_id")).sortWithinPartitions("event_id"),
-      bronze, 1, Seq("event_id"))
+      bronze, 1, ManifestSink.WriteSpec(Seq("event_id")))
     ManifestSink.mergeCow(spark, bronze,
       ev.filter(col("event_id") === 7)
         .select(col("event_id"), (col("value") + 2).as("value")),
@@ -208,10 +211,10 @@ class StreamSourceSpec extends SparkTestBase {
 
   test("batch format() read matches ManifestSink.read, MoR epochs included") {
     val root = tmpDir("graft_mfmt_spec_")
-    ManifestSink.publishWithStats(
+    ManifestSink.publish(
       ev.filter(col("event_id") < 80)
         .repartitionByRange(2, col("event_id")).sortWithinPartitions("event_id"),
-      root, 1, Seq("event_id"))
+      root, 1, ManifestSink.WriteSpec(Seq("event_id")))
     val viaFormat = spark.read.format("graft-manifest").option("root", root).load()
       .orderBy("event_id").collect().toSeq
     val viaApi = ManifestSink.read(spark, root).orderBy("event_id").collect().toSeq

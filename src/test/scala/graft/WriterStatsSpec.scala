@@ -92,16 +92,16 @@ class WriterStatsSpec extends SparkTestBase {
       typedRows("wss_b", 40, 70)
       spark.sql(s"INSERT INTO $t SELECT * FROM wss_b")
       assertCommitMatches(root); assertSeeded(root, "ts > TIMESTAMP '2024-01-01 00:00:00'")
-      // a zero-row write stages one empty file, which gets no stats row
-      // (the oracle's groupBy sees no group for it)
+      // a zero-row write adds no file (its writer's one schema-only
+      // file is dropped at stage), and the committed schema still reads
       val before = ManifestSink.manifestEntries(spark, root,
         ManifestSink.currentEpoch(spark, root)).map(_._1).toSet
+      val schema = spark.table(t).schema
       spark.sql(s"INSERT INTO $t SELECT * FROM wss_b WHERE l < 0")
       val e0 = ManifestSink.currentEpoch(spark, root)
-      val empty = ManifestSink.manifestEntries(spark, root, e0).map(_._1).filterNot(before)
-      assert(empty.nonEmpty)
-      assert(!SnapshotCache.statRows(spark, root, e0).get.exists(r => empty.contains(r.getString(0))),
-        "an empty file carries no stats row")
+      assert(ManifestSink.manifestEntries(spark, root, e0).map(_._1).toSet == before,
+        "a zero-row INSERT adds no manifest file")
+      assert(spark.sql(s"SELECT * FROM $t").schema == schema)
       assertCommitMatches(root); assertSeeded(root, "d > DATE '2024-03-10'")
       typedRows("wss_c", 100, 160)
       spark.sql(s"INSERT OVERWRITE $t SELECT * FROM wss_c")
@@ -177,8 +177,8 @@ class WriterStatsSpec extends SparkTestBase {
     // the hook lands a racing append after the INSERT staged, before
     // its CAS: the INSERT loses epoch 2 and rebases onto epoch 3
     GraftTable.insertCommitRaceHook = Some(() =>
-      ManifestSink.publishAppendWithStats(Seq((9L, "x")).toDF("k", "v"), root, 2,
-        Seq("k", "v")))
+      ManifestSink.publish(Seq((9L, "x")).toDF("k", "v"), root, 2,
+        ManifestSink.WriteSpec(Seq("k", "v")), append = true))
     try spark.sql(s"INSERT INTO $t VALUES (5, 'e')")
     finally GraftTable.insertCommitRaceHook = None
     assert(ManifestSink.currentEpoch(spark, root) == 3)
@@ -192,10 +192,10 @@ class WriterStatsSpec extends SparkTestBase {
       Seq(1L, 2L, 5L, 9L))
     // a commit that loses its CAS outright leaves the winner's seed
     val staged = ManifestSink.stageAppend(Seq((7L, "g")).toDF("k", "v"), root, 4,
-      Seq("k", "v"), unique = true)
+      ManifestSink.WriteSpec(Seq("k", "v")), unique = true)
     ManifestSink.commitCasRaceHook = Some(() =>
-      ManifestSink.publishAppendWithStats(Seq((8L, "h")).toDF("k", "v"), root, 4,
-        Seq("k", "v")))
+      ManifestSink.publish(Seq((8L, "h")).toDF("k", "v"), root, 4,
+        ManifestSink.WriteSpec(Seq("k", "v")), append = true))
     intercept[ManifestSink.ManifestConflictException] {
       ManifestSink.commitStaged(spark, staged)
     }
