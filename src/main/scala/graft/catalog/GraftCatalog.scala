@@ -1566,19 +1566,7 @@ final class GraftTable(dir: String, ident: String, pinned: Option[Int],
     ManifestSink.LayoutDecl(declaredBucket, declaredPtime, declaredIdent)
 
   override def partitioning(): Array[Transform] =
-    declaredBucket.map { case (c, n) =>
-      org.apache.spark.sql.connector.expressions.Expressions.bucket(n, c)
-    }.toArray ++ declaredPtime.map { case (c, u) =>
-      org.apache.spark.sql.connector.expressions.Expressions.apply(u,
-        org.apache.spark.sql.connector.expressions.Expressions.column(c))
-    } ++ declaredIdent.map {
-      case (c, None) =>
-        org.apache.spark.sql.connector.expressions.Expressions.identity(c)
-      case (c, Some(w)) =>
-        org.apache.spark.sql.connector.expressions.Expressions.apply(
-          s"truncate$w",
-          org.apache.spark.sql.connector.expressions.Expressions.column(c))
-    }
+    declaredLayout.axes.map(a => a.transform(a.col)).toArray
 
   /** The table's CHECK constraints (Spark 4 ANSI-constraint DDL
     * surface): read from the sidecar, reported ENFORCED + VALID —
@@ -3190,24 +3178,23 @@ class GraftRowLevelOperation(dir: String, baseEpoch: Int,
   * swaps in. An abort aborts the delegate
   * and leaves only an invisible orphan dir for vacuum.
   *
-  * SINGLE-WRITE layout preservation (round 18; supersedes the r17
-  * read-back relay): when the base epoch carries a committed
-  * bucket/time/identity/composed layout, the write DECLARES it via
-  * [[RequiresDistributionAndOrdering]] — Spark clusters and sorts the
+  * SINGLE-WRITE layout preservation: when the base epoch carries a
+  * committed bucket/time/identity/composed layout, the write DECLARES
+  * it ([[LayoutDistribution]]) — Spark clusters and sorts the
   * replacement plan by the layout transforms, resolved through the
   * catalog's FunctionCatalog to the SAME bound functions the SPJ read
-  * path compares (the Iceberg write-distribution discipline) — and
-  * stages through a dynamic-partition parquet write that rotates
-  * output files per layout value. The replacement files are
-  * single-key ON ARRIVAL, so an UPDATE/DELETE/MERGE on a laid-out
-  * table keeps `KeyGroupedPartitioning` and exact pruning at ONE
-  * write cost: at 100 TB a MERGE touching 10% of a table writes that
-  * 10% once, not twice. */
+  * path compares — and stages through the one laid-out
+  * [[LayoutBatchWrite]], which rotates output files per layout value.
+  * The replacement files are single-key ON ARRIVAL, so an
+  * UPDATE/DELETE/MERGE on a laid-out table keeps
+  * `KeyGroupedPartitioning` and exact pruning at ONE write cost: at
+  * 100 TB a MERGE touching 10% of a table writes that 10% once, not
+  * twice. */
 final class GraftReplaceWrite(dir: String, baseEpoch: Int,
                               op: GraftRowLevelOperation,
                               info: LogicalWriteInfo,
                               tableSchema: StructType) extends Write
-  with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  with LayoutDistribution {
 
   private val token = ManifestSink.newAttemptToken()
   private val stagedDirName = s"data-epoch=${baseEpoch + 1}-a$token"
@@ -3231,9 +3218,11 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
 
   /** The base epoch's committed layout axes with the row index of
     * each source column (physical and logical schemas are positional
-    * renames of each other — one index serves both). */
+    * renames of each other — one index serves both). Empty when the
+    * epoch carries no fully-covering layout — the write then stages
+    * flat, exactly the unpartitioned-table behavior. */
   private val axisIdx: Seq[(LayoutAxisSpec, Int)] =
-    LayoutWrite.axesFor(SparkSession.active, dir, baseEpoch).map { a =>
+    ManifestSink.committedLayout(SparkSession.active, dir, baseEpoch).axes.map { a =>
       val pi = physSchema.fieldNames.indexOf(a.col)
       (a, if (pi >= 0) pi else tableSchema.fieldIndex(a.col))
     }
@@ -3241,26 +3230,10 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
   /** Axes paired with the LOGICAL column name — the name the
     * distribution/ordering expressions resolve against the
     * ReplaceData plan (specs store the physical parquet name). */
-  private def axes: Seq[(LayoutAxisSpec, String)] =
+  override protected def layoutAxes: Seq[(LayoutAxisSpec, String)] =
     axisIdx.map { case (a, i) => (a, tableSchema.fieldNames(i)) }
 
-  override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-    if (axisIdx.isEmpty)
-      org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-    else
-      org.apache.spark.sql.connector.distributions.Distributions.clustered(
-        axes.map { case (a, l) => a.transform(l) }
-          .toArray[org.apache.spark.sql.connector.expressions.Expression])
-
-  // best-effort (Rebalance) rather than strict: AQE sizes the shuffle
-  // and SPLITS a skewed layout value across tasks — the value-based
-  // file rotation keeps every file single-key regardless, so a hot
-  // key becomes several bounded files instead of one straggler task
-  // (the salt-fanout discipline of placeByKey, inherited by the plan)
-  override def distributionStrictlyRequired(): Boolean = false
-
-  override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    LayoutWrite.ordering(axes)
+  override protected val targetBytes: Long = ManifestSink.targetFileSize(SparkSession.active)
 
   override def toBatch: BatchWrite = {
     // a row-level rewrite scans and replaces LIVE files — executing it
@@ -3270,14 +3243,20 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
     // plans the optimizer later rewrites onto the metadata-only
     // SupportsDelete path — which branch deletes ride.)
     GraftTable.requireNotBranch(SparkSession.active, "row-level rewrites")
-    if (axisIdx.isEmpty) flatBatchWrite() else layoutBatchWrite()
+    val spark = SparkSession.active
+    // ReplaceDataExec only applies its row projection when the
+    // operation declares metadata attributes; with none, the writer
+    // receives the raw query rows — a leading __row_operation int
+    // ahead of the data columns, which the batch's writers strip
+    new LayoutBatchWrite(spark, s"$dir/$stagedDirName", tableSchema, physSchema, axisIdx,
+      info.options.asCaseSensitiveMap.asScala.toMap, stats.toSeq, targetBytes)(
+      () => commitStage(spark))
   }
 
-  /** Shared commit half: list the staged replacement files
-    * (RECURSIVELY — the layout write stages into partition
-    * subdirectories), audit constraints (a merge cannot smuggle in
-    * CHECK violations), and swap the scanned groups in one CAS
-    * epoch. */
+  /** The commit half: list the staged replacement files (RECURSIVELY —
+    * a laid-out write stages into partition subdirectories), audit
+    * constraints (a merge cannot smuggle in CHECK violations), and swap
+    * the scanned groups in one CAS epoch. */
   private def commitStage(spark: SparkSession): Unit = {
     // deterministic-race seam: a spec/demo injects a concurrent
     // commit exactly here — after the replacement files finalized,
@@ -3296,74 +3275,6 @@ final class GraftReplaceWrite(dir: String, baseEpoch: Int,
       // must clear the NEW constraint set before they publish
       reaudit = Some(() => GraftTable.auditConstraints(spark, dir, fresh)),
       freshRows = RowLevelCommit.statsRows(stats, fresh, stagedDirName)): Unit
-  }
-
-  /** The unpartitioned-table path: a flat single-directory stage. */
-  private def flatBatchWrite(): BatchWrite = new BatchWrite {
-    private val delegate =
-      org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
-        .partitionedParquetWrite(SparkSession.active, s"$dir/$stagedDirName",
-          physSchema, StructType(Nil), info.options.asCaseSensitiveMap.asScala.toMap,
-          stats.toSeq)
-
-    override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory =
-      // ReplaceDataExec only applies its row projection when the
-      // operation declares metadata attributes; with none, the writer
-      // receives the raw query rows — a leading __row_operation int
-      // ahead of the data columns. Strip it here so the parquet write
-      // sees exactly the table schema (rows already in table shape
-      // pass through untouched).
-      new OpStrippingWriterFactory(delegate.createBatchWriterFactory(pInfo),
-        tableSchema.fields.map(_.dataType), tableSchema.fields.map(_.nullable))
-    override def useCommitCoordinator: Boolean = delegate.useCommitCoordinator
-    override def onDataWriterCommit(message: WriterCommitMessage): Unit =
-      delegate.onDataWriterCommit(message)
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      delegate.commit(messages)
-      commitStage(SparkSession.active)
-    }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit =
-      delegate.abort(messages)
-  }
-
-  /** The laid-out-table path: a dynamic-partition stage rotating one
-    * file per layout value (see the class scaladoc). */
-  private def layoutBatchWrite(): BatchWrite = new BatchWrite {
-    private val spark0 = SparkSession.active
-    private val partSchema = StructType(axisIdx.zipWithIndex.map {
-      case ((a, i), j) =>
-        org.apache.spark.sql.types.StructField(s"__p$j",
-          a.fieldType(tableSchema.fields(i).dataType), nullable = false)
-    })
-    private val writeOpts = {
-      val m = spark0.sessionState.conf
-        .getConfString("spark.graft.write.maxRecordsPerFile", "")
-      if (m.isEmpty) Map.empty[String, String]
-      else Map("maxRecordsPerFile" -> m)
-    }
-    private val delegate =
-      org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
-        .partitionedParquetWrite(spark0, s"$dir/$stagedDirName",
-          physSchema, partSchema, writeOpts, stats.toSeq)
-
-    override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory =
-      new LayoutAppendingWriterFactory(
-        delegate.createBatchWriterFactory(pInfo),
-        tableSchema.fields.map(_.dataType),
-        axisIdx.map { case (a, i) => (i, a) }.toArray)
-    override def useCommitCoordinator: Boolean = delegate.useCommitCoordinator
-    override def onDataWriterCommit(message: WriterCommitMessage): Unit =
-      delegate.onDataWriterCommit(message)
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      delegate.commit(messages)
-      commitStage(spark0)
-    }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit =
-      delegate.abort(messages)
   }
 }
 
@@ -3400,10 +3311,10 @@ private[catalog] object RowLevelCommit {
 
   /** The stats fold a row-level write's writers run: zone maps over the
     * base epoch's stats columns that the written (physical) schema
-    * holds, and — `withLayout` — the base's committed layout, folded
-    * leniently (a replacement file that mixes keys drops just that
-    * flavor). None when there is nothing to fold. Served from the
-    * snapshot cache the operation's scan already warmed. */
+    * holds, and — `withLayout` — the base's committed layout (the
+    * write places its rows under it, so every file is single-key).
+    * None when there is nothing to fold. Served from the snapshot
+    * cache the operation's scan already warmed. */
   def statsTracker(spark: SparkSession, dir: String, baseEpoch: Int,
                    physSchema: StructType,
                    withLayout: Boolean): Option[WriterStatsTracker] = {
@@ -3414,7 +3325,7 @@ private[catalog] object RowLevelCommit {
         if (withLayout) ManifestSink.committedLayout(spark, dir, baseEpoch)
         else ManifestSink.LayoutDecl())
     if (spec.isEmpty) None
-    else Some(new WriterStatsTracker(physSchema, spec, lenientLayout = true))
+    else Some(new WriterStatsTracker(physSchema, spec))
   }
 
   /** The folded stats rows of the committed `files` under `dirName`. */
@@ -3608,15 +3519,13 @@ final class GraftMorWrite(dir: String, baseEpoch: Int,
           val delta = readRels(fresh)
           val cowDirName = s"data-epoch=${baseEpoch + 1}-a${ManifestSink.newAttemptToken()}"
           // layout-preserving CoW: the over-cap materialization keeps
-          // the committed layout exactly like the row-level write path
-          // — applied to the still-in-memory batch so the replacement
-          // writes ONCE (no write-read-rewrite round trip)
-          val laid = ManifestSink.layoutForBase(spark, dir, baseEpoch,
-            survivors.unionByName(delta))
-          val cowStats = RowLevelCommit.statsTracker(spark, dir, baseEpoch, laid.schema,
+          // the committed layout through the one placement, in the same
+          // single write (no write-read-rewrite round trip)
+          val batch = survivors.unionByName(delta)
+          val cowStats = RowLevelCommit.statsTracker(spark, dir, baseEpoch, batch.schema,
             withLayout = true)
-          org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
-            .writeParquet(laid, s"$dir/$cowDirName", cowStats.toSeq)
+          LayoutWrite.write(batch, s"$dir/$cowDirName",
+            ManifestSink.committedLayout(spark, dir, baseEpoch).axes, cowStats.toSeq)
           val cowFiles = listParquet(cowDirName)
           ManifestSink.commitReplaceGroups(spark, dir, baseEpoch,
             cowDirName, op.scannedFiles,

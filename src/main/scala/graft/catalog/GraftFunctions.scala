@@ -15,9 +15,10 @@ import org.apache.spark.sql.types._
   * `EnsureRequirements` drops BOTH shuffles from the join.
   *
   * The function is `floorMod(key, n)` — kept in exact agreement with
-  * the write-side placement in `ManifestSink.bucketLayout` (a
-  * declared transform that differs from the physical layout would
-  * make SPJ silently join wrong partitions together).
+  * the write-side placement: every laid-out write clusters by this
+  * very function and evaluates it per row ([[BucketAxis]]), so a
+  * declared transform can never differ from the physical layout (a
+  * difference would make SPJ silently join wrong partitions together).
   *
   * Reference: the reference co-locates rows by Cassandra partition
   * key (`PRIMARY KEY ((device_id), timestamp)` —
@@ -69,11 +70,10 @@ final class GraftBucketBound(keyType: DataType) extends ScalarFunction[Integer] 
   * `year-1970`). Serving these from the table catalog's
   * FunctionCatalog is what lets a scan report
   * `KeyGroupedPartitioning(hours(ts))` and two same-layout tables
-  * storage-partition-join with zero shuffle. Kept in exact
-  * agreement with the write-side placement
-  * (`ManifestSink.timeOrdCol`) — a declared transform that differed
-  * from the physical layout would make SPJ silently join wrong
-  * partitions. NTZ evaluates its internal (unshifted) micros;
+  * storage-partition-join with zero shuffle. The write-side placement
+  * evaluates this very function ([[TimeAxis]]) — a declared transform
+  * that differed from the physical layout would make SPJ silently
+  * join wrong partitions. NTZ evaluates its internal (unshifted) micros;
   * TimestampType evaluates under UTC, matching the engine's pinned
   * `spark.sql.session.timeZone`. */
 final class GraftTimeFunction(unit: String) extends UnboundFunction {
@@ -96,8 +96,9 @@ final class GraftTimeFunction(unit: String) extends UnboundFunction {
   * the Iceberg truncate spec, served from the FunctionCatalog so two
   * truncate-laid-out scans storage-partition-join: integers floor to
   * the width's multiple (`v - floorMod(v, w)`, exact for negatives),
-  * strings take the first `w` characters. Kept in exact agreement
-  * with the write-side placement (`ManifestSink.identKeyCol`).
+  * strings take the first `w` characters. The write-side placement
+  * evaluates the same arithmetic through its single-argument form
+  * ([[GraftTruncFixedBound]], via [[IdentAxis]]).
   * Identity needs no function here — Spark resolves identity
   * transforms natively. */
 object GraftTruncFunction extends UnboundFunction {

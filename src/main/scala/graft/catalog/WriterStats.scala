@@ -156,9 +156,8 @@ private final case class BloomFlavor(c: String, ordinal: Int, dt: DataType) exte
 /** A layout transform's value range over the file, through the same
   * row-local evaluator the replacement write places rows with
   * ([[LayoutAxisSpec.mkEval]], which delegates to the V2 bound
-  * functions): a single-value file gets one `key` row, lo == hi.
-  * Whether a multi-value file fails the write or drops the flavor is
-  * the tracker's call ([[WriterStatsTracker]]). */
+  * functions): a single-value file gets one `key` row, lo == hi; a
+  * multi-value file fails the write ([[WriterStatsTracker.fileRows]]). */
 private final case class KeyFlavor(key: String, what: String, axis: LayoutAxisSpec,
                                    ordinal: Int, dt: DataType) extends Flavor {
   private def isStr = dt == StringType // string identity/truncate
@@ -216,17 +215,16 @@ private final case class KeyFlavor(key: String, what: String, axis: LayoutAxisSp
   * collects the committed tasks' folds in [[processStats]]; failed and
   * speculative-loser attempts never reach it.
   *
-  * A layout flavor wants every non-empty file single-valued. Strict
-  * (the default — the write just placed its rows under the layout),
-  * a multi-value file fails [[fileRows]] naming the first such file;
-  * `lenientLayout` (replacement writes, which keep a committed layout
-  * only where their files happen to honour it) drops just that
-  * flavor's rows, for every file.
+  * A layout flavor wants every non-empty file single-valued: every
+  * laid-out write places its rows through the one placement
+  * ([[LayoutWrite]]), so a multi-value file is a placement bug and
+  * fails [[fileRows]] naming the first such file, as does a write
+  * whose files carry more than `spark.graft.layout.maxKeys` distinct
+  * layout values.
   *
   * `schema` is the shape of the rows the writer writes (the data
   * columns). */
-final class WriterStatsTracker(schema: StructType, spec: ManifestSink.WriteSpec,
-                               lenientLayout: Boolean = false)
+final class WriterStatsTracker(schema: StructType, spec: ManifestSink.WriteSpec)
   extends WriteJobStatsTracker {
 
   private val statsCols = spec.statsCols
@@ -344,16 +342,22 @@ final class WriterStatsTracker(schema: StructType, spec: ManifestSink.WriteSpec,
     * the min/max rows. */
   def fileRows(files: Seq[String], outDir: String): Seq[Row] = {
     val live = matched(files, outDir).filter(_._2.rows > 0)
-    val keep = flavors.indices.map(j => flavors(j) match {
-      case k: KeyFlavor =>
-        val mixed = live.find { case (_, z) => k.single(z.flavors(j)).isEmpty }
-        mixed.foreach { case (f, z) =>
-          val (lo, hi) = z.flavors(j)
-          require(lenientLayout, s"${k.what} $f: $lo..$hi")
-        }
-        mixed.isEmpty
-      case _ => true
-    })
+    val layout = flavors.indices.filter(flavors(_).isInstanceOf[KeyFlavor])
+    layout.foreach { j =>
+      val k = flavors(j).asInstanceOf[KeyFlavor]
+      live.find { case (_, z) => k.single(z.flavors(j)).isEmpty }.foreach { case (f, z) =>
+        val (lo, hi) = z.flavors(j)
+        throw new IllegalArgumentException(s"${k.what} $f: $lo..$hi")
+      }
+    }
+    if (layout.nonEmpty) {
+      val maxKeys = ManifestSink.layoutMaxKeys(org.apache.spark.sql.SparkSession.active)
+      val keys = live.map { case (_, z) => layout.map(z.flavors(_)) }.distinct.size
+      require(keys <= maxKeys,
+        s"layout would exceed spark.graft.layout.maxKeys=$maxKeys distinct " +
+          "partition keys (the manifest's layout rows are per-key); coarsen " +
+          "the spec — a wider time unit, fewer buckets — or raise the cap")
+    }
     live.flatMap { case (f, z) =>
       val zones =
         if (statsCols.isEmpty) Nil
@@ -362,7 +366,7 @@ final class WriterStatsTracker(schema: StructType, spec: ManifestSink.WriteSpec,
           if (types(i) == StringType) ManifestSink.statsRow(f, c, null, null, z.lo(i), z.hi(i))
           else ManifestSink.statsRow(f, c, z.lo(i), z.hi(i), null, null)
         } :+ ManifestSink.statsRow(f, "__count", java.lang.Long.valueOf(z.rows), null, null, null)
-      zones ++ flavors.indices.filter(keep).flatMap(j => flavors(j).rows(f, z.flavors(j)))
+      zones ++ flavors.indices.flatMap(j => flavors(j).rows(f, z.flavors(j)))
     }
   }
 }

@@ -313,16 +313,21 @@ object ManifestSink {
     }
   }
 
-  /** Stage `df` as epoch `epoch`: lay it out under `spec.layout`, write
-    * the data files, audit the file list, build the stats rows. Nothing
-    * is visible to readers. Every stage writes through
-    * [[graft.catalog.WriterStatsTracker]] on Spark's file writer: the
-    * write tasks fold each file's row count and every stats flavor
-    * `spec` requests, so the stats cost no job of their own and the
-    * stage never re-reads what it wrote. A file its writer wrote no row
-    * into (Spark's file writer keeps one schema-only file for a job
-    * with no rows) is deleted and left out of the file list: the
-    * committed schema stays pinned by the marker.
+  /** Stage `df` as epoch `epoch`: write the data files (laid out under
+    * `spec.layout`, if any), audit the file list, build the stats rows.
+    * Nothing is visible to readers. Every stage writes through
+    * [[graft.catalog.WriterStatsTracker]]: the write tasks fold each
+    * file's row count and every stats flavor `spec` requests, so the
+    * stats cost no job of their own and the stage never re-reads what
+    * it wrote. A laid-out stage places its rows in the same one pass
+    * ([[graft.catalog.LayoutWrite.write]]: files land one per layout
+    * value under partition subdirectories, each bounded by
+    * [[targetFileSize]]); the fold then proves every file single-valued
+    * and the write within [[layoutMaxKeys]], or the stage refuses and
+    * removes its directory. A file its writer wrote no row into
+    * (Spark's file writer keeps one schema-only file for a job with no
+    * rows) is deleted and left out of the file list: the committed
+    * schema stays pinned by the marker.
     * `unique = true` stages into an attempt-unique directory
     * (`data-epoch=N-aTOKEN/`) so two concurrent publishers racing for
     * the same epoch cannot clobber each other's DATA either — the
@@ -339,27 +344,24 @@ object ManifestSink {
     val token = tokenOpt.getOrElse(newToken())
     val dirName = if (unique) s"data-epoch=$epoch-a$token" else s"data-epoch=$epoch"
     val epochDir = s"$root/$dirName"
-    val l = spec.layout
-    require(l.ident.isEmpty || l.bucket.isEmpty || l.ptime.isEmpty,
-      "a partition spec composes at most TWO transforms; identity + " +
-        "bucket + time is not supported")
-    val laid = layOut(df, l)
-    val tracker = new graft.catalog.WriterStatsTracker(laid.schema, spec)
-    org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
-      .writeParquet(laid, epochDir, Seq(tracker))
+    val axes = spec.layout.axes
+    val tracker = new graft.catalog.WriterStatsTracker(df.schema, spec)
+    graft.catalog.LayoutWrite.write(df, epochDir, axes, Seq(tracker))
     val dirPath = new org.apache.hadoop.fs.Path(epochDir)
     val f = fs(spark, dirPath)
-    // the staging listStatus already holds each file's size — capture
-    // it here (the only place it is free) and commit it in the
-    // manifest lines
-    val listed = f.listStatus(dirPath).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(s => s"$dirName/${s.getPath.getName}" -> s.getLen)
+    // the staging listing already holds each file's size — capture it
+    // here (the only place it is free) and commit it in the manifest
+    // lines
+    val listed = listStagedParquet(spark, root, dirName).toSeq.sorted
     val written = listed.map(_._1)
     val empty = tracker.emptyFiles(written, dirName).toSet
     empty.foreach(r => f.delete(new org.apache.hadoop.fs.Path(s"$root/$r"), false))
     val sizes = listed.filterNot(e => empty(e._1)).toMap
-    val stats = if (spec.isEmpty) None else Some(tracker.fileRows(written, dirName))
+    val stats =
+      if (spec.isEmpty) None
+      else Some(try tracker.fileRows(written, dirName) catch {
+        case e: IllegalArgumentException => f.delete(dirPath, true); throw e
+      })
     Staged(root, epoch, token, sizes.keys.toSeq.sorted, stats,
       Some(asNullable(df.schema).json), sizes = sizes)
   }
@@ -585,159 +587,27 @@ object ManifestSink {
   final case class BucketSpec(keyCol: String, numBuckets: Int,
                               fileBuckets: Map[String, Int])
 
-  /** floorMod(key, n) — the bucket id expression. Kept in exact
-    * agreement with [[graft.catalog.GraftBucketBound.produceResult]]
-    * (the V2 function form Spark compares join sides with): the
-    * write-side placement and the declared transform MUST be the
-    * same function or co-partitioning would silently lie. */
-  private def bucketIdCol(keyCol: String, n: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    pmod(col(keyCol).cast(LongType), lit(n.toLong)).cast(IntegerType)
-  }
-
-  /** Lay `df` out so each output FILE holds exactly one bucket of
-    * floorMod(key, n), fanning an over-[[targetFileSize]] bucket out
-    * across several salted single-bucket files (see [[placeByKey]]
-    * for the whole placement discipline — the identity partitioner,
-    * the null rejection, the salt). */
-  private def bucketLayout(df: DataFrame, keyCol: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    require(n > 0, s"numBuckets must be positive; got $n")
-    val kt = df.schema(keyCol).dataType
-    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(kt),
-      s"bucketed layout needs an integral key; $keyCol is $kt")
-    val withK = df
-      .withColumn("__k", bucketIdCol(keyCol, n).cast(LongType))
-      .withColumn("__s", xxhash64(col(keyCol)))
-    placeByKey(withK, Seq(keyCol), s"bucketed layout: null bucket key $keyCol")
-  }
-
   /** Target data-file size for layout writes (Iceberg's
-    * `write.target-file-size-bytes`): a layout partition whose
-    * estimated bytes exceed this is SPLIT across that many salted
-    * sub-files instead of funneling through one task. */
+    * `write.target-file-size-bytes`): the rebalance's advisory
+    * partition size, and the bytes past which a writer rolls to the
+    * next file of the same layout value. */
   def targetFileSize(spark: SparkSession): Long =
     spark.sessionState.conf
       .getConfString("spark.graft.write.targetFileSize",
         (128L * 1024 * 1024).toString).toLong
 
   /** Distinct-key cap for layout writes
-    * (`spark.graft.layout.maxKeys`, default 100k): the placement index
-    * is DRIVER-RESIDENT — one (key, bytes) row per distinct layout key,
-    * the same enumeration an Iceberg manifest makes — so a pathological
-    * composed spec (`hours(ts), bucket(4096)` over years) must fail
-    * loudly at the sizing aggregate instead of silently collecting
-    * millions of rows and broadcasting a matching index to every task.
-    * The refusal names the spec knobs to coarsen (a wider time unit,
-    * fewer buckets). */
+    * (`spark.graft.layout.maxKeys`, default 100k): the manifest carries
+    * layout rows per file and the scans group files per key, so a
+    * pathological composed spec (`hours(ts), bucket(4096)` over years)
+    * must fail loudly before it commits instead of publishing millions
+    * of single-key files. Checked on the driver from the writers'
+    * folds ([[graft.catalog.WriterStatsTracker.fileRows]]); the refusal
+    * names the spec knobs to coarsen (a wider time unit, fewer
+    * buckets). */
   def layoutMaxKeys(spark: SparkSession): Int =
     spark.sessionState.conf
       .getConfString("spark.graft.layout.maxKeys", "100000").toInt
-
-  /** The layout placer shared by [[bucketLayout]]/[[timeLayout]] (and
-    * their composition): `withK`'s last two columns are `__k` (the
-    * LongType layout key — bucket id, time ordinal, or a packed pair)
-    * and `__s` (a LongType row salt). Every output partition holds
-    * exactly ONE layout key — the single-key-per-file contract the
-    * stats rows verify — but a key whose estimated bytes exceed
-    * [[targetFileSize]] fans out into `ceil(bytes/target)` salted
-    * sub-partitions, so one task writes one BOUNDED file: a 100×
-    * `CREATE TABLE ... PARTITIONED BY (days(ts)) AS SELECT` over a
-    * year never plans 365 straggler tasks each sorting a whole day
-    * into a single 300 GB parquet (the manifest has always supported
-    * many files per key — appends produce them). The key set is
-    * collected with its SIZES in ONE bounded aggregate (result rows =
-    * distinct keys, never data-sized — Iceberg manifests enumerate
-    * partition values the same way); the byte estimate is data-driven
-    * for var-width columns (actual string/binary octet lengths,
-    * actual array element counts) and schema-width for fixed ones —
-    * see the inline note. The salt hashes the layout
-    * column's VALUE — it spreads volume across a partition's many
-    * values; a single pathologically hot value still co-locates (as
-    * it must: sorting keeps zone maps tight). Placement itself uses
-    * an explicit identity [[org.apache.spark.Partitioner]] (Spark's
-    * `repartition(n, expr)` re-hashes and can fold two keys into one
-    * partition; `repartitionByRange` boundaries are sample-estimated)
-    * — the one case where dropping to the RDD layer is the correct
-    * tool: a deterministic partition-index contract the declarative
-    * API cannot state. Rows sort by `sortCols` within each partition
-    * so zone maps stay tight. Null keys are rejected: a null's
-    * transform value is null, and a row placed in any numbered
-    * partition would break the key-grouping contract SPJ plans
-    * against. */
-  private def placeByKey(withK: DataFrame, sortCols: Seq[String],
-                         nullMsg: => String): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit,
-      octet_length, size, sum}
-    import org.apache.spark.sql.types._
-    val spark = withK.sparkSession
-    val schema = withK.schema
-    val kIdx = schema.length - 2
-    val sIdx = schema.length - 1
-    // per-key byte estimate, DATA-DRIVEN for var-width columns (one
-    // sizing aggregate either way): strings/binaries sum their actual
-    // octet lengths and primitive arrays their actual element counts —
-    // schema default widths alone would count a 5 KB document as 20
-    // bytes and under-split a text corpus ~250×, exactly the workload
-    // the fanout exists for. Fixed-width columns ride the schema
-    // width (an overestimate vs parquet encoding — sizing errs toward
-    // more, smaller files rather than stragglers).
-    val dataFields = schema.fields.dropRight(2)
-    def varWidth(f: StructField): Option[org.apache.spark.sql.Column] =
-      f.dataType match {
-        case StringType | BinaryType =>
-          Some(coalesce(octet_length(col(f.name)).cast(LongType), lit(0L)))
-        case ArrayType(e, _) if e.defaultSize > 0 && (e match {
-          case _: NumericType | BooleanType => true; case _ => false }) =>
-          Some(coalesce(size(col(f.name)).cast(LongType), lit(0L)) *
-            lit(e.defaultSize.toLong))
-        case _ => None
-      }
-    val varExprs = dataFields.toSeq.flatMap(varWidth)
-    val fixedWidth = math.max(1L, dataFields.filter(varWidth(_).isEmpty)
-      .map(_.dataType.defaultSize.toLong).sum)
-    val bytesExpr =
-      (count(lit(1)) * lit(fixedWidth) +: varExprs.map(sum))
-        .reduce(_ + _).as("__bytes")
-    // guarded collect: the aggregate runs distributed either way, but
-    // only maxKeys+1 rows may reach the driver — one row past the cap
-    // proves the spec is too fine without materializing the rest
-    val maxKeys = layoutMaxKeys(spark)
-    val counts = withK.groupBy(col("__k"))
-      .agg(count(lit(1)).as("__n"), bytesExpr)
-      .limit(maxKeys + 1).collect()
-    require(counts.length <= maxKeys,
-      s"layout would exceed spark.graft.layout.maxKeys=$maxKeys distinct " +
-        "partition keys (the placement index and the manifest's layout " +
-        "rows are per-key); coarsen the spec — a wider time unit, fewer " +
-        "buckets — or raise the cap")
-    counts.foreach(r => require(!r.isNullAt(0), nullMsg))
-    if (counts.isEmpty) return withK.drop("__k", "__s")
-    val target = math.max(1L, targetFileSize(spark))
-    val keys = counts.map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1)
-    val splits = keys.map { case (_, bytes) =>
-      math.max(1L, (bytes + target - 1) / target).toInt }
-    val offsets = splits.scanLeft(0)(_ + _)
-    val index: Map[Long, (Int, Int)] =
-      keys.map(_._1).zipWithIndex.map { case (k, i) =>
-        k -> ((offsets(i), splits(i))) }.toMap
-    val bIndex = spark.sparkContext.broadcast(index)
-    val part = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = offsets.last
-      override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-    }
-    val placed = withK.rdd.map { r =>
-      if (r.isNullAt(kIdx)) throw new IllegalArgumentException(nullMsg)
-      val (off, ns) = bIndex.value(r.getLong(kIdx))
-      (off + java.lang.Math.floorMod(r.getLong(sIdx), ns.toLong).toInt, r)
-    }.partitionBy(part).values
-    spark.createDataFrame(placed, schema)
-      .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-      .drop("__k", "__s")
-  }
-
 
   /** Per-file HLL NDV SKETCHES (the Iceberg puffin-file ndv idea at
     * the manifest level): one `__hll:<col>` row per (file, column)
@@ -878,101 +748,6 @@ object ManifestSink {
   /** The accepted transform units, in Iceberg's naming. */
   val TimeUnits: Set[String] = Set("hours", "days", "months", "years")
 
-  /** The time-partition ordinal expression — kept in exact agreement
-    * with [[graft.catalog.GraftTimeBound.produceResult]] (the V2
-    * function form Spark compares SPJ join sides with) and with the
-    * zone-map long encoding ([[statLongExpr]]): micros for timestamps
-    * (NTZ via its unshifted internal long), days for dates. The
-    * subtraction-then-divide spelling is exact floor division in
-    * LONG arithmetic (pmod is non-negative), never a double round. */
-  private[graft] def timeOrdCol(c: org.apache.spark.sql.Column,
-                                dt: org.apache.spark.sql.types.DataType,
-                                unit: String): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    def floorDivL(x: org.apache.spark.sql.Column, u: Long) =
-      ((x - pmod(x, lit(u))) / lit(u)).cast(IntegerType)
-    (dt, unit) match {
-      case (DateType, "days")  => datediff(c, lit(java.sql.Date.valueOf("1970-01-01")))
-      case (DateType, "hours") =>
-        (datediff(c, lit(java.sql.Date.valueOf("1970-01-01"))) * lit(24))
-          .cast(IntegerType)
-      case (_, "hours")  => floorDivL(statLongExpr(c, dt), 3600L * 1000000L)
-      case (_, "days")   => floorDivL(statLongExpr(c, dt), 86400L * 1000000L)
-      // months/years derive from the UTC epoch DAY (date_add over the
-      // floored day ordinal, mirroring GraftTimeBound's
-      // LocalDate.ofEpochDay), never year()/month() on the timestamp:
-      // those follow spark.sql.session.timeZone, and under a non-UTC
-      // session the committed ordinals would disagree with the V2
-      // function Spark compares SPJ join sides with — silently joining
-      // wrong partitions (year()/month() on the derived DATE are
-      // timezone-free: DateType is a plain epoch-day count)
-      case (_, u @ ("months" | "years")) =>
-        val d =
-          if (dt == DateType) c
-          else date_add(lit(java.sql.Date.valueOf("1970-01-01")),
-            floorDivL(statLongExpr(c, dt), 86400L * 1000000L))
-        if (u == "years") (year(d) - lit(1970)).cast(IntegerType)
-        else ((year(d) - lit(1970)) * lit(12) + month(d) - lit(1))
-          .cast(IntegerType)
-      case other => throw new IllegalArgumentException(
-        s"unsupported time transform: $other (want hours/days/months/years)")
-    }
-  }
-
-  /** Lay `df` out so each output FILE holds exactly one time ordinal,
-    * fanning an over-[[targetFileSize]] ordinal out across several
-    * salted single-ordinal files (see [[placeByKey]] for the whole
-    * placement discipline — the bounded ordinal enumeration, the
-    * identity partitioner, the null rejection). */
-  private def timeLayout(df: DataFrame, col0: String, unit: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    import org.apache.spark.sql.types.{DateType, LongType, TimestampNTZType, TimestampType}
-    val dt = df.schema(col0).dataType
-    require(Seq(TimestampType, TimestampNTZType, DateType).contains(dt),
-      s"time-partitioned layout needs a timestamp or date column; $col0 is $dt")
-    require(TimeUnits.contains(unit), s"unknown time unit $unit")
-    val withK = df
-      .withColumn("__k", timeOrdCol(col(col0), dt, unit).cast(LongType))
-      .withColumn("__s", xxhash64(col(col0)))
-    placeByKey(withK, Seq(col0),
-      s"time-partitioned layout: null partition value in $col0")
-  }
-
-  /** COMPOSED layout (the Iceberg multi-transform partition spec —
-    * `PARTITIONED BY (days(ts), bucket(n, id))`; the reference's own
-    * access pattern is exactly this pair, device-bucketed within
-    * hour-clustered time, `cassandra/init.cql:41-54`): each output
-    * FILE holds exactly ONE (time ordinal, bucket) pair, committed as
-    * BOTH a `__ptime` row and a `__bucket` row, so time pruning and
-    * bucket point-lookup pruning INTERSECT on the file list with zero
-    * new machinery, and the scan reports the pair as a two-transform
-    * `KeyGroupedPartitioning` (SPJ on (ts, key) — or on a subset under
-    * `allowJoinKeysSubsetOfPartitionKeys`). The pair key packs as
-    * `ord * n + bucket` (exact in Long; bucket ∈ [0, n)), the pair
-    * SET stays bounded at ordinals × buckets, and each pair fans out
-    * past [[targetFileSize]] like every layout ([[placeByKey]]). */
-  private def composedLayout(df: DataFrame, col0: String, unit: String,
-                             keyCol: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, xxhash64}
-    import org.apache.spark.sql.types._
-    val dt = df.schema(col0).dataType
-    require(Seq(TimestampType, TimestampNTZType, DateType).contains(dt),
-      s"time-partitioned layout needs a timestamp or date column; $col0 is $dt")
-    require(TimeUnits.contains(unit), s"unknown time unit $unit")
-    require(n > 0, s"numBuckets must be positive; got $n")
-    val kt = df.schema(keyCol).dataType
-    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(kt),
-      s"bucketed layout needs an integral key; $keyCol is $kt")
-    val packed = timeOrdCol(col(col0), dt, unit).cast(LongType) *
-      lit(n.toLong) + bucketIdCol(keyCol, n).cast(LongType)
-    val withK = df.withColumn("__k", packed)
-      .withColumn("__s", xxhash64(col(col0), col(keyCol)))
-    placeByKey(withK, Seq(col0, keyCol),
-      s"composed layout: null partition value in $col0 or $keyCol")
-  }
-
-
   /** The committed time-transform layout of an epoch, if it FULLY
     * covers the manifest — any gap (CoW-rewritten file, non-layout
     * append, mixed specs) returns None and the scan degrades to
@@ -1025,146 +800,6 @@ object ManifestSink {
     def specString: String =
       width.fold(s"__ident:$col")(w => s"__trunc:$col:$w")
   }
-
-  /** The identity/truncate transform expression — kept in exact
-    * agreement with [[graft.catalog.GraftTruncBound.produceResult]]
-    * (the V2 function SPJ compares truncate sides with; identity needs
-    * no function — Spark resolves it natively). Iceberg truncate
-    * semantics: integers floor to the width's multiple
-    * (`v - pmod(v, w)` — exact in LONG arithmetic, floors negatives),
-    * strings take the first `w` characters. Identity is the column
-    * itself (integrals widened to long so an int-keyed side
-    * co-partitions with a long-keyed one). */
-  private[graft] def identKeyCol(c: org.apache.spark.sql.Column,
-                                 dt: org.apache.spark.sql.types.DataType,
-                                 width: Option[Int]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{lit, pmod, substring}
-    import org.apache.spark.sql.types._
-    (dt, width) match {
-      case (StringType, None) => c
-      case (StringType, Some(w)) => substring(c, 1, w)
-      case (LongType | IntegerType | ShortType | ByteType, None) =>
-        c.cast(LongType)
-      case (LongType | IntegerType | ShortType | ByteType, Some(w)) =>
-        val v = c.cast(LongType)
-        v - pmod(v, lit(w.toLong))
-      case (other, _) => throw new IllegalArgumentException(
-        s"identity/truncate layout needs an integral or string column; got $other")
-    }
-  }
-
-  /** Lay `df` out so each output FILE holds exactly one identity /
-    * truncate value (see [[placeByKey]] for the placement discipline).
-    * String keys are DENSE-INDEXED to the Long key placeByKey
-    * contracts on via a broadcast value→ordinal join — deterministic,
-    * where hashing could fold two values into one file and break the
-    * single-value contract. The distinct value set is bounded by the
-    * same [[layoutMaxKeys]] cap the sizing aggregate enforces
-    * (identity layouts are low-cardinality by design — a language, a
-    * source, a tenant — never a high-cardinality id: that is what
-    * bucket is for). */
-  private def identLayout(df: DataFrame, col0: String,
-                          width: Option[Int]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, xxhash64}
-    import org.apache.spark.sql.types._
-    val dt = df.schema(col0).dataType
-    width.foreach(w => require(w > 0, s"truncate width must be positive; got $w"))
-    val key = identKeyCol(col(col0), dt, width)
-    val nullMsg = s"identity/truncate layout: null partition value in $col0"
-    if (dt != StringType) {
-      val withK = df.withColumn("__k", key)
-        .withColumn("__s", xxhash64(col(col0)))
-      placeByKey(withK, Seq(col0), nullMsg)
-    } else {
-      val spark = df.sparkSession
-      val maxKeys = layoutMaxKeys(spark)
-      val vals = df.select(key.as("__v")).distinct()
-        .limit(maxKeys + 1).collect()
-      require(vals.length <= maxKeys,
-        s"identity/truncate layout on $col0 would exceed " +
-          s"spark.graft.layout.maxKeys=$maxKeys distinct values; " +
-          "bucket the column instead, or raise the cap")
-      vals.foreach(r => require(!r.isNullAt(0), nullMsg))
-      import spark.implicits._
-      val idx = vals.map(_.getString(0)).sorted.zipWithIndex
-        .map { case (v, i) => (v, i.toLong) }.toSeq.toDF("__v", "__k")
-      // LEFT join, never inner (r17 advice): a nondeterministic input
-      // (rand()-derived values, unstable sampling) can produce values
-      // ABSENT from the just-collected index — an inner join would
-      // silently drop those rows from the committed table; the left
-      // join surfaces them as null keys, which placeByKey refuses
-      val withK = df.withColumn("__v", key)
-        .join(broadcast(idx), Seq("__v"), "left").drop("__v")
-        .withColumn("__s", xxhash64(col(col0)))
-      placeByKey(withK, Seq(col0), nullMsg +
-        " (a null key here can also mean a value NOT present when the " +
-        "placement index was computed — a nondeterministic input)")
-    }
-  }
-
-  /** COMPOSED identity layout — identity/truncate × bucket, or
-    * identity/truncate × time transform (`PARTITIONED BY (lang,
-    * bucket(4, id))` / `(event_type, days(ts))`): each output FILE
-    * holds exactly ONE (identity value, partner value) pair, committed
-    * as BOTH stats-row families so the two prunings INTERSECT and the
-    * scan reports a two-transform `KeyGroupedPartitioning`. Unlike the
-    * time×bucket pair (packable as `ord*n+bucket` — bucket's domain is
-    * bounded), an identity value's domain is data-dependent, so the
-    * pair key is a DENSE INDEX over the distinct pairs actually
-    * present — ONE bounded enumeration (capped by [[layoutMaxKeys]],
-    * the same bound the sizing aggregate lives under), broadcast back
-    * as a value→ordinal join. */
-  private def identPairLayout(df: DataFrame, c: String, w: Option[Int],
-                              partner: org.apache.spark.sql.Column,
-                              partnerSortCol: String,
-                              sortIdentFirst: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, xxhash64}
-    import org.apache.spark.sql.types._
-    val dt = df.schema(c).dataType
-    requireWidth(w)
-    val isStr = dt == StringType
-    val iKey = identKeyCol(col(c), dt, w)
-    val spark = df.sparkSession
-    val maxKeys = layoutMaxKeys(spark)
-    val nullMsg = s"composed identity layout: null partition value in " +
-      s"$c or $partnerSortCol"
-    val pairs = df.select(iKey.as("__iv"), partner.cast(LongType).as("__pv"))
-      .distinct().limit(maxKeys + 1).collect()
-    require(pairs.length <= maxKeys,
-      s"composed identity layout on ($c, $partnerSortCol) would exceed " +
-        s"spark.graft.layout.maxKeys=$maxKeys distinct pairs; coarsen the " +
-        "spec or raise the cap")
-    pairs.foreach(r => require(!r.isNullAt(0) && !r.isNullAt(1), nullMsg))
-    val sorted =
-      if (isStr) pairs.sortBy(r => (r.getString(0), r.getLong(1)))
-      else pairs.sortBy(r => (r.getLong(0), r.getLong(1)))
-    import spark.implicits._
-    val idx =
-      if (isStr)
-        sorted.zipWithIndex.map { case (r, i) =>
-          (r.getString(0), r.getLong(1), i.toLong) }.toSeq
-          .toDF("__iv", "__pv", "__k")
-      else
-        sorted.zipWithIndex.map { case (r, i) =>
-          (r.getLong(0), r.getLong(1), i.toLong) }.toSeq
-          .toDF("__iv", "__pv", "__k")
-    val sortCols =
-      if (sortIdentFirst) Seq(c, partnerSortCol) else Seq(partnerSortCol, c)
-    // LEFT join for the same nondeterministic-input discipline as the
-    // single-axis identity path: an unseen pair surfaces as a null
-    // key and fails loudly instead of silently vanishing
-    val withK = df.withColumn("__iv", iKey)
-      .withColumn("__pv", partner.cast(LongType))
-      .join(broadcast(idx), Seq("__iv", "__pv"), "left").drop("__iv", "__pv")
-      .withColumn("__s", xxhash64(col(c), col(partnerSortCol)))
-    placeByKey(withK, sortCols, nullMsg +
-      " (a null key here can also mean a pair NOT present when the " +
-      "placement index was computed — a nondeterministic input)")
-  }
-
-  private def requireWidth(w: Option[Int]): Unit =
-    w.foreach(ww => require(ww > 0, s"truncate width must be positive; got $ww"))
-
 
   /** The committed identity/truncate layout of an epoch, if it FULLY
     * covers the manifest — any gap (a non-layout append, mixed specs)
@@ -2154,17 +1789,17 @@ object ManifestSink {
   }
 
   /** Recursive rel-path → size listing of a staged dir's parquet
-    * files. Layout-preserving replacement writes (round 18 —
-    * [[graft.catalog.GraftReplaceWrite]]) stage into partition
-    * SUBDIRECTORIES (`__p0=<v>/part-*.parquet`, the Hive/Iceberg
-    * data-layout convention), so every consumer of a replace-groups
-    * stage must list recursively; flat stages list identically. */
+    * files. Every laid-out write ([[graft.catalog.LayoutBatchWrite]])
+    * stages into partition SUBDIRECTORIES
+    * (`__p0=<v>/__roll=<r>/part-*.parquet`, the Hive/Iceberg
+    * data-layout convention), so every consumer of a stage lists
+    * recursively; flat stages list identically. */
   def listStagedParquet(spark: SparkSession, root: String,
                         dirName: String): Map[String, Long] = {
     val p = new org.apache.hadoop.fs.Path(s"$root/$dirName")
     val f = fs(spark, p)
     if (!f.exists(p)) return Map.empty
-    val rootUri = new org.apache.hadoop.fs.Path(root).toUri.getPath
+    val rootUri = f.makeQualified(new org.apache.hadoop.fs.Path(root)).toUri.getPath
       .stripSuffix("/")
     val it = f.listFiles(p, true)
     val out = Map.newBuilder[String, Long]
@@ -2179,18 +1814,6 @@ object ManifestSink {
     out.result()
   }
 
-  /** Apply `baseEpoch`'s committed layout to an IN-MEMORY replacement
-    * batch, so a caller that HAS the batch as a DataFrame (the
-    * over-cap MoR→CoW materialization) writes ONCE with the layout in
-    * place. (SQL row-level DML needs no DataFrame-side placement at
-    * all — [[graft.catalog.GraftReplaceWrite]] declares the layout to
-    * Spark via RequiresDistributionAndOrdering and rotates staged
-    * files per key.) Returns `df` unchanged when the base has no
-    * layout. */
-  def layoutForBase(spark: SparkSession, root: String, baseEpoch: Int,
-                    df: DataFrame): DataFrame =
-    layOut(df, committedLayout(spark, root, baseEpoch))
-
   /** The layout `epoch` commits for its whole manifest: each transform
     * whose rows cover every file ([[bucketSpec]], [[ptimeSpec]],
     * [[identSpec]]; metadata-only). */
@@ -2198,24 +1821,6 @@ object ManifestSink {
     LayoutDecl(bucketSpec(spark, root, epoch).map(b => (b.keyCol, b.numBuckets)),
       ptimeSpec(spark, root, epoch).map(t => (t.col, t.unit)),
       identSpec(spark, root, epoch).map(i => (i.col, i.width)))
-
-  /** `df` placed so each output file holds one value of `layout`'s
-    * transforms (one of the six supported compositions; `df` itself
-    * for none). */
-  private def layOut(df: DataFrame, layout: LayoutDecl): DataFrame =
-    (layout.bucket, layout.ptime, layout.ident) match {
-      case (Some((k, n)), Some((c, u)), None) => composedLayout(df, c, u, k, n)
-      case (Some((k, n)), None, None) => bucketLayout(df, k, n)
-      case (None, Some((c, u)), None) => timeLayout(df, c, u)
-      case (None, None, Some((c, w))) => identLayout(df, c, w)
-      case (Some((k, n)), None, Some((c, w))) =>
-        identPairLayout(df, c, w, bucketIdCol(k, n), k, sortIdentFirst = true)
-      case (None, Some((tc, u)), Some((c, w))) =>
-        identPairLayout(df, c, w,
-          timeOrdCol(org.apache.spark.sql.functions.col(tc),
-            df.schema(tc).dataType, u), tc, sortIdentFirst = false)
-      case _ => df
-    }
 
   /** Collapse a publishing branch's STAGED delete vectors into ONE
     * vector scoped exactly at `target.epoch + 1` (round 18, clearing
@@ -2278,6 +1883,24 @@ object ManifestSink {
         ident.map { case (c, w) =>
           w.fold(s"__ident:$c")(ww => s"__trunc:$c:$ww") }).toSet
     def isEmpty: Boolean = bucket.isEmpty && ptime.isEmpty && ident.isEmpty
+
+    /** The layout as write axes — the one map from the six supported
+      * compositions (any single transform, or any two) to axes, with
+      * the sort-leading axis first: time, then identity/truncate, then
+      * bucket. Refuses a three-way composition and bad parameters
+      * before anything is written. */
+    def axes: Seq[graft.catalog.LayoutAxisSpec] = {
+      require(ident.isEmpty || bucket.isEmpty || ptime.isEmpty,
+        "a partition spec composes at most TWO transforms; identity + " +
+          "bucket + time is not supported")
+      bucket.foreach { case (_, n) => require(n > 0, s"numBuckets must be positive; got $n") }
+      ptime.foreach { case (_, u) => require(TimeUnits.contains(u), s"unknown time unit $u") }
+      ident.foreach { case (_, w) =>
+        w.foreach(ww => require(ww > 0, s"truncate width must be positive; got $ww")) }
+      ptime.map { case (c, u) => graft.catalog.TimeAxis(c, u) }.toSeq ++
+        ident.map { case (c, w) => graft.catalog.IdentAxis(c, w) } ++
+        bucket.map { case (k, n) => graft.catalog.BucketAxis(k, n) }
+    }
   }
 
   /** Commit a REPLACE-GROUPS epoch — the commit half of SQL

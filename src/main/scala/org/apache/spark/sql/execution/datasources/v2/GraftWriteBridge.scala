@@ -8,7 +8,8 @@ import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.connector.write.BatchWrite
+import org.apache.spark.sql.connector.catalog.FunctionCatalog
+import org.apache.spark.sql.connector.write.{BatchWrite, Write}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter, WriteJobDescription, WriteJobStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -72,6 +73,23 @@ object GraftWriteBridge {
           new SerializableConfiguration(hadoopConf),
           BasicWriteJobStatsTracker.metrics) +: trackers,
         options = Map.empty)
+    }: Unit
+  }
+
+  /** Run `batch` over the rows of `df` planned under `decl`'s required
+    * distribution and ordering exactly as Spark plans a V2 write
+    * (`DistributionAndOrderingUtils.prepareQuery`, the transforms
+    * resolved through `functions`): each task writes its rows through
+    * the batch's writers and the job commits through the batch. Runs
+    * as one SQL execution named `name` over a fresh plan of `df`. */
+  def writeV2(df: DataFrame, decl: Write, batch: BatchWrite,
+              functions: FunctionCatalog, name: String): Unit = {
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val query = DistributionAndOrderingUtils.prepareQuery(decl,
+      df.queryExecution.analyzed, Some(functions))
+    val qe = org.apache.spark.sql.classic.Dataset.ofRows(spark, query).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      WriteToDataSourceV2Exec(batch, () => (), qe.executedPlan, Nil).executeCollect()
     }: Unit
   }
 

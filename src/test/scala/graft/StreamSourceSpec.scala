@@ -60,7 +60,7 @@ class StreamSourceSpec extends SparkTestBase {
         // the group (floorDiv(epochMicros, hourMicros))
         val rows = b.groupBy(col("_partition"))
           .agg(count(lit(1)).as("n"),
-            min(col("_partition") === ManifestSink.timeOrdCol(col("ts"),
+            min(col("_partition") === ZoneOracle.timeOrdCol(col("ts"),
               b.schema("ts").dataType, "hours").cast("long")).as("aligned"))
           .collect()
         seen.synchronized {
@@ -82,7 +82,7 @@ class StreamSourceSpec extends SparkTestBase {
     } finally q.stop()
     val byBatch = seen.toSeq.groupBy(_._1)
     def hoursOf(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.select(ManifestSink.timeOrdCol(col("ts"),
+      df.select(ZoneOracle.timeOrdCol(col("ts"),
         df.schema("ts").dataType, "hours").cast("long"))
         .distinct().collect().map(_.getLong(0)).sorted.toSeq
     assert(byBatch(0L).map(_._2).sorted ==
@@ -117,7 +117,7 @@ class StreamSourceSpec extends SparkTestBase {
           Seq("_partition", "_bucket"))
         val rows = b.groupBy(col("_partition"), col("_bucket"))
           .agg(count(lit(1)).as("n"),
-            min(col("_partition") === ManifestSink.timeOrdCol(col("ts"),
+            min(col("_partition") === ZoneOracle.timeOrdCol(col("ts"),
               b.schema("ts").dataType, "hours").cast("long") &&
               col("_bucket") === pmod(col("user_id"), lit(2)).cast("int"))
               .as("aligned"))

@@ -136,7 +136,7 @@ class TimePartitionSpec extends SparkTestBase {
       } finally
         spark.conf.unset("spark.sql.sources.v2.bucketing.pushPartValues.enabled")
     }
-    // an UPDATE that NULLS the layout column is refused (placeByKey's
+    // an UPDATE that NULLS the layout column is refused (the placement's
     // null contract — the key-grouping promise cannot hold a null)
     val eNull = intercept[Exception] {
       spark.sql(s"UPDATE graft.`$root` SET ts = NULL WHERE event_id = 30")

@@ -36,10 +36,10 @@ class WriterFlavorSpec extends SparkTestBase {
   }
 
   /** `epoch`'s rows for `files` equal the oracle's under `spec`; returns them. */
-  private def assertParity(root: String, epoch: Int, files: Seq[String], spec: WriteSpec,
-                           lenient: Boolean = false): Seq[Row] = {
+  private def assertParity(root: String, epoch: Int, files: Seq[String],
+                           spec: WriteSpec): Seq[Row] = {
     val got = committed(root, epoch, files)
-    val want = ZoneOracle.flavors(spark, root, files, spec, lenient)
+    val want = ZoneOracle.flavors(spark, root, files, spec)
     assert(rowSet(got) == rowSet(want), s"$root@$epoch under $spec")
     assert(got.size == want.size, s"$root@$epoch: no duplicate rows")
     got
@@ -155,20 +155,14 @@ class WriterFlavorSpec extends SparkTestBase {
         timestamp_micros(col("id") * 1000000L).as("ts")).coalesce(1)
       val spec = WriteSpec(Seq("id"),
         layout = LayoutDecl(bucket = Some(("id", 2)), ptime = Some(("ts", "days"))))
-      def write(dir: String, lenient: Boolean): Seq[Row] = {
-        val t = new WriterStatsTracker(df.schema, spec, lenientLayout = lenient)
-        org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
-          .writeParquet(df, s"$root/$dir", Seq(t))
-        val files = ManifestSink.listStagedParquet(spark, root, dir).keys.toSeq.sorted
-        t.fileRows(files, dir)
-      }
-      val e = intercept[IllegalArgumentException](write("data-epoch=1-astrict", lenient = false))
-      assert(e.getMessage.contains("bucketed stage produced a mixed-bucket file data-epoch=1-astrict/"),
+      val dir = "data-epoch=1-astrict"
+      val t = new WriterStatsTracker(df.schema, spec)
+      org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
+        .writeParquet(df, s"$root/$dir", Seq(t))
+      val files = ManifestSink.listStagedParquet(spark, root, dir).keys.toSeq.sorted
+      val e = intercept[IllegalArgumentException](t.fileRows(files, dir))
+      assert(e.getMessage.contains(s"bucketed stage produced a mixed-bucket file $dir/"),
         e.getMessage)
-      val rows = write("data-epoch=1-alenient", lenient = true)
-      assert(keys(rows).contains("__ptime:ts:days") && !keys(rows).exists(_.startsWith("__bucket:")))
-      val files = ManifestSink.listStagedParquet(spark, root, "data-epoch=1-alenient").keys.toSeq
-      assert(rowSet(rows) == rowSet(ZoneOracle.flavors(spark, root, files, spec, lenientLayout = true)))
     }
   }
 
@@ -220,12 +214,12 @@ class WriterFlavorSpec extends SparkTestBase {
         .filter(_.startsWith(s"data-epoch=$e-"))
       assert(fresh.nonEmpty)
       val rows = assertParity(root, e, fresh, WriteSpec(ManifestSink.statCols(spark, root, e),
-        layout = LayoutDecl(Some(("id", 2)), Some(("d", "months")))), lenient = true)
+        layout = LayoutDecl(Some(("id", 2)), Some(("d", "months")))))
       assert(keys(rows).contains("__bucket:id:2") && keys(rows).contains("__ptime:d:months"))
       assert(ManifestSink.bucketSpec(spark, root, e).isDefined &&
         ManifestSink.ptimeSpec(spark, root, e).isDefined, "the layout survives the rewrite")
-      // a replace-groups commit whose one replacement file mixes
-      // buckets keeps the time rows and drops only the bucket rows
+      // a hand-staged replacement file that mixes buckets is refused
+      // before any commit, naming the file: every layout fold is strict
       val base = e
       val victim = ManifestSink.manifestEntries(spark, root, base).map(_._1).head
       val dir = s"data-epoch=${base + 1}-amixed"
@@ -236,26 +230,28 @@ class WriterFlavorSpec extends SparkTestBase {
         victimRows.limit(1).withColumn("id", col("id") + 1001)).coalesce(1)
       val spec = WriteSpec(ManifestSink.statCols(spark, root, base),
         layout = ManifestSink.committedLayout(spark, root, base))
-      val tr = new WriterStatsTracker(batch.schema, spec, lenientLayout = true)
+      val tr = new WriterStatsTracker(batch.schema, spec)
       org.apache.spark.sql.execution.datasources.v2.GraftWriteBridge
         .writeParquet(batch, s"$root/$dir", Seq(tr))
       val staged = ManifestSink.listStagedParquet(spark, root, dir).keys.toSeq.sorted
-      val next = ManifestSink.commitReplaceGroups(spark, root, base, dir, Set(victim),
-        freshRows = tr.fileRows(staged, dir))
-      val got = assertParity(root, next, staged, spec, lenient = true)
-      assert(keys(got).contains("__ptime:d:months"), "the single-month flavor keeps its rows")
-      assert(!keys(got).exists(_.startsWith("__bucket:")), "the mixed-bucket flavor drops")
-      assert(ManifestSink.bucketSpec(spark, root, next).isEmpty &&
-        ManifestSink.ptimeSpec(spark, root, next).isDefined)
+      val refused = intercept[IllegalArgumentException](tr.fileRows(staged, dir))
+      assert(refused.getMessage.contains(s"bucketed stage produced a mixed-bucket file ${staged.head}"),
+        refused.getMessage)
+      assert(ManifestSink.currentEpoch(spark, root) == base, "nothing committed")
     }
   }
 
   test("a dictionary, bloom or bucketed publish runs no more jobs than a zone-only one") {
     withLosAngeles {
-      // four input partitions, no exchange before the write
-      val df = spark.range(0, 60, 1, 4).select(col("id"), (col("id") % 7).cast("string").as("s"))
+      // four input partitions, no exchange before the write; the
+      // accumulator counts every evaluation of an input row
+      val reads = spark.sparkContext.longAccumulator("wfl_reads")
+      val counted = udf { (id: Long) => reads.add(1); id }.asNondeterministic()
+      val df = spark.range(0, 60, 1, 4).select(counted(col("id")).as("id"),
+        (col("id") % 7).cast("string").as("s"))
       def jobs(spec: WriteSpec): Int = {
         val root = tmpDir("wfl_jobs_")
+        reads.reset()
         SparkJobs.count(spark)(ManifestSink.publish(df, root, 1, spec))
       }
       jobs(WriteSpec(Seq("id"))) // warm-up
@@ -264,17 +260,12 @@ class WriterFlavorSpec extends SparkTestBase {
       val bloom = jobs(WriteSpec(Seq("id"), bloomCols = Seq("id")))
       assert(dict <= zone, s"dictionary publish ran $dict jobs, zone-only $zone")
       assert(bloom <= zone, s"bloom publish ran $bloom jobs, zone-only $zone")
-      // a bucketed publish adds only its placement (the bounded sizing
-      // aggregate that lays rows out), which placing the frame under a
-      // committed bucket layout runs alone
-      val laidOut = tmpDir("wfl_jobs_b_")
-      val bspec = WriteSpec(Seq("id"), layout = LayoutDecl(bucket = Some(("id", 4))))
-      ManifestSink.publish(df, laidOut, 1, bspec)
-      val placement = SparkJobs.count(spark)(ManifestSink.layoutForBase(spark, laidOut, 1, df))
-      val bucketed = jobs(bspec)
-      assert(bucketed <= zone + placement,
-        s"bucketed publish ran $bucketed jobs, zone-only $zone + placement $placement")
-      info(s"jobs: zone $zone, dict $dict, bloom $bloom, bucketed $bucketed (placement $placement)")
+      // a bucketed publish adds only the rebalance exchange that lays
+      // rows out, and reads its input once
+      val bucketed = jobs(WriteSpec(Seq("id"), layout = LayoutDecl(bucket = Some(("id", 4)))))
+      assert(bucketed <= zone + 1, s"bucketed publish ran $bucketed jobs, zone-only $zone")
+      assert(reads.value == 60L, s"the bucketed publish evaluated ${reads.value} input rows")
+      info(s"jobs: zone $zone, dict $dict, bloom $bloom, bucketed $bucketed")
     }
   }
 }

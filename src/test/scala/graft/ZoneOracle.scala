@@ -39,17 +39,69 @@ object ZoneOracle {
       inline(array(entries: _*)))
   }
 
+  /** The time-partition ordinal as a Catalyst expression — the
+    * independent spelling of [[graft.catalog.GraftTimeBound]] the
+    * layout rows are checked against, in the zone-map long encoding
+    * ([[ManifestSink.statLongExpr]]): micros for timestamps (NTZ via
+    * its unshifted internal long), days for dates. The
+    * subtraction-then-divide spelling is exact floor division in LONG
+    * arithmetic (pmod is non-negative), never a double round. */
+  def timeOrdCol(c: Column, dt: DataType, unit: String): Column = {
+    def floorDivL(x: Column, u: Long) =
+      ((x - pmod(x, lit(u))) / lit(u)).cast(IntegerType)
+    (dt, unit) match {
+      case (DateType, "days")  => datediff(c, lit(java.sql.Date.valueOf("1970-01-01")))
+      case (DateType, "hours") =>
+        (datediff(c, lit(java.sql.Date.valueOf("1970-01-01"))) * lit(24))
+          .cast(IntegerType)
+      case (_, "hours")  => floorDivL(ManifestSink.statLongExpr(c, dt), 3600L * 1000000L)
+      case (_, "days")   => floorDivL(ManifestSink.statLongExpr(c, dt), 86400L * 1000000L)
+      // months/years derive from the UTC epoch DAY (date_add over the
+      // floored day ordinal), never year()/month() on the timestamp:
+      // those follow spark.sql.session.timeZone (year()/month() on the
+      // derived DATE are timezone-free: DateType is a plain epoch-day
+      // count)
+      case (_, u @ ("months" | "years")) =>
+        val d =
+          if (dt == DateType) c
+          else date_add(lit(java.sql.Date.valueOf("1970-01-01")),
+            floorDivL(ManifestSink.statLongExpr(c, dt), 86400L * 1000000L))
+        if (u == "years") (year(d) - lit(1970)).cast(IntegerType)
+        else ((year(d) - lit(1970)) * lit(12) + month(d) - lit(1))
+          .cast(IntegerType)
+      case other => throw new IllegalArgumentException(
+        s"unsupported time transform: $other (want hours/days/months/years)")
+    }
+  }
+
+  /** The identity/truncate value as a Catalyst expression — the
+    * independent spelling of [[graft.catalog.GraftTruncFixedBound]]:
+    * integers floor to the width's multiple (`v - pmod(v, w)`, exact in
+    * LONG arithmetic, floors negatives), strings take the first `w`
+    * characters; identity is the column itself (integrals widened to
+    * long). */
+  def identKeyCol(c: Column, dt: DataType, width: Option[Int]): Column =
+    (dt, width) match {
+      case (StringType, None) => c
+      case (StringType, Some(w)) => substring(c, 1, w)
+      case (LongType | IntegerType | ShortType | ByteType, None) =>
+        c.cast(LongType)
+      case (LongType | IntegerType | ShortType | ByteType, Some(w)) =>
+        val v = c.cast(LongType)
+        v - pmod(v, lit(w.toLong))
+      case (other, _) => throw new IllegalArgumentException(
+        s"identity/truncate layout needs an integral or string column; got $other")
+    }
+
   /** Every stats flavor a [[ManifestSink.WriteSpec]] asks for, from ONE
     * aggregate grouped by `input_file_name()` over the given files:
     * zone min/max + `__count`, capped sorted `collect_set`
     * dictionaries, Catalyst-hashed blooms (`pmod(xxhash64(i, v), m)`)
     * and min/max of each layout transform's SQL expression. A layout
-    * flavor that sees a multi-value file fails naming it, or — under
-    * `lenientLayout` — contributes no rows. */
+    * flavor that sees a multi-value file fails naming it. */
   def flavors(spark: SparkSession, root: String, relFiles: Seq[String],
-              spec: ManifestSink.WriteSpec,
-              lenientLayout: Boolean = false): Seq[org.apache.spark.sql.Row] = {
-    import ManifestSink.{statLongExpr, statsRow, timeOrdCol, identKeyCol}
+              spec: ManifestSink.WriteSpec): Seq[org.apache.spark.sql.Row] = {
+    import ManifestSink.{statLongExpr, statsRow}
     val ManifestSink.WriteSpec(statsCols, dictCols, bloomCols, layout, dictCap) = spec
     val (bucketO, ptime, ident) = (layout.bucket, layout.ptime, layout.ident)
     val (bloomBits, bloomHashes) = (16384, 5)
@@ -108,17 +160,12 @@ object ZoneOracle {
       if (at >= 0) full.substring(at + marker.length)
       else full.split("/").takeRight(2).mkString("/")
     }
-    // layout flavors validate up front, per flavor: strict callers get
-    // the dedicated paths' exact require message naming the first
-    // offending file; lenient callers drop just that flavor's rows
+    // layout flavors validate up front, per flavor, with the tracker's
+    // message naming the first offending file
     def flavorClean(loCol: String, hiCol: String, what: String): Boolean = {
       collected.foreach { r =>
         val lo = r.getAs[Any](loCol); val hi = r.getAs[Any](hiCol)
-        val single = lo != null && lo == hi
-        if (!single) {
-          if (lenientLayout) return false
-          require(single, s"$what ${relOf(r.getAs[String]("__f"))}: $lo..$hi")
-        }
+        require(lo != null && lo == hi, s"$what ${relOf(r.getAs[String]("__f"))}: $lo..$hi")
       }
       true
     }
