@@ -342,9 +342,8 @@ final class WriterStatsTracker(schema: StructType, spec: ManifestSink.WriteSpec)
     * the min/max rows. */
   def fileRows(files: Seq[String], outDir: String): Seq[Row] = {
     val live = matched(files, outDir).filter(_._2.rows > 0)
-    val layout = flavors.indices.filter(flavors(_).isInstanceOf[KeyFlavor])
-    layout.foreach { j =>
-      val k = flavors(j).asInstanceOf[KeyFlavor]
+    val layout = flavors.toSeq.zipWithIndex.collect { case (k: KeyFlavor, j) => (k, j) }
+    layout.foreach { case (k, j) =>
       live.find { case (_, z) => k.single(z.flavors(j)).isEmpty }.foreach { case (f, z) =>
         val (lo, hi) = z.flavors(j)
         throw new IllegalArgumentException(s"${k.what} $f: $lo..$hi")
@@ -352,7 +351,7 @@ final class WriterStatsTracker(schema: StructType, spec: ManifestSink.WriteSpec)
     }
     if (layout.nonEmpty) {
       val maxKeys = ManifestSink.layoutMaxKeys(org.apache.spark.sql.SparkSession.active)
-      val keys = live.map { case (_, z) => layout.map(z.flavors(_)) }.distinct.size
+      val keys = live.map { case (_, z) => layout.map { case (_, j) => z.flavors(j) } }.distinct.size
       require(keys <= maxKeys,
         s"layout would exceed spark.graft.layout.maxKeys=$maxKeys distinct " +
           "partition keys (the manifest's layout rows are per-key); coarsen " +

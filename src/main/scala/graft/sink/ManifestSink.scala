@@ -344,9 +344,8 @@ object ManifestSink {
     val token = tokenOpt.getOrElse(newToken())
     val dirName = if (unique) s"data-epoch=$epoch-a$token" else s"data-epoch=$epoch"
     val epochDir = s"$root/$dirName"
-    val axes = spec.layout.axes
     val tracker = new graft.catalog.WriterStatsTracker(df.schema, spec)
-    graft.catalog.LayoutWrite.write(df, epochDir, axes, Seq(tracker))
+    graft.catalog.LayoutWrite.write(df, epochDir, spec.layout.axes, Seq(tracker))
     val dirPath = new org.apache.hadoop.fs.Path(epochDir)
     val f = fs(spark, dirPath)
     // the staging listing already holds each file's size — capture it

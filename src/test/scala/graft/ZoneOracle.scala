@@ -162,19 +162,14 @@ object ZoneOracle {
     }
     // layout flavors validate up front, per flavor, with the tracker's
     // message naming the first offending file
-    def flavorClean(loCol: String, hiCol: String, what: String): Boolean = {
+    def requireSingle(loCol: String, hiCol: String, what: String): Unit =
       collected.foreach { r =>
         val lo = r.getAs[Any](loCol); val hi = r.getAs[Any](hiCol)
         require(lo != null && lo == hi, s"$what ${relOf(r.getAs[String]("__f"))}: $lo..$hi")
       }
-      true
-    }
-    val bucketClean = bucketO.isDefined && flavorClean("__blo", "__bhi",
-      "bucketed stage produced a mixed-bucket file")
-    val ptimeClean = ptime.isDefined && flavorClean("__plo", "__phi",
-      "time-partitioned stage produced a mixed-ordinal file")
-    val identClean = ident.isDefined && flavorClean("__ilo", "__ihi",
-      "identity/truncate stage produced a mixed-value file")
+    if (bucketO.isDefined) requireSingle("__blo", "__bhi", "bucketed stage produced a mixed-bucket file")
+    if (ptime.isDefined) requireSingle("__plo", "__phi", "time-partitioned stage produced a mixed-ordinal file")
+    if (ident.isDefined) requireSingle("__ilo", "__ihi", "identity/truncate stage produced a mixed-value file")
     def asLong(v: Any): java.lang.Long = v match {
       case null => null
       case l: Long => java.lang.Long.valueOf(l)
@@ -227,17 +222,17 @@ object ZoneOracle {
             bloomBits.toLong, bloomHashes.toLong,
             bytes.map("%02x".format(_)).mkString, null)
       }
-      if (bucketClean) bucketO.foreach { case (k, n) =>
+      bucketO.foreach { case (k, n) =>
         val lo = r.getAs[Any]("__blo")
         rows += statsRow(file, s"__bucket:$k:$n",
           asLong(lo), asLong(lo), null, null)
       }
-      if (ptimeClean) ptime.foreach { case (c, u) =>
+      ptime.foreach { case (c, u) =>
         val lo = r.getAs[Any]("__plo")
         rows += statsRow(file, s"__ptime:$c:$u",
           asLong(lo), asLong(lo), null, null)
       }
-      if (identClean) ident.foreach { case (c, w) =>
+      ident.foreach { case (c, w) =>
         val isStr = schema(c).dataType == StringType
         val lo = r.getAs[Any]("__ilo")
         val spec = w.fold(s"__ident:$c")(wd => s"__trunc:$c:$wd")
